@@ -21,12 +21,7 @@ import graft.functions.Text
   */
 object EntityLink {
 
-  /** A1 + A2: two-level aggregation. Level 1 counts surface forms (this is
-    * where map-side partial aggregation absorbs the head-entity skew);
-    * level 2 picks the modal surface via max_by over a struct with the
-    * deterministic tie-break and sums counts. news_count is EXACT distinct
-    * (parity requires it; approx_count_distinct is for metrics only).
-    */
+  /** A1 + A2 over raw mentions: [[dictFromSurfaceRows]] with n = 1. */
   def buildEntityDict(mentions: Dataset[Mention]): Dataset[EntityRecord] = {
     val spark = mentions.sparkSession
     import spark.implicits._
@@ -38,41 +33,48 @@ object EntityLink {
   /** Dictionary from (url, norm, type, surface, n) rows — `n` may be a
     * per-page pre-aggregated count (the fused analyzer's output) or 1 per
     * raw mention; the result is identical (pinned by EntityLinkSpec).
-    *
-    * Level 1 counts surfaces (map-side partial agg absorbs head-entity
-    * skew); level 2 resolves the modal surface in ONE shuffle via min_by
-    * over the ordering struct (-count, text) — the deterministic
-    * tie-break (count DESC, text ASC) — no window, no extra join.
-    * news_count is EXACT distinct (parity requires it).
     */
-  def dictFromSurfaceRows(rows: DataFrame): Dataset[EntityRecord] = {
+  def dictFromSurfaceRows(rows: DataFrame): Dataset[EntityRecord] =
+    dictFromTagged(taggedFromSurfaceRows(rows))
+
+  /** Level 1: TAGGED rows (entity_text_norm, entity_type, entity_text,
+    * cnt) — one per surface form with its summed count, plus one
+    * `entity_text = NULL` row per entity whose `cnt` is its EXACT
+    * news_count (parity requires it; map-side partial aggregation absorbs
+    * the head-entity skew).
+    */
+  def taggedFromSurfaceRows(rows: DataFrame): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val surfaceCounts = rows
+    val marks = rows.select($"entity_text_norm", $"entity_type", $"url").distinct()
+      .select($"entity_text_norm", $"entity_type",
+        lit(null).cast("string").as("entity_text"), lit(1L).as("cnt"))
+    rows.select($"entity_text_norm", $"entity_type", $"entity_text", $"n".as("cnt"))
+      .unionByName(marks)
       .groupBy($"entity_text_norm", $"entity_type", $"entity_text")
-      .agg(sum($"n").as("surface_count"))
-    val newsCounts = rows
-      .select($"entity_text_norm", $"entity_type", $"url").distinct()
-      .groupBy($"entity_text_norm", $"entity_type")
-      .agg(count(lit(1)).as("news_count"))
-    dictFromStats(surfaceCounts, newsCounts)
+      .agg(sum($"cnt").as("cnt"))
   }
 
-  /** Dictionary view over pre-aggregated stats — the read path shared by
-    * the per-run dict and the persistent [[graft.pipeline.EntityStore]]
-    * (whose merged state is exactly these two tables).
+  /** Level 2, shared by every dictionary (per-run, fused analysis and
+    * the persistent [[graft.pipeline.EntityStore]], whose state is these
+    * rows): ONE shuffle, no join — the modal surface is min_by over
+    * (-count, text), the tie-break (count DESC, text ASC), NULL rows last.
     */
-  def dictFromStats(surfaceCounts: DataFrame, newsCounts: DataFrame): Dataset[EntityRecord] = {
-    val spark = surfaceCounts.sparkSession
+  def dictFromTagged(tagged: DataFrame): Dataset[EntityRecord] = {
+    val spark = tagged.sparkSession
     import spark.implicits._
-    val modalAndTotals = surfaceCounts
+    tagged
       .groupBy($"entity_text_norm", $"entity_type")
       .agg(
-        min_by($"entity_text", struct((-$"surface_count").as("nc"), $"entity_text"))
+        min_by($"entity_text",
+          struct(
+            when($"entity_text".isNull, lit(Long.MaxValue)).otherwise(-$"cnt").as("nc"),
+            coalesce($"entity_text", lit("\uffff")).as("t")))
           .as("entity_text"),
-        sum($"surface_count").as("entity_mentions_count"))
-    modalAndTotals
-      .join(newsCounts, Seq("entity_text_norm", "entity_type"))
+        sum(when($"entity_text".isNotNull, $"cnt").otherwise(0L))
+          .as("entity_mentions_count"),
+        sum(when($"entity_text".isNull, $"cnt").otherwise(0L))
+          .as("news_count"))
       .select(
         Text.entityId($"entity_text_norm", $"entity_type").as("id_entity"),
         $"entity_text", $"entity_text_norm", $"entity_type",

@@ -16,24 +16,26 @@ import graft.schema.EntityRecord
   * fix: deterministic `id_entity = xxhash64(norm, type)` + additive MERGE
   * instead of BIGSERIAL ids + driver-side dict rebuild.
   *
-  * State is kept at SURFACE granularity, because that is the finest thing
-  * the merge must be associative over:
-  *   - `surfaces`: (entity_text_norm, entity_type, entity_text,
-  *     surface_count) — summed across batches; the modal surface form (A2)
-  *     is DERIVED at read time, so late batches can flip the modal form
-  *     exactly as a full recompute would.
-  *   - `news`: (entity_text_norm, entity_type, news_count) — summed across
-  *     batches. Additivity is EXACT (not approximate) because incremental
-  *     batches are url-disjoint by construction: `runIncremental`'s
-  *     anti-join on `processedIn` markers guarantees each url contributes
-  *     to exactly one merged batch.
+  * State is ONE table per version, `entities(entity_text_norm,
+  * entity_type, entity_text, cnt, bucket)`, at SURFACE granularity (the
+  * finest thing the merge must be associative over) — the tagged rows
+  * of [[EntityLink.taggedFromSurfaceRows]], summed across batches:
+  *   - per surface form, `cnt` = its count; the modal surface form (A2)
+  *     is DERIVED at read time, so late batches can flip it exactly as a
+  *     full recompute would;
+  *   - per entity, an `entity_text = NULL` row whose `cnt` = news_count.
+  *     Additivity is EXACT because incremental batches are url-disjoint:
+  *     `runIncremental`'s anti-join on `processedIn` markers guarantees
+  *     each url contributes to exactly one merged batch.
+  * A version written before this layout (`surfaces` + `news`) reads as
+  * the same rows; the first merge into it rewrites every bucket.
   *
   * Scale shape (MERGE cost ∝ batch, not ∝ dictionary): state is
   * hash-bucketed on `entity_text_norm` ([[EntityStore.dictBuckets]] dirs,
   * a Hive partition column, so reads prune). A merge
-  *   1. buckets the batch delta,
+  *   1. aggregates the batch delta into tagged rows once,
   *   2. re-aggregates ONLY the dirty buckets (partition-pruned read of
-  *      current ∪ delta, one dict-key shuffle),
+  *      current ∪ delta, ONE shuffle on the bucket),
   *   3. HARD-LINKS every clean bucket's files from the previous version
   *      (metadata-only; copy fallback for cross-device),
   *   4. atomically renames the `_latest` pointer.
@@ -58,7 +60,7 @@ import graft.schema.EntityRecord
   * Hard-linked clean-bucket files survive through the newer versions'
   * links (deleting an old dir only unlinks).
   *
-  * READER CONTRACT: a lazy `dict()`/`surfaces()` plan binds the version
+  * READER CONTRACT: a lazy `dict()`/`keys()` plan binds the version
   * current at CALL time and stays readable only while that version
   * survives — i.e. for the next `retainVersions - 1` merges. Materialize
   * (collect/write/cache+count) promptly, or raise `retainVersions` to
@@ -112,30 +114,39 @@ final class EntityStore(val root: String, spark: SparkSession,
   /** Batch ids already merged, within the replay window. */
   def mergedBatches(): Set[String] = mergedBatchesOrdered().toSet
 
-  private def table(v: Long, name: String, schemaDDL: String): DataFrame = {
+  private def read(v: Long, name: String, ddl: String): Option[DataFrame] = {
     val dir = new HPath(versionDir(v), name)
-    if (v == 0L || !sfs.exists(dir))
-      graft.util.Frames.empty(spark, schemaDDL)
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
-      .parquet(dir.toString)
+    if (v == 0L || !sfs.exists(dir)) None
+    else Some(spark.read
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .parquet(dir.toString))
   }
 
-  private val surfacesDDL =
-    "entity_text_norm STRING, entity_type STRING, entity_text STRING, surface_count BIGINT, bucket INT"
-  private val newsDDL =
-    "entity_text_norm STRING, entity_type STRING, news_count BIGINT, bucket INT"
+  private val entitiesDDL =
+    "entity_text_norm STRING, entity_type STRING, entity_text STRING, cnt BIGINT, bucket INT"
 
-  /** Current surface-granularity state (bucket column dropped). */
-  def surfaces(): DataFrame =
-    table(currentVersion(), "surfaces", surfacesDDL).drop("bucket")
+  /** A version written before the one-table layout (`surfaces` + `news`). */
+  private def isLegacy(v: Long): Boolean =
+    v != 0L && sfs.exists(new HPath(versionDir(v), "surfaces"))
 
-  private def news(): DataFrame =
-    table(currentVersion(), "news", newsDDL).drop("bucket")
+  /** Version `v`'s state as tagged rows with their bucket. */
+  private def tagged(v: Long): DataFrame = {
+    def legacy = read(v, "surfaces", "entity_text_norm STRING, entity_type STRING, " +
+        "entity_text STRING, surface_count BIGINT, bucket INT").map { surfaces =>
+      val newsDDL = "entity_text_norm STRING, entity_type STRING, news_count BIGINT, bucket INT"
+      val news = read(v, "news", newsDDL).getOrElse(graft.util.Frames.empty(spark, newsDDL))
+      surfaces.withColumnRenamed("surface_count", "cnt").unionByName(news.select(
+        $"entity_text_norm", $"entity_type", lit(null).cast("string").as("entity_text"),
+        $"news_count".as("cnt"), $"bucket"))
+    }
+    read(v, "entities", entitiesDDL).orElse(legacy)
+      .getOrElse(graft.util.Frames.empty(spark, entitiesDDL))
+  }
 
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("bucket",
-      pmod(xxhash64($"entity_text_norm"), lit(dictBuckets)).cast("int"))
+  /** Entity keys (entity_text_norm, entity_type): the NULL-surface rows, unaggregated. */
+  def keys(): DataFrame =
+    tagged(currentVersion()).filter($"entity_text".isNull)
+      .select($"entity_text_norm", $"entity_type")
 
   /** MERGE one batch of per-page surface rows
     * (url, entity_text_norm, entity_type, entity_text, n) into the store.
@@ -145,37 +156,32 @@ final class EntityStore(val root: String, spark: SparkSession,
     val alreadyOrdered = mergedBatchesOrdered()
     if (alreadyOrdered.contains(batchId)) return false
     val v = currentVersion()
-    val batchSurf = withBucket(surfaceRows
-      .groupBy($"entity_text_norm", $"entity_type", $"entity_text")
-      .agg(sum($"n").as("surface_count")))
+    val delta = EntityLink.taggedFromSurfaceRows(surfaceRows)
+      .withColumn("bucket",
+        pmod(xxhash64($"entity_text_norm"), lit(dictBuckets)).cast("int"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val batchNews = withBucket(surfaceRows
-        .select($"entity_text_norm", $"entity_type", $"url").distinct()
-        .groupBy($"entity_text_norm", $"entity_type")
-        .agg(count(lit(1)).as("news_count")))
       // dirty buckets: only these are re-aggregated and rewritten; the
-      // dict-key shuffle is over (current-dirty ∪ delta), not the corpus
-      val dirty = batchSurf.select($"bucket").distinct()
+      // bucket shuffle is over (current-dirty ∪ delta), not the corpus
+      val dirty = delta.select($"bucket").distinct()
         .as[Int].collect().sorted
+      // a legacy-layout version has no clean buckets to link: rewrite it whole
+      val prev =
+        if (isLegacy(v)) tagged(v)
+        else tagged(v).filter($"bucket".isin(dirty.map(Int.box): _*)) // partition-pruned
       val next = v + 1L
       val nextDir = versionDir(next)
       if (sfs.exists(nextDir)) sfs.delete(nextDir, recursive = true) // crashed retry
-      val mergedSurf = table(v, "surfaces", surfacesDDL)
-        .filter($"bucket".isin(dirty.map(Int.box): _*)) // partition-pruned
-        .unionByName(batchSurf)
+      // the groupBy keys include the bucket, so the repartition's hash
+      // distribution satisfies it: one shuffle, one file per bucket dir
+      prev.unionByName(delta)
+        .repartition($"bucket")
         .groupBy($"entity_text_norm", $"entity_type", $"entity_text", $"bucket")
-        .agg(sum($"surface_count").as("surface_count"))
-      val mergedNews = table(v, "news", newsDDL)
-        .filter($"bucket".isin(dirty.map(Int.box): _*))
-        .unionByName(batchNews)
-        .groupBy($"entity_text_norm", $"entity_type", $"bucket")
-        .agg(sum($"news_count").as("news_count"))
-      writeBuckets(mergedSurf, new HPath(nextDir, "surfaces"))
-      writeBuckets(mergedNews, new HPath(nextDir, "news"))
+        .agg(sum($"cnt").as("cnt"))
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
+        .parquet(new HPath(nextDir, "entities").toString)
       // clean buckets ride forward as hard links (local) / copies (remote)
-      linkCleanBuckets(v, nextDir, "surfaces", dirty.toSet)
-      linkCleanBuckets(v, nextDir, "news", dirty.toSet)
+      linkCleanBuckets(v, nextDir, dirty.toSet)
       // newest-first, truncated to the replay window (constructor doc)
       sfs.writeString(new HPath(nextDir, "_batches"),
         (batchId +: alreadyOrdered).take(batchHistory)
@@ -184,7 +190,7 @@ final class EntityStore(val root: String, spark: SparkSession,
         tmpName = s"_latest.tmp$next")
       pruneVersions(next)
       true
-    } finally batchSurf.unpersist(blocking = false)
+    } finally delta.unpersist(blocking = false)
   }
 
   /** Delete version dirs older than `retainVersions` behind `current`.
@@ -201,21 +207,15 @@ final class EntityStore(val root: String, spark: SparkSession,
       .filter(v => v >= 1L && v <= current - retainVersions)
       .foreach(v => sfs.delete(versionDir(v), recursive = true))
 
-  private def writeBuckets(df: DataFrame, dir: HPath): Unit =
-    df.repartition($"bucket") // one file per bucket dir
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(dir.toString)
-
-  private def linkCleanBuckets(
-      prevVersion: Long, nextDir: HPath, name: String, dirty: Set[Int]): Unit = {
+  private def linkCleanBuckets(prevVersion: Long, nextDir: HPath, dirty: Set[Int]): Unit = {
     if (prevVersion == 0L) return
-    val prev = new HPath(versionDir(prevVersion), name)
+    val prev = new HPath(versionDir(prevVersion), "entities")
     if (!sfs.exists(prev)) return
     sfs.listNames(prev).foreach { dn =>
       if (dn.startsWith("bucket=") &&
           !dirty.contains(dn.stripPrefix("bucket=").toInt)) {
         val src = new HPath(prev, dn)
-        val target = new HPath(new HPath(nextDir, name), dn)
+        val target = new HPath(new HPath(nextDir, "entities"), dn)
         sfs.mkdirs(target)
         sfs.listNames(src).foreach { fn =>
           sfs.linkOrCopy(new HPath(src, fn), new HPath(target, fn))
@@ -229,7 +229,7 @@ final class EntityStore(val root: String, spark: SparkSession,
     * form (A2 tie-break: count DESC, text ASC), merged counts.
     */
   def dict(): Dataset[EntityRecord] =
-    EntityLink.dictFromStats(surfaces(), news())
+    EntityLink.dictFromTagged(tagged(currentVersion()))
 }
 
 object EntityStore {

@@ -79,8 +79,8 @@ object KgPipeline {
     // per-article counts); caching is governed by cfg.cache — see Config.
     val mentions = maybePersist(NerExtractor.extractMentions(
       cleaned, trie, cfg.keepTypes, textCol = "clean"), cfg.cache)
-    // the dictionary is consumed twice by canonicalization (edge build and
-    // key render) and optionally by the salted link
+    // the dictionary is consumed once by canonicalization and optionally
+    // by the salted link
     val dict = maybePersist(EntityLink.buildEntityDict(mentions).toDF(), cfg.cache)
     val perArticle = EntityLink.mentionsPerArticle(mentions)
     val linked =
@@ -104,7 +104,8 @@ object KgPipeline {
     (mentions, dict, mentionTriples)
   }
 
-  /** sameAs triples via connected components over alias edges.
+  /** sameAs triples via connected components over alias edges; `dict`
+    * needs only the key columns (a dictionary or [[EntityStore.keys]]).
     * Edge source: entities sharing the SAME normalized text with different
     * types are NOT merged (type is part of identity, as in the reference
     * dictionary key `(norm, type)`, tables.py:59-79); edges come from an
@@ -115,24 +116,33 @@ object KgPipeline {
   def sameAsTriples(dict: DataFrame, aliases: DataFrame): DataFrame = {
     val spark = dict.sparkSession
     import spark.implicits._
-    // nodes are entity ids; alias edges join through normalized text
-    val idByNorm = dict.select($"entity_text_norm", $"entity_type", $"id_entity")
+    // only alias endpoints can carry an edge: the dictionary semi-joined
+    // to them (≤ 2·|aliases| rows) is materialized ONCE, and edges, key
+    // rendering and the result's consumers read it, never the dictionary
+    val ends = aliases.select(
+      explode(array($"norm_a", $"norm_b")).as("entity_text_norm"), $"entity_type")
+    val nodes = dict.select($"entity_text_norm", $"entity_type")
+      .join(ends, Seq("entity_text_norm", "entity_type"), "left_semi")
+      .select($"entity_text_norm", $"entity_type",
+        Text.entityId($"entity_text_norm", $"entity_type").as("id"),
+        concat($"entity_text_norm", lit("|"), $"entity_type").as("key"))
+      .localCheckpoint()
+    val idByNorm = nodes.select($"entity_text_norm", $"entity_type", $"id")
     val edges = aliases // (norm_a, norm_b, entity_type)
       .join(idByNorm.withColumnRenamed("entity_text_norm", "norm_a")
-        .withColumnRenamed("id_entity", "src"), Seq("norm_a", "entity_type"))
+        .withColumnRenamed("id", "src"), Seq("norm_a", "entity_type"))
       .join(idByNorm.withColumnRenamed("entity_text_norm", "norm_b")
-        .withColumnRenamed("id_entity", "dst"), Seq("norm_b", "entity_type"))
+        .withColumnRenamed("id", "dst"), Seq("norm_b", "entity_type"))
       .select($"src", $"dst")
     // runAuto handles the empty/small/large regimes (alias graphs are
     // dictionary-sized → usually the driver union-find path); empty labels
     // fall through to an empty join result, no extra isEmpty job.
     val labels = ConnectedComponents.runAuto(edges)
-    val idToKey = dict.select($"id_entity",
-      concat($"entity_text_norm", lit("|"), $"entity_type").as("key"))
+    val idToKey = nodes.select($"id", $"key")
     labels.filter($"node" =!= $"comp")
-      .join(idToKey.withColumnRenamed("id_entity", "node")
+      .join(idToKey.withColumnRenamed("id", "node")
         .withColumnRenamed("key", "subj_key"), Seq("node"))
-      .join(idToKey.withColumnRenamed("id_entity", "comp")
+      .join(idToKey.withColumnRenamed("id", "comp")
         .withColumnRenamed("key", "obj_key"), Seq("comp"))
       .select($"subj_key".as("subj"), lit(Pred.SameAs).as("pred"),
         $"obj_key".as("obj"), lit(1L).as("weight"),
@@ -314,37 +324,20 @@ object KgPipeline {
     }.toDF("entity_text_norm", "entity_type", "entity_text", "n")
     // ONE linear chain — no branch, no join (branching on the null tag
     // pushes the filters below the aggregate and defeats exchange reuse,
-    // doubling the cache scan): agg1 totals per surface (marker rows
-    // aggregate under null), agg2 folds surfaces into the dict row with
-    // conditional aggregates; null-tag rows get the worst modal order.
-    val agg = tagged
+    // doubling the cache scan): level 1 totals per surface (marker rows
+    // aggregate under null), level 2 is the shared dictFromTagged
+    EntityLink.dictFromTagged(tagged
       .groupBy($"entity_text_norm", $"entity_type", $"entity_text")
-      .agg(sum($"n").as("c"))
-    agg
-      .groupBy($"entity_text_norm", $"entity_type")
-      .agg(
-        min_by($"entity_text",
-          struct(
-            when($"entity_text".isNull, lit(Long.MaxValue)).otherwise(-$"c").as("nc"),
-            coalesce($"entity_text", lit("￿")).as("t")))
-          .as("entity_text"),
-        sum(when($"entity_text".isNotNull, $"c").otherwise(0L))
-          .as("entity_mentions_count"),
-        sum(when($"entity_text".isNull, $"c").otherwise(0L))
-          .as("news_count"))
-      .select(
-        graft.functions.Text.entityId($"entity_text_norm", $"entity_type").as("id_entity"),
-        $"entity_text", $"entity_text_norm", $"entity_type",
-        $"entity_mentions_count", $"news_count")
+      .agg(sum($"n").as("cnt"))).toDF()
   }
 
   /** Triples from an already-analyzed Dataset. Callers that consume
     * `analyzed` more than once (this derives 1-2 passes) own its caching
     * lifecycle — see [[runManaged]]/[[runIncremental]]. `preparedDict`
-    * lets a lifecycle-owning caller supply a CACHED dictionary: the
-    * sameAs path otherwise re-aggregates the full analysis once per
-    * dictionary consumer (edge build, key render ×2 — measured 4 extra
-    * full-cache scans per run at 8M pages).
+    * lets a lifecycle-owning caller supply a CACHED dictionary built by
+    * the one-scan [[dictFromAnalysis]]; without it the dictionary's
+    * consumers (sameAs, salted link) each re-aggregate the analysis
+    * through the generic [[EntityLink.dictFromSurfaceRows]].
     */
   def triplesFromAnalysis(
       analyzed: Dataset[PageAnalysis],
@@ -410,11 +403,11 @@ object KgPipeline {
     // duplicated work at 8M pages — the whole narrow pass again).
     analyzed.count()
     // the dictionary is corpus-aggregated but dictionary-SIZED (≪ data);
-    // caching it spares the sameAs path's 3-4 consumers a full re-scan
-    // of the analysis each
+    // caching it spares its consumers (sameAs, the salted link's two
+    // reads) a full re-scan of the analysis each
     val dict =
       if (aliases.nonEmpty || cfg.saltedLink) {
-        // dictionary-SIZED cache; consumers: sameAs path (3-4 reads)
+        // dictionary-SIZED cache; consumers: sameAs path (one read)
         // and/or the salted link join
         val d = dictFromAnalysis(analyzed)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -478,7 +471,7 @@ object KgPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // batch-dictionary cache, same lifecycle as runManaged's: the salted
     // link consumes the dict twice (hot-key scan + join build) and the
-    // store-less sameAs path 3-4 times — without preparedDict each
+    // store-less sameAs path once — without preparedDict each
     // consumer re-ran the FULL two-shuffle dictionary aggregation over
     // the analysis, once per micro-batch on the streaming path (the exact
     // regression preparedDict exists to prevent). Built lazily only for
@@ -532,7 +525,7 @@ object KgPipeline {
               // stale edges, and the anti-join still recommits the
               // deleted-but-current rows. All frames are dict-scale; the
               // COW rewrite runs only when a component actually merged.
-              val current = sameAsTriples(es.dict().toDF(), al)
+              val current = sameAsTriples(es.keys(), al)
               val stale = store.committedForPred(Pred.SameAs)
                 .select(col("subj"), col("obj"))
                 .join(current.select(col("subj"), col("obj")),

@@ -224,8 +224,10 @@ final class TripleStore(val root: String, spark: SparkSession,
     * `graft.store.bucketTargetBytes` for a production profile.
     */
   private def adaptiveBuckets(triples: DataFrame): (Int, Int) = {
-    val target = BigInt(sys.props.get("graft.store.bucketTargetBytes")
-      .map(_.toLong).getOrElse(64L * 1024 * 1024))
+    val target = BigInt(sys.props.get("graft.store.bucketTargetBytes").map { s =>
+      s.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"graft.store.bucketTargetBytes must be a positive number of bytes, got '$s'"))
+    }.getOrElse(64L * 1024 * 1024))
     val est = triples.queryExecution.optimizedPlan.stats.sizeInBytes
     val data =
       if (est <= 0) urlBuckets // unknown → conservative full spread

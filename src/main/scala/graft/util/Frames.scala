@@ -5,12 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Schema-bearing empty DataFrames — ONE definition. Hand-rolled
   * `createDataFrame(emptyRDD, fromDDL(...))` copies drift from their
   * non-empty twins by eye and only surface as join/union analysis errors
-  * at runtime.
+  * at runtime. An empty `LocalRelation`: Catalyst prunes anti-joins and
+  * unions against it, so a run against an empty store plans no exchange.
   */
 object Frames {
   def empty(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Spread a CPU-heavy narrow pass over the session's parallelism when

@@ -17,6 +17,9 @@ import graft.schema.Pred
   */
 class EntityStoreSpec extends SparkSpec {
 
+  /** Jobs one merge into a non-empty store may launch (measured: 7; the two-table merge ran 12). */
+  private val MergeJobBudget = 7L
+
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
@@ -159,8 +162,8 @@ class EntityStoreSpec extends SparkSpec {
     val b2 = Seq(("u900", "ent0", "ORG", "Ent0", 5L))
       .toDF("url", "entity_text_norm", "entity_type", "entity_text", "n")
     assert(es.merge("b2", b2))
-    val v1 = java.nio.file.Paths.get(root, "v=1", "surfaces")
-    val v2 = java.nio.file.Paths.get(root, "v=2", "surfaces")
+    val v1 = java.nio.file.Paths.get(root, "v=1", "entities")
+    val v2 = java.nio.file.Paths.get(root, "v=2", "entities")
     val dirtyBucket = math.floorMod(
       graft.util.Hashing.xxhash64("ent0"), EntityStore.dictBuckets.toLong).toInt
     // every clean bucket file in v2 is the SAME inode as v1's (hard link)
@@ -272,5 +275,86 @@ class EntityStoreSpec extends SparkSpec {
         .orderBy("entity_text_norm", "entity_type", "entity_text").collect().toSeq
       assert(got === oracle, s"$ways-way split")
     }
+  }
+
+  private def sortedDict(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("entity_text_norm", "entity_type").collect().toSeq
+
+  test("a store in the old two-table layout reads, replays, and merges into the one-table layout") {
+    import spark.implicits._
+    val root = tmp("graft_eslegacy_")
+    val b1 = rows(
+      (("u1", "spark", "ORG", "Spark", 2L) +: ("u1", "spark", "ORG", "SPARK", 1L) +:
+        ("u2", "spark", "ORG", "Spark", 1L) +:
+        (0 until 12).map(i => (s"u${i % 3}", s"ent$i", "ORG", s"Ent$i", 1L))): _*)
+    val b2 = rows(("u3", "spark", "ORG", "SPARK", 3L), ("u3", "paris", "GPE", "Paris", 1L))
+    // v=1 exactly as the two-table writer left it: `surfaces` and `news`,
+    // each hash-bucketed on the norm, plus the pointer and batch history
+    def bucketed(df: org.apache.spark.sql.DataFrame) = df.withColumn("bucket",
+      pmod(xxhash64($"entity_text_norm"), lit(EntityStore.dictBuckets)).cast("int"))
+    bucketed(b1.groupBy($"entity_text_norm", $"entity_type", $"entity_text")
+        .agg(sum($"n").as("surface_count")))
+      .write.partitionBy("bucket").parquet(s"$root/v=1/surfaces")
+    bucketed(b1.select($"entity_text_norm", $"entity_type", $"url").distinct()
+        .groupBy($"entity_text_norm", $"entity_type").agg(count(lit(1)).as("news_count")))
+      .write.partitionBy("bucket").parquet(s"$root/v=1/news")
+    Files.writeString(java.nio.file.Paths.get(root, "v=1", "_batches"), "b1\n")
+    Files.writeString(java.nio.file.Paths.get(root, "_latest"), "1")
+    val es = new EntityStore(root, spark)
+    val oracle1 = sortedDict(graft.link.EntityLink.dictFromSurfaceRows(b1).toDF())
+    assert(sortedDict(es.dict().toDF()) === oracle1)
+    assert(!es.merge("b1", b1), "a replay of the old version's batch must no-op")
+    assert(sortedDict(es.dict().toDF()) === oracle1)
+    assert(es.merge("b2", b2))
+    assert(sortedDict(es.dict().toDF()) ===
+      sortedDict(graft.link.EntityLink.dictFromSurfaceRows(b1.unionByName(b2)).toDF()))
+    // the first merge rewrote every bucket (clean ones included) as `entities`
+    assert(Files.exists(java.nio.file.Paths.get(root, "v=2", "entities")))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "v=2", "surfaces")))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "v=2", "news")))
+    assert(es.mergedBatches() === Set("b1", "b2"))
+  }
+
+  test("keys() lists every entity of the store once") {
+    val es = new EntityStore(tmp("graft_eskeys_"), spark)
+    val b = rows(("u1", "spark", "ORG", "Spark", 2L), ("u1", "spark", "ORG", "SPARK", 1L),
+      ("u2", "paris", "GPE", "Paris", 1L))
+    assert(es.merge("b1", b))
+    assert(es.merge("b2", rows(("u3", "spark", "ORG", "Spark", 1L))))
+    val keys = es.keys().collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(keys === Seq(("paris", "GPE"), ("spark", "ORG")))
+  }
+
+  test("merge into a non-empty store stays inside its job budget") {
+    val es = new EntityStore(tmp("graft_esjobs_"), spark)
+    assert(es.merge("b1", rows((0 until 40).map(i => (s"u$i", s"ent$i", "ORG", s"Ent$i", 1L)): _*)))
+    val b2 = rows(("u90", "ent1", "ORG", "Ent1", 2L), ("u91", "ent2", "ORG", "ENT2", 1L),
+      ("u91", "new", "ORG", "New", 1L))
+    val (jobs, _) = sparkActivity(assert(es.merge("b2", b2)))
+    // the two-table merge ran 12 jobs (two delta aggregations, a groupBy
+    // shuffle plus a repartition shuffle per table, two writes); the
+    // one-table merge aggregates the delta once and writes once
+    assert(jobs <= MergeJobBudget, s"merge launched $jobs jobs, budget $MergeJobBudget")
+  }
+
+  test("sameAsTriples over a parquet-backed dictionary scans it once") {
+    import spark.implicits._
+    val es = new EntityStore(tmp("graft_essa_"), spark)
+    val b = rows(("u1", "united states", "GPE", "United States", 1L),
+      ("u2", "u.s.", "GPE", "U.S.", 1L), ("u3", "paris", "GPE", "Paris", 1L))
+    assert(es.merge("b1", b))
+    val aliases = Seq(("u.s.", "united states", "GPE")).toDF("norm_a", "norm_b", "entity_type")
+    val expected = KgPipeline.sameAsTriples(
+      graft.link.EntityLink.dictFromSurfaceRows(b).toDF(), aliases).collect().toSeq
+    assert(expected.length === 1)
+    var got = Seq.empty[org.apache.spark.sql.Row]
+    val (_, scans) = sparkActivity {
+      got = KgPipeline.sameAsTriples(es.dict().toDF(), aliases).collect().toSeq
+    }
+    assert(got === expected)
+    // edges, key rendering and the result all read one materialized
+    // frame of alias endpoints; the two-table path scanned the dictionary
+    // once per consumer
+    assert(scans === 1L, s"the dictionary was scanned by $scans stages")
   }
 }

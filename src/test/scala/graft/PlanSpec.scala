@@ -192,4 +192,25 @@ class PlanSpec extends SparkSpec {
     assert(unpartitioned === 0,
       "slice must not funnel the table through one unpartitioned window task")
   }
+
+  test("unprocessed against a store with no markers plans no join and no exchange") {
+    val pagesDir = java.nio.file.Files.createTempDirectory("graft_plan_pages_").toString
+    spark.range(200).selectExpr("concat('u', id) AS url", "'en' AS lang")
+      .write.mode("overwrite").parquet(pagesDir)
+    val store = new graft.pipeline.TripleStore(
+      java.nio.file.Files.createTempDirectory("graft_plan_ts_").toString, spark)
+    val todo = store.unprocessed(spark.read.parquet(pagesDir), graft.schema.Pred.Processed)
+    // the empty marker side is a LocalRelation Catalyst prunes: the
+    // anti-join becomes its left side instead of shuffling the pages
+    val joins = todo.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(joins.isEmpty, todo.queryExecution.optimizedPlan.toString)
+    val executed = todo.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(countShuffles(executed) === 0, executed.toString)
+    assert(todo.count() === 200L)
+  }
 }

@@ -558,4 +558,17 @@ class TripleStoreSpec extends SparkSpec {
     assert(weights() === before,
       "weights must survive a fold of mixed-schema batches unchanged")
   }
+
+  test("graft.store.bucketTargetBytes: a non-numeric or non-positive value fails naming the property") {
+    val store = new TripleStore(tmp(), spark)
+    for (bad <- Seq("64MB", "0", "-5")) {
+      sys.props("graft.store.bucketTargetBytes") = bad
+      val e = try intercept[IllegalArgumentException] {
+        store.commit("b1", triples(("u1", "mentions", "e1", 1L)))
+      } finally sys.props -= "graft.store.bucketTargetBytes"
+      assert(e.getMessage.contains("graft.store.bucketTargetBytes"), e.getMessage)
+    }
+    assert(store.committedBatches().isEmpty)
+    assert(store.commit("b1", triples(("u1", "mentions", "e1", 1L))) === 1L)
+  }
 }
