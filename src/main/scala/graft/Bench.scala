@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (the driver's BENCH_r{N}.json contract).
@@ -21,13 +20,7 @@ object Bench {
     // BENCH_r03) is self-describing instead of a mystery regression
     val steal0 = stealJiffies()
     val tWall0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSpark.session(cpus)
     // SPARK_GRAFT_STAGE_METRICS=1: per-stage run/cpu/gc lines
     graft.bench.StageMetrics.installIfRequested(spark.sparkContext)
     // force the fixture model to train OUTSIDE the timed region (it is a

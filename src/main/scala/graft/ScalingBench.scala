@@ -64,10 +64,6 @@ object ScalingBench {
       .config("spark.local.dir", localDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // AQE's stage-by-stage driver coordination is part of the serial
-      // floor; allow toggling it for the N-vs-4N protocol experiments
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -79,17 +75,9 @@ object ScalingBench {
     import spark.implicits._
     val aliases = FixtureGazetteer.aliasPairs.toDF("norm_a", "norm_b", "entity_type")
     val pages = spark.read.parquet(inputDir)
-    // SPARK_GRAFT_SALTED=1 routes the mention link through the skew-safe
-    // salted join (same fused analyzer) — the no-regression check for the
-    // salted path at scale
-    val cfg =
-      if (sys.env.get("SPARK_GRAFT_SALTED")
-            .exists(v => v == "1" || v.equalsIgnoreCase("true")))
-        KgPipeline.Config(saltedLink = true)
-      else KgPipeline.Config()
     // runManaged: persist the compact analysis for its two consumers,
     // release it after the materialization (no leak across repetitions)
-    KgPipeline.runManaged(pages, trie, params, Some(aliases), cfg) { out =>
+    KgPipeline.runManaged(pages, trie, params, Some(aliases)) { out =>
       // ONE materialization: the noop write evaluates every output row
       // and the Observation counts them in the same job — no second
       // pass, no cache of the result

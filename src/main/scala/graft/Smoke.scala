@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev driver: runs the flagship entry() (the driver's smoke check) and
   * prints row count + a sample, plus the physical plan of one headline
   * query for plan inspection.
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSpark.session(cpus)
     val t0 = System.nanoTime()
     // persist: count + the two shows would otherwise re-run the whole
     // pipeline once EACH (the timed number then covers only a third)

@@ -191,11 +191,9 @@ object SparkEntry {
     import s.implicits._
     val aliases = FixtureGazetteer.aliasPairs
       .toDF("norm_a", "norm_b", "entity_type")
-    // cacheAnalysis=false: a lazy result returned to Verify/Bench would
-    // otherwise hold a JVM-lifetime cache; at these fixture sizes the
-    // narrow recompute is cheaper than the leak
-    KgPipeline.run(PageGen.pages(s, nPages).toDF(), trie, params, Some(aliases),
-      KgPipeline.Config(cacheAnalysis = false))
+    // run, not runManaged: the lazy result is returned to Verify/Bench, and
+    // at fixture sizes recomputing the narrow pass is cheaper than a cache
+    KgPipeline.run(PageGen.pages(s, nPages).toDF(), trie, params, Some(aliases))
   }
 
   /** Oracle staging: DuckDB restates model/LSH-parameterized queries by

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 plan capture: dumps `.explain("formatted")` for each declared
   * query to `plans/r06/<query>_<tag>.txt` (the optimization round's
   * evidence files). Not part of the measured bench — a diagnostic main,
@@ -16,13 +14,7 @@ object Plans {
       Some(args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSpark.session(cpus)
     graft.SparkEntry.fixtureModel
     val outDir = java.nio.file.Paths.get("plans", "r06")
     java.nio.file.Files.createDirectories(outDir)

@@ -117,25 +117,10 @@ object EntityLink {
     *
     * Hot keys are detected by a pre-aggregation (count > hotThreshold) —
     * map-side-combined, tiny on the wire — UNLESS the caller supplies
-    * `hotKeys` (columns entity_text_norm, entity_type): every pipeline
-    * caller already holds the aggregated dictionary whose news_count IS
-    * this statistic, and re-deriving it from the much larger per-article
-    * mention rows was most of the salted path's +39% overhead
-    * (VERDICT r04 what's-wrong #1).
+    * `hotKeys` (columns entity_text_norm, entity_type), e.g. an aggregated
+    * dictionary filtered on its news_count, which IS this statistic
+    * without re-aggregating the much larger per-article mention rows.
     */
-  /** Hot-key set for [[linkSalted]] derived from an aggregated
-    * dictionary's `news_count` stat — ≡ the per-article row count
-    * linkSalted would otherwise re-aggregate from the much larger mention
-    * side (VERDICT r04 what's-wrong #1). Pipeline callers hold the dict
-    * cached, so this is one dictionary-sized scan instead of a
-    * corpus-sized shuffle agg.
-    */
-  def hotKeysFromDict(dict: DataFrame, hotThreshold: Long): DataFrame = {
-    import dict.sparkSession.implicits._
-    dict.filter($"news_count" > hotThreshold)
-      .select($"entity_text_norm", $"entity_type")
-  }
-
   def linkSalted(
       mentions: DataFrame,
       dict: DataFrame,

@@ -1,58 +1,35 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.canon.ConnectedComponents
 import graft.functions.{Registry, Text}
 import graft.link.EntityLink
 import graft.ner.{FixtureGazetteer, NerExtractor, TokenTrie}
-import graft.schema.{Mention, PageAnalysis, Pred, SurfaceCount, Triple}
+import graft.schema.{PageAnalysis, Pred, SurfaceCount}
 import graft.topics.{TopicModelParams, TopicScorer}
 
 /** The end-to-end knowledge-graph construction pipeline (north_star):
   *
   *   pages(url, warc_ts, html, text, lang)
-  *     → (1) deterministic HTML→text (byte-identity checked vs `text`)
-  *     → clean_text (P1)
-  *     → (2) batched NER (broadcast trie, mapPartitions)  + topic scoring
-  *     → (3) entity linking (broadcast / salted join)
-  *     → (4) connected-components canonicalization
-  *     → triples (article hasTopic topic | article mentions entity |
-  *                entity sameAs canonical)
+  *     → (1) ONE fused narrow pass ([[analyze]]): html→text (byte-identity
+  *       checked vs `text`), clean_text (P1), trie NER with in-page
+  *       counts, topic scoring → PageAnalysis (~100 B/page)
+  *     → (2) hasTopic + mentions triples straight from the analysis
+  *       ([[pageTriples]]): entity ids are `xxhash64(norm, type)`, so no
+  *       dictionary join links a mention
+  *     → (3) entity dictionary + connected-components canonicalization
+  *       over alias edges → sameAs triples
   *
   * Stages (1)-(2) are NARROW (no shuffle); the only shuffles are the
-  * dictionary aggregation, the CC rounds, and — if the dictionary outgrows
-  * broadcast — the salted link join.
+  * dictionary aggregation and the CC rounds.
   */
 object KgPipeline {
 
   final case class Config(
-      keepTypes: Option[Set[String]] = Some(FixtureGazetteer.keepLabels),
-      saltedLink: Boolean = false,
-      saltFactor: Int = 16,
-      hotThreshold: Long = 100000L,
-      /** Cache intermediate datasets (cleaned/mentions/dict). Caching
-        * saves 2-3 recomputes of the narrow scalar work but serializes
-        * every row through the block manager; when the whole pipeline
-        * materializes as ONE job, concurrent branch stages contend on
-        * cache writes and recompute racing partitions anyway. The narrow
-        * work is ~30µs/page, so recomputing scales better than caching
-        * at high parallelism — measured 4× faster at local[32].
-        */
-      cache: Boolean = false,
-      /** Cache the COMPACT PageAnalysis (~100 B/page — unlike the raw
-        * text, always worth caching when there are 2+ consumers). Callers
-        * of the lazy [[run]] own the unpersist; [[runManaged]] and
-        * [[runIncremental]] release it in a finally.
-        */
-      cacheAnalysis: Boolean = true)
-
-  private def maybePersist[T](ds: org.apache.spark.sql.Dataset[T], on: Boolean) =
-    if (on)
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ds
+      keepTypes: Option[Set[String]] = Some(FixtureGazetteer.keepLabels))
 
   /** Extract text from html and verify byte-identity against the `text`
     * column (the input_hint invariant). Returns pages with `clean` column
@@ -66,42 +43,6 @@ object KgPipeline {
       .withColumn("extracted_text", Registry.htmlToText(col("html")))
       .withColumn("text_identical", col("extracted_text") === col("text"))
       .withColumn("clean", Registry.cleanTextFast(col("extracted_text")))
-  }
-
-  /** Mentions triple path: NER → dictionary → canonical sameAs edges. */
-  def mentionTriples(
-      cleaned: DataFrame,
-      trie: Broadcast[TokenTrie],
-      cfg: Config): (Dataset[Mention], DataFrame, DataFrame) = {
-    val spark = cleaned.sparkSession
-    import spark.implicits._
-    // Mentions feed THREE consumers (surface counts, exact news_count,
-    // per-article counts); caching is governed by cfg.cache — see Config.
-    val mentions = maybePersist(NerExtractor.extractMentions(
-      cleaned, trie, cfg.keepTypes, textCol = "clean"), cfg.cache)
-    // the dictionary is consumed once by canonicalization and optionally
-    // by the salted link
-    val dict = maybePersist(EntityLink.buildEntityDict(mentions).toDF(), cfg.cache)
-    val perArticle = EntityLink.mentionsPerArticle(mentions)
-    val linked =
-      if (cfg.saltedLink)
-        // prune the dict to the join key + id: its stats columns collide
-        // with perArticle's entity_mentions_count (AMBIGUOUS_REFERENCE in
-        // the select below) — same pruning as pageTriplesSalted. Hot keys
-        // from the cached dict's own stats (hotKeysFromDict).
-        EntityLink.linkSalted(
-          perArticle.drop("id_entity"),
-          dict.select(col("entity_text_norm"), col("entity_type"), col("id_entity")),
-          cfg.saltFactor, cfg.hotThreshold,
-          hotKeys = Some(EntityLink.hotKeysFromDict(dict, cfg.hotThreshold)))
-      else perArticle // id already deterministic: xxhash64(norm, type)
-    val mentionTriples = linked.select(
-      $"url".as("subj"),
-      lit(Pred.Mentions).as("pred"),
-      concat($"entity_text_norm", lit("|"), $"entity_type").as("obj"),
-      $"entity_mentions_count".cast("long").as("weight"),
-      $"lang")
-    (mentions, dict, mentionTriples)
   }
 
   /** sameAs triples via connected components over alias edges; `dict`
@@ -149,24 +90,6 @@ object KgPipeline {
         lit("und").as("lang")) // entity nodes are cross-language
   }
 
-  def topicTriples(cleaned: DataFrame, params: Broadcast[TopicModelParams]): DataFrame = {
-    val spark = cleaned.sparkSession
-    import spark.implicits._
-    // narrow scoring pass that carries lang through (no join back to pages)
-    val langExpr =
-      if (cleaned.columns.contains("lang")) col("lang") else lit("und")
-    cleaned.select($"url", langExpr.as("lang"), $"clean")
-      .as[(String, String, String)]
-      .mapPartitions { it =>
-        val p = params.value
-        it.map { case (url, lang, text) =>
-          val a = TopicScorer.score(p, url, if (text == null) "" else text)
-          (url, Pred.HasTopic, s"topic_${a.id_topic}", 1L, lang)
-        }
-      }
-      .toDF("subj", "pred", "obj", "weight", "lang")
-  }
-
   /** THE fused narrow pass — the 100 TB-shaped core of the engine: ONE
     * scan of the pages table does html→text (with the byte-identity
     * check), clean_text, trie NER with in-page per-surface counting
@@ -187,8 +110,8 @@ object KgPipeline {
     val langExpr =
       if (pages.columns.contains("lang")) col("lang") else lit("und")
     // html may arrive binary (the input_hint contract) or string (staged
-    // text fixtures) — cast("binary") accepts both, matching HtmlToText's
-    // binary-or-string contract on the staged path
+    // text fixtures) — cast("binary") accepts both, like HtmlToText's
+    // binary-or-string contract
     pages.select(col("url"), langExpr.as("lang"),
         col("html").cast("binary").as("html"), col("text"))
       .as[(String, String, Array[Byte], String)]
@@ -197,9 +120,8 @@ object KgPipeline {
         val p = params.value
         val keep = cfg.keepTypes
         it.map { case (url, lang, html, text) =>
-          // null html must not NPE the task — the staged path's HtmlToText
-          // Expression is null-safe, and run ≡ runStaged is a pinned
-          // contract
+          // a null html must not NPE the task (one bad row would fail the
+          // whole batch): it analyzes as an empty page — a topic, no mentions
           val extracted = graft.functions.HtmlStripper.strip(
             if (html == null) ""
             else new String(html, java.nio.charset.StandardCharsets.UTF_8))
@@ -235,56 +157,6 @@ object KgPipeline {
       a.surfaces.map(s =>
         (a.url, s.entity_text_norm, s.entity_type, s.entity_text, s.n))
     }.toDF("url", "entity_text_norm", "entity_type", "entity_text", "n")
-  }
-
-  /** Per-(url, entity) aggregated mention rows from the compact analysis —
-    * the salted link's input shape, derived narrowly (no extra NER pass).
-    */
-  def perArticleFromAnalysis(analyzed: Dataset[PageAnalysis]): DataFrame = {
-    val spark = analyzed.sparkSession
-    import spark.implicits._
-    analyzed.flatMap { a =>
-      a.surfaces.groupBy(s => (s.entity_text_norm, s.entity_type))
-        .toSeq.sortBy(_._1)
-        .map { case ((norm, tpe), ss) =>
-          (a.url, norm, tpe, ss.map(_.n).sum, a.lang)
-        }
-    }.toDF("url", "entity_text_norm", "entity_type",
-      "entity_mentions_count", "lang")
-  }
-
-  /** [[pageTriples]]' mention rows via the SALTED dictionary join (J4's
-    * skew-safe variant) over the SAME cached analysis — value-identical
-    * output (q14 pins salted ≡ broadcast), for corpora whose hot entities
-    * overwhelm a broadcast/plain shuffle join. Topic rows stay narrow.
-    */
-  def pageTriplesSalted(
-      analyzed: Dataset[PageAnalysis],
-      dict: DataFrame,
-      cfg: Config): DataFrame = {
-    val spark = analyzed.sparkSession
-    import spark.implicits._
-    // prune the dict to the join's needs (key + id): its stats columns
-    // would collide with the per-article entity_mentions_count
-    val dictKeys = dict.select(
-      col("entity_text_norm"), col("entity_type"), col("id_entity"))
-    // hot keys from the cached dict's own stats — the dominant share of
-    // the salted path's +39% wall was re-aggregating them from the full
-    // mention set (VERDICT r04 #1; see EntityLink.hotKeysFromDict)
-    val linked = EntityLink.linkSalted(
-      perArticleFromAnalysis(analyzed), dictKeys, cfg.saltFactor,
-      cfg.hotThreshold,
-      hotKeys = Some(EntityLink.hotKeysFromDict(dict, cfg.hotThreshold)))
-    val mt = linked.select(
-      $"url".as("subj"),
-      lit(Pred.Mentions).as("pred"),
-      concat($"entity_text_norm", lit("|"), $"entity_type").as("obj"),
-      $"entity_mentions_count".cast("long").as("weight"),
-      $"lang")
-    val tt = analyzed.map(a =>
-      (a.url, Pred.HasTopic, s"topic_${a.id_topic}", 1L, a.lang))
-      .toDF("subj", "pred", "obj", "weight", "lang")
-    tt.unionByName(mt)
   }
 
   /** Mention + hasTopic triples in ONE narrow pass over the compact
@@ -331,13 +203,14 @@ object KgPipeline {
       .agg(sum($"n").as("cnt"))).toDF()
   }
 
-  /** Triples from an already-analyzed Dataset. Callers that consume
-    * `analyzed` more than once (this derives 1-2 passes) own its caching
-    * lifecycle — see [[runManaged]]/[[runIncremental]]. `preparedDict`
-    * lets a lifecycle-owning caller supply a CACHED dictionary built by
-    * the one-scan [[dictFromAnalysis]]; without it the dictionary's
-    * consumers (sameAs, salted link) each re-aggregate the analysis
-    * through the generic [[EntityLink.dictFromSurfaceRows]].
+  /** Triples from an already-analyzed Dataset: [[pageTriples]] plus, with
+    * `aliases`, [[sameAsTriples]]. Callers that consume `analyzed` more
+    * than once (this derives 1-2 passes) own its caching lifecycle — see
+    * [[runManaged]]/[[runIncremental]]. `preparedDict` lets such a caller
+    * supply a CACHED dictionary built by the one-scan [[dictFromAnalysis]];
+    * without it sameAs aggregates the analysis through the generic
+    * [[EntityLink.dictFromSurfaceRows]]. `cfg` is unused; it stays for
+    * source compatibility.
     */
   def triplesFromAnalysis(
       analyzed: Dataset[PageAnalysis],
@@ -346,43 +219,32 @@ object KgPipeline {
       cfg: Config = Config()): DataFrame = {
     val spark = analyzed.sparkSession
     import spark.implicits._
-    lazy val dict = preparedDict.getOrElse(
-      EntityLink.dictFromSurfaceRows(surfaceRows(analyzed)).toDF())
-    // the salted link rides the SAME compact analysis (no staged re-run —
-    // VERDICT r02 #10); value-identical to the direct path, q14-pinned
-    val pt =
-      if (cfg.saltedLink) pageTriplesSalted(analyzed, dict, cfg)
-      else pageTriples(analyzed)
-    val sa = aliases.map(al => sameAsTriples(dict, al)).getOrElse(
+    val sa = aliases.map { al =>
+      val dict = preparedDict.getOrElse(
+        EntityLink.dictFromSurfaceRows(surfaceRows(analyzed)).toDF())
+      sameAsTriples(dict, al)
+    }.getOrElse(
       Seq.empty[(String, String, String, Long, String)]
         .toDF("subj", "pred", "obj", "weight", "lang"))
-    pt.unionByName(sa)
+    pageTriples(analyzed).unionByName(sa)
   }
 
   /** Full run over a pages DataFrame; returns the complete triple set
     * (subj, pred, obj, weight, lang). `aliases` may be empty
     * (schema: norm_a, norm_b, entity_type).
     *
-    * NOTE the result is lazy and (with cfg.cacheAnalysis) holds a cached
-    * Dataset for the JVM's lifetime; prefer [[runManaged]] when the
-    * caller materializes once — it unpersists in a finally AND
-    * eager-materializes the caches in dependency order (a lazy plan over
-    * an unfilled cache lets concurrent broadcast-exchange jobs recompute
-    * the narrow pass for not-yet-cached partitions).
+    * The result is lazy and persists neither the analysis nor the
+    * dictionary, so each action re-runs the fused pass. Callers that read
+    * the result more than once use [[runManaged]], which persists both,
+    * materializes them in dependency order and releases them in a finally.
     */
   def run(
       pages: DataFrame,
       trie: Broadcast[TokenTrie],
       params: Broadcast[TopicModelParams],
       aliases: Option[DataFrame] = None,
-      cfg: Config = Config()): DataFrame = {
-    // the compact analysis is the ONLY thing worth caching: multiple
-    // consumers, ~100 B/page. cfg.saltedLink routes the mention link
-    // through the skew-safe salted join over this same cache (it no
-    // longer bypasses the fused analyzer via runStaged — VERDICT r02 #10)
-    val analyzed = maybePersist(analyze(pages, trie, params, cfg), cfg.cacheAnalysis)
-    triplesFromAnalysis(analyzed, aliases, cfg = cfg)
-  }
+      cfg: Config = Config()): DataFrame =
+    triplesFromAnalysis(analyze(pages, trie, params, cfg), aliases, cfg = cfg)
 
   /** [[run]] with owned cache lifecycle: persist the compact analysis,
     * hand the lazy triples to `use` (which must materialize them), then
@@ -403,12 +265,9 @@ object KgPipeline {
     // duplicated work at 8M pages — the whole narrow pass again).
     analyzed.count()
     // the dictionary is corpus-aggregated but dictionary-SIZED (≪ data);
-    // caching it spares its consumers (sameAs, the salted link's two
-    // reads) a full re-scan of the analysis each
+    // caching it spares sameAs a full re-scan of the analysis
     val dict =
-      if (aliases.nonEmpty || cfg.saltedLink) {
-        // dictionary-SIZED cache; consumers: sameAs path (one read)
-        // and/or the salted link join
+      if (aliases.nonEmpty) {
         val d = dictFromAnalysis(analyzed)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         d.count()
@@ -419,33 +278,6 @@ object KgPipeline {
       dict.foreach(_.unpersist(blocking = false))
       analyzed.unpersist(blocking = false)
     }
-  }
-
-  /** The stage-composed variant (operators individually reusable /
-    * testable; exercises the salted link join). Triple-set equal to the
-    * fused [[run]] — pinned by PipelineSpec.
-    */
-  def runStaged(
-      pages: DataFrame,
-      trie: Broadcast[TokenTrie],
-      params: Broadcast[TopicModelParams],
-      aliases: Option[DataFrame] = None,
-      cfg: Config = Config()): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // same missing-lang fallback as analyze()/topicTriples() — the two
-    // run() variants must accept the same input schemas
-    val langExpr =
-      (if (pages.columns.contains("lang")) col("lang") else lit("und")).as("lang")
-    val cleaned = maybePersist(withCleanText(pages)
-      .select(col("url"), langExpr, col("clean")), cfg.cache) // prune early: html not needed
-    val (_, dict, mt) = mentionTriples(cleaned, trie, cfg)
-    val tt = topicTriples(cleaned, params)
-    val sa = aliases.map(a => sameAsTriples(dict, a)).getOrElse(
-      Seq.empty[(String, String, String, Long, String)]
-        .toDF("subj", "pred", "obj", "weight", "lang"))
-    val out = mt.unionByName(tt).unionByName(sa)
-    out
   }
 
   /** Incremental run against a TripleStore: process only urls without a
@@ -469,16 +301,15 @@ object KgPipeline {
     val todo = store.unprocessed(pages, Pred.Processed)
     val analyzed = analyze(todo, trie, params, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // batch-dictionary cache, same lifecycle as runManaged's: the salted
-    // link consumes the dict twice (hot-key scan + join build) and the
-    // store-less sameAs path once — without preparedDict each
-    // consumer re-ran the FULL two-shuffle dictionary aggregation over
-    // the analysis, once per micro-batch on the streaming path (the exact
-    // regression preparedDict exists to prevent). Built lazily only for
-    // the configs that consume it; dict.count() materializes the analyzed
-    // cache in dependency order first (its aggregation scans every
-    // partition), so no later broadcast-exchange job races a cold cache.
-    val needDict = cfg.saltedLink || (aliases.nonEmpty && entityStore.isEmpty)
+    // batch-dictionary cache, same lifecycle as runManaged's, for its one
+    // consumer: the store-less sameAs path (with an EntityStore, sameAs
+    // reads the cumulative keys instead). Without it that consumer would
+    // re-run the FULL two-shuffle dictionary aggregation over the analysis,
+    // once per micro-batch on the streaming path. dict.count() materializes the
+    // analyzed cache in dependency order first (its aggregation scans
+    // every partition), so no later broadcast-exchange job races a cold
+    // cache.
+    val needDict = aliases.nonEmpty && entityStore.isEmpty
     val dict =
       if (needDict) {
         val d = dictFromAnalysis(analyzed)

@@ -22,8 +22,7 @@ class ApiSpec extends SparkSpec {
     val bTrie = spark.sparkContext.broadcast(trie)
     val bParams = spark.sparkContext.broadcast(params)
     val pages = PageGen.pages(spark, 25L).toDF()
-    val triples = KgPipeline.run(pages, bTrie, bParams, None,
-      KgPipeline.Config(cacheAnalysis = false))
+    val triples = KgPipeline.run(pages, bTrie, bParams, None)
       .filter(col("pred").isin(Pred.HasTopic, Pred.Mentions))
       .select("subj", "pred", "obj", "weight")
       .as[(String, String, String, Long)].collect()

@@ -91,63 +91,33 @@ class PipelineSpec extends SparkSpec {
     assert(sameAs.size === expectedPairs.size)
   }
 
-  test("fused run() == stage-composed runStaged() triple-for-triple") {
-    import spark.implicits._
-    val staged = KgPipeline.runStaged(
-      PageGen.pages(spark, N).toDF(), trieBc, paramsBc, Some(aliases))
-      .select("subj", "pred", "obj", "weight", "lang")
-      .as[(String, String, String, Long, String)].collect().toSet
-    val fused = fullRun
-      .select("subj", "pred", "obj", "weight", "lang")
-      .as[(String, String, String, Long, String)].collect().toSet
-    assert(fused === staged)
-  }
-
-  test("saltedLink rides the fused analyzer: run(salted) == run(direct), hot or not") {
-    import spark.implicits._
-    // hotThreshold=0 makes EVERY entity hot → the salt actually exercises;
-    // the salted path now routes through the same compact analysis as the
-    // direct path (no runStaged detour), so triples must be identical
-    val direct = fullRun.select("subj", "pred", "obj", "weight", "lang")
-      .as[(String, String, String, Long, String)].collect().toSet
-    for (hot <- Seq(0L, 100000L)) {
-      val salted = KgPipeline.runManaged(
-        PageGen.pages(spark, N).toDF(), trieBc, paramsBc, Some(aliases),
-        KgPipeline.Config(saltedLink = true, hotThreshold = hot)) { t =>
-        t.select("subj", "pred", "obj", "weight", "lang")
-          .as[(String, String, String, Long, String)].collect().toSet
-      }
-      assert(salted === direct, s"hotThreshold=$hot")
-    }
-  }
-
-  test("runStaged with saltedLink=true matches the fused run (latent dict-column collision)") {
-    import spark.implicits._
-    // the staged salted path joined the UNPRUNED dict → two
-    // entity_mentions_count columns → AMBIGUOUS_REFERENCE at select time
-    val staged = KgPipeline.runStaged(
-      PageGen.pages(spark, N).toDF(), trieBc, paramsBc, Some(aliases),
-      KgPipeline.Config(saltedLink = true, hotThreshold = 0L))
-      .select("subj", "pred", "obj", "weight", "lang")
-      .as[(String, String, String, Long, String)].collect().toSet
-    val fused = fullRun.select("subj", "pred", "obj", "weight", "lang")
-      .as[(String, String, String, Long, String)].collect().toSet
-    assert(staged === fused)
-  }
-
-  test("null html row flows through the fused analyzer like the staged path") {
+  test("null html row yields one hasTopic and no mentions") {
     import spark.implicits._
     val rows = Seq(
       ("u1", "20240101000000", null.asInstanceOf[String], "plain text", "en"),
       ("u2", "20240101000000", "<p>erik larsen spoke</p>", "erik larsen spoke", "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val fused = KgPipeline.run(rows, trieBc, paramsBc, None,
-      KgPipeline.Config(cacheAnalysis = false))
+    val got = KgPipeline.run(rows, trieBc, paramsBc, None)
       .select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
-    val staged = KgPipeline.runStaged(rows, trieBc, paramsBc, None)
-      .select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
-    assert(fused === staged)
-    assert(fused.exists(t => t._1 == "u1" && t._2 == "hasTopic"))
+    def topic(url: String, text: String) = "topic_" +
+      graft.topics.TopicScorer.score(SparkEntry.fixtureModel, url,
+        graft.functions.Text.cleanTextScala(text)).id_topic
+    assert(got === Set(
+      ("u1", Pred.HasTopic, topic("u1", "")),
+      ("u2", Pred.HasTopic, topic("u2", "erik larsen spoke")),
+      ("u2", Pred.Mentions, "erik larsen|PERSON")))
+  }
+
+  test("run caches nothing: collecting its triples persists no RDD") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // no aliases: sameAsTriples local-checkpoints its alias-endpoint frame
+    // (≤ 2·|aliases| rows) by design; this pins the analysis and dictionary
+    val rows = KgPipeline.run(PageGen.pages(spark, 40L).toDF(), trieBc, paramsBc)
+      .collect()
+    assert(rows.nonEmpty)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "run must leave no persisted Dataset behind; callers that re-read use runManaged")
   }
 
   test("incremental batches commit each sameAs edge exactly once (cumulative dict)") {

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Round-5 scaling protocol session: KG pairs + dedup pairs + salted pair
+# Round-5 scaling protocol session: KG pairs + dedup pairs + 16N context run
 # + sf0.1 bench capture. Run EXCLUSIVELY (no concurrent Spark/sbt work).
 set -u
 cd /root/repo
@@ -40,14 +40,6 @@ for i in 1 2 3 4; do
   sbt -batch "runMain graft.ScalingBench run-dedup /tmp/graft_docs 2" 2>&1 | grep '"level"'
   sbt -batch "runMain graft.ScalingBench run-dedup /tmp/graft_docs 8" 2>&1 | grep '"level"'
   echo "dpair${i} steal_after=$(steal 10)"
-done
-
-echo "--- salted-vs-plain interleaved pairs at local[8] (hot-key reuse check) ---"
-for i in 1 2; do
-  echo "spair${i} steal_before=$(steal 10)"
-  sbt -batch "runMain graft.ScalingBench run /tmp/graft_pages 8" 2>&1 | grep '"level"' | sed 's/^/plain /'
-  SPARK_GRAFT_SALTED=1 sbt -batch "runMain graft.ScalingBench run /tmp/graft_pages 8" 2>&1 | grep '"level"' | sed 's/^/salted /'
-  echo "spair${i} steal_after=$(steal 10)"
 done
 
 echo "--- 16N context run (local[32]) ---"
