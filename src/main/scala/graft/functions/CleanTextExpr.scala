@@ -5,12 +5,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass `clean_text` (P1) — byte-identical to the regex chain in
-  * [[Text.cleanText]] (pinned by golden tests + the DuckDB oracle), but
-  * one scan over a char buffer instead of three `regexp_replace` passes
-  * with three intermediate strings. On the 100 TB hot path this halves
-  * the allocation rate of the extract stage, which is what gates thread
+/** The one scalar `clean_text` (P1): byte-identical to the regex chain in
+  * [[Text.cleanText]] (pinned by golden tests, the DuckDB oracle and a
+  * differential spec against the regex passes), as one scan over a char
+  * buffer instead of three `regexp_replace` passes with three
+  * intermediate strings. On the 100 TB hot path this halves the
+  * allocation rate of the extract stage, which is what gates thread
   * scaling (the work is memory-bound, not ALU-bound).
+  *
+  * Callers: the [[CleanText]] expression ([[clean]]), the fused analyzer
+  * [[graft.pipeline.KgPipeline.analyze]] ([[cleanString]]), the scalar
+  * twin [[Text.cleanTextScala]] (fixture trainer, specs) and, with raw
+  * spans, [[Text.cleanTextWithOffsets]] (single-text analyze,
+  * [[graft.api.Api]]).
   *
   * Reference semantics (`text_cleaning.py:25-35`):
   *   lower → collapse Python-`\s` runs (Unicode White_Space ∪ 0x1C..0x1F)
@@ -71,30 +78,74 @@ object CleanTextImpl {
     }
   }
 
-  /** String→String scalar twin used by the fused analyzer
+  /** `[begin, end)` raw-input span of every char of a string derived
+    * from the raw input.
+    */
+  private final class Spans(val begin: Array[Int], val end: Array[Int])
+
+  /** Raw spans of a length-changing lowercase (e.g. 'İ' → "i̇").
+    * Context-sensitive mappings (final sigma) are length-PRESERVING, so
+    * per-code-point lowercase lengths partition the full-context `lowered`
+    * exactly: each segment maps to its source code point's raw span while
+    * `lowered` keeps its own chars (and so its sigma context).
+    */
+  private def lowerSpans(raw: String, lowered: String): Spans = {
+    val bs = new Array[Int](lowered.length)
+    val es = new Array[Int](lowered.length)
+    var i = 0; var o = 0
+    while (i < raw.length) {
+      val cp = raw.codePointAt(i)
+      val n = Character.charCount(cp)
+      val lcLen = new String(Character.toChars(cp)).toLowerCase.length
+      val end = math.min(o + lcLen, lowered.length)
+      while (o < end) { bs(o) = i; es(o) = i + n; o += 1 }
+      i += n
+    }
+    new Spans(bs, es)
+  }
+
+  /** String→String clean used by the fused analyzer
     * ([[graft.pipeline.KgPipeline.analyze]]) — skips the two UTF-8
     * encode/decode round trips the UTF8String container cost on a path
     * whose input and consumers (trie NER, topic scoring) are Strings.
     * Char-identical to [[clean]] by construction (clean delegates here).
     */
-  def cleanString(s: String): String = {
+  def cleanString(s: String): String = scan(s, withSpans = false)._1
+
+  /** [[cleanString]] plus, for every char of the cleaned string, the
+    * `[begin, end)` span of the raw input it came from. A collapsed
+    * whitespace RUN maps to the raw span of the whole run and a deleted
+    * URL to nothing; a 1:1 lowercase maps char i to `[i, i + 1)` without
+    * building identity arrays.
+    */
+  def cleanWithSpans(s: String): (String, Array[Int], Array[Int]) = scan(s, withSpans = true)
+
+  private def scan(s: String, withSpans: Boolean): (String, Array[Int], Array[Int]) = {
     val lowered = lowerLikeUtf8(s)
     val n = lowered.length
+    // null: char i of `lowered` came from raw char i
+    val ls = if (!withSpans || n == s.length) null else lowerSpans(s, lowered)
     val buf = new Array[Char](n)
+    val ob = if (withSpans) new Array[Int](n) else null
+    val oe = if (withSpans) new Array[Int](n) else null
     // pass 1: collapse whitespace runs to single ASCII space
     var o = 0
     var i = 0
-    var prevSpace = false
     while (i < n) {
       val c = lowered.charAt(i)
+      var j = i + 1
       if (isPyWs(c)) {
-        if (!prevSpace) { buf(o) = ' '; o += 1; prevSpace = true }
-      } else {
-        buf(o) = c; o += 1; prevSpace = false
+        while (j < n && isPyWs(lowered.charAt(j))) j += 1
+        buf(o) = ' '
+      } else buf(o) = c
+      if (withSpans) {
+        ob(o) = if (ls == null) i else ls.begin(i)
+        oe(o) = if (ls == null) j else ls.end(j - 1)
       }
-      i += 1
+      o += 1
+      i = j
     }
-    // pass 2 (same buffer): delete http\S+ = "http" followed by ≥1
+    // pass 2 (same buffers): delete http\S+ = "http" followed by ≥1
     // non-space (after collapse the only whitespace char is ' ')
     var q = 0
     var p = 0
@@ -105,15 +156,20 @@ object CleanTextImpl {
         p += 4
         while (p < o && buf(p) != ' ') p += 1
       } else {
-        buf(q) = buf(p); q += 1; p += 1
+        buf(q) = buf(p)
+        if (withSpans) { ob(q) = ob(p); oe(q) = oe(p) }
+        q += 1; p += 1
       }
     }
-    // strip (only ' ' can remain at the edges)
+    // strip (only ' ' can remain at the edges; non-whitespace C0 controls
+    // stay, as Python strip() and the Column path's trim() keep them)
     var st = 0
     var e = q
     while (st < e && buf(st) == ' ') st += 1
     while (e > st && buf(e - 1) == ' ') e -= 1
-    new String(buf, st, e - st)
+    val out = new String(buf, st, e - st)
+    if (!withSpans) (out, null, null)
+    else (out, java.util.Arrays.copyOfRange(ob, st, e), java.util.Arrays.copyOfRange(oe, st, e))
   }
 }
 

@@ -79,31 +79,13 @@ object Text {
   /** P8: prompt-length truncation (`topics_naming.py:53,73`). */
   def truncateForPrompt(c: Column, n: Int = 7500): Column = substring(c, 1, n)
 
-  private val WsPattern = java.util.regex.Pattern.compile(s"(?U)$PyWs+")
-  private val UrlPattern = java.util.regex.Pattern.compile(s"(?U)http$PyNonWs+")
-
-  /** Driver/executor-scalar twin of [[cleanText]] — MUST stay semantically
-    * identical (golden-byte tests compare both against the same fixtures).
-    * Used where a plain String is in hand (fixture trainer, API-path
-    * single-doc analyze).
+  /** Driver/executor-scalar twin of [[cleanText]]: the one scanner
+    * [[CleanTextImpl.cleanString]], with null → "". Golden-byte tests and
+    * the Column ≡ scalar specs compare both against the same fixtures.
+    * Used where a plain String is in hand (fixture trainer, specs).
     */
-  def cleanTextScala(text: String): String = {
-    if (text == null) return ""
-    var t = text.toLowerCase
-    t = WsPattern.matcher(t).replaceAll(" ")
-    t = UrlPattern.matcher(t).replaceAll("")
-    // Python strip() semantics AFTER the collapse pass: every reference-
-    // whitespace char is already an ASCII space, and non-whitespace C0
-    // controls (\u0001..\u0008, \u000e..\u001b) must be KEPT — both
-    // Python strip() and the Column path's trim() keep them, while
-    // String.trim (<= U+0020) would overshoot and break the byte-parity
-    // contract with [[cleanText]].
-    var lo = 0
-    var hi = t.length
-    while (lo < hi && t.charAt(lo) == ' ') lo += 1
-    while (hi > lo && t.charAt(hi - 1) == ' ') hi -= 1
-    t.substring(lo, hi)
-  }
+  def cleanTextScala(text: String): String =
+    if (text == null) "" else CleanTextImpl.cleanString(text)
 
   /** [[cleanTextScala]] plus an offset map back into the raw input: for
     * every char of the cleaned string, the `[begin, end)` raw-char span it
@@ -112,74 +94,19 @@ object Text {
     * raw assembled full_text) while detection itself runs on the cleaned
     * text the batch pipeline uses.
     *
-    * The cleaned string is built from `text.toLowerCase` through the SAME
-    * regex passes as [[cleanTextScala]], so the two are byte-identical —
-    * including Java's context-sensitive final sigma (fuzz-pinned in
-    * ApiSpec over mixed İ/Σ inputs).
+    * The same scan as [[cleanTextScala]] ([[CleanTextImpl.cleanWithSpans]])
+    * builds the cleaned string, so the two are equal under any default
+    * locale — including Java's context-sensitive final sigma and
+    * length-changing lowercase (fuzz-pinned in ApiSpec over mixed İ/Σ
+    * inputs, and against a regex-pass oracle in TextKernelOracleSpec).
     *
     * A collapsed whitespace RUN maps to the full raw span of the run and a
     * removed URL to nothing; entities begin and end on non-whitespace, so
     * their mapped spans are always exact raw surfaces.
     */
-  def cleanTextWithOffsets(text: String): (String, Array[Int], Array[Int]) = {
-    if (text == null) return ("", Array.emptyIntArray, Array.emptyIntArray)
-    // 1. lowercase with positional mapping
-    val lowered = text.toLowerCase
-    val (s1, b1, e1) =
-      if (lowered.length == text.length) // 1:1 (overwhelmingly common)
-        (lowered, Array.tabulate(text.length)(identity),
-          Array.tabulate(text.length)(_ + 1))
-      else {
-        // length-changing lowercase (e.g. 'İ' → "i̇"). Context-sensitive
-        // mappings (final sigma) are length-PRESERVING, so per-code-point
-        // lowercase lengths partition the full-context `lowered` exactly:
-        // emit `lowered`'s own chars (keeping sigma context) while mapping
-        // each segment to its source code point's raw span.
-        val sb = new java.lang.StringBuilder(lowered.length)
-        val bs = Array.newBuilder[Int]; val es = Array.newBuilder[Int]
-        var i = 0; var o = 0
-        while (i < text.length) {
-          val cp = text.codePointAt(i)
-          val n = Character.charCount(cp)
-          val lcLen = new String(Character.toChars(cp)).toLowerCase.length
-          val take = math.min(lcLen, lowered.length - o)
-          var j = 0
-          while (j < take) { sb.append(lowered.charAt(o + j)); bs += i; es += i + n; j += 1 }
-          o += take; i += n
-        }
-        (sb.toString, bs.result(), es.result())
-      }
-    // 2. collapse whitespace runs to one space (span = whole raw run)
-    def regexPass(s: String, bs: Array[Int], es: Array[Int],
-        p: java.util.regex.Pattern, keepSpace: Boolean)
-        : (String, Array[Int], Array[Int]) = {
-      val m = p.matcher(s)
-      val sb = new java.lang.StringBuilder(s.length)
-      val ob = Array.newBuilder[Int]; val oe = Array.newBuilder[Int]
-      var last = 0
-      while (m.find()) {
-        var i = last
-        while (i < m.start) { sb.append(s.charAt(i)); ob += bs(i); oe += es(i); i += 1 }
-        if (keepSpace && m.end > m.start) {
-          sb.append(' '); ob += bs(m.start); oe += es(m.end - 1)
-        }
-        last = m.end
-      }
-      var i = last
-      while (i < s.length) { sb.append(s.charAt(i)); ob += bs(i); oe += es(i); i += 1 }
-      (sb.toString, ob.result(), oe.result())
-    }
-    val (s2, b2, e2) = regexPass(s1, b1, e1, WsPattern, keepSpace = true)
-    // 3. strip URLs
-    val (s3, b3, e3) = regexPass(s2, b2, e2, UrlPattern, keepSpace = false)
-    // 4. trim exactly the spaces (Python strip() parity — see
-    // [[cleanTextScala]]: non-whitespace C0 controls stay)
-    var lo = 0
-    var hi = s3.length
-    while (lo < hi && s3.charAt(lo) == ' ') lo += 1
-    while (hi > lo && s3.charAt(hi - 1) == ' ') hi -= 1
-    (s3.substring(lo, hi), b3.slice(lo, hi), e3.slice(lo, hi))
-  }
+  def cleanTextWithOffsets(text: String): (String, Array[Int], Array[Int]) =
+    if (text == null) ("", Array.emptyIntArray, Array.emptyIntArray)
+    else CleanTextImpl.cleanWithSpans(text)
 
   /** sklearn's default TfidfVectorizer token pattern `(?u)\b\w\w+\b`
     * (reference `topics_detector/model.py:96-102`), as a Column producing

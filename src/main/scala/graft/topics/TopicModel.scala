@@ -22,31 +22,158 @@ final case class TopicModelParams(
     centroids: Array[Array[Double]],
     ngramMax: Int = 2) extends Serializable {
 
-  @transient lazy val vocabIndex: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](vocab.length * 2)
-    var i = 0
-    while (i < vocab.length) { m.put(vocab(i), Integer.valueOf(i)); i += 1 }
-    m
-  }
-
-  /** First words of vocabulary bigrams — the scoring hot loop only pays
-    * the bigram StringBuilder + map probe when the current token can
-    * actually START a vocab bigram (typically a small fraction).
+  /** Word-id view of `vocab` for [[TopicScorer.tfidfVector]], built once
+    * per params on first use (not shipped with the broadcast).
     */
-  @transient lazy val bigramFirstWords: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    var i = 0
-    while (i < vocab.length) {
-      val t = vocab(i)
-      val sp = t.indexOf(' ')
-      if (sp > 0) s.add(t.substring(0, sp))
-      i += 1
-    }
-    s
-  }
+  @transient private[topics] lazy val terms: VocabTerms = VocabTerms(vocab)
 
   def nComponents: Int = if (components.isEmpty) 0 else components(0).length
   def k: Int = centroids.length
+}
+
+/** The vocabulary as word ids, so the TF-IDF scan looks a token up by its
+  * char range in the text (no substring) and a bigram up by a pair of ids
+  * (no joined string):
+  *   - every word of a vocab unigram or bigram has an id ([[wordId]]);
+  *   - `unigram(id)` is the vocab index of that word as a unigram, or -1;
+  *   - [[bigram]] maps (first id, second id) to the vocab index of
+  *     "first second", or -1.
+  * A duplicate vocabulary entry keeps its last index (`HashMap.put`
+  * semantics). An entry no pair of tokens can spell — a leading, trailing
+  * or second space — gets nothing: tokens never contain a space.
+  */
+private[topics] final class VocabTerms private (
+    words: Array[String],
+    wordSlots: Array[Int],
+    val unigram: Array[Int],
+    pairKeys: Array[Long],
+    pairIdx: Array[Int],
+    vocabSize: Int) {
+
+  /** Id of the word `text[from, until)`, or -1. */
+  def wordId(text: String, from: Int, until: Int): Int = {
+    val len = until - from
+    val mask = wordSlots.length - 1
+    var slot = VocabTerms.spread(VocabTerms.hashRange(text, from, until)) & mask
+    var id = -2
+    while (id == -2) {
+      val s = wordSlots(slot)
+      if (s == 0) id = -1
+      else {
+        val w = words(s - 1)
+        if (w.length == len && text.regionMatches(from, w, 0, len)) id = s - 1
+        else slot = (slot + 1) & mask
+      }
+    }
+    id
+  }
+
+  /** Vocab index of the bigram (`first`, `second`) of word ids, or -1. */
+  def bigram(first: Int, second: Int): Int = {
+    val key = VocabTerms.pairKey(first, second)
+    val mask = pairKeys.length - 1
+    var slot = VocabTerms.mixLong(key) & mask
+    while (pairKeys(slot) != key && pairKeys(slot) != -1L) slot = (slot + 1) & mask
+    if (pairKeys(slot) == key) pairIdx(slot) else -1
+  }
+
+  /** Per-thread term counts, so a scan allocates no vocab-sized array. */
+  private[topics] val counts: ThreadLocal[TermCounts] =
+    ThreadLocal.withInitial(() => new TermCounts(vocabSize))
+}
+
+private[topics] object VocabTerms {
+
+  def apply(vocab: Array[String]): VocabTerms = {
+    val ids = new java.util.HashMap[String, Integer]()
+    val words = scala.collection.mutable.ArrayBuffer.empty[String]
+    val unigram = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def id(w: String): Int = {
+      val known = ids.get(w)
+      if (known != null) known.intValue
+      else { ids.put(w, words.length); words += w; unigram += -1; words.length - 1 }
+    }
+    val pairs = new java.util.HashMap[java.lang.Long, Integer]()
+    var v = 0
+    while (v < vocab.length) {
+      val t = vocab(v)
+      val sp = t.indexOf(' ')
+      if (sp < 0) unigram(id(t)) = v
+      else if (sp > 0 && sp < t.length - 1 && t.indexOf(' ', sp + 1) < 0)
+        pairs.put(pairKey(id(t.substring(0, sp)), id(t.substring(sp + 1))), v)
+      v += 1
+    }
+    val wordSlots = new Array[Int](capacity(words.length))
+    var w = 0
+    while (w < words.length) {
+      var slot = spread(words(w).hashCode) & (wordSlots.length - 1)
+      while (wordSlots(slot) != 0) slot = (slot + 1) & (wordSlots.length - 1)
+      wordSlots(slot) = w + 1
+      w += 1
+    }
+    val pairKeys = Array.fill(capacity(pairs.size))(-1L)
+    val pairIdx = new Array[Int](pairKeys.length)
+    pairs.forEach { (key, i) =>
+      var slot = mixLong(key) & (pairKeys.length - 1)
+      while (pairKeys(slot) != -1L) slot = (slot + 1) & (pairKeys.length - 1)
+      pairKeys(slot) = key
+      pairIdx(slot) = i
+    }
+    new VocabTerms(words.toArray, wordSlots, unigram.toArray, pairKeys, pairIdx, vocab.length)
+  }
+
+  /** Open-addressing table size: a power of two, at most half full. */
+  private def capacity(n: Int): Int = {
+    var c = 2
+    while (c < 2 * n) c <<= 1
+    c
+  }
+
+  /** `String.hashCode` of `text[from, until)`. */
+  private def hashRange(text: String, from: Int, until: Int): Int = {
+    var h = 0
+    var i = from
+    while (i < until) { h = 31 * h + text.charAt(i); i += 1 }
+    h
+  }
+
+  private def spread(h: Int): Int = h ^ (h >>> 16)
+
+  /** Word ids are ≥ 0, so a key is never the empty slot's -1. */
+  private def pairKey(first: Int, second: Int): Long = (first.toLong << 32) | second
+
+  private def mixLong(key: Long): Int = {
+    val h = key * 0x9e3779b97f4a7c15L
+    (h ^ (h >>> 32)).toInt
+  }
+}
+
+/** Raw term counts of one text, indexed by vocab, plus the indices
+  * touched so far (each once, in first-touch order).
+  */
+private[topics] final class TermCounts(vocabSize: Int) {
+  val count = new Array[Int](vocabSize)
+  var touched = new Array[Int](16)
+  var nTouched = 0
+
+  def add(i: Int): Unit = {
+    if (count(i) == 0) {
+      if (nTouched == touched.length)
+        touched = java.util.Arrays.copyOf(touched, nTouched * 2)
+      touched(nTouched) = i
+      nTouched += 1
+    }
+    count(i) += 1
+  }
+
+  /** Forgets the previous text's counts — at the start of a scan, so a
+    * scan that threw cannot leak its counts into the next one.
+    */
+  def clear(): Unit = {
+    var k = 0
+    while (k < nTouched) { count(touched(k)) = 0; k += 1 }
+    nTouched = 0
+  }
 }
 
 final case class TopicAssignment(
@@ -57,55 +184,107 @@ final case class TopicAssignment(
 
 object TopicScorer {
 
-  /** sklearn default token pattern `(?u)\b\w\w+\b` (`model.py:96-102`) —
-    * spelled as the explicit class (Python-\w and oracle-RE2 exact; see
-    * [[graft.functions.Text.sklearnTokens]]); MUST stay identical to it.
+  /** sklearn default token pattern `(?u)\b\w\w+\b` (`model.py:96-102`)
+    * as a hand-written scan: a token is a maximal run of ≥ 2 code points
+    * of the class `[\p{L}\p{N}_]` (letters, numbers, '_'; Python-\w and
+    * oracle-RE2 exact, see [[graft.functions.Text.sklearnTokens]]). The
+    * trainers build the vocabulary with that regex (`Text.sklearnTokens`,
+    * `DistributedTrainer`'s `RegexTokenizer`), so the scan must split text
+    * exactly as the regex does — pinned by TextKernelOracleSpec.
     */
-  private val TokenPattern = java.util.regex.Pattern.compile("[\\p{L}\\p{N}_]{2,}")
-
   def tokenize(text: String): Array[String] = {
-    val m = TokenPattern.matcher(text)
     val out = Array.newBuilder[String]
-    while (m.find()) out += m.group()
+    var tok = nextToken(text, 0)
+    while (tok >= 0) {
+      out += text.substring((tok >>> 32).toInt, tok.toInt)
+      tok = nextToken(text, tok.toInt)
+    }
     out.result()
+  }
+
+  /** Character types of `\p{L}` and `\p{N}`. */
+  private val TokenTypes: Int =
+    (1 << Character.UPPERCASE_LETTER) | (1 << Character.LOWERCASE_LETTER) |
+      (1 << Character.TITLECASE_LETTER) | (1 << Character.MODIFIER_LETTER) |
+      (1 << Character.OTHER_LETTER) | (1 << Character.DECIMAL_DIGIT_NUMBER) |
+      (1 << Character.LETTER_NUMBER) | (1 << Character.OTHER_NUMBER)
+
+  /** The first token starting at or after `from`, as
+    * `start << 32 | end`, or -1 when there is none. An unpaired surrogate
+    * is a code point of its own (type Cs, not a token char), as the regex
+    * engine reads it.
+    */
+  private def nextToken(text: String, from: Int): Long = {
+    val n = text.length
+    var i = from
+    var start = 0
+    var run = 0 // code points in the current run
+    var found = -1L
+    while (found < 0 && i <= n) {
+      var width = 1
+      val isToken =
+        if (i == n) false
+        else {
+          val c = text.charAt(i)
+          if (c < 0x80)
+            (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+              (c >= '0' && c <= '9') || c == '_'
+          else {
+            val cp = text.codePointAt(i)
+            width = Character.charCount(cp)
+            (TokenTypes & (1 << Character.getType(cp))) != 0
+          }
+        }
+      if (isToken) {
+        if (run == 0) start = i
+        run += 1
+      } else {
+        if (run >= 2) found = (start.toLong << 32) | i
+        run = 0
+      }
+      i += width
+    }
+    found
   }
 
   /** Exact sklearn TfidfVectorizer.transform semantics for frozen params:
     * raw term counts over unigrams+bigrams, tf * idf, then L2 normalize.
     * (smooth-idf is baked into params.idf at train time.)
+    *
+    * A bigram is two consecutive tokens, so a token outside the
+    * vocabulary's words ends the chain: no vocab bigram starts or ends
+    * with it. Values are summed in ascending index order.
     */
   def tfidfVector(params: TopicModelParams, text: String): (Array[Int], Array[Double]) = {
-    val toks = tokenize(text)
-    val counts = new java.util.HashMap[Integer, Integer]()
-    val idx = params.vocabIndex
     require(params.ngramMax <= 2, "ngramMax > 2 unsupported (reference uses (1,2))")
     val useBigrams = params.ngramMax >= 2
-    val bgFirst = params.bigramFirstWords
-    var i = 0
-    while (i < toks.length) {
-      val t1: Integer = idx.get(toks(i))
-      if (t1 != null) counts.merge(t1, 1, (a, b) => a + b)
-      // build the bigram string only when toks(i) can start a vocab
-      // bigram — skips the allocation + probe on most positions
-      if (useBigrams && i + 1 < toks.length && bgFirst.contains(toks(i))) {
-        val sb = new java.lang.StringBuilder(
-          toks(i).length + 1 + toks(i + 1).length)
-        sb.append(toks(i)).append(' ').append(toks(i + 1))
-        val t2: Integer = idx.get(sb.toString)
-        if (t2 != null) counts.merge(t2, 1, (a, b) => a + b)
+    val terms = params.terms
+    val counts = terms.counts.get()
+    counts.clear()
+    var prev = -1
+    var tok = nextToken(text, 0)
+    while (tok >= 0) {
+      val end = tok.toInt
+      val id = terms.wordId(text, (tok >>> 32).toInt, end)
+      if (id >= 0) {
+        val u = terms.unigram(id)
+        if (u >= 0) counts.add(u)
+        if (useBigrams && prev >= 0) {
+          val b = terms.bigram(prev, id)
+          if (b >= 0) counts.add(b)
+        }
       }
-      i += 1
+      prev = id
+      tok = nextToken(text, end)
     }
-    val indices = new Array[Int](counts.size())
-    val it = counts.keySet().iterator()
-    var p = 0
-    while (it.hasNext) { indices(p) = it.next(); p += 1 }
+    val indices = java.util.Arrays.copyOf(counts.touched, counts.nTouched)
     java.util.Arrays.sort(indices)
     val values = new Array[Double](indices.length)
     var norm = 0.0
-    p = 0
+    var p = 0
     while (p < indices.length) {
-      val v = counts.get(indices(p)).toDouble * params.idf(indices(p))
+      val i = indices(p)
+      val v = counts.count(i).toDouble * params.idf(i)
       values(p) = v
       norm += v * v
       p += 1

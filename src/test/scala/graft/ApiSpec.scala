@@ -130,6 +130,32 @@ class ApiSpec extends SparkSpec {
     }
   }
 
+  test("Turkish default locale: API entities equal the batch mentions; every clean agrees") {
+    import spark.implicits._
+    import graft.functions.{CleanTextImpl, Text}
+    import graft.ner.NerExtractor
+    // under `tr`, String.toLowerCase maps ASCII 'I' to dotless 'ı'; the
+    // trie is built first so only the per-text lowering sees the locale
+    val (tr, prm) = (trie, params)
+    val texts = Seq("Iceland and INITECH", "ICELAND  met Initech http://I.io/X today")
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      texts.foreach { text =>
+        val api = Api.analyzeText(tr, prm, "", text).entities
+          .map(e => (e.entity_text_norm, e.entity_type)).toSet
+        val batch = NerExtractor.detect(tr, "api", CleanTextImpl.cleanString(text), None)
+          .map(m => (m.entity_text_norm, m.entity_type)).toSet
+        assert(batch.map(_._1) === Set("iceland", "initech"), text)
+        assert(api === batch, text)
+      }
+      val viaColumn = texts.toDF("t").select(Text.cleanText(col("t"))).as[String].collect().toSeq
+      assert(texts.map(Text.cleanTextScala) === viaColumn)
+      assert(texts.map(Text.cleanTextWithOffsets(_)._1) === viaColumn)
+      assert(viaColumn.head === "iceland and initech")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("analyzePages (Dataset variant) equals driver-side analyzeText") {
     import spark.implicits._
     val bTrie = spark.sparkContext.broadcast(trie)
