@@ -21,8 +21,8 @@ object Bench {
     val steal0 = stealJiffies()
     val tWall0 = System.nanoTime()
     val spark = graft.util.LocalSpark.session(cpus)
-    // SPARK_GRAFT_STAGE_METRICS=1: per-stage run/cpu/gc lines
-    graft.bench.StageMetrics.installIfRequested(spark.sparkContext)
+    // per-stage run/cpu/gc lines on stderr
+    graft.bench.StageMetrics.install(spark.sparkContext)
     // force the fixture model to train OUTSIDE the timed region (it is a
     // frozen artifact in production — cf. reference model.py:54-68)
     SparkEntry.fixtureModel

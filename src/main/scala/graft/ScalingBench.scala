@@ -159,7 +159,7 @@ object ScalingBench {
     case "run-dedup" :: dir :: cores :: Nil =>
       val c = cores.toInt
       val s = session(c)
-      graft.bench.StageMetrics.installIfRequested(s.sparkContext, System.out)
+      graft.bench.StageMetrics.install(s.sparkContext)
       // untimed warm-up: JIT + codegen over the same operator shapes
       val warm = Files.createTempDirectory("graft_scaling_dwarm_").toString
       import s.implicits._
@@ -182,7 +182,7 @@ object ScalingBench {
       val c = cores.toInt
       SparkEntry.fixtureModel // train the frozen artifact before timing
       val s = session(c)
-      graft.bench.StageMetrics.installIfRequested(s.sparkContext, System.out)
+      graft.bench.StageMetrics.install(s.sparkContext)
       // untimed warm-up at small scale: JIT, codegen, parquet reader init
       val warm = Files.createTempDirectory("graft_scaling_warm_").toString
       PageGen.pages(s, 2000L).toDF().write.mode("overwrite").parquet(warm)

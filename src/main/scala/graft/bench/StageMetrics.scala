@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 /** The per-stage run/cpu/gc metrics listener shared by [[graft.Bench]]
   * and [[graft.ScalingBench]] (one copy owns the line format — this is
   * the tool that found the round-2 racing-cache-recompute bug).
-  * Installed only when `SPARK_GRAFT_STAGE_METRICS` is set.
+  * Always installed; the `[stage]` lines go to stderr so stdout carries
+  * only the mains' JSON lines.
   */
 object StageMetrics {
 
@@ -21,7 +22,5 @@ object StageMetrics {
     }
   }
 
-  def installIfRequested(sc: SparkContext, out: java.io.PrintStream = System.err): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STAGE_METRICS"))
-      sc.addSparkListener(listener(out))
+  def install(sc: SparkContext): Unit = sc.addSparkListener(listener(System.err))
 }

@@ -153,6 +153,7 @@ final class EntityStore(val root: String, spark: SparkSession,
     * Returns false (no-op) if `batchId` was already merged.
     */
   def merge(batchId: String, surfaceRows: DataFrame): Boolean = {
+    graft.util.StoreFs.requireBatchId(batchId)
     val alreadyOrdered = mergedBatchesOrdered()
     if (alreadyOrdered.contains(batchId)) return false
     val v = currentVersion()

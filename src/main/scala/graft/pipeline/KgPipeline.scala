@@ -206,7 +206,7 @@ object KgPipeline {
   /** Triples from an already-analyzed Dataset: [[pageTriples]] plus, with
     * `aliases`, [[sameAsTriples]]. Callers that consume `analyzed` more
     * than once (this derives 1-2 passes) own its caching lifecycle — see
-    * [[runManaged]]/[[runIncremental]]. `preparedDict` lets such a caller
+    * [[runManaged]]. `preparedDict` lets such a caller
     * supply a CACHED dictionary built by the one-scan [[dictFromAnalysis]];
     * without it sameAs aggregates the analysis through the generic
     * [[EntityLink.dictFromSurfaceRows]]. `cfg` is unused; it stays for
@@ -287,7 +287,9 @@ object KgPipeline {
     * reprocesses exactly the uncommitted pages; a completed run is an
     * exact no-op on retry (including zero-mention pages, which the
     * reference's output-presence anti-join would re-run forever).
-    * Returns number of triples committed (markers included).
+    * `aliases` requires `entityStore`: sameAs edges are derived from its
+    * cumulative dictionary. Returns number of triples committed (markers
+    * included).
     */
   def runIncremental(
       store: TripleStore,
@@ -298,25 +300,12 @@ object KgPipeline {
       cfg: Config = Config(),
       entityStore: Option[EntityStore] = None,
       aliases: Option[DataFrame] = None): Long = {
+    require(aliases.isEmpty || entityStore.nonEmpty,
+      "runIncremental with aliases needs an entityStore: sameAs edges are " +
+        "derived from the cumulative entity dictionary")
     val todo = store.unprocessed(pages, Pred.Processed)
     val analyzed = analyze(todo, trie, params, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // batch-dictionary cache, same lifecycle as runManaged's, for its one
-    // consumer: the store-less sameAs path (with an EntityStore, sameAs
-    // reads the cumulative keys instead). Without it that consumer would
-    // re-run the FULL two-shuffle dictionary aggregation over the analysis,
-    // once per micro-batch on the streaming path. dict.count() materializes the
-    // analyzed cache in dependency order first (its aggregation scans
-    // every partition), so no later broadcast-exchange job races a cold
-    // cache.
-    val needDict = aliases.nonEmpty && entityStore.isEmpty
-    val dict =
-      if (needDict) {
-        val d = dictFromAnalysis(analyzed)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.count()
-        Some(d)
-      } else None
     try {
       if (analyzed.isEmpty) 0L
       else {
@@ -331,65 +320,50 @@ object KgPipeline {
           lit(batchId).as("obj"), lit(1L).as("weight"), col("lang"))
         // per-page triples come from THIS batch; sameAs edges are
         // CORPUS-level facts: derive them from the cumulative dictionary
-        // when one exists (an edge whose two surface forms arrive in
-        // different batches materializes as soon as both are known), and
-        // anti-join against the already-committed sameAs partition so an
-        // edge is committed exactly ONCE across batches (committing the
-        // per-batch rebuild verbatim duplicated every recurring edge).
-        val pageT = triplesFromAnalysis(analyzed, None, preparedDict = dict, cfg = cfg)
-        val sa = aliases.map { al =>
-          entityStore match {
-            case Some(es) =>
-              // CUMULATIVE dict (merged above → covers this batch): the
-              // current canonicalization is authoritative, and a
-              // component that MERGES across batches CHANGES its
-              // canonical (the min entity id). Committing only the new
-              // edges would leave the old canonical's edges alongside —
-              // two canonical targets for one entity, diverging from a
-              // batch run over the same corpus. So: RETRACT committed
-              // edges no longer in the current set (COW delete of the
-              // affected subjects' sameAs rows), then anti-join against
-              // the post-delete store, which recommits every current
-              // edge those subjects lost plus the genuinely new ones.
-              // Kill-anywhere safe: a crash after the retraction finds
-              // an identical current set on retry (merge() no-ops), no
-              // stale edges, and the anti-join still recommits the
-              // deleted-but-current rows. All frames are dict-scale; the
-              // COW rewrite runs only when a component actually merged.
-              val current = sameAsTriples(es.keys(), al)
-              val stale = store.committedForPred(Pred.SameAs)
-                .select(col("subj"), col("obj"))
-                .join(current.select(col("subj"), col("obj")),
-                  Seq("subj", "obj"), "left_anti")
-                .select(col("subj")).distinct()
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                if (!stale.isEmpty)
-                  store.deleteScoped(col("pred") === Pred.SameAs, stale)
-              } finally stale.unpersist(blocking = false)
-              // committedForPred called AFTER the retraction: its batch
-              // listing is eager, so the anti-join binds the post-delete
-              // snapshot
-              current.join(
-                store.committedForPred(Pred.SameAs).select(col("subj"), col("obj")),
-                Seq("subj", "obj"), "left_anti")
-            case None =>
-              // batch-local dict: an edge materializes only when both
-              // endpoints appear in ONE batch, and no cumulative
-              // canonicalization exists to retract against (documented
-              // limitation of the store-less incremental mode)
-              sameAsTriples(dict.get, al).join(
-                store.committedForPred(Pred.SameAs).select(col("subj"), col("obj")),
-                Seq("subj", "obj"), "left_anti")
-          }
+        // (an edge whose two surface forms arrive in different batches
+        // materializes as soon as both are known), and anti-join against
+        // the already-committed sameAs partition so an edge is committed
+        // exactly ONCE across batches (committing the per-batch rebuild
+        // verbatim duplicated every recurring edge).
+        val pageT = pageTriples(analyzed)
+        val sa = for (al <- aliases; es <- entityStore) yield {
+          // CUMULATIVE dict (merged above → covers this batch): the
+          // current canonicalization is authoritative, and a component
+          // that MERGES across batches CHANGES its canonical (the min
+          // entity id). Committing only the new edges would leave the old
+          // canonical's edges alongside — two canonical targets for one
+          // entity, diverging from a batch run over the same corpus. So:
+          // RETRACT committed edges no longer in the current set (COW
+          // delete of the affected subjects' sameAs rows), then anti-join
+          // against the post-delete store, which recommits every current
+          // edge those subjects lost plus the genuinely new ones.
+          // Kill-anywhere safe: a crash after the retraction finds an
+          // identical current set on retry (merge() no-ops), no stale
+          // edges, and the anti-join still recommits the deleted-but-
+          // current rows. All frames are dict-scale; the COW rewrite runs
+          // only when a component actually merged.
+          val current = sameAsTriples(es.keys(), al)
+          val stale = store.committedForPred(Pred.SameAs)
+            .select(col("subj"), col("obj"))
+            .join(current.select(col("subj"), col("obj")),
+              Seq("subj", "obj"), "left_anti")
+            .select(col("subj")).distinct()
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            if (!stale.isEmpty)
+              store.deleteScoped(col("pred") === Pred.SameAs, stale)
+          } finally stale.unpersist(blocking = false)
+          // committedForPred called AFTER the retraction: its batch
+          // listing is eager, so the anti-join binds the post-delete
+          // snapshot
+          current.join(
+            store.committedForPred(Pred.SameAs).select(col("subj"), col("obj")),
+            Seq("subj", "obj"), "left_anti")
         }
         val triples = sa.foldLeft(pageT)(_ unionByName _)
         store.commit(batchId, triples.unionByName(markers))
       }
-    } finally {
-      dict.foreach(_.unpersist(blocking = false))
-      analyzed.unpersist(blocking = false)
-    }
+    } finally analyzed.unpersist(blocking = false)
   }
 
   /** Run-scoped incremental topic assignment (J1's `id_run` dimension —

@@ -74,11 +74,6 @@ final class TripleStore(val root: String, spark: SparkSession,
     */
   private val sfs = new graft.util.StoreFs(root, spark.sessionState.newHadoopConf())
 
-  /** Phase timing for the StoreProfile diagnostic (env-guarded; never on
-    * in driver runs).
-    */
-  private val timing = sys.env.contains("SPARK_GRAFT_STORE_TIMING")
-
   /** Stats source of the most recent commit ("observe" fast path or
     * "footers" fallback) — a test seam: specs assert the fast path
     * actually ENGAGED, so a key-construction regression cannot silently
@@ -219,15 +214,12 @@ final class TripleStore(val root: String, spark: SparkSession,
     * inputs (every in-repo commit path persists its batch first) size
     * accurately; an UNKNOWN estimate is conservatively huge and yields
     * the full spread — never a straggler. Target bytes per bucket file
-    * default 64 MB (in-memory estimate ≈ 2-4× the on-disk parquet, so
-    * files land in the guide's sensible range), overridable via
-    * `graft.store.bucketTargetBytes` for a production profile.
+    * are [[TripleStore.BucketTargetBytes]] = 64 MB (in-memory estimate
+    * ≈ 2-4× the on-disk parquet, so files land in the guide's sensible
+    * range).
     */
   private def adaptiveBuckets(triples: DataFrame): (Int, Int) = {
-    val target = BigInt(sys.props.get("graft.store.bucketTargetBytes").map { s =>
-      s.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"graft.store.bucketTargetBytes must be a positive number of bytes, got '$s'"))
-    }.getOrElse(64L * 1024 * 1024))
+    val target = BigInt(TripleStore.BucketTargetBytes)
     val est = triples.queryExecution.optimizedPlan.stats.sizeInBytes
     val data =
       if (est <= 0) urlBuckets // unknown → conservative full spread
@@ -263,6 +255,7 @@ final class TripleStore(val root: String, spark: SparkSession,
 
   private def commitImpl(batch: String, triples: DataFrame,
       supersedes: Seq[String]): Long = {
+    graft.util.StoreFs.requireBatchId(batch)
     // a superseding manifest kills a batch id FOREVER (and the data write
     // below uses REPLACE semantics): recommitting a dead id — e.g. a
     // stream restarted with a fresh checkpoint reusing stream-00000001
@@ -312,16 +305,9 @@ final class TripleStore(val root: String, spark: SparkSession,
         when(col("pred").startsWith(graft.schema.Pred.Processed),
           pmod(xxhash64(col("subj")), lit(effMarkerBuckets)))
           .otherwise(pmod(xxhash64(col("subj")), lit(effDataBuckets))))
-    def phase[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (timing) println(
-        f"[commit-phase] $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
     val obs = new Observation()
     val predCount = udaf(PredCounter)
-    phase("write")(withPartCols
+    withPartCols
       // hash-distribute on the partition columns before the partitionBy
       // write (Iceberg write.distribution-mode=hash): each (lang, bucket)
       // dir gets ONE file per (pred, lang, bucket) per commit instead of
@@ -345,22 +331,21 @@ final class TripleStore(val root: String, spark: SparkSession,
       // (the one genuine scale-killer at 10^12 committed triples —
       // VERDICT r02 #1); run-scoped overwrite deletes prune the same way
       .partitionBy("pred", "lang", "bucket")
-      .parquet(dir))
-    val n = phase("obs")(obs.get("rows").asInstanceOf[Long])
+      .parquet(dir)
+    val n = obs.get("rows").asInstanceOf[Long]
     val predsJson = obs.get("preds").asInstanceOf[String]
-    val perPart = phase("stats")(perFileRowCounts(dir,
-      obs.get("dirs").asInstanceOf[String]))
+    val perPart = perFileRowCounts(dir, obs.get("dirs").asInstanceOf[String])
       .map { case (f, r) => s"""{"file":"${f.replace("\"", "")}","rows":$r}""" }
       .sorted
     val supersedesJson =
       if (allSupersedes.isEmpty) ""
       else allSupersedes.map(s => s""""$s"""").mkString(""","supersedes":[""", ",", "]")
-    phase("manifest")(sfs.writeStringAtomic(manifestPath(batch),
+    sfs.writeStringAtomic(manifestPath(batch),
       s"""{"batch":"$batch","rows":$n,"path":"$dir",""" +
         s""""preds":$predsJson,""" +
         s""""partitions":${perPart.mkString("[", ",", "]")}""" +
         supersedesJson + "}\n",
-      tmpName = s"$batch.tmp"))
+      tmpName = s"$batch.tmp")
     n
   }
 
@@ -442,8 +427,6 @@ final class TripleStore(val root: String, spark: SparkSession,
     val oneFilePerDir = !keySet.contains(null) &&
       keySet.size == keyed.size && keySet == counts.keySet
     lastStatsSource = if (oneFilePerDir) "observe" else "footers"
-    if (timing) println(
-      s"[commit-stats] files=${files.size} dirs=${counts.size} fastPath=$oneFilePerDir")
     if (oneFilePerDir) keyed.map { case (k, p) => p.toString -> counts(k) }
     else footerRowCounts(files)
   }
@@ -860,4 +843,7 @@ object TripleStore {
     * failing loudly.
     */
   val LockWaitMs: Long = 10L * 60 * 1000
+
+  /** Target bytes per bucket file of one commit (see `adaptiveBuckets`). */
+  val BucketTargetBytes: Long = 64L * 1024 * 1024
 }

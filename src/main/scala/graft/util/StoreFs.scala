@@ -244,3 +244,21 @@ final class StoreFs(val root: String, conf: Configuration) {
     require(ok, s"copy $src -> $dst failed")
   }
 }
+
+object StoreFs {
+
+  /** The one batch-id check of both stores, run before either writes
+    * anything. A batch id becomes a file name (`_manifest/<id>.commit`,
+    * `data/batch=<id>`), a line of `EntityStore`'s `_batches` (read back
+    * trimmed) and a string in an unescaped JSON manifest. So an id must
+    * be non-empty and hold no `/`, `\`, `"` and no char ≤ U+0020: a
+    * `/` nests the manifest where no listing finds it (a commit that
+    * never becomes visible), and an edge space makes the replay check
+    * miss the id (a merge counted twice).
+    */
+  def requireBatchId(id: String): Unit =
+    require(id != null && id.nonEmpty &&
+      id.forall(c => c > ' ' && c != '/' && c != '\\' && c != '"'),
+      "batch id '" + id + "' must be non-empty and contain no '/', '\\', '\"', " +
+        "whitespace or control characters")
+}

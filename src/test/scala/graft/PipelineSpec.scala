@@ -120,6 +120,18 @@ class PipelineSpec extends SparkSpec {
       "run must leave no persisted Dataset behind; callers that re-read use runManaged")
   }
 
+  test("runIncremental: aliases without an entity store fail naming entityStore and commit nothing") {
+    val store = new TripleStore(
+      Files.createTempDirectory("graft_sa_noes_").toString, spark)
+    val e = intercept[IllegalArgumentException] {
+      KgPipeline.runIncremental(store, "b1", PageGen.pages(spark, 20L).toDF(),
+        trieBc, paramsBc, KgPipeline.Config(), None, Some(aliases))
+    }
+    assert(e.getMessage.contains("entityStore"), e.getMessage)
+    assert(store.committedBatches().isEmpty)
+    assert(store.committed().count() === 0L)
+  }
+
   test("incremental batches commit each sameAs edge exactly once (cumulative dict)") {
     import spark.implicits._
     val store = new TripleStore(

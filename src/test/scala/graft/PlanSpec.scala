@@ -213,4 +213,22 @@ class PlanSpec extends SparkSpec {
     assert(countShuffles(executed) === 0, executed.toString)
     assert(todo.count() === 200L)
   }
+
+  test("spreadNarrow spreads a single-file scan to the shuffle partitions") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_spread_").toString
+    spark.range(500).selectExpr("concat('d', id) AS doc_id")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val want = spark.sessionState.conf.numShufflePartitions
+    assert(scan.rdd.getNumPartitions === 1)
+    assert(want > 2, s"the spread needs a session wider than 2 partitions, got $want")
+    val spread = graft.util.Frames.spreadNarrow(scan, "doc_id")
+    assert(spread.rdd.getNumPartitions === want)
+    assert(spread.count() === 500L)
+  }
+
+  test("spreadNarrow returns a post-shuffle input unchanged") {
+    val grouped = spark.range(500).selectExpr("id % 10 AS k").groupBy("k").count()
+    assert(graft.util.Frames.spreadNarrow(grouped, "k") eq grouped)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.pipeline.TripleStore
 
@@ -559,16 +560,41 @@ class TripleStoreSpec extends SparkSpec {
       "weights must survive a fold of mixed-schema batches unchanged")
   }
 
-  test("graft.store.bucketTargetBytes: a non-numeric or non-positive value fails naming the property") {
-    val store = new TripleStore(tmp(), spark)
-    for (bad <- Seq("64MB", "0", "-5")) {
-      sys.props("graft.store.bucketTargetBytes") = bad
-      val e = try intercept[IllegalArgumentException] {
-        store.commit("b1", triples(("u1", "mentions", "e1", 1L)))
-      } finally sys.props -= "graft.store.bucketTargetBytes"
-      assert(e.getMessage.contains("graft.store.bucketTargetBytes"), e.getMessage)
+  test("batch ids: a '/' or an edge space is rejected before either store writes") {
+    import spark.implicits._
+    def files(root: String): Set[String] = {
+      val base = java.nio.file.Paths.get(root)
+      val walk = Files.walk(base)
+      try walk.iterator().asScala.map(p => base.relativize(p).toString).toSet
+      finally walk.close()
     }
-    assert(store.committedBatches().isEmpty)
+    val tsRoot = tmp()
+    val esRoot = tmp()
+    val store = new TripleStore(tsRoot, spark)
+    val es = new graft.pipeline.EntityStore(esRoot, spark)
+    val surfaces = Seq(("u1", "acme", "ORG", "Acme", 2L))
+      .toDF("url", "entity_text_norm", "entity_type", "entity_text", "n")
     assert(store.commit("b1", triples(("u1", "mentions", "e1", 1L))) === 1L)
+    assert(es.merge("b1", surfaces))
+    val (tsFiles, esFiles) = (files(tsRoot), files(esRoot))
+    // unchecked, "2024/01/01" commits invisibly (its manifest nests under
+    // _manifest/2024/01/, which no listing reads) and "b1 " slips past
+    // the trimmed `_batches` replay check, doubling acme's counts
+    for (bad <- Seq("2024/01/01", "b1 ", " b1", "", "a\\b", "a\"b", "b\t1", "b\u00011")) {
+      val e1 = intercept[IllegalArgumentException] {
+        store.commit(bad, triples(("u2", "mentions", "e2", 1L)))
+      }
+      assert(e1.getMessage.contains(s"'$bad'"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](es.merge(bad, surfaces))
+      assert(e2.getMessage.contains(s"'$bad'"), e2.getMessage)
+    }
+    assert(files(tsRoot) === tsFiles)
+    assert(files(esRoot) === esFiles)
+    assert(store.committedBatches() === Seq("b1"))
+    assert(store.committed().count() === 1L)
+    assert(es.mergedBatches() === Set("b1"))
+    val acme = es.dict().collect().toSeq
+    assert(acme.map(r => (r.entity_text_norm, r.entity_mentions_count, r.news_count)) ===
+      Seq(("acme", 2L, 1L)))
   }
 }
