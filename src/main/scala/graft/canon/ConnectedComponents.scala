@@ -23,15 +23,21 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  /** Adaptive entry point: alias graphs are DICTIONARY-sized (edges ≈
-    * alias pairs ≪ corpus rows), so up to `localMaxEdges` the component
-    * computation runs as driver-side union-find in O(E α(E)) — one collect
-    * of the deduped edge set instead of O(diameter) shuffle rounds. Beyond
-    * the threshold it falls back to the distributed HashMin loop ([[run]]).
-    * Both paths produce identical (node, comp=min-id) labels (pinned by
-    * CanonSpec).
+  /** Edges a driver-side union-find takes: [[runAuto]]'s switch-over to
+    * the distributed loop, and the cap on the alias rows of one sameAs
+    * step (`KgPipeline.sameAsTriples`, whose graph is alias-sized).
     */
-  def runAuto(edges: DataFrame, localMaxEdges: Long = 4000000L): DataFrame = {
+  val DriverMaxEdges: Long = 4000000L
+
+  /** Adaptive entry point for graphs that may be corpus-sized (the
+    * near-duplicate pairs of `Dedup.nearDupClusters`): up to
+    * `localMaxEdges` the component computation runs as driver-side
+    * union-find in O(E α(E)) — one collect of the deduped edge set instead
+    * of O(diameter) shuffle rounds. Beyond the threshold it falls back to
+    * the distributed HashMin loop ([[run]]). Both paths produce identical
+    * (node, comp=min-id) labels (pinned by CanonSpec).
+    */
+  def runAuto(edges: DataFrame, localMaxEdges: Long = DriverMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = dedupe(edges).persist(StorageLevel.MEMORY_AND_DISK)
@@ -48,8 +54,9 @@ object ConnectedComponents {
 
   /** Driver-side union-find with union-by-min: the root of every tree is
     * the min node id of its component, matching the distributed labels.
+    * Every edge endpoint gets a label; a self-loop labels its node itself.
     */
-  private[canon] def unionFind(edges: Array[(Long, Long)]): Map[Long, Long] = {
+  private[graft] def unionFind(edges: Array[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -138,8 +145,7 @@ object ConnectedComponents {
   }
 
   /** sameAs label pairs: one (node, canonical) per non-canonical node —
-    * callers render ids back to entity keys themselves (KgPipeline joins
-    * through the dictionary).
+    * callers render ids back to entity keys themselves.
     */
   def sameAsTriples(labels: DataFrame): DataFrame = {
     labels.filter(col("node") =!= col("comp"))

@@ -64,7 +64,10 @@ object TokenTrie {
     val root = new Node
     var n = 0
     entries.foreach { e =>
-      val toks = e.phrase.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      // keyed by the scanner that cleans the text the trie is matched
+      // against: locale-free lowering, whitespace runs to one space
+      val toks = graft.functions.CleanTextImpl.cleanString(e.phrase)
+        .split(' ').filter(_.nonEmpty)
       if (toks.nonEmpty) {
         var node = root
         toks.foreach { t =>

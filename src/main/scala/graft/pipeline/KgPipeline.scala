@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.canon.ConnectedComponents
@@ -20,11 +21,16 @@ import graft.topics.{TopicModelParams, TopicScorer}
   *     → (2) hasTopic + mentions triples straight from the analysis
   *       ([[pageTriples]]): entity ids are `xxhash64(norm, type)`, so no
   *       dictionary join links a mention
-  *     → (3) entity dictionary + connected-components canonicalization
-  *       over alias edges → sameAs triples
+  *     → (3) connected-components canonicalization over alias edges →
+  *       sameAs triples ([[sameAsTriples]])
   *
-  * Stages (1)-(2) are NARROW (no shuffle); the only shuffles are the
-  * dictionary aggregation and the CC rounds.
+  * Stages (1)-(2) are NARROW (no shuffle). Stage (3) runs on the driver:
+  * the alias graph has at most |aliases| edges, capped at
+  * [[ConnectedComponents.DriverMaxEdges]], and one semi-join reads
+  * the entity keys that are alias endpoints. Its only shuffle is the
+  * distinct of a batch's surface keys in [[run]]; [[runIncremental]] reads
+  * them from the [[EntityStore]] instead, whose merge is the batch's
+  * dictionary aggregation.
   */
 object KgPipeline {
 
@@ -46,48 +52,79 @@ object KgPipeline {
   }
 
   /** sameAs triples via connected components over alias edges; `dict`
-    * needs only the key columns (a dictionary or [[EntityStore.keys]]).
+    * needs only the key columns, each key once (a dictionary,
+    * [[EntityStore.keys]] or distinct surface keys).
     * Edge source: entities sharing the SAME normalized text with different
     * types are NOT merged (type is part of identity, as in the reference
     * dictionary key `(norm, type)`, tables.py:59-79); edges come from an
-    * alias table (e.g. "u.s."→"united states") — at fixture scale the
-    * generator provides none, so this canonicalizes each entity to itself
-    * unless aliases are supplied.
+    * alias table (schema: norm_a, norm_b, entity_type; e.g.
+    * "u.s."→"united states"), so without aliases every entity is its own
+    * canonical.
+    *
+    * Runs on the driver: the alias graph has at most |aliases| edges and
+    * 2·|aliases| nodes, whatever the size of `dict`. It collects the alias
+    * table, then the `dict` keys that are alias endpoints with their
+    * [[Text.entityId]] (one semi-join), and labels them with
+    * [[ConnectedComponents.unionFind]]. The result is a local frame, so
+    * reading it runs no Spark job. An alias table of more than
+    * [[ConnectedComponents.DriverMaxEdges]] rows fails with an
+    * `IllegalArgumentException` naming the bound and the row count.
     */
-  def sameAsTriples(dict: DataFrame, aliases: DataFrame): DataFrame = {
+  def sameAsTriples(dict: DataFrame, aliases: DataFrame): DataFrame =
+    sameAsFrame(dict.sparkSession, sameAsPairs(dict, aliasRows(aliases)))
+
+  /** The alias table as (norm_a, norm_b, entity_type) rows, or an
+    * `IllegalArgumentException` naming the bound and the row count when
+    * it holds more than [[ConnectedComponents.DriverMaxEdges]]. A table
+    * Catalyst folds to local rows is read without a Spark job; any other
+    * is counted first, so rows over the bound never reach the driver.
+    */
+  private def aliasRows(aliases: DataFrame): Array[(String, String, String)] = {
+    val spark = aliases.sparkSession
+    import spark.implicits._
+    val rows = aliases.select($"norm_a", $"norm_b", $"entity_type").as[(String, String, String)]
+    val n = rows.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.length.toLong
+      case _ => rows.count()
+    }
+    val bound = ConnectedComponents.DriverMaxEdges
+    require(n <= bound, s"alias table: $n rows exceed the driver bound of $bound " +
+      "(ConnectedComponents.DriverMaxEdges)")
+    rows.collect()
+  }
+
+  /** (subj, obj) entity keys of the sameAs triples, sorted: one pair per
+    * non-canonical node of the alias graph induced on `dict`'s keys.
+    */
+  private def sameAsPairs(
+      dict: DataFrame, aliases: Array[(String, String, String)]): Seq[(String, String)] = {
     val spark = dict.sparkSession
     import spark.implicits._
-    // only alias endpoints can carry an edge: the dictionary semi-joined
-    // to them (≤ 2·|aliases| rows) is materialized ONCE, and edges, key
-    // rendering and the result's consumers read it, never the dictionary
-    val ends = aliases.select(
-      explode(array($"norm_a", $"norm_b")).as("entity_text_norm"), $"entity_type")
+    val ends = aliases.iterator
+      .flatMap { case (a, b, t) => Iterator((a, t), (b, t)) }.toSeq.distinct
+    if (ends.isEmpty) return Seq.empty
+    // at most one row per endpoint, because `dict` holds each key once
     val nodes = dict.select($"entity_text_norm", $"entity_type")
-      .join(ends, Seq("entity_text_norm", "entity_type"), "left_semi")
+      .join(ends.toDF("entity_text_norm", "entity_type"),
+        Seq("entity_text_norm", "entity_type"), "left_semi")
       .select($"entity_text_norm", $"entity_type",
-        Text.entityId($"entity_text_norm", $"entity_type").as("id"),
-        concat($"entity_text_norm", lit("|"), $"entity_type").as("key"))
-      .localCheckpoint()
-    val idByNorm = nodes.select($"entity_text_norm", $"entity_type", $"id")
-    val edges = aliases // (norm_a, norm_b, entity_type)
-      .join(idByNorm.withColumnRenamed("entity_text_norm", "norm_a")
-        .withColumnRenamed("id", "src"), Seq("norm_a", "entity_type"))
-      .join(idByNorm.withColumnRenamed("entity_text_norm", "norm_b")
-        .withColumnRenamed("id", "dst"), Seq("norm_b", "entity_type"))
-      .select($"src", $"dst")
-    // runAuto handles the empty/small/large regimes (alias graphs are
-    // dictionary-sized → usually the driver union-find path); empty labels
-    // fall through to an empty join result, no extra isEmpty job.
-    val labels = ConnectedComponents.runAuto(edges)
-    val idToKey = nodes.select($"id", $"key")
-    labels.filter($"node" =!= $"comp")
-      .join(idToKey.withColumnRenamed("id", "node")
-        .withColumnRenamed("key", "subj_key"), Seq("node"))
-      .join(idToKey.withColumnRenamed("id", "comp")
-        .withColumnRenamed("key", "obj_key"), Seq("comp"))
-      .select($"subj_key".as("subj"), lit(Pred.SameAs).as("pred"),
-        $"obj_key".as("obj"), lit(1L).as("weight"),
-        lit("und").as("lang")) // entity nodes are cross-language
+        Text.entityId($"entity_text_norm", $"entity_type"))
+      .as[(String, String, Long)].collect()
+    val idOf = nodes.iterator.map { case (n, t, id) => (n, t) -> id }.toMap
+    val keyOf = nodes.iterator.map { case (n, t, id) => id -> s"$n|$t" }.toMap
+    val edges = aliases.flatMap { case (a, b, t) =>
+      for (src <- idOf.get((a, t)); dst <- idOf.get((b, t))) yield (src, dst)
+    }
+    ConnectedComponents.unionFind(edges).iterator
+      .collect { case (node, comp) if node != comp => (keyOf(node), keyOf(comp)) }
+      .toSeq.sorted
+  }
+
+  /** sameAs triples of (subj, obj) key pairs, as a local frame. */
+  private def sameAsFrame(spark: SparkSession, pairs: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    pairs.toDF("subj", "obj").select($"subj", lit(Pred.SameAs).as("pred"), $"obj",
+      lit(1L).as("weight"), lit("und").as("lang")) // entity nodes are cross-language
   }
 
   /** THE fused narrow pass — the 100 TB-shaped core of the engine: ONE
@@ -182,6 +219,8 @@ object KgPipeline {
     * measured 150+ executor-seconds at 8M pages): one flatMap emits the
     * surface rows plus one null-surface marker per (page, entity), and a
     * single dict-key shuffle with map-side combine aggregates both.
+    * No pipeline path builds it (sameAs reads only keys); perfbench's
+    * `link.dict` probe times it.
     */
   def dictFromAnalysis(analyzed: Dataset[PageAnalysis]): DataFrame = {
     val spark = analyzed.sparkSession
@@ -204,12 +243,11 @@ object KgPipeline {
   }
 
   /** Triples from an already-analyzed Dataset: [[pageTriples]] plus, with
-    * `aliases`, [[sameAsTriples]]. Callers that consume `analyzed` more
-    * than once (this derives 1-2 passes) own its caching lifecycle — see
-    * [[runManaged]]. `preparedDict` lets such a caller
-    * supply a CACHED dictionary built by the one-scan [[dictFromAnalysis]];
-    * without it sameAs aggregates the analysis through the generic
-    * [[EntityLink.dictFromSurfaceRows]]. `cfg` is unused; it stays for
+    * `aliases`, [[sameAsTriples]] over the distinct (entity_text_norm,
+    * entity_type) keys of [[surfaceRows]]. sameAs runs when this is called
+    * (one pass over `analyzed`); the page triples stay lazy. Callers that
+    * consume `analyzed` more than once own its caching lifecycle — see
+    * [[runManaged]]. `preparedDict` and `cfg` are unused; they stay for
     * source compatibility.
     */
   def triplesFromAnalysis(
@@ -217,26 +255,20 @@ object KgPipeline {
       aliases: Option[DataFrame] = None,
       preparedDict: Option[DataFrame] = None,
       cfg: Config = Config()): DataFrame = {
-    val spark = analyzed.sparkSession
-    import spark.implicits._
-    val sa = aliases.map { al =>
-      val dict = preparedDict.getOrElse(
-        EntityLink.dictFromSurfaceRows(surfaceRows(analyzed)).toDF())
-      sameAsTriples(dict, al)
-    }.getOrElse(
-      Seq.empty[(String, String, String, Long, String)]
-        .toDF("subj", "pred", "obj", "weight", "lang"))
-    pageTriples(analyzed).unionByName(sa)
+    aliases.map { al =>
+      sameAsTriples(surfaceRows(analyzed).select("entity_text_norm", "entity_type").distinct(), al)
+    }.foldLeft(pageTriples(analyzed))(_ unionByName _)
   }
 
   /** Full run over a pages DataFrame; returns the complete triple set
     * (subj, pred, obj, weight, lang). `aliases` may be empty
     * (schema: norm_a, norm_b, entity_type).
     *
-    * The result is lazy and persists neither the analysis nor the
-    * dictionary, so each action re-runs the fused pass. Callers that read
-    * the result more than once use [[runManaged]], which persists both,
-    * materializes them in dependency order and releases them in a finally.
+    * Persists nothing. With `aliases`, the sameAs step runs the fused pass
+    * once when this is called; the returned page triples are lazy, so
+    * each action re-runs it. Callers that read the result more than once
+    * use [[runManaged]], which persists the analysis, materializes it
+    * first and releases it in a finally.
     */
   def run(
       pages: DataFrame,
@@ -244,7 +276,7 @@ object KgPipeline {
       params: Broadcast[TopicModelParams],
       aliases: Option[DataFrame] = None,
       cfg: Config = Config()): DataFrame =
-    triplesFromAnalysis(analyze(pages, trie, params, cfg), aliases, cfg = cfg)
+    triplesFromAnalysis(analyze(pages, trie, params, cfg), aliases)
 
   /** [[run]] with owned cache lifecycle: persist the compact analysis,
     * hand the lazy triples to `use` (which must materialize them), then
@@ -264,20 +296,8 @@ object KgPipeline {
     // every not-yet-cached partition (measured: +297 executor-seconds of
     // duplicated work at 8M pages — the whole narrow pass again).
     analyzed.count()
-    // the dictionary is corpus-aggregated but dictionary-SIZED (≪ data);
-    // caching it spares sameAs a full re-scan of the analysis
-    val dict =
-      if (aliases.nonEmpty) {
-        val d = dictFromAnalysis(analyzed)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.count()
-        Some(d)
-      } else None
-    try use(triplesFromAnalysis(analyzed, aliases, preparedDict = dict, cfg = cfg))
-    finally {
-      dict.foreach(_.unpersist(blocking = false))
-      analyzed.unpersist(blocking = false)
-    }
+    try use(triplesFromAnalysis(analyzed, aliases))
+    finally analyzed.unpersist(blocking = false)
   }
 
   /** Incremental run against a TripleStore: process only urls without a
@@ -290,6 +310,14 @@ object KgPipeline {
     * `aliases` requires `entityStore`: sameAs edges are derived from its
     * cumulative dictionary. Returns number of triples committed (markers
     * included).
+    *
+    * sameAs runs on the driver ([[sameAsTriples]]) and reads the
+    * committed sameAs rows once. Both reads are bounded before anything
+    * is written: an alias table of more than
+    * [[ConnectedComponents.DriverMaxEdges]] rows, or more than twice that
+    * many committed sameAs rows (one per non-canonical alias endpoint),
+    * fails the batch with an `IllegalArgumentException` naming the bound
+    * and the count, and neither store changes.
     */
   def runIncremental(
       store: TripleStore,
@@ -303,12 +331,23 @@ object KgPipeline {
     require(aliases.isEmpty || entityStore.nonEmpty,
       "runIncremental with aliases needs an entityStore: sameAs edges are " +
         "derived from the cumulative entity dictionary")
+    val spark = pages.sparkSession
+    import spark.implicits._
+    val aliasTable = aliases.map(aliasRows)
     val todo = store.unprocessed(pages, Pred.Processed)
     val analyzed = analyze(todo, trie, params, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (analyzed.isEmpty) 0L
       else {
+        val committed = aliasTable.map { _ =>
+          val n = store.predRowCount(Pred.SameAs) // from manifests, no data read
+          val bound = 2 * ConnectedComponents.DriverMaxEdges
+          require(n <= bound, s"committed sameAs: $n rows exceed the driver " +
+            s"bound of $bound (2 × ConnectedComponents.DriverMaxEdges)")
+          store.committedForPred(Pred.SameAs).select($"subj", $"obj")
+            .as[(String, String)].collect().toSet
+        }
         // MERGE the entity dictionary BEFORE committing triples+markers:
         // the pair is idempotent under kill-anywhere retry (markers absent
         // → retry recomputes the identical batch → merge() no-ops on the
@@ -321,12 +360,12 @@ object KgPipeline {
         // per-page triples come from THIS batch; sameAs edges are
         // CORPUS-level facts: derive them from the cumulative dictionary
         // (an edge whose two surface forms arrive in different batches
-        // materializes as soon as both are known), and anti-join against
-        // the already-committed sameAs partition so an edge is committed
-        // exactly ONCE across batches (committing the per-batch rebuild
-        // verbatim duplicated every recurring edge).
+        // materializes as soon as both are known), minus the committed
+        // sameAs rows, so an edge is committed exactly ONCE across batches
+        // (committing the per-batch rebuild verbatim duplicated every
+        // recurring edge).
         val pageT = pageTriples(analyzed)
-        val sa = for (al <- aliases; es <- entityStore) yield {
+        val sa = for (al <- aliasTable; es <- entityStore; done <- committed) yield {
           // CUMULATIVE dict (merged above → covers this batch): the
           // current canonicalization is authoritative, and a component
           // that MERGES across batches CHANGES its canonical (the min
@@ -334,31 +373,20 @@ object KgPipeline {
           // canonical's edges alongside — two canonical targets for one
           // entity, diverging from a batch run over the same corpus. So:
           // RETRACT committed edges no longer in the current set (COW
-          // delete of the affected subjects' sameAs rows), then anti-join
-          // against the post-delete store, which recommits every current
-          // edge those subjects lost plus the genuinely new ones.
+          // delete of the affected subjects' sameAs rows), then commit
+          // every current edge the store does not hold after the delete:
+          // the ones those subjects lost plus the genuinely new ones.
           // Kill-anywhere safe: a crash after the retraction finds an
           // identical current set on retry (merge() no-ops), no stale
-          // edges, and the anti-join still recommits the deleted-but-
-          // current rows. All frames are dict-scale; the COW rewrite runs
-          // only when a component actually merged.
-          val current = sameAsTriples(es.keys(), al)
-          val stale = store.committedForPred(Pred.SameAs)
-            .select(col("subj"), col("obj"))
-            .join(current.select(col("subj"), col("obj")),
-              Seq("subj", "obj"), "left_anti")
-            .select(col("subj")).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (!stale.isEmpty)
-              store.deleteScoped(col("pred") === Pred.SameAs, stale)
-          } finally stale.unpersist(blocking = false)
-          // committedForPred called AFTER the retraction: its batch
-          // listing is eager, so the anti-join binds the post-delete
-          // snapshot
-          current.join(
-            store.committedForPred(Pred.SameAs).select(col("subj"), col("obj")),
-            Seq("subj", "obj"), "left_anti")
+          // edges, and the difference still recommits the deleted-but-
+          // current rows. The COW rewrite runs only when a component
+          // actually merged.
+          val current = sameAsPairs(es.keys(), al).toSet
+          val stale = done.collect { case (s, o) if !current((s, o)) => s }
+          if (stale.nonEmpty)
+            store.deleteScoped(col("pred") === Pred.SameAs, stale.toSeq.toDF("subj"))
+          val kept = done.filterNot { case (s, _) => stale(s) }
+          sameAsFrame(spark, (current -- kept).toSeq.sorted)
         }
         val triples = sa.foldLeft(pageT)(_ unionByName _)
         store.commit(batchId, triples.unionByName(markers))

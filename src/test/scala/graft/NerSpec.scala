@@ -26,6 +26,20 @@ class NerSpec extends SparkSpec {
     assert(NerExtractor.tokenizeWithOffsets("   ")._1.isEmpty)
   }
 
+  test("Turkish default locale: mixed-case gazetteer phrases match the cleaned text") {
+    // under `tr`, String.toLowerCase maps ASCII 'I' to dotless 'ı': a trie
+    // keyed that way holds `ıceland`, while clean yields `iceland`
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      val trie = TokenTrie(Seq(GazEntry("Iceland", "GPE"), GazEntry(" INITECH\tLabs ", "ORG")))
+      val clean = graft.functions.CleanTextImpl.cleanString("ICELAND met Initech  LABS today")
+      val got = NerExtractor.detect(trie, "u", clean, None)
+        .map(m => (m.entity_text_norm, m.entity_type)).toSeq
+      assert(got === Seq(("iceland", "GPE"), ("initech labs", "ORG")))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("trie: longest non-overlapping match wins; scan continues after match") {
     val trie = TokenTrie(gaz)
     val toks = "joe biden met biden in new york".split(" ")

@@ -111,13 +111,15 @@ class PipelineSpec extends SparkSpec {
   test("run caches nothing: collecting its triples persists no RDD") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // no aliases: sameAsTriples local-checkpoints its alias-endpoint frame
-    // (≤ 2·|aliases| rows) by design; this pins the analysis and dictionary
-    val rows = KgPipeline.run(PageGen.pages(spark, 40L).toDF(), trieBc, paramsBc)
-      .collect()
-    assert(rows.nonEmpty)
-    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-      "run must leave no persisted Dataset behind; callers that re-read use runManaged")
+    for (al <- Seq(None, Some(aliases))) {
+      val rows = KgPipeline.run(PageGen.pages(spark, 40L).toDF(), trieBc, paramsBc, al)
+        .collect()
+      assert(rows.nonEmpty)
+      assert(al.isEmpty || rows.exists(_.getString(1) == Pred.SameAs))
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+        s"run(aliases = $al) must leave no persisted Dataset behind; " +
+          "callers that re-read use runManaged")
+    }
   }
 
   test("runIncremental: aliases without an entity store fail naming entityStore and commit nothing") {
