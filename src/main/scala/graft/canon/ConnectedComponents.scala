@@ -143,12 +143,4 @@ object ConnectedComponents {
         "(component diameter exceeds the budget); raise maxIterations")
     labels
   }
-
-  /** sameAs label pairs: one (node, canonical) per non-canonical node —
-    * callers render ids back to entity keys themselves.
-    */
-  def sameAsTriples(labels: DataFrame): DataFrame = {
-    labels.filter(col("node") =!= col("comp"))
-      .select(col("node"), col("comp").as("canonical"))
-  }
 }

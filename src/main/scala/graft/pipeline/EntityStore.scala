@@ -38,37 +38,43 @@ import graft.schema.EntityRecord
   *      current ∪ delta, ONE shuffle on the bucket),
   *   3. HARD-LINKS every clean bucket's files from the previous version
   *      (metadata-only; copy fallback for cross-device),
-  *   4. atomically renames the `_latest` pointer.
+  *   4. publishes the version through [[graft.util.Snapshots]] (claim,
+  *      write, atomic `_latest` swap, GC).
   * This is Iceberg MERGE-on-read-free copy-on-write bounded to dirty
   * partitions — the same shape `TripleStore.deleteWhere` uses.
   *
-  * Concurrency/crash model (single writer, like the TripleStore): merged
-  * batch ids are recorded IN the version, so a retried merge of an
-  * already-merged batch is a no-op — `runIncremental` orders (merge dict)
-  * BEFORE (commit triples+markers), which makes the pair idempotent under
-  * kill-anywhere retry:
+  * Concurrency/crash model: merged batch ids are recorded IN the
+  * version, so a retried merge of an already-merged batch is a no-op —
+  * `runIncremental` orders (merge dict) BEFORE (commit triples+markers),
+  * which makes the pair idempotent under kill-anywhere retry:
   *   - crash before merge: nothing happened;
   *   - crash between merge and triple-commit: markers absent → retry
   *     recomputes the identical batch (same anti-join input) → merge sees
   *     the batch id → skips → commit proceeds;
-  *   - crash mid-merge (version dir written, pointer not swapped): the
-  *     retry overwrites the same version dir and swaps.
+  *   - crash mid-merge (version claimed and partly written, pointer not
+  *     swapped): the retry holds the same batch id, so it takes over the
+  *     claim, discards the partial dir and publishes.
+  * Concurrent writers (two stores or two streams on one root) cannot
+  * lose a merge silently: the next version is claimed under the batch
+  * id before it is written, so a merge that finds it claimed by another
+  * batch fails loudly (IllegalStateException naming the version and the
+  * holder) with nothing written, and a merge whose base moved while it
+  * aggregated its delta builds on the new version. The claim is the
+  * write lock: the delta aggregation runs before it, unlocked.
   *
-  * Version GC: after each pointer swap, version dirs older than
-  * `retainVersions` are deleted — a stream merging one batch per
-  * micro-batch forever keeps O(retainVersions) dirs, not O(batches).
-  * Hard-linked clean-bucket files survive through the newer versions'
-  * links (deleting an old dir only unlinks).
+  * Version GC: after each pointer swap only the [[graft.util.Snapshots
+  * .Retain]] newest versions are kept — a stream merging one batch per
+  * micro-batch forever keeps O(1) dirs, not O(batches). Hard-linked
+  * clean-bucket files survive through the newer versions' links
+  * (deleting an old dir only unlinks).
   *
   * READER CONTRACT: a lazy `dict()`/`keys()` plan binds the version
   * current at CALL time and stays readable only while that version
-  * survives — i.e. for the next `retainVersions - 1` merges. Materialize
-  * (collect/write/cache+count) promptly, or raise `retainVersions` to
-  * cover the longest reader window; a pruned-underneath reader fails
-  * loudly (FileNotFoundException), never silently wrong.
+  * survives — i.e. for the next `Snapshots.Retain - 1` merges.
+  * Materialize (collect/write/cache+count) promptly; a pruned-underneath
+  * reader fails loudly (FileNotFoundException), never silently wrong.
   */
 final class EntityStore(val root: String, spark: SparkSession,
-    retainVersions: Int = 2,
     /** How many of the most recent merged batch ids each version
       * remembers — the REPLAY-IDEMPOTENCE WINDOW. A replayed merge of a
       * batch inside the window is a no-op; older ids are forgotten, so
@@ -80,7 +86,6 @@ final class EntityStore(val root: String, spark: SparkSession,
       * `_batches` read/rewrite O(window), not O(stream lifetime).
       */
     batchHistory: Int = 100000) {
-  require(retainVersions >= 1, "retainVersions must be >= 1")
   require(batchHistory >= 1, "batchHistory must be >= 1")
 
   import spark.implicits._
@@ -95,27 +100,21 @@ final class EntityStore(val root: String, spark: SparkSession,
 
   sfs.mkdirs(sfs.rootPath)
 
-  private def latestPtr: HPath = sfs.path("_latest")
-  private def versionDir(v: Long): HPath = sfs.path(s"v=$v")
+  private val snaps = new graft.util.Snapshots(sfs)
 
-  private def currentVersion(): Long =
-    if (sfs.exists(latestPtr)) sfs.readString(latestPtr).trim.toLong else 0L
-
-  /** Batch ids remembered by the current version, NEWEST FIRST (the
+  /** Batch ids remembered by version `v`, NEWEST FIRST (the
     * `batchHistory` window — see the constructor param).
     */
-  private def mergedBatchesOrdered(): Seq[String] = {
-    val v = currentVersion()
+  private def mergedBatchesOrdered(v: Long): Seq[String] =
     if (v == 0L) Seq.empty
-    else sfs.readString(new HPath(versionDir(v), "_batches"))
+    else sfs.readString(new HPath(snaps.dir(v), "_batches"))
       .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
 
   /** Batch ids already merged, within the replay window. */
-  def mergedBatches(): Set[String] = mergedBatchesOrdered().toSet
+  def mergedBatches(): Set[String] = mergedBatchesOrdered(snaps.current()).toSet
 
   private def read(v: Long, name: String, ddl: String): Option[DataFrame] = {
-    val dir = new HPath(versionDir(v), name)
+    val dir = new HPath(snaps.dir(v), name)
     if (v == 0L || !sfs.exists(dir)) None
     else Some(spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
@@ -127,7 +126,7 @@ final class EntityStore(val root: String, spark: SparkSession,
 
   /** A version written before the one-table layout (`surfaces` + `news`). */
   private def isLegacy(v: Long): Boolean =
-    v != 0L && sfs.exists(new HPath(versionDir(v), "surfaces"))
+    v != 0L && sfs.exists(new HPath(snaps.dir(v), "surfaces"))
 
   /** Version `v`'s state as tagged rows with their bucket. */
   private def tagged(v: Long): DataFrame = {
@@ -145,18 +144,18 @@ final class EntityStore(val root: String, spark: SparkSession,
 
   /** Entity keys (entity_text_norm, entity_type): the NULL-surface rows, unaggregated. */
   def keys(): DataFrame =
-    tagged(currentVersion()).filter($"entity_text".isNull)
+    tagged(snaps.current()).filter($"entity_text".isNull)
       .select($"entity_text_norm", $"entity_type")
 
   /** MERGE one batch of per-page surface rows
     * (url, entity_text_norm, entity_type, entity_text, n) into the store.
-    * Returns false (no-op) if `batchId` was already merged.
+    * Returns false (no-op) if `batchId` was already merged; throws
+    * IllegalStateException, writing nothing, if another batch's merge
+    * holds the next version (class doc).
     */
   def merge(batchId: String, surfaceRows: DataFrame): Boolean = {
     graft.util.StoreFs.requireBatchId(batchId)
-    val alreadyOrdered = mergedBatchesOrdered()
-    if (alreadyOrdered.contains(batchId)) return false
-    val v = currentVersion()
+    if (mergedBatchesOrdered(snaps.current()).contains(batchId)) return false
     val delta = EntityLink.taggedFromSurfaceRows(surfaceRows)
       .withColumn("bucket",
         pmod(xxhash64($"entity_text_norm"), lit(dictBuckets)).cast("int"))
@@ -166,51 +165,38 @@ final class EntityStore(val root: String, spark: SparkSession,
       // bucket shuffle is over (current-dirty ∪ delta), not the corpus
       val dirty = delta.select($"bucket").distinct()
         .as[Int].collect().sorted
-      // a legacy-layout version has no clean buckets to link: rewrite it whole
-      val prev =
-        if (isLegacy(v)) tagged(v)
-        else tagged(v).filter($"bucket".isin(dirty.map(Int.box): _*)) // partition-pruned
-      val next = v + 1L
-      val nextDir = versionDir(next)
-      if (sfs.exists(nextDir)) sfs.delete(nextDir, recursive = true) // crashed retry
-      // the groupBy keys include the bucket, so the repartition's hash
-      // distribution satisfies it: one shuffle, one file per bucket dir
-      prev.unionByName(delta)
-        .repartition($"bucket")
-        .groupBy($"entity_text_norm", $"entity_type", $"entity_text", $"bucket")
-        .agg(sum($"cnt").as("cnt"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(new HPath(nextDir, "entities").toString)
-      // clean buckets ride forward as hard links (local) / copies (remote)
-      linkCleanBuckets(v, nextDir, dirty.toSet)
-      // newest-first, truncated to the replay window (constructor doc)
-      sfs.writeString(new HPath(nextDir, "_batches"),
-        (batchId +: alreadyOrdered).take(batchHistory)
-          .mkString("", "\n", "\n"))
-      sfs.writeStringAtomic(latestPtr, next.toString,
-        tmpName = s"_latest.tmp$next")
-      pruneVersions(next)
-      true
+      snaps.publish(batchId) { (v, nextDir) =>
+        // the base may be newer than the check above (another writer
+        // published meanwhile): its history decides the replay
+        val alreadyOrdered = mergedBatchesOrdered(v)
+        !alreadyOrdered.contains(batchId) && {
+          // a legacy-layout version has no clean buckets to link: rewrite it whole
+          val prev =
+            if (isLegacy(v)) tagged(v)
+            else tagged(v).filter($"bucket".isin(dirty.map(Int.box): _*)) // partition-pruned
+          // the groupBy keys include the bucket, so the repartition's hash
+          // distribution satisfies it: one shuffle, one file per bucket dir
+          prev.unionByName(delta)
+            .repartition($"bucket")
+            .groupBy($"entity_text_norm", $"entity_type", $"entity_text", $"bucket")
+            .agg(sum($"cnt").as("cnt"))
+            .write.mode(SaveMode.Overwrite).partitionBy("bucket")
+            .parquet(new HPath(nextDir, "entities").toString)
+          // clean buckets ride forward as hard links (local) / copies (remote)
+          linkCleanBuckets(v, nextDir, dirty.toSet)
+          // newest-first, truncated to the replay window (constructor doc)
+          sfs.writeString(new HPath(nextDir, "_batches"),
+            (batchId +: alreadyOrdered).take(batchHistory)
+              .mkString("", "\n", "\n"))
+          true
+        }
+      }
     } finally delta.unpersist(blocking = false)
   }
 
-  /** Delete version dirs older than `retainVersions` behind `current`.
-    * Crash-safe: only already-superseded snapshots are touched; a retry
-    * just re-prunes. LISTS the actual `v=*` dirs instead of walking
-    * downward from the cutoff — a walk that stops at the first missing
-    * dir would strand anything below a gap (crash between two deletes)
-    * unreachable by GC forever.
-    */
-  private def pruneVersions(current: Long): Unit =
-    sfs.listNames(sfs.rootPath)
-      .filter(_.startsWith("v="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v=").toLong).toOption)
-      .filter(v => v >= 1L && v <= current - retainVersions)
-      .foreach(v => sfs.delete(versionDir(v), recursive = true))
-
   private def linkCleanBuckets(prevVersion: Long, nextDir: HPath, dirty: Set[Int]): Unit = {
     if (prevVersion == 0L) return
-    val prev = new HPath(versionDir(prevVersion), "entities")
+    val prev = new HPath(snaps.dir(prevVersion), "entities")
     if (!sfs.exists(prev)) return
     sfs.listNames(prev).foreach { dn =>
       if (dn.startsWith("bucket=") &&
@@ -230,7 +216,7 @@ final class EntityStore(val root: String, spark: SparkSession,
     * form (A2 tie-break: count DESC, text ASC), merged counts.
     */
   def dict(): Dataset[EntityRecord] =
-    EntityLink.dictFromTagged(tagged(currentVersion()))
+    EntityLink.dictFromTagged(tagged(snaps.current()))
 }
 
 object EntityStore {

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.util.{Frames, Snapshots, StoreFs}
 
 /** Model-run registry ≙ reference `topics_model_training_runs`
   * (`db/schema.sql:33-50`) with the "at most one active run" invariant the
@@ -13,60 +13,51 @@ import org.apache.spark.sql.functions._
   *
   * Run ids are deterministic keys supplied by the caller (S5: no
   * INSERT…RETURNING — BIGSERIAL does not distribute; SURVEY.md §1.4).
-  * Registry versions are immutable parquet snapshots; `_latest` is an
-  * atomically-renamed pointer file, so readers always see a consistent
-  * registry and a killed writer leaves the previous version active —
-  * exactly Iceberg's snapshot-pointer semantics, minus the runtime dep.
+  * Registry versions are immutable parquet snapshots published through
+  * [[graft.util.Snapshots]]: `_latest` is an atomically-renamed pointer,
+  * so readers always see a consistent registry and a killed writer leaves
+  * the previous version active — Iceberg's snapshot-pointer semantics,
+  * minus the runtime dep. Each publish first CLAIMS its version under the
+  * operation and run id (`register:<id>`, `activate:<id>`): a concurrent
+  * publish by another operation fails loudly instead of silently dropping
+  * one of the two, and a crashed attempt's retry takes its own claim
+  * over. GC keeps the `Snapshots.Retain` newest versions, so a registry
+  * cycled forever holds O(1) dirs; a lazy [[table]] plan stays readable
+  * for the next `Retain - 1` publishes.
   */
 final class RunRegistry(val root: String, spark: SparkSession) {
 
   import spark.implicits._
+  import RunRegistry.{RunParams, TableDDL}
 
   /** Pointer I/O through the Hadoop FileSystem API ([[graft.util
     * .StoreFs]]) — the registry root may be file://, hdfs://, etc.
     */
-  private val sfs = new graft.util.StoreFs(root, spark.sessionState.newHadoopConf())
+  private val sfs = new StoreFs(root, spark.sessionState.newHadoopConf())
 
   sfs.mkdirs(sfs.rootPath)
 
-  final private def latestPtr: HPath = sfs.path("_latest")
-  private def versionDir(v: Long): String = s"$root/v=$v"
+  private val snaps = new Snapshots(sfs)
 
-  private def currentVersion(): Long =
-    if (sfs.exists(latestPtr)) sfs.readString(latestPtr).trim.toLong else 0L
+  private def tableAt(v: Long): DataFrame =
+    if (v == 0L) Frames.empty(spark, TableDDL)
+    else spark.read.parquet(snaps.dir(v).toString)
 
-  /** Current registry table — full schema parity with the reference's
-    * `topics_model_training_runs` (`db/schema.sql:33-50`): the complete
-    * hyperparameter set rides with the run so frozen-param inference is
-    * reproducible from the registry row alone.
-    * (id_run, model_name, vocab_size, n_components, k, silhouette,
-    * tfidf_max_features, tfidf_max_df, tfidf_min_df, ngram_min, ngram_max,
-    * top_terms_per_topic, random_state, id_mlflow_run, created_seq,
-    * is_active).
+  /** Current registry table ([[RunRegistry.TableDDL]]). */
+  def table(): DataFrame = tableAt(snaps.current())
+
+  /** Publish `next(base, table at base)` as the new version, claimed
+    * under `op:idRun`.
     */
-  def table(): DataFrame = {
-    val v = currentVersion()
-    if (v == 0L) {
-      Seq.empty[(String, String, Int, Int, Int, Double, Int, Double, Int,
-          Int, Int, Int, Long, String, Long, Boolean)]
-        .toDF("id_run", "model_name", "vocab_size", "n_components", "k",
-          "silhouette", "tfidf_max_features", "tfidf_max_df", "tfidf_min_df",
-          "ngram_min", "ngram_max", "top_terms_per_topic", "random_state",
-          "id_mlflow_run", "created_seq", "is_active")
-    } else spark.read.parquet(versionDir(v))
-  }
-
-  private def publish(df: DataFrame): Unit = {
-    val next = currentVersion() + 1L
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(versionDir(next))
-    sfs.writeStringAtomic(latestPtr, next.toString,
-      tmpName = s"_latest.tmp$next")
-  }
-
-  import RunRegistry.RunParams
+  private def publish(op: String, idRun: String)(next: (Long, DataFrame) => DataFrame): Unit =
+    snaps.publish(s"$op:$idRun") { (base, dir) =>
+      next(base, tableAt(base)).coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      true
+    }
 
   /** S5: register a run (inactive). Re-registering an id_run replaces its
-    * row (idempotent retries).
+    * row (idempotent retries). `created_seq` is the registry version the
+    * registration publishes.
     */
   def register(
       idRun: String,
@@ -75,26 +66,23 @@ final class RunRegistry(val root: String, spark: SparkSession) {
       nComponents: Int,
       k: Int,
       silhouette: Double,
-      params: RunParams = RunParams()): Unit = {
-    val seq = currentVersion() + 1L
-    val row = Seq((idRun, modelName, vocabSize, nComponents, k, silhouette,
-      params.tfidfMaxFeatures, params.tfidfMaxDf, params.tfidfMinDf,
-      params.ngramMin, params.ngramMax, params.topTermsPerTopic,
-      params.randomState, params.idMlflowRun, seq, false))
-      .toDF("id_run", "model_name", "vocab_size", "n_components", "k",
-        "silhouette", "tfidf_max_features", "tfidf_max_df", "tfidf_min_df",
-        "ngram_min", "ngram_max", "top_terms_per_topic", "random_state",
-        "id_mlflow_run", "created_seq", "is_active")
-    publish(table().filter($"id_run" =!= idRun).unionByName(row))
-  }
+      params: RunParams = RunParams()): Unit =
+    publish("register", idRun) { (base, t) =>
+      val row = Row(idRun, modelName, vocabSize, nComponents, k, silhouette,
+        params.tfidfMaxFeatures, params.tfidfMaxDf, params.tfidfMinDf,
+        params.ngramMin, params.ngramMax, params.topTermsPerTopic,
+        params.randomState, params.idMlflowRun, base + 1L, false)
+      t.filter($"id_run" =!= idRun).unionByName(spark.createDataFrame(
+        java.util.List.of(row), StructType.fromDDL(TableDDL)))
+    }
 
   /** S6: deactivate-all-then-activate, one atomic publish. */
-  def activate(idRun: String): Unit = {
-    val t = table()
-    require(t.filter($"id_run" === idRun).count() == 1L,
-      s"unknown id_run: $idRun")
-    publish(t.withColumn("is_active", $"id_run" === idRun))
-  }
+  def activate(idRun: String): Unit =
+    publish("activate", idRun) { (_, t) =>
+      require(t.filter($"id_run" === idRun).count() == 1L,
+        s"unknown id_run: $idRun")
+      t.withColumn("is_active", $"id_run" === idRun)
+    }
 
   /** W4 analogue: the single active run, if any. */
   def active(): Option[String] = {
@@ -113,6 +101,17 @@ final class RunRegistry(val root: String, spark: SparkSession) {
 }
 
 object RunRegistry {
+  /** The registry table — full schema parity with the reference's
+    * `topics_model_training_runs` (`db/schema.sql:33-50`): the complete
+    * hyperparameter set rides with the run so frozen-param inference is
+    * reproducible from the registry row alone.
+    */
+  val TableDDL: String =
+    "id_run STRING, model_name STRING, vocab_size INT, n_components INT, k INT, " +
+      "silhouette DOUBLE, tfidf_max_features INT, tfidf_max_df DOUBLE, tfidf_min_df INT, " +
+      "ngram_min INT, ngram_max INT, top_terms_per_topic INT, random_state BIGINT, " +
+      "id_mlflow_run STRING, created_seq BIGINT, is_active BOOLEAN"
+
   /** Training hyperparameters carried with each run (reference
     * `db/schema.sql:33-50`: tfidf_max_features/max_df/min_df,
     * ngram_range, top_terms_per_topic, random_state, id_mlflow_run).

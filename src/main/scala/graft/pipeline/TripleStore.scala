@@ -103,20 +103,14 @@ final class TripleStore(val root: String, spark: SparkSession,
     * sharing one store — ingest + run-scoped assignment — run
     * autoCompact on every trigger by default, so this is the default
     * topology, not an exotic one). Holder crash recovery: a lock older
-    * than [[TripleStore.LockStaleMs]] is taken over.
+    * than [[TripleStore.LockStaleMs]] is taken over. Each acquisition
+    * claims under a fresh token ([[graft.util.StoreFs.claim]]), so the
+    * lock is never re-entered.
     */
   private val lockPath: HPath = new HPath(manifestDir, "_maintain.lock")
 
-  private def tryMaintenanceLock(): Boolean = {
-    def attempt() = sfs.createNew(lockPath, s"${System.currentTimeMillis()}\n")
-    attempt() || {
-      val m = sfs.mtime(lockPath)
-      if (m >= 0 && System.currentTimeMillis() - m > TripleStore.LockStaleMs) {
-        sfs.delete(lockPath, false) // holder crashed mid-maintenance
-        attempt()
-      } else false
-    }
-  }
+  private def tryMaintenanceLock(): Boolean =
+    sfs.claim(lockPath, s"maintain-${java.util.UUID.randomUUID()}", TripleStore.LockStaleMs)
 
   private def awaitMaintenanceLock(): Unit = {
     val deadline = System.currentTimeMillis() + TripleStore.LockWaitMs
@@ -833,9 +827,10 @@ object TripleStore {
     */
   val DefaultZOrphanGraceMs: Long = 15L * 60 * 1000
 
-  /** A maintenance lock older than this is treated as a crashed holder
-    * and taken over. Must comfortably exceed the longest legitimate
-    * single maintenance operation (a fold/rewrite of fanIn batches).
+  /** A maintenance lock or a [[graft.util.Snapshots]] version claim
+    * older than this is treated as a crashed holder and taken over. Must
+    * comfortably exceed the longest legitimate single maintenance
+    * operation (a fold/rewrite of fanIn batches) or version write.
     */
   val LockStaleMs: Long = 30L * 60 * 1000
 

@@ -23,6 +23,15 @@ import graft.topics.TopicModelParams
   *     committed, and the `processedIn` anti-join drops pages that an
   *     earlier batch already covered (duplicate input across micro-batches
   *     is processed exactly once).
+  *
+  * Two streams on one store: triple commits stay writer-private until
+  * their manifest rename, and maintenance serializes on the store's
+  * lock. Two streams sharing one [[EntityStore]] cannot lose a merge
+  * silently: a trigger whose merge finds the next dictionary version
+  * claimed by the other stream's batch fails the query loudly
+  * (IllegalStateException naming the version and its holder), and the
+  * restarted query replays that epoch's batch id on top of the other
+  * stream's version.
   */
 object KgStream {
 

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.StructType
   * Structured-Streaming analogue of the incremental anti-join (J2,
   * reference `ner_extractor/db_io.py:37-55`): "process a url once".
   *
-  * State is one boolean per key in the state store (RocksDB/HDFS-backed
-  * on a cluster), checkpointed with the query — a killed stream resumes
+  * State is one small value per key (a seen flag; [[firstSeenMin]]'s
+  * emitted min) in the state store (RocksDB/HDFS-backed on a cluster),
+  * checkpointed with the query — a killed stream resumes
   * with its dedup memory intact, which is exactly the kill/resume
   * contract of the batch TripleStore path.
   *
@@ -63,22 +64,31 @@ object StreamingDedup {
     * throughput/latency knob (optimization guide §1: per-trigger fixed
     * costs — offset log, state-store commit, checkpoint — amortize over
     * the batch) instead of a correctness requirement.
+    *
+    * The chronological precondition is CHECKED: state keeps the emitted
+    * min, and a later batch carrying a smaller value for the key fails
+    * the query (IllegalStateException naming the key) — silently dropping
+    * it would leave a wrong first-seen value behind a green run.
     */
   def firstSeenMin[V: Ordering](
       ds: Dataset[(String, V)])(implicit
       ev: Encoder[V],
       etup: Encoder[(String, V)]): Dataset[(String, V)] = {
     import org.apache.spark.sql.Encoders
-    implicit val stateEnc: Encoder[Boolean] = Encoders.scalaBoolean
     implicit val keyEnc: Encoder[String] = Encoders.STRING
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (String, V)](
+      .flatMapGroupsWithState[V, (String, V)](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, V)], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty // key seen in an earlier batch
-          else {
-            state.update(true)
-            Iterator.single(key -> rows.map(_._2).min)
+        (key: String, rows: Iterator[(String, V)], state: GroupState[V]) =>
+          val min = rows.map(_._2).min
+          if (state.exists) { // key emitted by an earlier batch
+            if (Ordering[V].lt(min, state.get)) throw new IllegalStateException(
+              s"firstSeenMin: key '$key' arrived with $min after ${state.get} was " +
+                "emitted; input must arrive in chronological order")
+            Iterator.empty
+          } else {
+            state.update(min)
+            Iterator.single(key -> min)
           }
       }
   }

@@ -6,8 +6,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path}
 
 /** Filesystem primitives for the persistence layers ([[graft.pipeline
-  * .TripleStore]] manifests, [[graft.pipeline.EntityStore]] versions,
-  * [[graft.pipeline.RunRegistry]] pointer) through the Hadoop
+  * .TripleStore]] manifests and maintenance lock, the [[Snapshots]]
+  * versions of [[graft.pipeline.EntityStore]] and
+  * [[graft.pipeline.RunRegistry]]) through the Hadoop
   * `FileSystem`/`FileContext` API — so a store root may be a bare local
   * path, `file://`, `hdfs://`, or `s3a://`. The previous `java.nio`
   * implementation silently bound every store to ONE node's local disk:
@@ -44,6 +45,15 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path}
   *     only through this class, so splitting the roots is a one-line
   *     change). The sandbox cannot exercise s3a; the contract is
   *     documented here and the API boundary keeps it honest.
+  *
+  * EXCLUSIVE-CLAIM CONTRACT beside it ([[claim]] over [[createNew]]: the
+  * TripleStore maintenance lock and the [[Snapshots]] version claim,
+  * which is what keeps two writers from both publishing `v=N`): local
+  * uses `java.nio` CREATE_NEW (O_EXCL), `hdfs://` `create(overwrite=
+  * false)` is NameNode-atomic. `s3a://` has no exclusive create in this
+  * API, so two writers can both win one claim and the lost update comes
+  * back — the same production answers apply ((a) is exactly an
+  * exclusive create: an If-None-Match PUT of the claim object).
   */
 final class StoreFs(val root: String, conf: Configuration) {
 
@@ -168,8 +178,8 @@ final class StoreFs(val root: String, conf: Configuration) {
 
   def delete(p: Path, recursive: Boolean): Boolean = fs.delete(p, recursive)
 
-  /** Create `p` with `content` ONLY if it does not exist — the advisory-
-    * lock primitive. Atomic-exclusive per scheme: local uses nio
+  /** Create `p` with `content` ONLY if it does not exist — the primitive
+    * under [[claim]]. Atomic-exclusive per scheme: local uses nio
     * CREATE_NEW (O_EXCL; Hadoop's RawLocalFileSystem `create(overwrite=
     * false)` is a TOCTOU exists-then-create), HDFS `create(overwrite=
     * false)` is NameNode-atomic. S3 has no exclusive-put in this API —
@@ -195,6 +205,32 @@ final class StoreFs(val root: String, conf: Configuration) {
         case _: java.io.FileNotFoundException => false
       }
     }
+
+  /** Claim `p` for `token` — the stores' ONE exclusive claim (the
+    * TripleStore maintenance lock, the [[Snapshots]] version claim).
+    * True when the caller holds `p` afterwards:
+    *   - `p` was free and [[createNew]] wrote `token` into it;
+    *   - `p` already holds `token`: the same operation's crashed
+    *     attempt, re-entered;
+    *   - `p` is older than `staleMs`: its holder crashed; taken over.
+    * False when another token holds `p` and is younger than `staleMs`.
+    * Exclusive exactly as far as [[createNew]] is, so the class doc's S3
+    * caveat applies. The takeover is delete-then-create: two takers of
+    * one stale claim can both win, so `staleMs` must exceed the longest
+    * legitimate hold by a wide margin.
+    */
+  def claim(p: Path, token: String, staleMs: Long): Boolean =
+    createNew(p, token) || holder(p).contains(token) || {
+      val m = mtime(p)
+      m >= 0 && System.currentTimeMillis() - m > staleMs && {
+        delete(p, recursive = false)
+        createNew(p, token)
+      }
+    }
+
+  /** The token `p` is [[claim]]ed under; None when unclaimed. */
+  def holder(p: Path): Option[String] =
+    try Some(readString(p)) catch { case _: java.io.FileNotFoundException => None }
 
   /** Modification time of `p` in epoch millis; −1 when missing. */
   def mtime(p: Path): Long =

@@ -60,12 +60,4 @@ class CanonSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(ConnectedComponents.runAuto(empty).count() === 0L)
   }
-
-  test("sameAsTriples keeps only non-canonical nodes") {
-    import spark.implicits._
-    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("node", "comp")
-    val got = ConnectedComponents.sameAsTriples(labels)
-      .as[(Long, Long)].collect().toSet
-    assert(got === Set(2L -> 1L, 3L -> 1L))
-  }
 }

@@ -204,7 +204,7 @@ class EntityStoreSpec extends SparkSpec {
 
   test("version GC: many merges keep O(retain) version dirs; dict and idempotence intact") {
     val root = tmp("graft_esgc_")
-    val es = new EntityStore(root, spark, retainVersions = 2)
+    val es = new EntityStore(root, spark)
     val all = (1 to 10).map { i =>
       rows((s"u$i", s"e${i % 3}", "ORG", s"E${i % 3}", i.toLong))
     }
@@ -226,7 +226,7 @@ class EntityStoreSpec extends SparkSpec {
 
   test("version GC sweeps dirs stranded below a crash gap, not just the contiguous tail") {
     val root = tmp("graft_esgap_")
-    val es = new EntityStore(root, spark, retainVersions = 2)
+    val es = new EntityStore(root, spark)
     for (i <- 1 to 4)
       es.merge(s"b$i", rows(("u" + i, s"ent$i", "ORG", s"Ent$i", 1L)))
     // crash simulation: an interrupted earlier prune deleted v=2 but
@@ -356,5 +356,98 @@ class EntityStoreSpec extends SparkSpec {
     // frame of alias endpoints; the two-table path scanned the dictionary
     // once per consumer
     assert(scans === 1L, s"the dictionary was scanned by $scans stages")
+  }
+
+  private def oracleDict(df: org.apache.spark.sql.DataFrame) =
+    sortedDict(graft.link.EntityLink.dictFromSurfaceRows(df).toDF())
+
+  test("two stores racing on one root: both merges land, or one fails loudly and its retry lands") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import scala.util.{Failure, Success, Try}
+    val root = tmp("graft_esrace_")
+    val seed = rows(("u0", "seed", "ORG", "Seed", 1L))
+    assert(new EntityStore(root, spark).merge("b0", seed))
+    val (a, b) = (new EntityStore(root, spark), new EntityStore(root, spark))
+    val rowsA = rows(("u1", "spark", "ORG", "Spark", 2L), ("u2", "paris", "GPE", "Paris", 1L))
+    val rowsB = rows(("u3", "spark", "ORG", "SPARK", 3L), ("u4", "rome", "GPE", "Rome", 1L))
+    // merge A reads its base, then blocks in a single-partition UDF until
+    // merge B has run to completion (or failed)
+    MergeGate.reset()
+    val gate = udf((_: String) => MergeGate.pass()).asNondeterministic()
+    val fa = Future(Try(a.merge("bA", rowsA.repartition(1).filter(gate(col("url"))))))(
+      ExecutionContext.global)
+    assert(MergeGate.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+      "merge A never reached its gate")
+    val rb = try Try(b.merge("bB", rowsB)) finally MergeGate.release.countDown()
+    val ra = Await.result(fa, 5.minutes)
+    val union = oracleDict(seed.unionByName(rowsA).unionByName(rowsB))
+    def loud(e: Throwable) = e.isInstanceOf[IllegalStateException] &&
+      e.getMessage.contains("claimed")
+    (ra, rb) match {
+      case (Success(true), Success(true)) => // both landed: checked below
+      case (Failure(e), Success(true)) if loud(e) =>
+        assert(sortedDict(a.dict().toDF()) === oracleDict(seed.unionByName(rowsB)))
+        assert(a.merge("bA", rowsA))
+      case (Success(true), Failure(e)) if loud(e) =>
+        assert(sortedDict(b.dict().toDF()) === oracleDict(seed.unionByName(rowsA)))
+        assert(b.merge("bB", rowsB))
+      case other => fail(s"neither both merged nor one loud claim failure: $other")
+    }
+    assert(sortedDict(a.dict().toDF()) === union)
+    assert(a.mergedBatches() === Set("b0", "bA", "bB"))
+  }
+
+  test("a fresh foreign claim on the next version makes merge fail loudly, files unchanged") {
+    val root = tmp("graft_esclaim_")
+    val es = new EntityStore(root, spark)
+    assert(es.merge("b1", rows(("u1", "spark", "ORG", "Spark", 1L))))
+    // another writer's merge of batch b9 is writing version 2 right now
+    Files.writeString(java.nio.file.Paths.get(root, "_claim.2"), "b9")
+    val before = SparkSpec.fileTree(root)
+    val e = intercept[IllegalStateException](
+      es.merge("b2", rows(("u2", "paris", "GPE", "Paris", 1L))))
+    assert(e.getMessage.contains("version 2") && e.getMessage.contains("b9"), e.getMessage)
+    assert(SparkSpec.fileTree(root) === before)
+    assert(es.mergedBatches() === Set("b1"))
+  }
+
+  test("a merge's own claim left by a crash is taken over: partial version discarded, claim spent") {
+    val root = tmp("graft_escrash_")
+    val es = new EntityStore(root, spark)
+    val b1 = rows(("u1", "spark", "ORG", "Spark", 1L))
+    val b2 = rows(("u2", "spark", "ORG", "SPARK", 3L), ("u2", "paris", "GPE", "Paris", 1L))
+    assert(es.merge("b1", b1))
+    // b2's first attempt claimed version 2 and died mid-write
+    val claim = java.nio.file.Paths.get(root, "_claim.2")
+    val torn = java.nio.file.Paths.get(root, "v=2", "entities", "bucket=0", "part-torn.parquet")
+    Files.writeString(claim, "b2")
+    Files.createDirectories(torn.getParent)
+    Files.writeString(torn, "torn")
+    assert(es.merge("b2", b2))
+    assert(sortedDict(es.dict().toDF()) === oracleDict(b1.unionByName(b2)))
+    assert(!Files.exists(torn), "the crashed attempt's partial files must be discarded")
+    assert(!Files.exists(claim), "the claim must be spent once its version is published")
+    assert(es.mergedBatches() === Set("b1", "b2"))
+  }
+}
+
+/** The gate merge A's UDF blocks on in the two-store race. Executors run
+  * in the test JVM (local mode), so the UDF reaches these latches through
+  * the object, not through its serialized closure.
+  */
+object MergeGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def pass(): Boolean = {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    true
   }
 }

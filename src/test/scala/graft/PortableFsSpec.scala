@@ -96,4 +96,19 @@ class PortableFsSpec extends SparkSpec {
     assert(reg.latest() === Some("r2"))
     assert(reg.table().count() === 2L)
   }
+
+  test("StoreFs.claim: the same token re-enters, a fresh foreign claim is refused, a stale one is taken over") {
+    val sfs = new graft.util.StoreFs(schemeRoot("graft_pfs_claim_"), spark.sessionState.newHadoopConf())
+    val p = sfs.path("_claim.7")
+    val stale = TripleStore.LockStaleMs
+    assert(sfs.claim(p, "a", stale))
+    assert(sfs.claim(p, "a", stale), "a crashed attempt's retry re-enters its own claim")
+    assert(!sfs.claim(p, "b", stale), "a fresh claim of another token is refused")
+    assert(sfs.holder(p) === Some("a"))
+    val local = java.nio.file.Paths.get(new java.net.URI(sfs.root)).resolve("_claim.7")
+    Files.setLastModifiedTime(local, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - stale - 60000L))
+    assert(sfs.claim(p, "b", stale), "a claim older than the stale threshold is taken over")
+    assert(sfs.holder(p) === Some("b"))
+  }
 }

@@ -67,6 +67,36 @@ class SourcesAndRegistrySpec extends SparkSpec {
     assert(reg.table().filter(col("id_run") === "run_b").count() === 1L)
   }
 
+  test("run registry: a fresh foreign claim on the next version fails register loudly, files unchanged") {
+    val root = Files.createTempDirectory("graft_registry_claim_").toString
+    val reg = new RunRegistry(root, spark)
+    reg.register("run_a", "tfidf_svd_kmeans", 512, 8, 6, 0.12)
+    // another process's activate is writing version 2 right now
+    Files.writeString(java.nio.file.Paths.get(root, "_claim.2"), "activate:run_x")
+    val before = SparkSpec.fileTree(root)
+    val e = intercept[IllegalStateException](
+      reg.register("run_b", "tfidf_svd_kmeans", 512, 8, 6, 0.15))
+    assert(e.getMessage.contains("version 2") && e.getMessage.contains("activate:run_x"),
+      e.getMessage)
+    assert(SparkSpec.fileTree(root) === before)
+    assert(reg.latest() === Some("run_a"))
+  }
+
+  test("run registry: 10 register/activate cycles keep at most 2 version dirs") {
+    val root = Files.createTempDirectory("graft_registry_gc_").toString
+    val reg = new RunRegistry(root, spark)
+    for (i <- 1 to 10) {
+      reg.register(f"run_$i%02d", "tfidf_svd_kmeans", 512, 8, 6, 0.1)
+      reg.activate(f"run_$i%02d")
+    }
+    val vDirs = new java.io.File(root).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("v=")).map(_.getName).toSeq
+    assert(vDirs.size <= 2, vDirs.mkString(", "))
+    assert(reg.active() === Some("run_10"))
+    assert(reg.latest() === Some("run_10"))
+    assert(reg.table().count() === 10L)
+  }
+
   test("distributed Spark-ML trainer: shapes, idf formula, sane silhouette") {
     val cleaned = KgPipeline.withCleanText(PageGen.pages(spark, 240L).toDF())
       .select("url", "clean")

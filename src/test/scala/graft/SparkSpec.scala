@@ -41,5 +41,19 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Every regular file under `root` (relative path → content): two
+    * equal trees mean a store's files are unchanged.
+    */
+  def fileTree(root: String): Map[String, String] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base) // close: holds an open fd
+    try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => base.relativize(f).toString ->
+        new String(java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.ISO_8859_1))
+      .toMap
+    finally walk.close()
+  }
+
   lazy val session: SparkSession = graft.util.LocalSpark.session("4")
 }

@@ -74,12 +74,35 @@ class StreamingDedupSpec extends SparkSpec {
     try {
       input.addData(("u1", 5L), ("u1", 2L), ("u1", 9L), ("u2", 7L))
       q.processAllAvailable()
-      input.addData(("u1", 0L), ("u3", 4L), ("u3", 6L)) // u1 already seen
+      input.addData(("u1", 3L), ("u3", 4L), ("u3", 6L)) // u1 already seen
       q.processAllAvailable()
       val got = spark.table("dedup_min_out").as[(String, Long)]
         .collect().toMap
       assert(got === Map("u1" -> 2L, "u2" -> 7L, "u3" -> 4L))
       assert(spark.table("dedup_min_out").count() === 3L)
+    } finally q.stop()
+  }
+
+  test("firstSeenMin fails loudly when a later batch carries a key's smaller value") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the chronological precondition broken: u1 emitted 5, then 2 arrives
+    // — dropping it would leave 5 as u1's first-seen value
+    val input = MemoryStream[(String, Long)]
+    val q = StreamingDedup.firstSeenMin(input.toDS()).writeStream
+      .format("memory").queryName("dedup_min_late_out")
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(0))
+      .start()
+    try {
+      input.addData(("u1", 5L), ("u2", 7L))
+      q.processAllAvailable()
+      input.addData(("u1", 2L), ("u2", 9L))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.getMessage != null && c.getMessage.contains("key 'u1'")),
+        chain.map(_.toString).mkString(" <- "))
     } finally q.stop()
   }
 }
