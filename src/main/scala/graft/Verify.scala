@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import graft.util.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,8 +16,7 @@ object Verify {
     // crashed here (a missing dump dir must not silently vanish from the
     // gate); exit code stays 0 — the driver owns the pass/fail verdict
     Files.writeString(Paths.get(outDir, "_queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted
-        .map(n => "\"" + n + "\"").mkString("[", ",", "]"))
+      Json.mapper.writeValueAsString(SparkEntry.queries.keys.toSeq.sorted.asJava))
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -28,21 +29,10 @@ object Verify {
         e.printStackTrace()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the codec escapes ALL control chars — a tab or CR in the SQL would
+    // otherwise make the DuckDB compare's json.load fail
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.mapper.writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

@@ -1,18 +1,23 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+
+import graft.util.Json
 
 /** Bounded-cardinality per-key counter used as an `observe()` metric: the
   * predicate vocabulary of a batch is tiny (a handful of predicates, plus
   * run-scoped variants), so the per-pred row counts ride along with the
   * WRITE job itself — no post-write re-scan of the committed data.
-  * Output is a canonical sorted JSON object fragment.
   */
-object PredCounter extends Aggregator[String, Map[String, Long], String] {
+object PredCounter extends Aggregator[String, Map[String, Long], Map[String, Long]] {
   override def zero: Map[String, Long] = Map.empty
   override def reduce(b: Map[String, Long], a: String): Map[String, Long] = {
     val k = if (a == null) "null" else a
@@ -20,13 +25,55 @@ object PredCounter extends Aggregator[String, Map[String, Long], String] {
   }
   override def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
     b.foldLeft(a) { case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v) }
-  override def finish(m: Map[String, Long]): String =
-    m.toSeq.sorted.map { case (k, v) =>
-      s""""${k.replace("\\", "\\\\").replace("\"", "\\\"")}":$v"""
-    }.mkString("{", ",", "}")
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Map[String, Long]] =
-    Encoders.kryo[Map[String, Long]]
-  override def outputEncoder: org.apache.spark.sql.Encoder[String] = Encoders.STRING
+  override def finish(m: Map[String, Long]): Map[String, Long] = m
+  override def bufferEncoder: Encoder[Map[String, Long]] = Encoders.kryo[Map[String, Long]]
+  override def outputEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
+}
+
+/** One `_manifest/<batch>.commit` record — the store's only on-disk
+  * metadata, rendered and parsed here and nowhere else:
+  *
+  *   - `batch`: the batch id (also the file name);
+  *   - `rows`: total rows of the batch; `0` means the data dir holds no
+  *     parquet (an empty partitionBy write emits none). A manifest without
+  *     the field parses as `-1`, which counts as non-empty;
+  *   - `path`: the batch's data dir;
+  *   - `preds`: rows per predicate;
+  *   - `partitions`: one (file, rows) entry per data file;
+  *   - `supersedes`: batch ids this batch makes dead the instant its
+  *     manifest lands — the transitive closure, so deadness never depends
+  *     on a dead manifest surviving cleanup. Omitted when empty.
+  *
+  * The text is one compact JSON object in that key order plus a newline,
+  * with `preds` keys and `partitions` sorted.
+  */
+private[pipeline] final case class Manifest(batch: String, rows: Long, path: String,
+    preds: Map[String, Long], partitions: Seq[(String, Long)], supersedes: Seq[String]) {
+
+  def render: String = {
+    val o = Json.mapper.createObjectNode().put("batch", batch).put("rows", rows).put("path", path)
+    val p = o.putObject("preds")
+    preds.toSeq.sorted.foreach { case (k, v) => p.put(k, v) }
+    val parts = o.putArray("partitions")
+    partitions.sorted.foreach { case (f, r) => parts.addObject().put("file", f).put("rows", r) }
+    if (supersedes.nonEmpty) {
+      val s = o.putArray("supersedes")
+      supersedes.foreach(b => s.add(b))
+    }
+    Json.mapper.writeValueAsString(o) + "\n"
+  }
+}
+
+private[pipeline] object Manifest {
+  def parse(text: String): Manifest = {
+    val n = Json.mapper.readTree(text)
+    def each[A](field: String)(f: JsonNode => A): Seq[A] =
+      n.path(field).elements().asScala.map(f).toSeq
+    Manifest(n.path("batch").asText, n.path("rows").asLong(-1L), n.path("path").asText,
+      n.path("preds").properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap,
+      each("partitions")(p => p.path("file").asText -> p.path("rows").asLong),
+      each("supersedes")(_.asText))
+  }
 }
 
 /** Snapshot-committed triple store over parquet.
@@ -36,17 +83,20 @@ object PredCounter extends Aggregator[String, Map[String, Long], String] {
   * the Iceberg runtime is not on this sandbox's classpath, so the same
   * SEMANTICS are provided with parquet + a manifest directory:
   *
-  *   - each batch writes to `data/batch=<id>/` then appends one line to
+  *   - each batch writes to `data/batch=<id>/` then publishes one
+  *     [[Manifest]] (its fields are documented there) at
   *     `_manifest/<id>.commit` via atomic rename — readers only see fully
   *     committed batches (a killed job leaves a dangling data dir that is
   *     invisible and overwritten on retry);
-  *   - a manifest may declare `"supersedes":[...]`: the listed batches are
+  *   - every public call lists `_manifest` once and reads each manifest at
+  *     most once into one [[TripleStore.Manifests]] view;
+  *   - a manifest may declare `supersedes`: the listed batches are
   *     dead the INSTANT the superseding manifest's rename lands — this is
   *     how [[deleteWhere]] swaps rewritten data atomically (Iceberg's
   *     copy-on-write DELETE, snapshot-pointer style);
   *   - `committed()` reads ONLY live manifested batches → the anti-join
   *     resume (J1/J2) reprocesses exactly the uncommitted urls;
-  *   - per-batch lineage + row metrics live in the manifest line (north
+  *   - per-batch lineage + row metrics live in the manifest (north
   *     rule: per-partition lineage + metrics). Totals and per-pred counts
   *     come from an `Observation` riding the write job; per-file row
   *     counts are TASK-REPORTED by the same Observation (a per-dir
@@ -86,12 +136,17 @@ final class TripleStore(val root: String, spark: SparkSession,
 
   sfs.mkdirs(manifestDir)
 
-  /** Committed batch ids present in the manifest dir (one listing RPC —
-    * no per-entry stats, object-store friendly).
+  /** The store's manifests: ONE raw listing of `_manifest` (one RPC, no
+    * per-entry stats, object-store friendly; raw so that the maintenance
+    * sweep also sees checksum sidecars) and one read of each manifest.
     */
-  private def manifestNames(): Seq[String] =
-    sfs.listNames(manifestDir).filter(_.endsWith(".commit"))
-      .map(_.stripSuffix(".commit"))
+  private def manifests(): TripleStore.Manifests = {
+    val entries = sfs.listNamesRaw(manifestDir)
+    new TripleStore.Manifests(entries, entries.filter(_.endsWith(".commit")).map { n =>
+      val b = n.stripSuffix(".commit")
+      b -> Manifest.parse(sfs.readString(manifestPath(b)))
+    }.toMap)
+  }
 
   /** Advisory MAINTENANCE lock (compaction, predicated delete, orphan
     * sweep). Plain ingest commits are NOT locked — batch dirs and
@@ -128,29 +183,8 @@ final class TripleStore(val root: String, spark: SparkSession,
     try sfs.delete(lockPath, false)
     catch { case _: java.io.IOException => () }
 
-  private def readManifest(b: String): String = sfs.readString(manifestPath(b))
-
-  private val SupersedesRe = """"supersedes":\[([^\]]*)\]""".r
-  private val RowsRe = """"rows":(\d+)""".r
-
-  private def parseSupersedes(manifest: String): Seq[String] =
-    SupersedesRe.findFirstMatchIn(manifest).toSeq.flatMap(m =>
-      m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty))
-
-  /** Batch ids superseded by ANY manifest (live or itself superseded — a
-    * chain of rewrites keeps every replaced ancestor dead). Because
-    * [[commit]] records supersedes TRANSITIVELY, deadness never depends on
-    * a dead intermediate manifest surviving cleanup.
-    */
-  private def deadBatches(): Set[String] =
-    manifestNames().flatMap(b => parseSupersedes(readManifest(b))).toSet
-
   /** Live committed batch ids: manifested minus superseded-by-anyone. */
-  def committedBatches(): Seq[String] = {
-    val dead = deadBatches()
-    manifestNames().filterNot(dead).sorted
-  }
+  def committedBatches(): Seq[String] = manifests().live
 
   /** Close `direct` under the supersedes relation by walking the (still
     * present) superseded manifests. Recording the CLOSURE in the new
@@ -159,16 +193,13 @@ final class TripleStore(val root: String, spark: SparkSession,
     * only death certificate was the first compact's (now superseded and
     * cleaned) manifest.
     */
-  private def transitiveSupersedes(direct: Seq[String]): Seq[String] = {
+  private def transitiveSupersedes(direct: Seq[String], m: TripleStore.Manifests): Seq[String] = {
     val seen = scala.collection.mutable.Set.empty[String]
     var frontier = direct.toList
     while (frontier.nonEmpty) {
       val b = frontier.head
       frontier = frontier.tail
-      if (seen.add(b)) {
-        if (sfs.exists(manifestPath(b)))
-          frontier = parseSupersedes(readManifest(b)) ++: frontier
-      }
+      if (seen.add(b)) m.byBatch.get(b).foreach(frontier ++= _.supersedes)
     }
     seen.toSeq.sorted
   }
@@ -225,7 +256,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     (data, mark)
   }
 
-  /** Atomically commit one batch of triples. The manifest line carries
+  /** Atomically commit one batch of triples. The manifest carries
     * per-partition lineage + metrics (north rule): one (file, rows) entry
     * per task output file (task-reported by the write job's Observation,
     * with a parquet-footer fallback — see [[perFileRowCounts]]), plus
@@ -244,23 +275,26 @@ final class TripleStore(val root: String, spark: SparkSession,
     require(!batch.startsWith("z"),
       s"batch id '$batch' uses the reserved internal staging prefix 'z'; " +
         "pick an id not starting with 'z'")
-    commitImpl(batch, triples, supersedes)
+    commitImpl(batch, triples, supersedes, manifests()).rows
   }
 
+  /** Commit against the manifests `m` the caller listed; returns the
+    * published manifest.
+    */
   private def commitImpl(batch: String, triples: DataFrame,
-      supersedes: Seq[String]): Long = {
+      supersedes: Seq[String], m: TripleStore.Manifests): Manifest = {
     graft.util.StoreFs.requireBatchId(batch)
     // a superseding manifest kills a batch id FOREVER (and the data write
     // below uses REPLACE semantics): recommitting a dead id — e.g. a
     // stream restarted with a fresh checkpoint reusing stream-00000001
     // after a compaction — would succeed silently but stay invisible to
     // committed(). Fail loudly instead.
-    require(!deadBatches().contains(batch),
+    require(!m.dead(batch),
       s"batch id '$batch' was superseded by an earlier rewrite/compaction " +
         "and can never become visible again; pick a fresh id")
     // record the supersedes CLOSURE so deadness survives cleanup of
     // intermediate manifests (crash between commit and cleanup)
-    val allSupersedes = if (supersedes.isEmpty) Nil else transitiveSupersedes(supersedes)
+    val allSupersedes = if (supersedes.isEmpty) Nil else transitiveSupersedes(supersedes, m)
     val dir = dataDir(batch)
     // NORMALIZE to the canonical stored columns/types BEFORE writing —
     // the read side declares [[storedSchema]] instead of inferring, and
@@ -326,21 +360,11 @@ final class TripleStore(val root: String, spark: SparkSession,
       // VERDICT r02 #1); run-scoped overwrite deletes prune the same way
       .partitionBy("pred", "lang", "bucket")
       .parquet(dir)
-    val n = obs.get("rows").asInstanceOf[Long]
-    val predsJson = obs.get("preds").asInstanceOf[String]
-    val perPart = perFileRowCounts(dir, obs.get("dirs").asInstanceOf[String])
-      .map { case (f, r) => s"""{"file":"${f.replace("\"", "")}","rows":$r}""" }
-      .sorted
-    val supersedesJson =
-      if (allSupersedes.isEmpty) ""
-      else allSupersedes.map(s => s""""$s"""").mkString(""","supersedes":[""", ",", "]")
-    sfs.writeStringAtomic(manifestPath(batch),
-      s"""{"batch":"$batch","rows":$n,"path":"$dir",""" +
-        s""""preds":$predsJson,""" +
-        s""""partitions":${perPart.mkString("[", ",", "]")}""" +
-        supersedesJson + "}\n",
-      tmpName = s"$batch.tmp")
-    n
+    def counts(metric: String) = obs.get(metric).asInstanceOf[scala.collection.Map[String, Long]].toMap
+    val manifest = Manifest(batch, obs.get("rows").asInstanceOf[Long], dir, counts("preds"),
+      perFileRowCounts(dir, counts("dirs")), allSupersedes)
+    sfs.writeStringAtomic(manifestPath(batch), manifest.render, tmpName = s"$batch.tmp")
+    manifest
   }
 
   /** Separator for the per-dir observe key — a control char no predicate,
@@ -356,22 +380,6 @@ final class TripleStore(val root: String, spark: SparkSession,
   private def listParquetFiles(dir: String): Seq[org.apache.hadoop.fs.Path] =
     sfs.listFilesRecursive(new HPath(dir), ".parquet")
 
-  /** Entries of a [[PredCounter]]-shaped JSON object, keys unescaped
-    * (the counter escapes only `\` and `"`).
-    */
-  private val CounterEntryRe = """"((?:[^"\\]|\\.)*)":(\d+)""".r
-  private def parseCounterJson(json: String): Map[String, Long] =
-    CounterEntryRe.findAllMatchIn(json).map { m =>
-      val sb = new StringBuilder
-      val k = m.group(1)
-      var i = 0
-      while (i < k.length) {
-        if (k.charAt(i) == '\\' && i + 1 < k.length) { sb += k.charAt(i + 1); i += 2 }
-        else { sb += k.charAt(i); i += 1 }
-      }
-      sb.toString -> m.group(2).toLong
-    }.toMap
-
   /** Per-file row counts for the manifest. Primary source is the write
     * job's own per-dir observe metric (the "dirs" [[PredCounter]] over
     * the DirSep-joined partition key) — task-reported
@@ -385,7 +393,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     * or file-per-dir check fails and the parquet-footer pass takes over —
     * correctness never depends on the fast path.
     */
-  private def perFileRowCounts(dir: String, dirsJson: String): Seq[(String, Long)] = {
+  private def perFileRowCounts(dir: String, counts: Map[String, Long]): Seq[(String, Long)] = {
     val files = listParquetFiles(dir)
     if (files.isEmpty) {
       // keep the test seam truthful for empty commits too — leaving the
@@ -393,7 +401,6 @@ final class TripleStore(val root: String, spark: SparkSession,
       lastStatsSource = "empty"
       return Seq.empty
     }
-    val counts = parseCounterJson(dirsJson)
     val unescape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName _
     // file → its dir's observe key, rebuilt from the partition path
@@ -457,33 +464,22 @@ final class TripleStore(val root: String, spark: SparkSession,
     "subj STRING, pred STRING, obj STRING, weight BIGINT, " +
       "lang STRING, bucket INT, batch STRING") // pred + last three: partition cols
 
-  /** Live batches with data files — rows:0 batches' dirs hold no parquet
-    * (an empty partitionBy write emits none); their manifests still count
-    * for lineage/liveness.
+  def committed(): DataFrame = readDirs(manifests().nonEmpty.map(dataDir))
+
+  /** The stored rows under `dirs` (batch dirs or their `pred=` subtrees),
+    * read with the DECLARED schema: commit normalizes every batch to
+    * these columns, and inference with mergeSchema off would sample ONE
+    * file's footer — against a store whose batches predate a schema
+    * addition that silently drops the column from a fold or rewrite for
+    * every row.
     */
-  private def nonEmptyBatches(): Seq[String] =
-    committedBatches().filter { b =>
-      RowsRe.findFirstMatchIn(readManifest(b)).forall(_.group(1).toLong > 0L)
-    }
-
-  def committed(): DataFrame = {
-    val batches = nonEmptyBatches()
-    if (batches.isEmpty) emptyStored()
-    else {
-      spark.read
-        .option("basePath", s"$root/data")
-        .schema(storedSchema)
-        .parquet(batches.map(dataDir): _*)
-        .select("subj", "pred", "obj", "weight", "lang", "bucket", "batch")
-    }
-  }
-
-  /** Empty writer-side frame (commit() derives lang/bucket itself). */
-  private def emptyTriples(): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, String, Long)]
-      .toDF("subj", "pred", "obj", "weight")
-  }
+  private def readDirs(dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) emptyStored()
+    else spark.read
+      .option("basePath", s"$root/data")
+      .schema(storedSchema)
+      .parquet(dirs: _*)
+      .select("subj", "pred", "obj", "weight", "lang", "bucket", "batch")
 
   /** Empty READER-side frame with the full stored schema — an empty store
     * must expose the same columns (lang/bucket/batch included) as a
@@ -506,7 +502,8 @@ final class TripleStore(val root: String, spark: SparkSession,
     // marker subdirectories: the anti-join neither scans NOR LISTS data
     // partitions (listing every leaf dir is itself O(store files) at
     // 10^12 triples), so a micro-batch's frontier read stays O(markers)
-    val done0 = committedForPred(pred)
+    val m = manifests()
+    val done0 = forPred(m, pred)
       .filter(col("pred") === pred) // belt over the path rooting
       .select(col("subj").as(urlCol))
     // Above bloomThreshold committed markers (known from manifest
@@ -526,7 +523,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     // committed markers and re-committing processed pages as duplicates —
     // persist such a plan before calling.
     val done =
-      if (predRowCount(pred) <= bloomThreshold) done0
+      if (m.predRows(pred) <= bloomThreshold) done0
       else {
         val spark = pages.sparkSession
         // size the bloom from a cheap batch count (the marker side is
@@ -566,49 +563,31 @@ final class TripleStore(val root: String, spark: SparkSession,
     pages.join(done, Seq(urlCol), "left_anti")
   }
 
-  private val PredsObjRe = """"preds":\{([^}]*)\}""".r
-
   /** Committed row count of one predicate, summed from the per-manifest
-    * metrics — O(manifests) string parsing, never a data read.
+    * metrics — never a data read.
     */
-  def predRowCount(pred: String): Long = {
-    val escaped = pred.replace("\\", "\\\\").replace("\"", "\\\"")
-    val keyRe = (java.util.regex.Pattern.quote(s""""$escaped":""") + """(\d+)""").r
-    committedBatches().map { b =>
-      val m = readManifest(b)
-      PredsObjRe.findFirstMatchIn(m).map(_.group(1)) match {
-        case Some(preds) => keyRe.findFirstMatchIn(preds).map(_.group(1).toLong).getOrElse(0L)
-        case None => 0L
-      }
-    }.sum
-  }
+  def predRowCount(pred: String): Long = manifests().predRows(pred)
 
   /** Committed triples of ONE predicate, read from `batch=* /pred=<p>`
     * subtrees directly — file LISTING is proportional to that predicate's
     * partitions, never the whole store. Same schema as [[committed]].
     */
-  def committedForPred(pred: String): DataFrame = {
+  def committedForPred(pred: String): DataFrame = forPred(manifests(), pred)
+
+  private def forPred(m: TripleStore.Manifests, pred: String): DataFrame = {
     val escaped = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .escapePathName(pred)
-    // existence check through the Hadoop FileSystem API (as
-    // footerRowCounts does) — a java.nio probe is always false on
-    // non-local roots (hdfs/s3), which would silently return an empty
-    // marker set and make unprocessed() reprocess everything. Probes run
-    // CONCURRENTLY: on an object store each exists() is an RPC (~tens of
-    // ms), and a pre-compaction stream can hold ~100 live batches — a
-    // serial pass would add seconds of driver latency per micro-batch.
-    val conf = spark.sessionState.newHadoopConf()
-    val candidates = nonEmptyBatches().map(b => s"${dataDir(b)}/pred=$escaped")
-    val dirs = sfs.mapConcurrent(candidates) { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (p.getFileSystem(conf).exists(p)) Some(d) else None
-    }.flatten
-    if (dirs.isEmpty) emptyStored()
-    else spark.read
-      .option("basePath", s"$root/data")
-      .schema(storedSchema)
-      .parquet(dirs: _*)
-      .select("subj", "pred", "obj", "weight", "lang", "bucket", "batch")
+    // existence check through the Hadoop FileSystem API — a java.nio
+    // probe is always false on non-local roots (hdfs/s3), which would
+    // silently return an empty marker set and make unprocessed()
+    // reprocess everything. Probes run CONCURRENTLY: on an object store
+    // each exists() is an RPC (~tens of ms), and a pre-compaction stream
+    // can hold ~100 live batches — a serial pass would add seconds of
+    // driver latency per micro-batch.
+    val candidates = m.nonEmpty.map(b => s"${dataDir(b)}/pred=$escaped")
+    readDirs(sfs.mapConcurrent(candidates) { d =>
+      if (sfs.exists(new HPath(d))) Some(d) else None
+    }.flatten)
   }
 
   /** Predicated delete (S7) — reference `overwrite` mode: copy-on-write
@@ -666,23 +645,19 @@ final class TripleStore(val root: String, spark: SparkSession,
     */
   def autoCompact(maxLive: Int = 16, fanIn: Int = 8): Int = {
     require(maxLive >= 2 && fanIn >= 2, "autoCompact needs maxLive, fanIn >= 2")
-    if (committedBatches().size <= maxLive) return 0
+    if (manifests().live.size <= maxLive) return 0
     // opportunistic maintenance SKIPS when another maintainer holds the
     // lock (a concurrent stream's trigger will fold soon enough); only
     // explicit compact()/delete calls wait
     if (!tryMaintenanceLock()) return 0
     try {
       var rounds = 0
-      var live = committedBatches()
-      while (live.size > maxLive) {
-        val bySize = live.map { b =>
-          b -> RowsRe.findFirstMatchIn(readManifest(b))
-            .map(_.group(1).toLong).getOrElse(0L)
-        }
-        val smallest = bySize.sortBy { case (b, r) => (r, b) }.take(fanIn).map(_._1)
-        compactImpl(smallest, runCleanup = true) // lock already held
+      var m = manifests() // one listing per round, under the lock
+      while (m.live.size > maxLive) {
+        val smallest = m.live.sortBy(b => (m.byBatch(b).rows, b)).take(fanIn)
+        compactImpl(m, smallest, runCleanup = true) // lock already held
         rounds += 1
-        live = committedBatches()
+        m = manifests()
       }
       rounds
     } finally unlockMaintenance()
@@ -692,7 +667,11 @@ final class TripleStore(val root: String, spark: SparkSession,
     * cleanup, leaving superseded manifests+data in place — the state a
     * crash between the commit rename and cleanup produces.
     */
-  private[graft] def compactImpl(batches: Seq[String], runCleanup: Boolean): Unit = {
+  private[graft] def compactImpl(batches: Seq[String], runCleanup: Boolean): Unit =
+    compactImpl(manifests(), batches, runCleanup)
+
+  private def compactImpl(m: TripleStore.Manifests, batches: Seq[String],
+      runCleanup: Boolean): Unit = {
     // Only LIVE batches are foldable. An explicit list may arrive from an
     // orchestrator RETRY after the compaction already completed — its
     // targets are then dead (or cleaned away entirely); folding "them"
@@ -700,37 +679,20 @@ final class TripleStore(val root: String, spark: SparkSession,
     // and Overwrite the real folded data. Dropping non-live targets makes
     // the retry a safe no-op (crash-before-commit retries still see all
     // targets live and redo the work).
-    val live = committedBatches().toSet
-    val target = (if (batches.nonEmpty) batches.filter(live) else live.toSeq).sorted
+    val live = m.live.toSet
+    val target = (if (batches.nonEmpty) batches.filter(live) else m.live).sorted
     if (target.size < 2) {
       // the retry may still owe the crashed run its cleanup
-      if (runCleanup) sweepLingeringDead()
+      if (runCleanup) sweepLingeringDead(m)
       return
     }
     // rows:0 batches have NO data files (an empty partitionBy write emits
     // none) — fold their manifests away without trying to read them
-    val nonEmpty = target.filter { b =>
-      sfs.exists(manifestPath(b)) &&
-        RowsRe.findFirstMatchIn(readManifest(b)).forall(_.group(1).toLong > 0L)
-    }
-    val data =
-      if (nonEmpty.isEmpty) emptyTriples()
-      else spark.read
-        .option("basePath", s"$root/data")
-        // DECLARED schema, like committed(): commit normalizes every
-        // batch to these columns, and inference with mergeSchema off
-        // would sample ONE file's footer — against a store whose batches
-        // predate a schema addition that silently drops the column from
-        // the folded rewrite for every row
-        .schema(storedSchema)
-        .parquet(nonEmpty.map(dataDir): _*)
-        .drop("batch", "bucket")
-    val cid = "zcompact-" + graft.util.Hashing.xxhash64(target.sorted.mkString(",")).toHexString
-    commitImpl(cid, data, supersedes = target.sorted)
-    if (runCleanup) {
-      cleanup(target)
-      sweepLingeringDead()
-    }
+    val data = readDirs(target.filter(m.hasData).map(dataDir)).drop("batch", "bucket")
+    val cid = "zcompact-" + graft.util.Hashing.xxhash64(target.mkString(",")).toHexString
+    val folded = commitImpl(cid, data, supersedes = target, m)
+    // the sweep cleans the folded targets with every other dead manifest
+    if (runCleanup) sweepLingeringDead(m.plus(folded))
   }
 
   /** Opportunistic sweep of manifests that are dead but lingered from an
@@ -744,26 +706,23 @@ final class TripleStore(val root: String, spark: SparkSession,
     * staging ids are swept (they are written synchronously inside
     * compact/delete calls, never by a concurrent ingest writer).
     */
-  private def sweepLingeringDead(): Unit = {
-    val dead = deadBatches()
-    val lingering = manifestNames().filter(dead)
+  private def sweepLingeringDead(m: TripleStore.Manifests): Unit = {
+    val lingering = m.byBatch.keys.filter(m.dead).toSeq
     if (lingering.nonEmpty) cleanup(lingering)
     // legacy checksum litter: publications before the crc fix leaked one
     // `.<batch>.tmp.crc` per commit (writeStringAtomic now deletes them
     // at publish time) — sweep any whose staged tmp file is gone, so a
     // long-lived pre-fix store converges to a clean _manifest listing.
-    // RAW listing/delete: the checksummed local FS hides .crc sidecars
-    // from its own listStatus, so the litter is invisible to listNames
-    val entries = sfs.listNamesRaw(manifestDir)
-    val present = entries.toSet
-    entries
+    // RAW listing (the view's `entries`) and delete: the checksummed
+    // local FS hides .crc sidecars from its own listStatus
+    val present = m.entries.toSet
+    m.entries
       .filter(n => n.startsWith(".") && n.endsWith(".crc"))
       .filter(n => !present.contains(n.stripPrefix(".").stripSuffix(".crc")))
       .foreach { n =>
         try sfs.deleteRaw(new HPath(manifestDir, n))
         catch { case _: java.io.IOException => () }
       }
-    val manifested = manifestNames().toSet
     val dataRoot = new HPath(s"$root/data")
     val fs = dataRoot.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(dataRoot)) {
@@ -776,7 +735,7 @@ final class TripleStore(val root: String, spark: SparkSession,
           st.getPath.getName.startsWith("batch=z") &&
           st.getModificationTime < cutoff)
         .map(_.getPath.getName.stripPrefix("batch="))
-        .filterNot(manifested)
+        .filterNot(m.byBatch.contains)
       if (orphans.nonEmpty) cleanup(orphans)
     }
   }
@@ -800,28 +759,42 @@ final class TripleStore(val root: String, spark: SparkSession,
   private def rewriteExcludingLocked(
       matching: DataFrame => DataFrame,
       keep: DataFrame => DataFrame): Unit = {
-    val live = committedBatches()
-    if (live.isEmpty) return
+    val m = manifests()
+    if (m.live.isEmpty) return
     // one pruned scan finds which batches contain matching rows (batch is
     // a partition column; predicates on lang/bucket prune directories)
-    val affected = matching(committed()).select(col("batch").cast("string"))
-      .distinct().collect().map(_.getString(0)).sorted
+    val affected = matching(readDirs(m.nonEmpty.map(dataDir))).select(col("batch").cast("string"))
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
     if (affected.isEmpty) return
-    val affectedData = spark.read
-      .option("basePath", s"$root/data")
-      .schema(storedSchema) // declared, same reason as compactImpl
-      .parquet(affected.map(dataDir).toIndexedSeq: _*)
-    val remaining = keep(affectedData).drop("batch", "bucket") // re-derived on commit
+    val remaining = keep(readDirs(affected.map(dataDir))).drop("batch", "bucket") // re-derived on commit
     // deterministic rewrite id: a crashed delete retried with the same
     // store state recomputes the same affected set → same staging dir
     val rid = "zrewrite-" + graft.util.Hashing.xxhash64(affected.mkString(",")).toHexString
-    commitImpl(rid, remaining, supersedes = affected)
+    commitImpl(rid, remaining, supersedes = affected, m)
     // best-effort cleanup of dead manifests + data (already superseded)
-    cleanup(affected.toIndexedSeq)
+    cleanup(affected)
   }
 }
 
 object TripleStore {
+  /** One listing of `_manifest` (`entries`, checksum sidecars included)
+    * and the manifests it named, keyed by batch id: what one public call
+    * knows about the store.
+    */
+  private[pipeline] final class Manifests(val entries: Seq[String],
+      val byBatch: Map[String, Manifest]) {
+    /** Batches superseded by ANY manifest (live or itself superseded). */
+    val dead: Set[String] = byBatch.values.flatMap(_.supersedes).toSet
+    val live: Seq[String] = byBatch.keys.filterNot(dead).toSeq.sorted
+    def hasData(b: String): Boolean = byBatch(b).rows != 0L
+    /** Live batches with data files. */
+    def nonEmpty: Seq[String] = live.filter(hasData)
+    def predRows(pred: String): Long = live.map(byBatch(_).preds.getOrElse(pred, 0L)).sum
+    /** This view after `m` was published. */
+    def plus(m: Manifest): Manifests =
+      new Manifests(entries :+ s"${m.batch}.commit", byBatch.updated(m.batch, m))
+  }
+
   /** See the constructor param: minimum age before an unmanifested z*
     * staging dir counts as a crash orphan.
     */

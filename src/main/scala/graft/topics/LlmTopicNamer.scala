@@ -1,9 +1,13 @@
 package graft.topics
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import graft.util.Json
 
 /** Injected LLM transport — the seam where the reference calls OpenAI
   * (`topics_detector/topics_naming.py:25-38`, `infer_llm`). Production
@@ -75,12 +79,9 @@ final class LlmTopicNamer(
   private def updateCache(names: Map[String, String]): Unit =
     cachePath.foreach { p =>
       try {
-        val merged = readCache() ++ names
-        val body = merged.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
-          .mkString("{", ", ", "}")
+        val merged = new java.util.TreeMap[String, String]((readCache() ++ names).asJava)
         val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-        Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+        Files.write(tmp, Json.mapper.writeValueAsBytes(merged))
         Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
       } catch { case NonFatal(_) => () } // cache is best-effort
@@ -106,93 +107,24 @@ object LlmTopicNamer {
       |""".stripMargin
 
   /** Per-topic user prompt (`topics_naming.py:87-95`): the topic id keys
-    * an object with its terms and representative texts.
+    * an object with its terms and representative texts, laid out with the
+    * reference's `json.dumps` separators (`, ` and `: `).
     */
   def userPrompt(idTopic: Int, terms: Seq[String], texts: Seq[String]): String = {
-    val t = terms.map(jsonString).mkString("[", ", ", "]")
-    val x = texts.map(jsonString).mkString("[", ", ", "]")
-    s"""{${jsonString(idTopic.toString)}: {"terms": $t, "news_texts": $x}}"""
-  }
-
-  private[graft] def jsonString(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
+    def str(s: String) = Json.mapper.writeValueAsString(s)
+    def arr(xs: Seq[String]) = xs.map(str).mkString("[", ", ", "]")
+    s"""{${str(idTopic.toString)}: {"terms": ${arr(terms)}, "news_texts": ${arr(texts)}}}"""
   }
 
   /** Strict parser for the response contract: ONE flat JSON object with
     * string keys and string values (the prompt demands exactly that).
-    * Anything else — prose around the JSON, nested values, trailing
-    * garbage — returns None and triggers the cache fallback, mirroring
-    * the reference's `json.JSONDecodeError` branch.
+    * Anything else — prose around the JSON, nested or non-string values,
+    * trailing garbage — returns None and triggers the cache fallback,
+    * mirroring the reference's `json.JSONDecodeError` branch.
     */
-  private[graft] def parseFlatStringObject(s: String): Option[Map[String, String]] = {
-    if (s == null) return None
-    var i = 0
-    val n = s.length
-    def skipWs(): Unit = while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
-    def parseString(): Option[String] = {
-      if (i >= n || s.charAt(i) != '"') return None
-      i += 1
-      val sb = new StringBuilder
-      while (i < n && s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          if (i + 1 >= n) return None
-          s.charAt(i + 1) match {
-            case '"' => sb.append('"'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case '/' => sb.append('/'); i += 2
-            case 'n' => sb.append('\n'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'b' => sb.append('\b'); i += 2
-            case 'f' => sb.append('\f'); i += 2
-            case 'u' =>
-              if (i + 6 > n) return None
-              try { sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar) }
-              catch { case _: NumberFormatException => return None }
-              i += 6
-            case _ => return None
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      if (i >= n) return None
-      i += 1 // closing quote
-      Some(sb.toString)
-    }
-    skipWs()
-    if (i >= n || s.charAt(i) != '{') return None
-    i += 1
-    val out = Map.newBuilder[String, String]
-    skipWs()
-    if (i < n && s.charAt(i) == '}') { i += 1 }
-    else {
-      var more = true
-      while (more) {
-        skipWs()
-        val k = parseString().getOrElse(return None)
-        skipWs()
-        if (i >= n || s.charAt(i) != ':') return None
-        i += 1
-        skipWs()
-        val v = parseString().getOrElse(return None)
-        out += (k -> v)
-        skipWs()
-        if (i < n && s.charAt(i) == ',') { i += 1 }
-        else if (i < n && s.charAt(i) == '}') { i += 1; more = false }
-        else return None
-      }
-    }
-    skipWs()
-    if (i != n) None else Some(out.result())
-  }
+  private[graft] def parseFlatStringObject(s: String): Option[Map[String, String]] =
+    try Option(s).map(Json.mapper.readTree).collect {
+      case o: ObjectNode if o.properties().asScala.forall(_.getValue.isTextual) =>
+        o.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+    } catch { case NonFatal(_) => None }
 }

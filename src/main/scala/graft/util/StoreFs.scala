@@ -286,7 +286,8 @@ object StoreFs {
   /** The one batch-id check of both stores, run before either writes
     * anything. A batch id becomes a file name (`_manifest/<id>.commit`,
     * `data/batch=<id>`), a line of `EntityStore`'s `_batches` (read back
-    * trimmed) and a string in an unescaped JSON manifest. So an id must
+    * trimmed) and a string in a JSON manifest (earlier versions of the
+    * store wrote it unescaped). So an id must
     * be non-empty and hold no `/`, `\`, `"` and no char ≤ U+0020: a
     * `/` nests the manifest where no listing finds it (a commit that
     * never becomes visible), and an edge space makes the replay check

@@ -597,4 +597,100 @@ class TripleStoreSpec extends SparkSpec {
     assert(acme.map(r => (r.entity_text_norm, r.entity_mentions_count, r.news_count)) ===
       Seq(("acme", 2L, 1L)))
   }
+
+  test("predRowCount counts a run-scoped pred whose run id holds '}'") {
+    val store = new TripleStore(tmp(), spark)
+    val p = graft.schema.Pred.processedFor("r}1")
+    store.commit("b1", triples(("u1", p, "b1", 1L), ("u2", p, "b1", 1L),
+      ("u1", "mentions", "e1", 1L)))
+    assert(store.predRowCount(p) === 2L)
+    assert(store.predRowCount("mentions") === 1L)
+  }
+
+  /** A manifest in the store's on-disk text format, built by hand: compact
+    * JSON, keys in this order, pred keys escaping only `\` and `"`,
+    * partition entries sorted as text, `supersedes` only when non-empty.
+    */
+  private def manifestText(root: String, batch: String, rows: Long,
+      preds: Seq[(String, Long)], files: Seq[(String, Long)],
+      supersedes: Seq[String] = Nil): String = {
+    def key(k: String) = "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val p = preds.sorted.map { case (k, v) => s"${key(k)}:$v" }.mkString("{", ",", "}")
+    val parts = files.map { case (f, r) => s"""{"file":"$f","rows":$r}""" }.sorted
+    val sup =
+      if (supersedes.isEmpty) ""
+      else supersedes.map(b => s""""$b"""").mkString(""","supersedes":[""", ",", "]")
+    s"""{"batch":"$batch","rows":$rows,"path":"$root/data/batch=$batch","preds":$p,""" +
+      s""""partitions":${parts.mkString("[", ",", "]")}$sup}\n"""
+  }
+
+  private type Row6 = (String, String, String, Long, String, Int)
+
+  private def readManifestText(root: String, batch: String): String =
+    Files.readString(java.nio.file.Paths.get(root, "_manifest", s"$batch.commit"))
+
+  test("the manifest writer keeps the store's on-disk text format byte for byte") {
+    val root = tmp()
+    val store = new TripleStore(root, spark)
+    store.commit("b1", triples(("u1", "mentions", "e1", 1L), ("u1", "hasTopic", "t1", 1L)))
+    store.commit("b2", triples(("u2", "mentions", "e2", 1L)))
+    store.commit("b0", triples())
+    store.compactImpl(Seq("b1", "b2"), runCleanup = false)
+    val cid = store.committedBatches().filter(_.startsWith("zcompact-")).head
+    assert(readManifestText(root, "b1") === manifestText(root, "b1", 2L,
+      Seq("hasTopic" -> 1L, "mentions" -> 1L), manifestFileStats(root, "b1")))
+    assert(readManifestText(root, "b0") === manifestText(root, "b0", 0L, Nil, Nil))
+    assert(readManifestText(root, cid) === manifestText(root, cid, 3L,
+      Seq("hasTopic" -> 1L, "mentions" -> 2L), manifestFileStats(root, cid),
+      supersedes = Seq("b1", "b2")))
+  }
+
+  test("stores written in the on-disk text format read and compact unchanged") {
+    import spark.implicits._
+    val root = tmp()
+    // real data dirs beside hand-written manifests: a live batch (with a
+    // control char and a quote in two pred keys), a rows:0 batch, and a
+    // compaction whose dead ancestor still lingers
+    def batch(b: String, rows: Row6*): Seq[(String, Long)] = {
+      rows.toDF("subj", "pred", "obj", "weight", "lang", "bucket").write
+        .partitionBy("pred", "lang", "bucket").parquet(s"$root/data/batch=$b")
+      val walk = Files.walk(java.nio.file.Paths.get(root, "data", s"batch=$b"))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet"))
+        .map(f => f -> footerRows(f)).toSeq
+      finally walk.close()
+    }
+    def manifest(b: String, text: String): Unit = {
+      Files.createDirectories(java.nio.file.Paths.get(root, "_manifest"))
+      Files.writeString(java.nio.file.Paths.get(root, "_manifest", s"$b.commit"), text)
+    }
+    val live: Seq[Row6] = Seq(("u1", "mentions", "e1", 1L, "en", 0),
+      ("u1", "hasTopic", "t1", 2L, "en", 1), ("u2", "a\u0001b", "x", 1L, "en", 0),
+      ("u2", "q\"x", "y", 1L, "es", 0))
+    manifest("b1", manifestText(root, "b1", 4L, Seq("mentions" -> 1L,
+      "hasTopic" -> 1L, "a\u0001b" -> 1L, "q\"x" -> 1L), batch("b1", live: _*)))
+    manifest("b0", manifestText(root, "b0", 0L, Nil, Nil))
+    val dead: Row6 = ("u9", "mentions", "e9", 1L, "en", 0)
+    manifest("old1", manifestText(root, "old1", 1L, Seq("mentions" -> 1L), batch("old1", dead)))
+    val folded: Row6 = ("u3", "mentions", "e3", 1L, "es", 0)
+    manifest("zcompact-0001", manifestText(root, "zcompact-0001", 1L,
+      Seq("mentions" -> 1L), batch("zcompact-0001", folded), supersedes = Seq("old1")))
+
+    val store = new TripleStore(root, spark)
+    def rows() = store.committed().select("subj", "pred", "obj", "weight", "lang")
+      .as[(String, String, String, Long, String)].collect().sorted.toSeq
+    val want = (live :+ folded).map(r => (r._1, r._2, r._3, r._4, r._5)).sorted
+    assert(store.committedBatches() === Seq("b0", "b1", "zcompact-0001"))
+    assert(rows() === want)
+    val counts = Seq("mentions" -> 2L, "hasTopic" -> 1L, "a\u0001b" -> 1L,
+      "q\"x" -> 1L, "nope" -> 0L)
+    counts.foreach { case (p, n) => assert(store.predRowCount(p) === n, p) }
+    store.compact()
+    assert(store.committedBatches().size === 1)
+    assert(store.committedBatches().head.startsWith("zcompact-"))
+    assert(rows() === want)
+    counts.foreach { case (p, n) => assert(store.predRowCount(p) === n, p) }
+    val manifests = new java.io.File(s"$root/_manifest").list().filter(_.endsWith(".commit"))
+    assert(manifests.toSeq === store.committedBatches().map(_ + ".commit"),
+      "the fold sweeps every dead manifest, the lingering ancestor included")
+  }
 }
