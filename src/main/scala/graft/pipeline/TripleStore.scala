@@ -6,6 +6,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -19,10 +20,8 @@ import graft.util.Json
   */
 object PredCounter extends Aggregator[String, Map[String, Long], Map[String, Long]] {
   override def zero: Map[String, Long] = Map.empty
-  override def reduce(b: Map[String, Long], a: String): Map[String, Long] = {
-    val k = if (a == null) "null" else a
-    b.updated(k, b.getOrElse(k, 0L) + 1L)
-  }
+  override def reduce(b: Map[String, Long], a: String): Map[String, Long] =
+    b.updated(a, b.getOrElse(a, 0L) + 1L)
   override def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
     b.foldLeft(a) { case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v) }
   override def finish(m: Map[String, Long]): Map[String, Long] = m
@@ -38,7 +37,9 @@ object PredCounter extends Aggregator[String, Map[String, Long], Map[String, Lon
   *     parquet (an empty partitionBy write emits none). A manifest without
   *     the field parses as `-1`, which counts as non-empty;
   *   - `path`: the batch's data dir;
-  *   - `preds`: rows per predicate;
+  *   - `preds`: rows per predicate — what pred reads plan from, so a
+  *     manifest without the field (the first round's format) fails to
+  *     parse, naming its batch;
   *   - `partitions`: one (file, rows) entry per data file;
   *   - `supersedes`: batch ids this batch makes dead the instant its
   *     manifest lands — the transitive closure, so deadness never depends
@@ -67,6 +68,9 @@ private[pipeline] final case class Manifest(batch: String, rows: Long, path: Str
 private[pipeline] object Manifest {
   def parse(text: String): Manifest = {
     val n = Json.mapper.readTree(text)
+    if (!n.has("preds")) throw new IllegalStateException(
+      s"manifest of batch '${n.path("batch").asText}' has no preds field; " +
+        "pred reads need per-pred counts")
     def each[A](field: String)(f: JsonNode => A): Seq[A] =
       n.path(field).elements().asScala.map(f).toSeq
     Manifest(n.path("batch").asText, n.path("rows").asLong(-1L), n.path("path").asText,
@@ -97,13 +101,13 @@ private[pipeline] object Manifest {
   *   - `committed()` reads ONLY live manifested batches → the anti-join
   *     resume (J1/J2) reprocesses exactly the uncommitted urls;
   *   - per-batch lineage + row metrics live in the manifest (north
-  *     rule: per-partition lineage + metrics). Totals and per-pred counts
-  *     come from an `Observation` riding the write job; per-file row
-  *     counts are TASK-REPORTED by the same Observation (a per-dir
-  *     counter — the same stats an Iceberg writer's `DataFile` metadata
-  *     carries) with a parquet-footer fallback, so a commit never
-  *     re-reads — and on the fast path never re-opens — the data it just
-  *     wrote.
+  *     rule: per-partition lineage + metrics), and the manifest is the
+  *     store's ONLY metadata. Totals, per-pred counts and per-file row
+  *     counts all come from one `Observation` riding the write job (a
+  *     per-dir counter — the same stats an Iceberg writer's `DataFile`
+  *     metadata carries), so a commit never re-reads or re-opens the data
+  *     it just wrote; pred reads pick their `pred=` dirs from the
+  *     manifests' per-pred counts, with no filesystem probe.
   */
 final class TripleStore(val root: String, spark: SparkSession,
     /** Minimum AGE of an unmanifested `batch=z*` staging dir before the
@@ -124,12 +128,6 @@ final class TripleStore(val root: String, spark: SparkSession,
     */
   private val sfs = new graft.util.StoreFs(root, spark.sessionState.newHadoopConf())
 
-  /** Stats source of the most recent commit ("observe" fast path or
-    * "footers" fallback) — a test seam: specs assert the fast path
-    * actually ENGAGED, so a key-construction regression cannot silently
-    * demote every commit to the O(files) footer pass behind green tests.
-    */
-  @volatile private[graft] var lastStatsSource: String = ""
   private val manifestDir: HPath = sfs.path("_manifest")
   private def manifestPath(b: String): HPath = new HPath(manifestDir, s"$b.commit")
   private def dataDir(batch: String): String = s"$root/data/batch=$batch"
@@ -258,12 +256,13 @@ final class TripleStore(val root: String, spark: SparkSession,
 
   /** Atomically commit one batch of triples. The manifest carries
     * per-partition lineage + metrics (north rule): one (file, rows) entry
-    * per task output file (task-reported by the write job's Observation,
-    * with a parquet-footer fallback — see [[perFileRowCounts]]), plus
-    * per-predicate row counts (same Observation — no re-read). Empty
-    * batches commit a rows:0 manifest. Returns total rows.
+    * per output file and per-predicate row counts, both from the write
+    * job's one Observation — the only stats source, see
+    * [[perFileRowCounts]]. A null or empty `pred` fails the write job and
+    * publishes nothing. Empty batches commit a rows:0 manifest. Returns
+    * total rows.
     */
-  def commit(batch: String, triples: DataFrame, supersedes: Seq[String] = Nil): Long = {
+  def commit(batch: String, triples: DataFrame): Long = {
     // the z* id namespace is RESERVED for internal compaction/rewrite
     // staging: sweepLingeringDead() deletes unmanifested batch=z* data
     // dirs, so an external writer using ANY z id — including one that
@@ -275,7 +274,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     require(!batch.startsWith("z"),
       s"batch id '$batch' uses the reserved internal staging prefix 'z'; " +
         "pick an id not starting with 'z'")
-    commitImpl(batch, triples, supersedes, manifests()).rows
+    commitImpl(batch, triples, Nil, manifests()).rows
   }
 
   /** Commit against the manifests `m` the caller listed; returns the
@@ -313,7 +312,11 @@ final class TripleStore(val root: String, spark: SparkSession,
     val withPartCols = triples
       .select(
         col("subj").cast("string").as("subj"),
-        col("pred").cast("string").as("pred"),
+        // a null or empty pred would land in the Hive default dir, which
+        // no pred read names: fail the write job instead
+        when(coalesce(col("pred").cast("string"), lit("")) === "",
+          raise_error(lit("commit: pred must be non-null and non-empty")))
+          .otherwise(col("pred").cast("string")).as("pred"),
         col("obj").cast("string").as("obj"),
         (if (inCols("weight")) col("weight").cast("bigint")
          else lit(null).cast("bigint")).as("weight"),
@@ -346,14 +349,16 @@ final class TripleStore(val root: String, spark: SparkSession,
       // row count per (pred, lang, bucket) output dir, task-reported the
       // way an Iceberg writer reports DataFile stats. One file per dir
       // under the hash-distributed write → these ARE the manifest's
-      // per-file stats, and the post-write parquet-footer pass (~20 ms
-      // per open; a full RPC per file on an object store, EVERY commit)
-      // leaves the commit path. Cardinality is bounded by the per-commit
-      // file count (preds × langs × buckets).
+      // per-file stats. Cardinality is bounded by the per-commit file
+      // count (preds × langs × buckets).
       .observe(obs, count(lit(1)).as("rows"), predCount(col("pred")).as("preds"),
         predCount(concat(col("pred"), lit(DirSep), col("lang"), lit(DirSep),
           col("bucket").cast("string"))).as("dirs"))
       .write.mode(SaveMode.Overwrite)
+      // never split a dir's file: overrides a session
+      // spark.sql.files.maxRecordsPerFile, which would break the
+      // one-file-per-dir invariant the dir counts rely on
+      .option("maxRecordsPerFile", 0L)
       // pred LEADS the partition spec: the incremental anti-join reads
       // ONLY `pred=processedIn*` directories instead of the full store
       // (the one genuine scale-killer at 10^12 committed triples —
@@ -373,82 +378,47 @@ final class TripleStore(val root: String, spark: SparkSession,
     */
   private val DirSep = "\u0001"
 
-  /** Recursive parquet-file listing of one batch dir — one listing pass,
-    * no per-file metadata opens (scheme-aware: [[graft.util.StoreFs
-    * .listFilesRecursive]]).
-    */
-  private def listParquetFiles(dir: String): Seq[org.apache.hadoop.fs.Path] =
-    sfs.listFilesRecursive(new HPath(dir), ".parquet")
-
-  /** Per-file row counts for the manifest. Primary source is the write
-    * job's own per-dir observe metric (the "dirs" [[PredCounter]] over
-    * the DirSep-joined partition key) — task-reported
-    * stats, the way an Iceberg writer reports `DataFile` row counts — plus
-    * ONE recursive listing to learn the task-generated file names. The
-    * hash-distributed write puts all rows of a (lang, bucket) shuffle
-    * partition in one task, so each (pred, lang, bucket) dir receives
-    * exactly one file per commit and dir counts ARE file counts. When that
-    * invariant does not hold (e.g. `maxRecordsPerFile` splitting a huge
-    * partition, or a null pred routed to the Hive default dir), the keys
-    * or file-per-dir check fails and the parquet-footer pass takes over —
-    * correctness never depends on the fast path.
+  /** Per-file row counts for the manifest, from the write job's own
+    * per-dir observe metric (the "dirs" [[PredCounter]] over the
+    * DirSep-joined partition key) — task-reported stats, the way an
+    * Iceberg writer reports `DataFile` row counts — plus ONE recursive
+    * listing to learn the task-generated file names. The hash-distributed
+    * write puts all rows of a (lang, bucket) shuffle partition in one
+    * task and never splits a file (`maxRecordsPerFile` pinned to 0), so
+    * each (pred, lang, bucket) dir receives exactly one file per commit
+    * and dir counts ARE file counts. This is the only stats source: a
+    * listed dir without an observed count, an observed dir without a
+    * file, or a dir with two files throws IllegalStateException naming
+    * the dir, before the manifest is published.
     */
   private def perFileRowCounts(dir: String, counts: Map[String, Long]): Seq[(String, Long)] = {
-    val files = listParquetFiles(dir)
-    if (files.isEmpty) {
-      // keep the test seam truthful for empty commits too — leaving the
-      // PREVIOUS commit's value would misattribute this one
-      lastStatsSource = "empty"
-      return Seq.empty
+    val byDir = sfs.listFilesRecursive(new HPath(dir), ".parquet").groupBy(dirKey)
+    def broken(what: String, key: String) = throw new IllegalStateException(
+      s"commit of $dir: $what ${key.replace(DirSep, "/")} breaks the " +
+        "one-file-per-(pred, lang, bucket)-dir invariant of the manifest stats")
+    (counts.keySet -- byDir.keySet).foreach(broken("observed dir without a file:", _))
+    byDir.toSeq.map { case (key, files) =>
+      if (!counts.contains(key)) broken("listed dir without an observed count:", key)
+      if (files.size != 1) broken(s"${files.size} files in dir", key)
+      files.head.toString -> counts(key)
     }
-    val unescape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName _
-    // file → its dir's observe key, rebuilt from the partition path
-    // (…/pred=X/lang=Y/bucket=Z/part-….parquet), partition-value escaping
-    // reversed so the key matches the raw column values the metric saw
-    val keyed = files.map { p =>
-      val bucketDir = p.getParent
-      val langDir = if (bucketDir == null) null else bucketDir.getParent
-      val predDir = if (langDir == null) null else langDir.getParent
-      val key =
-        if (predDir == null) null
-        else {
-          def v(h: org.apache.hadoop.fs.Path, prefix: String): Option[String] = {
-            val n = h.getName
-            if (n.startsWith(prefix)) Some(unescape(n.stripPrefix(prefix))) else None
-          }
-          (v(predDir, "pred="), v(langDir, "lang="), v(bucketDir, "bucket=")) match {
-            case (Some(pr), Some(la), Some(bu)) => pr + DirSep + la + DirSep + bu
-            case _ => null
-          }
-        }
-      key -> p
-    }
-    val keySet = keyed.map(_._1).toSet
-    val oneFilePerDir = !keySet.contains(null) &&
-      keySet.size == keyed.size && keySet == counts.keySet
-    lastStatsSource = if (oneFilePerDir) "observe" else "footers"
-    if (oneFilePerDir) keyed.map { case (k, p) => p.toString -> counts(k) }
-    else footerRowCounts(files)
   }
 
-  /** (file, rows) per data file from parquet footers — a metadata-only
-    * read (few KB per file), never the data pages. FALLBACK path: the
-    * primary stats source is the write job's observe metric
-    * ([[perFileRowCounts]]); footer opens are ~20 ms each (an RPC each on
-    * an object store), so when needed they run CONCURRENTLY (they
-    * dominated commit latency when serial: 148 files ≈ 3.3 s → ~0.4 s).
+  /** A data file's observe key, rebuilt from its partition path
+    * (…/pred=X/lang=Y/bucket=Z/part-….parquet) with partition-value
+    * escaping reversed, so the key matches the raw column values the
+    * metric saw. An empty lang is written to the Hive default dir.
     */
-  private def footerRowCounts(fileList: Seq[org.apache.hadoop.fs.Path]): Seq[(String, Long)] = {
-    val conf = spark.sessionState.newHadoopConf()
-    // bounded IO fan-out through the one shared helper (StoreFs
-    // .mapConcurrent): footer opens block on filesystem IO
-    sfs.mapConcurrent(fileList) { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try (p.toString, reader.getRecordCount)
-      finally reader.close()
-    }
+  private def dirKey(file: HPath): String = {
+    val bucket = file.getParent
+    val lang = bucket.getParent
+    Seq(lang.getParent -> "pred=", lang -> "lang=", bucket -> "bucket=").map { case (d, prefix) =>
+      val n = d.getName
+      if (!n.startsWith(prefix)) throw new IllegalStateException(
+        s"$file lies outside the (pred, lang, bucket) partition layout")
+      val v = n.stripPrefix(prefix)
+      if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) "" else ExternalCatalogUtils.unescapePathName(v)
+    }.mkString(DirSep)
   }
 
   /** All committed triples (subj, pred, obj, weight, lang, bucket, batch —
@@ -496,7 +466,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     * tracks its own assignment frontier (reference
     * `topics_detector/db_io.py:389-413`, PK `(id_news, id_run)`).
     */
-  def unprocessed(pages: DataFrame, pred: String, urlCol: String = "url",
+  def unprocessed(pages: DataFrame, pred: String,
       bloomThreshold: Long = 10000000L): DataFrame = {
     // pred is a leading partition column AND the read is rooted at the
     // marker subdirectories: the anti-join neither scans NOR LISTS data
@@ -505,7 +475,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     val m = manifests()
     val done0 = forPred(m, pred)
       .filter(col("pred") === pred) // belt over the path rooting
-      .select(col("subj").as(urlCol))
+      .select(col("subj").as("url"))
     // Above bloomThreshold committed markers (known from manifest
     // metrics — no data read), a bloom filter over the BATCH's urls
     // shrinks the marker side to ~|batch| BEFORE the anti-join shuffle:
@@ -545,22 +515,22 @@ final class TripleStore(val root: String, spark: SparkSession,
         // (executor blocks are MEMORY_AND_DISK, so an un-GC'd window
         // spills rather than OOMs). A long-running stream thus stays
         // bounded at O(in-flight triggers) blooms, not O(all triggers).
-        val urls = pages.select(col(urlCol))
+        val urls = pages.select(col("url"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val bf =
           try {
             val expected = math.max(urls.count(), 1024L)
             spark.sparkContext.broadcast(
-              urls.stat.bloomFilter(urlCol, expected, 0.03))
+              urls.stat.bloomFilter("url", expected, 0.03))
           } finally urls.unpersist(blocking = false)
         val mightContain = udf((u: String) => u != null && bf.value.mightContain(u))
-        done0.filter(mightContain(col(urlCol)))
+        done0.filter(mightContain(col("url")))
       }
     // no distinct on the marker side: left_anti is insensitive to right
     // duplicates (markers are unique per (url, pred) by construction
     // anyway — this anti-join is what enforces it), and the distinct was
     // a whole extra aggregate exchange on the BIG side of the join
-    pages.join(done, Seq(urlCol), "left_anti")
+    pages.join(done, Seq("url"), "left_anti")
   }
 
   /** Committed row count of one predicate, summed from the per-manifest
@@ -574,20 +544,13 @@ final class TripleStore(val root: String, spark: SparkSession,
     */
   def committedForPred(pred: String): DataFrame = forPred(manifests(), pred)
 
+  /** The `pred=` dirs of every live batch whose manifest counts `pred` —
+    * planned from the manifests alone, no filesystem probe.
+    */
   private def forPred(m: TripleStore.Manifests, pred: String): DataFrame = {
-    val escaped = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .escapePathName(pred)
-    // existence check through the Hadoop FileSystem API — a java.nio
-    // probe is always false on non-local roots (hdfs/s3), which would
-    // silently return an empty marker set and make unprocessed()
-    // reprocess everything. Probes run CONCURRENTLY: on an object store
-    // each exists() is an RPC (~tens of ms), and a pre-compaction stream
-    // can hold ~100 live batches — a serial pass would add seconds of
-    // driver latency per micro-batch.
-    val candidates = m.nonEmpty.map(b => s"${dataDir(b)}/pred=$escaped")
-    readDirs(sfs.mapConcurrent(candidates) { d =>
-      if (sfs.exists(new HPath(d))) Some(d) else None
-    }.flatten)
+    val escaped = ExternalCatalogUtils.escapePathName(pred)
+    readDirs(m.nonEmpty.filter(b => m.byBatch(b).preds.getOrElse(pred, 0L) > 0L)
+      .map(b => s"${dataDir(b)}/pred=$escaped"))
   }
 
   /** Predicated delete (S7) — reference `overwrite` mode: copy-on-write
@@ -690,9 +653,17 @@ final class TripleStore(val root: String, spark: SparkSession,
     // none) — fold their manifests away without trying to read them
     val data = readDirs(target.filter(m.hasData).map(dataDir)).drop("batch", "bucket")
     val cid = "zcompact-" + graft.util.Hashing.xxhash64(target.mkString(",")).toHexString
-    val folded = commitImpl(cid, data, supersedes = target, m)
-    // the sweep cleans the folded targets with every other dead manifest
-    if (runCleanup) sweepLingeringDead(m.plus(folded))
+    replace(cid, data, target, m, sweep = runCleanup)
+  }
+
+  /** Commit z-id batch `id` superseding `targets` — the shared tail of
+    * compaction and predicated delete — then (unless a crash seam skips
+    * it) sweep the targets with every other dead manifest.
+    */
+  private def replace(id: String, data: DataFrame, targets: Seq[String],
+      m: TripleStore.Manifests, sweep: Boolean = true): Unit = {
+    val published = commitImpl(id, data, targets, m)
+    if (sweep) sweepLingeringDead(m.plus(published))
   }
 
   /** Opportunistic sweep of manifests that are dead but lingered from an
@@ -770,9 +741,7 @@ final class TripleStore(val root: String, spark: SparkSession,
     // deterministic rewrite id: a crashed delete retried with the same
     // store state recomputes the same affected set → same staging dir
     val rid = "zrewrite-" + graft.util.Hashing.xxhash64(affected.mkString(",")).toHexString
-    commitImpl(rid, remaining, supersedes = affected, m)
-    // best-effort cleanup of dead manifests + data (already superseded)
-    cleanup(affected)
+    replace(rid, remaining, affected, m)
   }
 }
 

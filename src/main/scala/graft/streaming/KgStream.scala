@@ -65,6 +65,12 @@ object KgStream {
       compactMaxLive: Int,
       compactFanIn: Int)(
       commitBatch: (DataFrame, String) => Unit): StreamingQuery = {
+    // checked before the query starts: autoCompact would reject these
+    // only after a trigger's commit, and a restart would replay into the
+    // same failure
+    require(compactMaxLive <= 0 || compactMaxLive >= 2,
+      s"compactMaxLive must be <= 0 (disabled) or >= 2; got $compactMaxLive")
+    require(compactFanIn >= 2, s"compactFanIn must be >= 2; got $compactFanIn")
     val handle: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
       commitBatch(batch.toDF(), batchIdFor(checkpointDir, epochId))
       if (compactMaxLive > 0) store.autoCompact(compactMaxLive, compactFanIn)

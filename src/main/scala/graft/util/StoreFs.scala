@@ -237,27 +237,6 @@ final class StoreFs(val root: String, conf: Configuration) {
     try fs.getFileStatus(p).getModificationTime
     catch { case _: java.io.FileNotFoundException => -1L }
 
-  /** Run `f` over `items` on a dedicated bounded IO pool and await all
-    * results — ONE definition of the blocking-filesystem-fanout pattern
-    * (footer opens, per-dir existence probes). The ops BLOCK on
-    * filesystem IO, so `ExecutionContext.global` (CPU-sized) would
-    * starve other driver work for the duration; the finite await turns a
-    * hung filesystem into an error instead of a silent driver wedge, and
-    * `shutdownNow` interrupts stragglers so non-daemon threads cannot
-    * pin the JVM.
-    */
-  def mapConcurrent[A, B](items: Seq[A], poolCap: Int = 32)(f: A => B): Seq[B] = {
-    if (items.isEmpty) return Seq.empty
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(poolCap, items.size).max(1))
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      Await.result(Future.traverse(items)(a => Future(f(a))), 10.minutes)
-    } finally pool.shutdownNow()
-  }
-
   /** Whether the root resolves to the local filesystem (hard links legal). */
   def isLocal: Boolean = fs.getScheme == "file"
 

@@ -176,4 +176,30 @@ class KgStreamSpec extends SparkSpec {
     // the pure-duplicate third trigger committed nothing
     assert(store.committedBatches().size === 2)
   }
+
+  test("compaction parameters autoCompact would reject fail start, before any commit") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val trie = spark.sparkContext.broadcast(FixtureGazetteer.trie)
+    val params = spark.sparkContext.broadcast(SparkEntry.fixtureModel)
+    val store = new TripleStore(Files.createTempDirectory("graft_ksv_").toString, spark)
+    val source = MemoryStream[Page]
+    val g = PageGen.generate(0L)
+    source.addData(Page(g.url, g.warc_ts, g.html, g.text, g.lang))
+    def ckpt() = Files.createTempDirectory("graft_kckptv_").toString
+    for ((maxLive, fanIn, param) <- Seq((1, 8, "compactMaxLive"), (16, 1, "compactFanIn"),
+        (16, 0, "compactFanIn"))) {
+      val e1 = intercept[IllegalArgumentException] {
+        KgStream.start(source.toDF(), store, trie, params, ckpt(),
+          compactMaxLive = maxLive, compactFanIn = fanIn).stop()
+      }
+      assert(e1.getMessage.contains(param), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException] {
+        KgStream.startAssign(source.toDF().select($"url", $"lang", $"text".as("clean")),
+          store, "r1", identity, ckpt(), compactMaxLive = maxLive, compactFanIn = fanIn).stop()
+      }
+      assert(e2.getMessage.contains(param), e2.getMessage)
+    }
+    assert(store.committedBatches().isEmpty)
+  }
 }

@@ -146,10 +146,6 @@ class TripleStoreSpec extends SparkSpec {
       if (i % 2 == 0) "en" else "es"))
       .toDF("subj", "pred", "obj", "weight", "lang")
     store.commit("b1", t)
-    assert(store.lastStatsSource === "observe",
-      "a regular commit must take the task-reported fast path — a key " +
-        "regression demoting it to the footer pass is a silent O(files) " +
-        "RPC pass per commit at scale")
     val stats = manifestFileStats(root, "b1")
     assert(stats.nonEmpty)
     assert(stats.map(_._2).sum === 120L)
@@ -158,27 +154,67 @@ class TripleStoreSpec extends SparkSpec {
     stats.foreach { case (f, r) => assert(footerRows(f) === r, f) }
   }
 
-  test("per-file manifest stats survive multi-file dirs via the footer fallback") {
+  test("session maxRecordsPerFile = 1: a commit still writes one file per (pred, lang, bucket) dir") {
     import spark.implicits._
     val root = tmp()
     val store = new TripleStore(root, spark)
-    // one pred, one lang, 30 subjects over 16 url buckets: pigeonhole puts
-    // >=2 rows in some bucket dir, and maxRecordsPerFile=1 then splits that
-    // dir into multiple files — breaking the one-file-per-dir invariant the
-    // observe fast path needs, so the commit must take the footer fallback
+    // one pred, one lang, 30 subjects over at most 16 url buckets:
+    // pigeonhole puts >=2 rows in some bucket dir, which a session
+    // maxRecordsPerFile=1 would split into several files — the write pins
+    // the option to 0, so each dir keeps one file and its observed count
     val t = (1 to 30).map(i => (s"u$i", "mentions", s"o$i", 1L, "en"))
       .toDF("subj", "pred", "obj", "weight", "lang")
     spark.conf.set("spark.sql.files.maxRecordsPerFile", 1L)
     try store.commit("b1", t)
     finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    assert(store.lastStatsSource === "footers",
-      "multi-file dirs must demote the commit to the footer fallback")
     val stats = manifestFileStats(root, "b1")
-    assert(stats.size === 30, "maxRecordsPerFile=1 must yield one file per row")
     val dirs = stats.map { case (f, _) => f.substring(0, f.lastIndexOf('/')) }
-    assert(dirs.distinct.size < dirs.size, "some dir must hold >1 file")
+    assert(stats.size < 30, "some dir must hold >1 row")
+    assert(dirs.distinct.size === dirs.size, s"a dir holds >1 file: $dirs")
+    val onDisk = Files.walk(java.nio.file.Paths.get(root, "data", "batch=b1"))
+    try assert(onDisk.iterator().asScala.count(_.toString.endsWith(".parquet")) === stats.size)
+    finally onDisk.close()
     assert(stats.map(_._2).sum === 30L)
     stats.foreach { case (f, r) => assert(footerRows(f) === r, f) }
+  }
+
+  test("a null or empty pred fails the commit and publishes no manifest") {
+    import spark.implicits._
+    val root = tmp()
+    val store = new TripleStore(root, spark)
+    for (bad <- Seq(null, "")) {
+      val t = Seq(("u1", "mentions", "e1", 1L), ("u2", bad, "e2", 1L))
+        .toDF("subj", "pred", "obj", "weight")
+      val e = intercept[Exception](store.commit("b1", t))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).toSeq
+      assert(msgs.exists(_.contains("pred must be non-null")), msgs.mkString("\n"))
+      assert(!Files.exists(java.nio.file.Paths.get(root, "_manifest", "b1.commit")))
+      assert(store.committedBatches().isEmpty)
+    }
+  }
+
+  test("an empty lang commits through the Hive default dir with exact per-file stats") {
+    import spark.implicits._
+    val root = tmp()
+    val store = new TripleStore(root, spark)
+    store.commit("b1", Seq(("u1", "mentions", "e1", 1L, ""), ("u2", "mentions", "e2", 1L, "en"))
+      .toDF("subj", "pred", "obj", "weight", "lang"))
+    val stats = manifestFileStats(root, "b1")
+    assert(stats.exists(_._1.contains("lang=__HIVE_DEFAULT_PARTITION__")), s"$stats")
+    stats.foreach { case (f, r) => assert(footerRows(f) === r, f) }
+    assert(store.committedForPred("mentions").count() === 2L)
+  }
+
+  test("a manifest without a preds field fails, naming its batch") {
+    val root = tmp()
+    val store = new TripleStore(root, spark)
+    store.commit("b1", triples(("u1", "mentions", "e1", 1L)))
+    // the first round's format: batch, rows and path only
+    Files.writeString(java.nio.file.Paths.get(root, "_manifest", "old7.commit"),
+      s"""{"batch":"old7","rows":1,"path":"$root/data/batch=old7"}\n""")
+    val e = intercept[IllegalStateException](store.committedForPred("mentions"))
+    assert(e.getMessage.contains("'old7'") && e.getMessage.contains("preds"), e.getMessage)
   }
 
   test("manifest publications leave no checksum litter in _manifest") {
@@ -692,5 +728,33 @@ class TripleStoreSpec extends SparkSpec {
     val manifests = new java.io.File(s"$root/_manifest").list().filter(_.endsWith(".commit"))
     assert(manifests.toSeq === store.committedBatches().map(_ + ".commit"),
       "the fold sweeps every dead manifest, the lingering ancestor included")
+  }
+
+  test("pred reads planned from manifest counts equal filtered committed()") {
+    import spark.implicits._
+    val root = tmp()
+    val store = new TripleStore(root, spark)
+    val run = graft.schema.Pred.processedFor("r}\"1")
+    store.commit("b1", triples(("u1", "mentions", "e1", 1L), ("u1", "hasTopic", "t1", 1L),
+      ("u1", "processedIn", "b1", 1L)))
+    store.commit("b2", triples(("u2", "mentions", "e2", 1L), ("u2", "processedIn", "b2", 1L)))
+    store.commit("b0", triples())
+    // a fold of b1+b2 whose dead ancestors linger (crash before cleanup)
+    store.compactImpl(Seq("b1", "b2"), runCleanup = false)
+    assert(Files.exists(java.nio.file.Paths.get(root, "_manifest", "b1.commit")))
+    store.commit("b3", triples(("u3", run, "b3", 1L), ("u1", run, "b3", 1L),
+      ("u3", "sameAs", "u1", 1L)))
+    store.commit("b4", triples(("u4", "processedIn", "b4", 1L), ("u4", "mentions", "e4", 1L)))
+    val all = store.committed()
+    val preds = all.select("pred").distinct().as[String].collect().toSeq
+    assert(preds.toSet === Set("mentions", "hasTopic", "processedIn", run, "sameAs"))
+    val pages = Seq("u1", "u2", "u3", "u4", "u5").toDF("url")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (p <- preds :+ "absent") {
+      val want = all.filter(col("pred") === p)
+      assert(rows(store.committedForPred(p)) === rows(want), p)
+      val todo = pages.join(want.select(col("subj").as("url")), Seq("url"), "left_anti")
+      assert(rows(store.unprocessed(pages, p)) === rows(todo), p)
+    }
   }
 }
