@@ -154,7 +154,7 @@ class TripleStoreSpec extends SparkSpec {
     stats.foreach { case (f, r) => assert(footerRows(f) === r, f) }
   }
 
-  test("session maxRecordsPerFile = 1: a commit still writes one file per (pred, lang, bucket) dir") {
+  test("session maxRecordsPerFile = 1: still one file per (pred, lang, bucket) dir") {
     import spark.implicits._
     val root = tmp()
     val store = new TripleStore(root, spark)
