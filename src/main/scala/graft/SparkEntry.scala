@@ -34,10 +34,7 @@ object SparkEntry {
   private[graft] def scratchDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def del(p: java.io.File): Unit = {
-        val cs = p.listFiles(); if (cs != null) cs.foreach(del); p.delete(); ()
-      }
-      del(d.toFile)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(d.toFile); ()
     }))
     d.toString
   }

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.functions.Text
+import graft.functions.{CleanTextImpl, Text}
 import graft.ner.{NerExtractor, TokenTrie}
 import graft.schema.Mention
 import graft.topics.{TopicModelParams, TopicScorer}
@@ -23,7 +23,7 @@ import graft.topics.{TopicModelParams, TopicScorer}
   * on the cleaned text. `entity_text_norm` stays the normalized form the
   * batch triples use. Empty/whitespace-only full_text is rejected
   * (`IllegalArgumentException` — the analog of the reference's HTTP 400,
-  * `app.py:112-116`).
+  * `app.py:112-116`); whitespace is Python's `str.strip()` set.
   */
 object Api {
 
@@ -48,7 +48,9 @@ object Api {
 
   /** Driver-local single-text analyze: NO Spark job — a 1-row request
     * must not pay a cluster round trip (the reference's API path is a
-    * single in-process model call too, `app.py:100-124`).
+    * single in-process model call too, `app.py:100-124`). `keepTypes` is
+    * settable because the parity spec compares against the batch
+    * pipeline's label filter.
     */
   def analyzeText(
       trie: TokenTrie,
@@ -58,8 +60,10 @@ object Api {
       url: String = "api",
       keepTypes: Option[Set[String]] = None): Analysis = {
     val assembled = assemble(title, text)
-    require(assembled.trim.nonEmpty,
-      "Field 'text' must not be empty.") // app.py:112-116 (HTTP 400)
+    // `not full_text.strip()` (app.py:112-116, HTTP 400): Python's
+    // whitespace set, not Java trim's chars <= U+0020
+    require(!assembled.forall(CleanTextImpl.isPyWs),
+      "Field 'text' must not be empty.")
     analyzeAssembled(trie, params, assembled, url, keepTypes)
   }
 
@@ -72,9 +76,8 @@ object Api {
       params: TopicModelParams,
       title: String,
       text: String,
-      url: String = "api",
-      keepTypes: Option[Set[String]] = None): Analysis =
-    analyzeAssembled(trie, params, assemble(title, text), url, keepTypes)
+      url: String = "api"): Analysis =
+    analyzeAssembled(trie, params, assemble(title, text), url, None)
 
   private def analyzeAssembled(
       trie: TokenTrie,
@@ -153,13 +156,12 @@ object Api {
 
   /** Dataset variant of the same surface — works on a 1-row Dataset or a
     * billion-row one (narrow mapPartitions, broadcast model+trie).
-    * Input: (url, title, text[, lang]).
+    * Input: (url, title, text[, lang]). Keeps every entity label.
     */
   def analyzePages(
       pages: DataFrame,
       trie: Broadcast[TokenTrie],
-      params: Broadcast[TopicModelParams],
-      keepTypes: Option[Set[String]] = None): Dataset[Analysis] = {
+      params: Broadcast[TopicModelParams]): Dataset[Analysis] = {
     val spark = pages.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -171,7 +173,7 @@ object Api {
         val p = params.value
         it.map { case (url, title, text) =>
           // unguarded: empty pages flow through like the batch pipeline
-          analyzeUnguarded(tr, p, title, text, url, keepTypes)
+          analyzeUnguarded(tr, p, title, text, url)
         }
       }
   }

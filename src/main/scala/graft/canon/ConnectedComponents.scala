@@ -29,13 +29,21 @@ object ConnectedComponents {
     */
   val DriverMaxEdges: Long = 4000000L
 
+  /** HashMin rounds [[run]] allows before it fails: each round shrinks a
+    * component's label diameter by one, and alias and near-duplicate
+    * graphs have small diameters.
+    */
+  val MaxIterations = 50
+
   /** Adaptive entry point for graphs that may be corpus-sized (the
     * near-duplicate pairs of `Dedup.nearDupClusters`): up to
     * `localMaxEdges` the component computation runs as driver-side
     * union-find in O(E α(E)) — one collect of the deduped edge set instead
     * of O(diameter) shuffle rounds. Beyond the threshold it falls back to
     * the distributed HashMin loop ([[run]]). Both paths produce identical
-    * (node, comp=min-id) labels (pinned by CanonSpec).
+    * (node, comp=min-id) labels (pinned by CanonSpec). `localMaxEdges`
+    * is settable so the specs can force the distributed path on a small
+    * graph.
     */
   def runAuto(edges: DataFrame, localMaxEdges: Long = DriverMaxEdges): DataFrame = {
     val spark = edges.sparkSession
@@ -88,7 +96,7 @@ object ConnectedComponents {
     * @return DataFrame (node: Long, component: Long) — component is the
     *         min node id of the component (deterministic canonical label)
     */
-  def run(edges: DataFrame, maxIterations: Int = 50, preDeduped: Boolean = false): DataFrame = {
+  def run(edges: DataFrame, preDeduped: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -112,7 +120,7 @@ object ConnectedComponents {
 
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxIterations) {
       // candidate label per node: min(own, min over neighbors' labels).
       // The convergence flag rides along in the same checkpointed pass, so
       // each round is exactly one shuffle + one materialization — no extra
@@ -136,11 +144,11 @@ object ConnectedComponents {
     // silent non-convergence = silently WRONG components (one real
     // component reported as several) — fail loudly instead; HashMin
     // converges in O(diameter) rounds, so this only trips on pathological
-    // chain graphs where the caller must raise maxIterations (or the
-    // driver union-find path applies)
+    // chain graphs
     if (!converged) throw new IllegalStateException(
-      s"connected components did not converge within $maxIterations rounds " +
-        "(component diameter exceeds the budget); raise maxIterations")
+      "connected components did not converge within " +
+        s"ConnectedComponents.MaxIterations = $MaxIterations rounds " +
+        "(component diameter exceeds the budget)")
     labels
   }
 }

@@ -66,18 +66,16 @@ object Text {
       // null-fills the same way)
       concat(title, lit(". "), coalesce(text, lit("")))).otherwise(text)
 
-  /** Deterministic content-addressed ids replacing the reference's
-    * BIGSERIAL surrogates (SURVEY.md §1.4, §2.9 fix #1). Stable across
+  /** Deterministic content-addressed entity id replacing the reference's
+    * BIGSERIAL surrogate (SURVEY.md §1.4, §2.9 fix #1). Stable across
     * executors, batches and re-runs — the property incremental resume
     * depends on.
     */
-  def articleId(url: Column): Column = xxhash64(url)
-
   def entityId(norm: Column, entityType: Column): Column =
     xxhash64(norm, entityType)
 
-  /** P8: prompt-length truncation (`topics_naming.py:53,73`). */
-  def truncateForPrompt(c: Column, n: Int = 7500): Column = substring(c, 1, n)
+  /** P8: prompt-length truncation to 7500 chars (`topics_naming.py:53,73`). */
+  def truncateForPrompt(c: Column): Column = substring(c, 1, 7500)
 
   /** Driver/executor-scalar twin of [[cleanText]]: the one scanner
     * [[CleanTextImpl.cleanString]], with null → "". Golden-byte tests and

@@ -120,6 +120,8 @@ object EntityLink {
     * `hotKeys` (columns entity_text_norm, entity_type), e.g. an aggregated
     * dictionary filtered on its news_count, which IS this statistic
     * without re-aggregating the much larger per-article mention rows.
+    * Only the specs supply `hotKeys`; it stays so they can pin the
+    * row-identity contract under a wrong or duplicated hot set.
     */
   def linkSalted(
       mentions: DataFrame,

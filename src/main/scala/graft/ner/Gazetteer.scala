@@ -150,10 +150,4 @@ object FixtureGazetteer {
   val keepLabels: Set[String] = Set("PERSON", "ORG", "GPE", "LOC")
 
   lazy val trie: TokenTrie = TokenTrie(all)
-
-  /** All tokens appearing in any gazetteer phrase (used by the fixture
-    * generator to keep filler vocabulary disjoint — no incidental matches).
-    */
-  lazy val allTokens: Set[String] =
-    all.flatMap(_.phrase.split(" ")).toSet
 }

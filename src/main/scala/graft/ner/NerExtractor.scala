@@ -16,30 +16,31 @@ import graft.functions.Text
   */
 object NerExtractor {
 
-  /** Detect mentions in `textCol` of `pages`. The text is expected to be
-    * already cleaned (`Text.cleanText`) — same contract as the reference,
-    * which stores cleaned text in the news table and skips re-cleaning at
-    * inference (`jobs/topics_detector_inference_job.py:54-59`).
+  /** Detect mentions in `textCol` of `pages`, keyed by their `url` and
+    * `lang` columns (`lang` defaults to "und" when absent). The text is
+    * expected to be already cleaned (`Text.cleanText`) — same contract as
+    * the reference, which stores cleaned text in the news table and skips
+    * re-cleaning at inference (`jobs/topics_detector_inference_job.py:54-59`).
     *
     * @param keepTypes P7 label filter (None = keep all,
     *                  reference `model.py:116-133`)
+    * @param textCol   settable because the NER and plan specs read the
+    *                  `clean` column of `KgPipeline.withCleanText`
     */
   def extractMentions(
       pages: DataFrame,
       trie: Broadcast[TokenTrie],
       keepTypes: Option[Set[String]] = Some(FixtureGazetteer.keepLabels),
-      urlCol: String = "url",
-      textCol: String = "text",
-      langCol: String = "lang"): Dataset[Mention] = {
+      textCol: String = "text"): Dataset[Mention] = {
     val spark = pages.sparkSession
     import spark.implicits._
     // Column pruning before the narrow map: only (url, text, lang) flows;
     // lang rides along (functionally dependent on url) so downstream
     // triples can partition by it without a join back to pages.
     val langExpr =
-      if (pages.columns.contains(langCol)) col(langCol) else lit("und")
+      if (pages.columns.contains("lang")) col("lang") else lit("und")
     val slim = pages
-      .select(col(urlCol).as("url"), col(textCol).as("text"),
+      .select(col("url"), col(textCol).as("text"),
         langExpr.as("lang"))
       .as[(String, String, String)]
     slim.mapPartitions { it =>

@@ -16,10 +16,14 @@ object Dedup {
 
   /** Exact dedup: hash-groupBy on content. Returns one row per distinct
     * text: canonical (min) id + duplicate count.
+    *
+    * Every document operator here reads (doc_id, text) rows and every
+    * embedding operator (vec_id, embedding) rows — the fixture tables'
+    * schema.
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("content_hash"))
+      .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
 
   /** Default hot-bucket cap for the LSH band joins — see [[cappedPairs]]. */
   val DefaultMaxBucket = 1000
@@ -58,13 +62,14 @@ object Dedup {
   /** Key-space sizing for the LSH band joins (the [[cappedPairs]] sizing
     * rule as a function): the smallest `bits` that keeps EXPECTED uniform
     * bucket occupancy n / 2^bits at or below `targetOccupancy`, floored
-    * at `minBits`. Size `bits` from the corpus BEFORE leaning on
+    * at 8 bits. Size `bits` from the corpus BEFORE leaning on
     * `maxBucket` — the cap is a guard against duplicate pathology, and a
     * key space the corpus has outgrown turns every bucket "hot",
     * collapsing pair recall to the star edges. At 10^10 vectors and
-    * target occupancy 100 this returns 27 bits.
+    * target occupancy 100 this returns 27 bits. `targetOccupancy` is
+    * settable because the sizing spec pins the rule at explicit targets.
     */
-  def recommendedBits(n: Long, targetOccupancy: Int = 100, minBits: Int = 8): Int = {
+  def recommendedBits(n: Long, targetOccupancy: Int = 100): Int = {
     require(n >= 0 && targetOccupancy >= 1)
     // integer math: Math.log at exact power-of-two ratios returns
     // 29.000000000000004-style values whose ceil over-provisions a bit
@@ -72,7 +77,7 @@ object Dedup {
     val needed =
       if (ratio <= 1L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(ratio - 1)
-    math.min(62, math.max(minBits, needed))
+    math.min(62, math.max(8, needed))
   }
 
   /** Band-bucket self-join with a hot-bucket cap — the d² guard for
@@ -138,6 +143,7 @@ object Dedup {
 
   // ---------------------------------------------------------------- MinHash
 
+  /** MinHash hyperparameters, a record like the reference's model config. */
   final case class MinHashParams(numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3, seed: Long = 7L) {
     require(numHashes % bands == 0)
     def rowsPerBand: Int = numHashes / bands
@@ -175,11 +181,9 @@ object Dedup {
       docs: DataFrame,
       threshold: Double = 0.8,
       p: MinHashParams = MinHashParams(),
-      idCol: String = "doc_id",
-      textCol: String = "text",
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val candidates = minHashCandidates(docs, p, idCol, textCol, maxBucket)
-    verifyJaccard(docs, candidates, threshold, idCol, textCol, p.shingleSize)
+    val candidates = minHashCandidates(docs, p, "doc_id", "text", maxBucket)
+    verifyJaccard(docs, candidates, threshold, "doc_id", "text", p.shingleSize)
   }
 
   /** Candidate stage of [[minHashLsh]], exposed for scale specs.
@@ -222,15 +226,13 @@ object Dedup {
       docs: DataFrame,
       threshold: Double = 0.8,
       p: MinHashParams = MinHashParams(),
-      idCol: String = "doc_id",
-      textCol: String = "text",
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val pairs = minHashLsh(docs, threshold, p, idCol, textCol, maxBucket)
+    val pairs = minHashLsh(docs, threshold, p, maxBucket)
       .select($"id_a".as("src"), $"id_b".as("dst"))
     val labels = graft.canon.ConnectedComponents.runAuto(pairs)
-    docs.select(col(idCol).cast("long").as("doc_id"))
+    docs.select(col("doc_id").cast("long").as("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"comp", $"doc_id").as("canonical_id"))
   }
@@ -348,8 +350,6 @@ object Dedup {
   def simHashPairs(
       docs: DataFrame,
       maxHamming: Int = 3,
-      idCol: String = "doc_id",
-      textCol: String = "text",
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 63, s"maxHamming=$maxHamming out of [0, 63]")
     val bands = maxHamming + 1
@@ -366,7 +366,7 @@ object Dedup {
     // Project-then-spread as in minHashCandidates: the signature pass is
     // the plan's CPU center and must not serialize on a one-file scan.
     val sigs = graft.util.Frames.spreadNarrow(
-        docs.select(col(idCol).cast("long").as("id"), col(textCol).as("_txt")),
+        docs.select(col("doc_id").cast("long").as("id"), col("text").as("_txt")),
         "id")
       .select(col("id"),
         graft.functions.Registry.simhash64(col("_txt")).as("sim"))
@@ -404,13 +404,12 @@ object Dedup {
     * The join cost is then bounded by maxShingleDf² per shingle.
     */
   def charShingleJaccard(docs: DataFrame, threshold: Double = 0.6,
-      maxShingleDf: Long = 10000L,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      maxShingleDf: Long = 10000L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // spread the substring-explode pass (guide §2.5, as minHashCandidates)
     val src = graft.util.Frames.spreadNarrow(
-      docs.select(col(idCol).as("id"), col(textCol).as("_txt")), "id")
+      docs.select(col("doc_id").as("id"), col("text").as("_txt")), "id")
     val shAll = src
       .select(col("id"),
         explode_outer(expr("transform(sequence(1, greatest(length(_txt) - 11, 1), 4), i -> substring(_txt, i, 12))")).as("sh"))
@@ -433,23 +432,20 @@ object Dedup {
 
   // --------------------------------------- embedding cosine near-dup (LSH)
 
-  /** Near-duplicate pairs by embedding cosine: random-hyperplane LSH
-    * buckets (band of `bits` sign bits) → verified cosine ≥ threshold.
-    */
   /** Default LSH geometry for [[embeddingNearDup]] — referenced by the
     * driver's staged-plane oracle so engine and oracle cannot drift. */
   val EmbedBits = 12
   val EmbedTables = 4
   val EmbedSeed = 11L
 
+  /** Near-duplicate pairs by embedding cosine: random-hyperplane LSH
+    * buckets (EmbedTables bands of `bits` sign bits, planes from
+    * EmbedSeed) → verified cosine ≥ threshold.
+    */
   def embeddingNearDup(
       embeddings: DataFrame,
       threshold: Double = 0.95,
       bits: Int = EmbedBits,
-      tables: Int = EmbedTables,
-      seed: Long = EmbedSeed,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -462,8 +458,8 @@ object Dedup {
     val effBits =
       if (bits == AutoBits) recommendedBits(n)
       else { requireKeySpace(n, bits, maxBucket, "embeddingNearDup"); bits }
-    val cands = embeddingCandidates(
-      embeddings, effBits, tables, seed, idCol, vecCol, maxBucket)
+    val cands = embeddingCandidates(embeddings, effBits, EmbedTables, EmbedSeed,
+      "vec_id", "embedding", maxBucket)
     // fetch the two vectors per CANDIDATE pair from the embedding table —
     // the corpus vectors never ride the ×tables signature explode or the
     // band self-join (VERDICT r03 #1; same layout as LshIndex's keys/
@@ -476,8 +472,8 @@ object Dedup {
     // twice — the price of staying codegen with no cross-operator CSE;
     // it replaces a full encoder boundary and is per-CANDIDATE, bounded
     // by the hot-bucket cap.
-    val vecs = embeddings.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"))
+    val vecs = embeddings.select(col("vec_id").cast("long").as("id"),
+      col("embedding").cast("array<double>").as("v"))
     cands
       .join(vecs.select($"id".as("id_a"), $"v".as("va")), Seq("id_a"))
       .join(vecs.select($"id".as("id_b"), $"v".as("vb")), Seq("id_b"))

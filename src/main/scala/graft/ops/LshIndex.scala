@@ -34,6 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object LshIndex {
 
+  /** Index geometry, a hyperparameter record recorded in `_params`. */
   final case class Params(bits: Int = 10, tables: Int = 8, seed: Long = 11L)
 
   /** At BUILD time: derive bits from the corpus count
@@ -112,10 +113,12 @@ object LshIndex {
   /** Keys-only signature rows: one (tbl, key, id) per table per vector —
     * keys via the codegen [[graft.functions.LshKeys]] Expression (the
     * single `Similarity.lshKey` definition), so the signature pass runs
-    * inside WholeStageCodegen with no encoder boundary.
+    * inside WholeStageCodegen with no encoder boundary. The column names
+    * are parameters because [[build]] signs (vec_id, embedding) rows and
+    * [[topKBatch]] signs its projected (qid, qv) query rows.
     */
   def signatures(embeddings: DataFrame, p: Params,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      idCol: String, vecCol: String): DataFrame = {
     val spark = embeddings.sparkSession
     graft.functions.Registry.ensure(spark)
     Similarity.vecDim(embeddings, vecCol) match {
@@ -131,12 +134,11 @@ object LshIndex {
     }
   }
 
-  /** Build (or rebuild) the index at `dir`: one narrow pass + two writes
-    * (keys, vectors-once). At scale this is the batch-indexing job that
+  /** Build (or rebuild) the index at `dir` from (vec_id, embedding) rows:
+    * one narrow pass + two writes (keys, vectors-once). At scale this is the batch-indexing job that
     * amortizes over all subsequent probes.
     */
-  def build(embeddings: DataFrame, dir: String, p: Params = AutoParams,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+  def build(embeddings: DataFrame, dir: String, p: Params = AutoParams): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     // size (AutoBits) or validate (explicit bits) the key space from one
@@ -160,7 +162,7 @@ object LshIndex {
     paramsPath.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(paramsPath, true)
     SidecarCache.invalidate(s"$dir/_params")
-    signatures(embeddings, eff, idCol, vecCol)
+    signatures(embeddings, eff, "vec_id", "embedding")
       .withColumn("kb", pmod(col("key"), lit(keyBuckets)))
       // hash-distribute on the partition columns (Iceberg's
       // write.distribution-mode=hash): ONE file per (tbl, kb) dir instead
@@ -170,8 +172,8 @@ object LshIndex {
       .partitionBy("tbl", "kb")
       .parquet(s"$dir/keys")
     embeddings
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
+      .select(col("vec_id").cast("long").as("id"),
+        col("embedding").cast("array<double>").as("v"))
       .withColumn("vb", vb(col("id")))
       .repartition(col("vb"))
       .write.mode(SaveMode.Overwrite)
@@ -189,11 +191,6 @@ object LshIndex {
     (0 until p.tables).map(t => (t, Similarity.lshKey(planes, query, t, p.bits)))
   }
 
-  /** Probe: prune the keys side to the query's (tbl, kb) partitions,
-    * filter the exact keys, then fetch ONLY the candidate ids' vectors
-    * (vb-pruned read, or a broadcast semi-join for oversized candidate
-    * sets) and exact-rank by cosine. Neither read touches the corpus.
-    */
   /** The keys-side candidate read: prunes to the query's (tbl, kb)
     * partitions and filters the exact keys. Exposed for plan tests.
     */
@@ -211,10 +208,15 @@ object LshIndex {
       .select(col("id")).distinct()
   }
 
+  /** Probe: prune the keys side to the query's (tbl, kb) partitions,
+    * filter the exact keys, then fetch ONLY the candidate ids' vectors
+    * (vb-pruned read, or a broadcast semi-join for oversized candidate
+    * sets) and exact-rank by cosine. Neither read touches the corpus.
+    * Output: (vec_id, cosine).
+    */
   def topK(spark: SparkSession, dir: String, query: Array[Double],
       k: Int = 10, p: Params = AutoParams,
-      excludeId: Option[Long] = None,
-      idCol: String = "vec_id"): DataFrame = {
+      excludeId: Option[Long] = None): DataFrame = {
     val candIdsDf = candidateIds(spark, dir, query, p, excludeId)
     val vectors = spark.read.parquet(s"$dir/vectors")
     // the candidate ids are exactly what gets ranked — tiny for a sane
@@ -246,8 +248,8 @@ object LshIndex {
         vectors.join(candIdsDf, Seq("id"), "left_semi")
     cands
       .withColumn("cosine", round(Similarity.cosineToQuery(col("v"), query), 4))
-      .select(col("id").as(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
+      .select(col("id").as("vec_id"), col("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
   }
 
@@ -262,7 +264,8 @@ object LshIndex {
     * layout) and rank per query. Use [[topK]] for ad-hoc single probes:
     * its driver-routed candidate set prunes to ≤ tables key-buckets.
     *
-    * Output: (queryIdCol, idCol, cosine, rnk) with rnk ≤ k per query,
+    * `queries` holds (query_id, embedding) rows. Output: (query_id,
+    * vec_id, cosine, rnk) with rnk ≤ k per query,
     * ordering identical to [[topK]] (rounded cosine DESC, id ASC) — a
     * spec pins batch ≡ per-query on the fixture index.
     *
@@ -271,16 +274,14 @@ object LshIndex {
     */
   def topKBatch(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 10, p: Params = AutoParams,
-      excludeSelf: Boolean = false,
-      queryIdCol: String = "query_id", vecCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      excludeSelf: Boolean = false): DataFrame = {
     import spark.implicits._
     val pr = resolveProbe(spark, dir, p)
     // single projected query plan: the dim probe, the signature explode
     // and the qv fetch all derive from `qvs`, not from three separate
     // reads of the caller's (possibly expensive) queries plan
-    val qvs = queries.select(col(queryIdCol).cast("long").as("qid"),
-      col(vecCol).cast("array<double>").as("qv"))
+    val qvs = queries.select(col("query_id").cast("long").as("qid"),
+      col("embedding").cast("array<double>").as("qv"))
     val qsigs = signatures(qvs, pr, "qid", "qv")
       .withColumnRenamed("id", "qid")
     val keys = spark.read.parquet(s"$dir/keys")
@@ -288,7 +289,6 @@ object LshIndex {
       .select($"qid", $"id").distinct()
     val cands = if (excludeSelf) cands0.filter($"qid" =!= $"id") else cands0
     val vectors = spark.read.parquet(s"$dir/vectors").select($"id", $"v")
-    Similarity.rankPerQuery(cands.join(vectors, Seq("id")), qvs, k,
-      queryIdCol, idCol)
+    Similarity.rankPerQuery(cands.join(vectors, Seq("id")), qvs, k)
   }
 }

@@ -61,29 +61,30 @@ object Multimodal {
   }
 
   /** Feature extraction over a media DataFrame (id: long, media: binary,
-    * meta: struct). Narrow, batched, no shuffle — the correct 100 TB shape
-    * for per-blob work.
+    * meta: struct) in batches of 64 blobs (the reference's `batch_size`).
+    * Narrow, batched, no shuffle — the correct 100 TB shape for per-blob
+    * work. `decoder` is settable so the codec specs can swap in the stub
+    * or a recording decoder.
     */
   def extractFeatures(
       media: Dataset[MediaRow],
-      decoder: MediaDecoder = MediaCodecs.FormatDecoder,
-      batchSize: Int = 64): Dataset[MediaFeatures] = {
+      decoder: MediaDecoder = MediaCodecs.FormatDecoder): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(batch => decoder.decodeBatch(batch))
+      it.grouped(64).flatMap(batch => decoder.decodeBatch(batch))
     }
   }
 
-  /** Wrap a text table as fake media blobs (UTF-8 bytes) — used by tests
-    * and the oracle (octet_length is re-computable in SQL).
+  /** Wrap a (doc_id, text) table as fake media blobs (UTF-8 bytes) —
+    * used by tests and the oracle (octet_length is re-computable in SQL).
     */
-  def asMedia(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[MediaRow] = {
+  def asMedia(docs: DataFrame): Dataset[MediaRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(
-        col(idCol).cast("long").as("id"),
-        encode(col(textCol), "UTF-8").as("media"),
+        col("doc_id").cast("long").as("id"),
+        encode(col("text"), "UTF-8").as("media"),
         struct(lit("image").as("kind"), lit(0).as("declared_w"), lit(0).as("declared_h")).as("meta"))
       .as[MediaRow]
   }

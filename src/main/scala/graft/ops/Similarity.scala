@@ -118,18 +118,13 @@ object Similarity {
       .otherwise(when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb)))
   }
 
-  /** Brute-force cosine top-k for one query vector: scan all rows, rank by
-    * rounded cosine (round-then-rank keeps oracle ordering stable), take k.
-    */
   /** Shared tail of the batched ANN probes ([[LshIndex.topKBatch]] /
     * [[IvfIndex.topKBatch]]): score candidate (qid, id, v) rows against
     * the (qid, qv) query vectors and keep the top k per query. ONE place
     * owns the ordering contract — rounded cosine DESC, id ASC, identical
-    * to the single-probe paths.
+    * to the single-probe paths. Output: (query_id, vec_id, cosine, rnk).
     */
-  private[ops] def rankPerQuery(
-      cands: DataFrame, qvs: DataFrame, k: Int,
-      queryIdCol: String, idCol: String): DataFrame = {
+  private[ops] def rankPerQuery(cands: DataFrame, qvs: DataFrame, k: Int): DataFrame = {
     val spark = cands.sparkSession
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window
@@ -139,21 +134,23 @@ object Similarity {
       .withColumn("cosine", round(cosinePair($"v", $"qv"), 4))
       .withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= k)
-      .select($"qid".as(queryIdCol), $"id".as(idCol), $"cosine", $"rnk")
+      .select($"qid".as("query_id"), $"id".as("vec_id"), $"cosine", $"rnk")
   }
 
+  /** Brute-force cosine top-k for one query vector over (vec_id,
+    * embedding) rows: scan all rows, rank by rounded cosine
+    * (round-then-rank keeps oracle ordering stable), take k.
+    */
   def bruteForceTopK(
       embeddings: DataFrame,
       query: Array[Double],
       k: Int = 10,
-      excludeId: Option[Long] = None,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val base = excludeId.map(id => embeddings.filter(col(idCol) =!= id))
+      excludeId: Option[Long] = None): DataFrame = {
+    val base = excludeId.map(id => embeddings.filter(col("vec_id") =!= id))
       .getOrElse(embeddings)
-    base.select(col(idCol),
-        round(cosineToQuery(col(vecCol), query), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
+    base.select(col("vec_id"),
+        round(cosineToQuery(col("embedding"), query), 4).as("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
   }
 
@@ -170,6 +167,9 @@ object Similarity {
     * one-shot path, and on it saturation degrades candidates toward the
     * whole corpus — a perf falloff, not the silent recall loss the
     * banded paths guard against).
+    *
+    * `bits`/`tables`/`seed` are settable because the plan and recall specs
+    * pin this path against an index built with the same geometry.
     */
   def lshTopK(
       embeddings: DataFrame,
@@ -177,10 +177,7 @@ object Similarity {
       k: Int = 10,
       bits: Int = 10,
       tables: Int = 8,
-      seed: Long = 11L,
-      excludeId: Option[Long] = None,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      seed: Long = 11L): DataFrame = {
     val spark = embeddings.sparkSession
     graft.functions.Registry.ensure(spark)
     val effBits =
@@ -189,21 +186,19 @@ object Similarity {
     val dim = query.length
     val planes = randomPlanes(tables * effBits, dim, seed)
     val queryKeys = (0 until tables).map(t => lshKey(planes, query, t, effBits))
-    val base = excludeId.map(id => embeddings.filter(col(idCol) =!= id))
-      .getOrElse(embeddings)
     // candidacy via the SAME codegen LshKeys expression the materialized
     // index uses — candidate-identity between one-shot and indexed probes
     // is structural, not a parallel-implementation promise. zip_with +
     // exists evaluates the key array once per row.
     val rowKeys = graft.functions.Registry.lshKeys(
-      col(vecCol).cast("array<double>"), effBits, tables, seed, dim)
+      col("embedding").cast("array<double>"), effBits, tables, seed, dim)
     val hit = exists(
       zip_with(rowKeys, typedLit(queryKeys), (a, b) => a === b), x => x)
-    base
+    embeddings
       .filter(hit)
-      .select(col(idCol).cast("long").as(idCol),
-        round(cosineToQuery(col(vecCol), query), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
+      .select(col("vec_id").cast("long").as("vec_id"),
+        round(cosineToQuery(col("embedding"), query), 4).as("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
   }
 }

@@ -21,21 +21,19 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** @param orderCols ordering (include tie-breaks for determinism)
-    * @param saltCols  columns whose hash spreads phase 1 (default: every
-    *                  input column — plain value columns, NOT SortOrders)
+  /** Phase 1 salts on the hash of every input column; the rank lands in
+    * a `rnk` column.
+    *
+    * @param orderCols ordering (include tie-breaks for determinism)
     */
   def perGroup(
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[Column],
       k: Int,
-      fanout: Int = 64,
-      saltCols: Option[Seq[Column]] = None,
-      rankCol: String = "rnk"): DataFrame = {
-    val salts = saltCols.getOrElse(df.columns.toSeq.map(col))
+      fanout: Int = 64): DataFrame = {
     val salted = df.withColumn("_salt",
-      pmod(xxhash64(salts: _*), lit(fanout)))
+      pmod(xxhash64(df.columns.toSeq.map(col): _*), lit(fanout)))
     val w1 = Window
       .partitionBy((groupCols.map(col) :+ col("_salt")): _*)
       .orderBy(orderCols: _*)
@@ -45,7 +43,7 @@ object TopK {
       .drop("_salt", "_r1")
     val w2 = Window.partitionBy(groupCols.map(col): _*).orderBy(orderCols: _*)
     candidates
-      .withColumn(rankCol, row_number().over(w2).cast("long"))
-      .filter(col(rankCol) <= k)
+      .withColumn("rnk", row_number().over(w2).cast("long"))
+      .filter(col("rnk") <= k)
   }
 }

@@ -84,6 +84,7 @@ final class EntityStore(val root: String, spark: SparkSession,
       * at all — only in-flight retries re-enter merge, always within a
       * few versions). Bounding the history keeps the per-merge
       * `_batches` read/rewrite O(window), not O(stream lifetime).
+      * Settable so a spec can replay past a two-batch window.
       */
     batchHistory: Int = 100000) {
   require(batchHistory >= 1, "batchHistory must be >= 1")

@@ -34,6 +34,11 @@ import graft.topics.{TopicModelParams, TopicScorer}
   */
 object KgPipeline {
 
+  /** Pipeline options. Nothing sets `keepTypes` away from the reference's
+    * label filter; the record and the `cfg` parameters of [[analyze]],
+    * [[triplesFromAnalysis]] and [[runIncremental]] stay because the
+    * benchmark harness under `perfbench/` passes them positionally.
+    */
   final case class Config(
       keepTypes: Option[Set[String]] = Some(FixtureGazetteer.keepLabels))
 
@@ -247,8 +252,8 @@ object KgPipeline {
     * entity_type) keys of [[surfaceRows]]. sameAs runs when this is called
     * (one pass over `analyzed`); the page triples stay lazy. Callers that
     * consume `analyzed` more than once own its caching lifecycle — see
-    * [[runManaged]]. `preparedDict` and `cfg` are unused; they stay for
-    * source compatibility.
+    * [[runManaged]]. `preparedDict` and `cfg` are unused; they stay
+    * because the benchmark harness passes them positionally.
     */
   def triplesFromAnalysis(
       analyzed: Dataset[PageAnalysis],
@@ -274,9 +279,8 @@ object KgPipeline {
       pages: DataFrame,
       trie: Broadcast[TokenTrie],
       params: Broadcast[TopicModelParams],
-      aliases: Option[DataFrame] = None,
-      cfg: Config = Config()): DataFrame =
-    triplesFromAnalysis(analyze(pages, trie, params, cfg), aliases)
+      aliases: Option[DataFrame] = None): DataFrame =
+    triplesFromAnalysis(analyze(pages, trie, params), aliases)
 
   /** [[run]] with owned cache lifecycle: persist the compact analysis,
     * hand the lazy triples to `use` (which must materialize them), then
@@ -286,9 +290,8 @@ object KgPipeline {
       pages: DataFrame,
       trie: Broadcast[TokenTrie],
       params: Broadcast[TopicModelParams],
-      aliases: Option[DataFrame] = None,
-      cfg: Config = Config())(use: DataFrame => T): T = {
-    val analyzed = analyze(pages, trie, params, cfg)
+      aliases: Option[DataFrame] = None)(use: DataFrame => T): T = {
+    val analyzed = analyze(pages, trie, params)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // EAGER materialization, in dependency order. Handing `use` a lazy
     // plan over unfilled caches lets its broadcast-exchange jobs run

@@ -55,8 +55,9 @@ final class RunRegistry(val root: String, spark: SparkSession) {
       true
     }
 
-  /** S5: register a run (inactive). Re-registering an id_run replaces its
-    * row (idempotent retries). `created_seq` is the registry version the
+  /** S5: register a run (inactive), recording the [[RunParams]]
+    * hyperparameters. Re-registering an id_run replaces its row
+    * (idempotent retries). `created_seq` is the registry version the
     * registration publishes.
     */
   def register(
@@ -65,9 +66,9 @@ final class RunRegistry(val root: String, spark: SparkSession) {
       vocabSize: Int,
       nComponents: Int,
       k: Int,
-      silhouette: Double,
-      params: RunParams = RunParams()): Unit =
+      silhouette: Double): Unit =
     publish("register", idRun) { (base, t) =>
+      val params = RunParams()
       val row = Row(idRun, modelName, vocabSize, nComponents, k, silhouette,
         params.tfidfMaxFeatures, params.tfidfMaxDf, params.tfidfMinDf,
         params.ngramMin, params.ngramMax, params.topTermsPerTopic,

@@ -56,16 +56,14 @@ object TrainJob {
       batchId: String,
       pagesWithClean: DataFrame,
       cfg: DistributedTrainer.Config = DistributedTrainer.Config(),
-      runParams: RunRegistry.RunParams = RunRegistry.RunParams(),
-      modelName: String = "topics_detector",
       modelDir: Option[String] = None,
       assignOverride: Option[DataFrame => DataFrame] = None): Result = {
     val spark = pagesWithClean.sparkSession
     // 1) fit (distributed); silhouette is the run's registered metric
     val (params, silhouette) = DistributedTrainer.train(pagesWithClean, cfg = cfg)
     // 2) register INACTIVE — visible in the registry, not yet serving
-    registry.register(idRun, modelName, params.vocab.length,
-      cfg.nComponents, cfg.k, silhouette, runParams)
+    registry.register(idRun, "topics_detector", params.vocab.length,
+      cfg.nComponents, cfg.k, silhouette)
     // 3) artifacts to disk (the joblib-dump analogue)
     modelDir.foreach(ModelIO.save(spark, params, _))
     // 4) activate — single atomic registry publish

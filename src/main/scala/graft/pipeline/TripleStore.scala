@@ -115,8 +115,8 @@ final class TripleStore(val root: String, spark: SparkSession,
       * are written synchronously inside maintenance calls") holds only
       * UNDER the maintenance lock; the grace is the belt for the
       * stale-lock-takeover edge, where a stuck-but-alive maintainer's
-      * in-flight staging could otherwise be swept by its usurper. Tests
-      * recovering a crashed store pass 0.
+      * in-flight staging could otherwise be swept by its usurper.
+      * Settable because tests recovering a crashed store pass 0.
       */
     zOrphanGraceMs: Long = TripleStore.DefaultZOrphanGraceMs) {
 
@@ -465,6 +465,8 @@ final class TripleStore(val root: String, spark: SparkSession,
     * Run-scoped callers pass `Pred.processedFor(idRun)` so each model run
     * tracks its own assignment frontier (reference
     * `topics_detector/db_io.py:389-413`, PK `(id_news, id_run)`).
+    * `bloomThreshold` is settable so a spec can force the bloom path on
+    * a small store.
     */
   def unprocessed(pages: DataFrame, pred: String,
       bloomThreshold: Long = 10000000L): DataFrame = {

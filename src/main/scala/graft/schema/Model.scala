@@ -39,15 +39,6 @@ final case class EntityRecord(
     entity_mentions_count: Long,
     news_count: Long)
 
-/** (subj, pred, obj) with an optional numeric property (e.g. the mention
-  * count carried by `entities_per_news`, `db/schema.sql:149-158`).
-  */
-final case class Triple(
-    subj: String,
-    pred: String,
-    obj: String,
-    weight: Long)
-
 /** Per-page per-surface mention count — the unit of the fused analyzer's
   * output (all in-page aggregation is free; cross-page aggregation
   * operates on these pre-reduced rows).

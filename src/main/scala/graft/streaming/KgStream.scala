@@ -55,6 +55,8 @@ object KgStream {
     * rewriting each row only O(log) times (compactMaxLive <= 0 disables).
     * Crash-safe: compaction is an atomic supersede-swap, and a crash
     * between commit and compaction just defers it one trigger.
+    * `queryName` is a deployment setting: Spark rejects a second active
+    * query under the same name.
     */
   private def startForeach(
       pages: DataFrame,
@@ -92,15 +94,14 @@ object KgStream {
       checkpointDir: String,
       entityStore: Option[EntityStore] = None,
       aliases: Option[DataFrame] = None,
-      cfg: KgPipeline.Config = KgPipeline.Config(),
       trigger: Trigger = Trigger.AvailableNow(),
       queryName: String = "kg-stream",
       compactMaxLive: Int = 16,
       compactFanIn: Int = 8): StreamingQuery =
     startForeach(pages, store, checkpointDir, trigger, queryName,
       compactMaxLive, compactFanIn) { (batch, batchId) =>
-      KgPipeline.runIncremental(
-        store, batchId, batch, trie, params, cfg, entityStore, aliases)
+      KgPipeline.runIncremental(store, batchId, batch, trie, params,
+        entityStore = entityStore, aliases = aliases)
       ()
     }
 

@@ -135,12 +135,7 @@ object MicroBatch {
     // the staged single-file copy is only a stream source; the memory
     // sink holds the result, so the temp dir (a full input copy under
     // java.io.tmpdir otherwise leaked per invocation) can go now
-    if (dir != src) {
-      val st = java.nio.file.Files.walk(dir)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally st.close()
-    }
+    if (dir != src) org.apache.hadoop.fs.FileUtil.fullyDelete(dir.toFile)
     out
   }
 }

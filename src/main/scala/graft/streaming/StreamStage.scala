@@ -39,10 +39,7 @@ object StreamStage {
       // the scratch write dir (committer litter: _SUCCESS, .crc) is done
       // once its parquet moved out — leaving it leaks one dir per slice
       // per staging invocation
-      val walk = java.nio.file.Files.walk(part)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(part.toFile)
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(
           MtimeBaseMs + i * MtimeStepMs))

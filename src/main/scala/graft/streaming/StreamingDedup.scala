@@ -16,36 +16,25 @@ import org.apache.spark.sql.types.StructType
   * with its dedup memory intact, which is exactly the kill/resume
   * contract of the batch TripleStore path.
   *
-  * Scale: state is partitioned by key hash across executors; an optional
-  * TTL (processing-time timeout) bounds state size for unbounded key
-  * spaces (set `ttlMs` > 0 — expired keys may be re-emitted, the standard
-  * watermark-style tradeoff).
+  * Scale: state is partitioned by key hash across executors.
   */
 object StreamingDedup {
 
   def firstSeen[V](
-      ds: Dataset[(String, V)],
-      ttlMs: Long = 0L)(implicit
+      ds: Dataset[(String, V)])(implicit
       ev: Encoder[V],
       etup: Encoder[(String, V)]): Dataset[(String, V)] = {
     import org.apache.spark.sql.Encoders
     implicit val stateEnc: Encoder[Boolean] = Encoders.scalaBoolean
     implicit val keyEnc: Encoder[String] = Encoders.STRING
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     ds.groupByKey(_._1)
       .flatMapGroupsWithState[Boolean, (String, V)](
-        OutputMode.Append(), timeout) {
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[(String, V)], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (state.exists) {
+          if (state.exists) {
             Iterator.empty // key seen in an earlier batch
           } else {
             state.update(true)
-            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
             rows.take(1).map { case (_, v) => (key, v) }
           }
       }
@@ -96,27 +85,25 @@ object StreamingDedup {
   /** Deterministic end-to-end first-seen run over a parquet events
     * table, oracle-expressible as `GROUP BY user_id → min(bucket)`.
     *
-    * Events are staged one file per coarse time bucket
-    * (`floor(epoch(ts) / bucketSeconds)`), file mtimes strictly increase
+    * Events are staged one file per one-week time bucket
+    * (`floor(epoch(ts) / 604800)`), file mtimes strictly increase
     * in bucket order, and the file source processes oldest-mtime first —
     * micro-batches arrive in chronological bucket order and the emitted
     * value per key is exactly `min(bucket)` ([[firstSeenMin]]). This is
     * the J2 "process a url once" contract made observable: which batch
     * first saw the key.
     *
-    * Scale: the per-bucket staging loop is bounded by time-span /
-    * bucketSeconds (independent of row count); a production deployment
+    * Scale: the per-bucket staging loop is bounded by the time span in
+    * weeks (independent of row count); a production deployment
     * reads an already-time-partitioned stream and skips staging entirely.
     */
   def streamFirstSeenBucket(
       spark: SparkSession,
       parquetPath: String,
       queryName: String,
-      scratchDir: String,
-      bucketSeconds: Long = 604800L): DataFrame =
+      scratchDir: String): DataFrame =
     streamFirstSeenStaged(spark,
-      stageFirstSeenInput(spark, parquetPath, scratchDir, bucketSeconds),
-      queryName)
+      stageFirstSeenInput(spark, parquetPath, scratchDir), queryName)
 
   /** Staging half of [[streamFirstSeenBucket]]: one parquet file per
     * coarse time bucket via [[StreamStage.stageChronological]]. Fixture
@@ -127,8 +114,7 @@ object StreamingDedup {
   def stageFirstSeenInput(
       spark: SparkSession,
       parquetPath: String,
-      scratchDir: String,
-      bucketSeconds: Long = 604800L): String = {
+      scratchDir: String): String = {
     import spark.implicits._
     // rows with NULL ts carry no event time and are DROPPED (an oracle
     // restating this run must add WHERE ts IS NOT NULL — min() skipping
@@ -136,7 +122,7 @@ object StreamingDedup {
     val ev = spark.read.parquet(parquetPath)
       .select(col("user_id").cast("long").as("user_id"),
         // session TZ pinned UTC: the NTZ→TZ cast is value-preserving
-        floor(unix_timestamp(col("ts").cast("timestamp")) / bucketSeconds)
+        floor(unix_timestamp(col("ts").cast("timestamp")) / 604800L)
           .cast("long").as("bucket"))
       .filter(col("bucket").isNotNull)
       .persist() // one source scan; the per-bucket loop reads the cache

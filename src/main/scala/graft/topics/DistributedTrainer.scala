@@ -35,6 +35,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object DistributedTrainer {
 
+  /** Training hyperparameters; the defaults mirror the reference's
+    * shipped config (`topics_detector/model.py:23-35`).
+    */
   final case class Config(
       vocabSize: Int = 512,
       minDf: Double = 2.0,
@@ -49,12 +52,11 @@ object DistributedTrainer {
     */
   val DenseSvdMaxVocab = 4096
 
-  /** @param cleaned DataFrame with an already-cleaned text column
+  /** @param cleaned DataFrame with an already-cleaned `clean` column
     * @return (frozen model params, training silhouette)
     */
   def train(
       cleaned: DataFrame,
-      textCol: String = "clean",
       cfg: Config = Config()): (TopicModelParams, Double) = {
     val spark = cleaned.sparkSession
     // every persisted handle is released in the finally below — a failed
@@ -64,13 +66,13 @@ object DistributedTrainer {
     try {
 
     val tok = new RegexTokenizer()
-      .setInputCol(textCol).setOutputCol("_toks")
+      .setInputCol("clean").setOutputCol("_toks")
       // the explicit class — Python-\w / oracle-RE2 exact, identical to
       // TopicScorer.tokenize and Text.sklearnTokens
       .setPattern("[\\p{L}\\p{N}_]{2,}").setGaps(false)
       .setToLowercase(false) // text is already cleanText-lowercased
     val bi = new NGram().setN(2).setInputCol("_toks").setOutputCol("_bi")
-    val grams = bi.transform(tok.transform(cleaned.select(col(textCol))))
+    val grams = bi.transform(tok.transform(cleaned.select(col("clean"))))
       .withColumn("_grams", concat(col("_toks"), col("_bi")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     persisted += (() => { grams.unpersist(blocking = false); () })

@@ -39,6 +39,9 @@ trait LlmTransport {
   *     (`tables.py:59`);
   *   - every successful naming is merged back into the cache file
   *     atomically (`topics_naming.py:113-115`).
+  *
+  * `cachePath` is a deployment setting: where the name cache lives, or
+  * None for no cache.
   */
 final class LlmTopicNamer(
     transport: LlmTransport,

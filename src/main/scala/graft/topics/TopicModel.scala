@@ -352,16 +352,17 @@ object TopicScorer {
 
   /** Distributed scoring: broadcast params + narrow mapPartitions — the
     * replacement for `predict_topics_for_texts`
-    * (`src/news_nlp/topics_detector/inference.py:11-43`).
+    * (`src/news_nlp/topics_detector/inference.py:11-43`). Pages are keyed
+    * by their `url` column; `textCol` is settable because the topic-table
+    * operators and most callers score the `clean` column.
     */
   def assignTopics(
       pages: DataFrame,
       params: Broadcast[TopicModelParams],
-      urlCol: String = "url",
       textCol: String = "text"): Dataset[TopicAssignment] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.select(col(urlCol).as("url"), col(textCol).as("text"))
+    pages.select(col("url"), col(textCol).as("text"))
       .as[(String, String)]
       .mapPartitions { it =>
         val p = params.value
@@ -380,6 +381,9 @@ object TopicScorer {
   */
 object FixtureTrainer {
 
+  /** Fits the fixture model; the defaulted hyperparameters mirror the
+    * reference's shipped config (`topics_detector/model.py:23-35`).
+    */
   def train(
       texts: Seq[String],
       vocabSize: Int = 512,
@@ -462,6 +466,9 @@ object FixtureTrainer {
     TopicModelParams(vocab, idf, components, centroids)
   }
 
+  /** Deterministic k-means++ seeding plus at most `iters` Lloyd rounds
+    * (a hyperparameter, like sklearn's `max_iter`).
+    */
   def kmeans(points: Array[Array[Double]], k: Int, seed: Long, iters: Int = 100): Array[Array[Double]] = {
     val rng = new Random(seed)
     val n = points.length

@@ -20,26 +20,27 @@ import org.apache.spark.sql.functions._
   * (topic, term, weight) contributions plus a per-doc size marker; the
   * only shuffle is the (topic, term) aggregation, whose key space is
   * bounded by k × vocab — map-side partial agg makes the wire tiny.
+  *
+  * Input is `KgPipeline.withCleanText` output: every operator scores the
+  * `clean` column, and the representative docs are keyed by `url`.
   */
 object TopicTerms {
 
   private val SizeMarker = -1
 
   /** (id_topic, term_idx, w) contributions + (id_topic, -1, 1.0) doc
-    * markers, all from a single scoring pass.
+    * markers, all from a single scoring pass over the `clean` column.
     */
   private def contributions(
       cleaned: DataFrame,
-      params: Broadcast[TopicModelParams],
-      urlCol: String,
-      textCol: String): DataFrame = {
+      params: Broadcast[TopicModelParams]): DataFrame = {
     val spark = cleaned.sparkSession
     import spark.implicits._
-    cleaned.select(col(urlCol).cast("string"), col(textCol).cast("string"))
-      .as[(String, String)]
+    cleaned.select(col("clean").cast("string"))
+      .as[String]
       .mapPartitions { it =>
         val p = params.value
-        it.flatMap { case (_, text) =>
+        it.flatMap { text =>
           val t = if (text == null) "" else text
           val (idx, vals) = TopicScorer.tfidfVector(p, t)
           val x = TopicScorer.project(p, idx, vals)
@@ -53,10 +54,8 @@ object TopicTerms {
   /** A4: docs per topic. */
   def topicSizes(
       cleaned: DataFrame,
-      params: Broadcast[TopicModelParams],
-      urlCol: String = "url",
-      textCol: String = "clean"): DataFrame =
-    contributions(cleaned, params, urlCol, textCol)
+      params: Broadcast[TopicModelParams]): DataFrame =
+    contributions(cleaned, params)
       .filter(col("term_idx") === SizeMarker)
       .groupBy(col("id_topic"))
       .agg(count(lit(1)).as("topic_size"))
@@ -68,16 +67,14 @@ object TopicTerms {
   def topTerms(
       cleaned: DataFrame,
       params: Broadcast[TopicModelParams],
-      topN: Int = 50,
-      urlCol: String = "url",
-      textCol: String = "clean"): DataFrame = {
+      topN: Int = 50): DataFrame = {
     val spark = cleaned.sparkSession
     import spark.implicits._
     // ONE aggregation over (id_topic, term_idx) covers both the term sums
     // and the size markers; the two branches below are canonically
     // identical subtrees, so ReuseExchange computes the shuffle once —
     // no persist, no JVM-lifetime cache leak (round-1 ADVICE).
-    val agg = contributions(cleaned, params, urlCol, textCol)
+    val agg = contributions(cleaned, params)
       .groupBy($"id_topic", $"term_idx").agg(sum($"w").as("w_sum"))
     val sizes = agg.filter($"term_idx" === SizeMarker)
       .select($"id_topic", $"w_sum".cast("long").as("topic_size"))
@@ -104,10 +101,8 @@ object TopicTerms {
   def representativeDocs(
       cleaned: DataFrame,
       params: Broadcast[TopicModelParams],
-      k: Int = 3,
-      urlCol: String = "url",
-      textCol: String = "clean"): DataFrame = {
-    val assigned = TopicScorer.assignTopics(cleaned, params, urlCol, textCol).toDF()
+      k: Int = 3): DataFrame = {
+    val assigned = TopicScorer.assignTopics(cleaned, params, "clean").toDF()
     val w = Window.partitionBy(col("id_topic"))
       .orderBy(col("dist_centroid").asc, col("url").asc)
     assigned
@@ -129,11 +124,9 @@ object TopicTerms {
       cleaned: DataFrame,
       params: Broadcast[TopicModelParams],
       k: Int = 3,
-      maxLen: Int = 7500,
-      urlCol: String = "url",
-      textCol: String = "clean"): DataFrame = {
-    val reps = representativeDocs(cleaned, params, k, urlCol, textCol)
-    cleaned.select(col(urlCol).as("url"), col(textCol).cast("string").as("text"))
+      maxLen: Int = 7500): DataFrame = {
+    val reps = representativeDocs(cleaned, params, k)
+    cleaned.select(col("url"), col("clean").cast("string").as("text"))
       .join(broadcast(reps), Seq("url"))
       .select(col("id_topic"), col("rank"), col("url"),
         substring(col("text"), 1, maxLen).as("text"))

@@ -80,10 +80,14 @@ class ApiSpec extends SparkSpec {
   }
 
   test("empty or whitespace-only text is rejected (reference 400, app.py:112)") {
-    for ((t, x) <- Seq((null, ""), ("", "   "), (null, null), ("", "\n\t "))) {
+    for ((t, x) <- Seq((null, ""), ("", "   "), (null, null), ("", "\n\t "),
+        (null, "\u00a0\u3000"))) {
       val e = intercept[IllegalArgumentException](Api.analyzeText(trie, params, t, x))
       assert(e.getMessage.contains("must not be empty"))
     }
+    // Python's strip() keeps a C0 control that is not whitespace (Java's
+    // trim would eat it), so the reference analyzes it (HTTP 200)
+    assert(Api.analyzeText(trie, params, null, "\u0001").entities.isEmpty)
     // a non-empty title alone passes: full_text = "Derby. " — pin it by
     // equality with the direct empty-title spelling of the same full
     // text (the old `entities !== null` could never fail: Seq fields
