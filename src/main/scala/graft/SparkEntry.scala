@@ -12,7 +12,7 @@ import graft.ner.{FixtureGazetteer, GazEntry, NerExtractor, TokenTrie}
 import graft.ops.{Dedup, LshIndex, Multimodal, Similarity, TextAnalysis, TopK}
 import graft.pipeline.{EntityStore, KgPipeline, TripleStore}
 import graft.streaming.MicroBatch
-import graft.topics.{FixtureTrainer, TopicModelParams, TopicScorer}
+import graft.topics.{TopicModelParams, TopicScorer, TopicTrainer}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the training-data ops), each with a DuckDB oracle where
@@ -179,7 +179,7 @@ object SparkEntry {
   lazy val fixtureModel: TopicModelParams = {
     val texts = (0L until 240L).map(i =>
       Text.cleanTextScala(PageGen.generate(i).text))
-    FixtureTrainer.train(texts)
+    TopicTrainer.fit(texts, TopicTrainer.Config())
   }
 
   private def kgTriples(s: SparkSession, nPages: Long): DataFrame = {
@@ -710,7 +710,7 @@ object SparkEntry {
       def assign(m: Int)(in: DataFrame): DataFrame =
         in.select(col("url"), col("lang"),
           pmod(col("url").cast("long"), lit(m)).cast("int").as("id_topic"))
-      reg.register("run1", "topics_detector", 512, 8, 6, 0.0)
+      reg.register("run1", "topics_detector", TopicTrainer.Config(), fixtureModel, 0.0)
       reg.activate("run1")
       KgPipeline.assignTopicsIncremental(store, "b1", "run1", pages, assign(5))
       graft.pipeline.TrainJob.run(store, reg, "run2", "b2", pages,

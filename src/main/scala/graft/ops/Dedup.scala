@@ -182,8 +182,8 @@ object Dedup {
       threshold: Double = 0.8,
       p: MinHashParams = MinHashParams(),
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val candidates = minHashCandidates(docs, p, "doc_id", "text", maxBucket)
-    verifyJaccard(docs, candidates, threshold, "doc_id", "text", p.shingleSize)
+    val candidates = minHashCandidates(docs, p, maxBucket)
+    verifyJaccard(docs, candidates, threshold, p.shingleSize)
   }
 
   /** Candidate stage of [[minHashLsh]], exposed for scale specs.
@@ -196,8 +196,6 @@ object Dedup {
   private[graft] def minHashCandidates(
       docs: DataFrame,
       p: MinHashParams,
-      idCol: String,
-      textCol: String,
       maxBucket: Int): DataFrame = {
     val spark = docs.sparkSession
     graft.functions.Registry.ensure(spark)
@@ -206,7 +204,7 @@ object Dedup {
     // spread the CPU-heavy signature pass over idle cores when the scan
     // is under-partitioned (guide §2.5; no-op on cluster-scale inputs)
     val src = graft.util.Frames.spreadNarrow(
-      docs.select(col(idCol).cast("long").as("id"), col(textCol).as("_txt")),
+      docs.select(col("doc_id").cast("long").as("id"), col("text").as("_txt")),
       "id")
     val withSig = src.select(col("id"),
         posexplode(graft.functions.Registry.minhashBands(col("_txt"), p))
@@ -249,12 +247,10 @@ object Dedup {
       docs: DataFrame,
       candidates: DataFrame,
       threshold: Double,
-      idCol: String,
-      textCol: String,
       shingleSize: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sets = candidateShingleSets(docs, candidates, idCol, textCol, shingleSize)
+    val sets = candidateShingleSets(docs, candidates, shingleSize)
     // the shingle pass is evaluated ONCE (VERDICT r04 what's-wrong #4:
     // separate id_a/id_b joins exchange on DIFFERENT keys, so
     // ReuseExchange cannot fire and the pruned shingle scan ran twice):
@@ -299,8 +295,6 @@ object Dedup {
   private[graft] def candidateShingleSets(
       docs: DataFrame,
       candidates: DataFrame,
-      idCol: String,
-      textCol: String,
       shingleSize: Int): DataFrame = {
     val candIds = candidates.select(col("id_a").as("id"))
       .unionByName(candidates.select(col("id_b").as("id")))
@@ -308,13 +302,13 @@ object Dedup {
     // pure-Catalyst shingle sets (≡ wordShingles + Hashing.xxhash64 — the
     // scalar hash is bit-identical to functions.xxhash64, and a parity
     // spec pins the whole column): tokens → k-gram join → hash → distinct
-    val toks = filter(split(coalesce(col(textCol), lit("")), " "),
+    val toks = filter(split(coalesce(col("text"), lit("")), " "),
       t => t =!= lit(""))
     val k = shingleSize
     val shingles = when(size(toks) < k, array(array_join(toks, " ")))
       .otherwise(transform(sequence(lit(1), size(toks) - (k - 1)),
         i => array_join(slice(toks, i, lit(k)), " ")))
-    docs.select(col(idCol).cast("long").as("id"),
+    docs.select(col("doc_id").cast("long").as("id"),
         array_distinct(transform(shingles, s => xxhash64(s))).as("shingles"))
       .join(candIds, Seq("id"), "left_semi")
   }
@@ -458,8 +452,7 @@ object Dedup {
     val effBits =
       if (bits == AutoBits) recommendedBits(n)
       else { requireKeySpace(n, bits, maxBucket, "embeddingNearDup"); bits }
-    val cands = embeddingCandidates(embeddings, effBits, EmbedTables, EmbedSeed,
-      "vec_id", "embedding", maxBucket)
+    val cands = embeddingCandidates(embeddings, effBits, maxBucket)
     // fetch the two vectors per CANDIDATE pair from the embedding table —
     // the corpus vectors never ride the ×tables signature explode or the
     // band self-join (VERDICT r03 #1; same layout as LshIndex's keys/
@@ -489,22 +482,18 @@ object Dedup {
   private[graft] def embeddingCandidates(
       embeddings: DataFrame,
       bits: Int,
-      tables: Int,
-      seed: Long,
-      idCol: String,
-      vecCol: String,
       maxBucket: Int): DataFrame = {
     val spark = embeddings.sparkSession
     graft.functions.Registry.ensure(spark)
-    Similarity.vecDim(embeddings, vecCol) match {
+    Similarity.vecDim(embeddings, "embedding") match {
       case None => // empty input → no candidates, not a head() throw
         graft.util.Frames.empty(spark, "id_a BIGINT, id_b BIGINT")
       case Some(dim) =>
         // keys via the codegen LshKeys Expression (same plane family as
         // LshIndex/Similarity — THE single key definition)
-        val sigs = embeddings.select(col(idCol).cast("long").as("id"),
+        val sigs = embeddings.select(col("vec_id").cast("long").as("id"),
             posexplode(graft.functions.Registry.lshKeys(
-              col(vecCol).cast("array<double>"), bits, tables, seed, dim))
+              col("embedding").cast("array<double>"), bits, EmbedTables, EmbedSeed, dim))
               .as(Seq("table", "key")))
           .select(col("table"), col("key"), col("id"))
         cappedPairs(sigs, Seq("table", "key"), maxBucket)

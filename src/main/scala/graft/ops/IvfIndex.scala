@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.topics.FixtureTrainer
+import graft.topics.TopicTrainer
 
 /** IVF (inverted-file) ANN index — the coarse-quantizer alternative to
   * [[LshIndex]]: vectors are assigned to their nearest of `cells`
@@ -36,7 +36,7 @@ object IvfIndex {
     * smaller than one cluster.
     */
   def train(embeddings: DataFrame, p: Params = Params(),
-      sampleSize: Int = 4096): Array[Array[Double]] = {
+      sampleSize: Int = TopicTrainer.KMeansSample): Array[Array[Double]] = {
     val sample = embeddings
       .select(col("embedding").cast("array<double>").as("v"))
       .withColumn("rnd", xxhash64(col("v"), lit(p.seed)))
@@ -45,7 +45,7 @@ object IvfIndex {
       .select(col("v"))
       .collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "empty embedding table")
-    FixtureTrainer.kmeans(sample, math.min(p.cells, sample.length), p.seed)
+    TopicTrainer.kmeans(sample, math.min(p.cells, sample.length), p.seed)
   }
 
   /** Nearest cell of one vector — delegates to the single cell-routing

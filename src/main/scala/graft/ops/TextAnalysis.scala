@@ -48,7 +48,7 @@ object TextAnalysis {
     * (the sklearn/reference token pattern) — a cheap proxy for tokenizer
     * budget accounting. The word class is spelled `[\p{L}\p{N}_]`
     * explicitly (the repo-wide token contract — TopicScorer,
-    * sklearnTokens, RegexTokenizer): Java's `(?U)\w` additionally
+    * sklearnTokens): Java's `(?U)\w` additionally
     * matches Mn/No chars that neither Python `re` nor the DuckDB
     * oracle's RE2 counts, and RE2's bare `\w` is ASCII-only — both
     * diverge from this spelling on non-ASCII text. Greedy maximal runs

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.topics.{TopicModelParams, TopicTerms, TopicTrainer}
 import graft.util.{Frames, Snapshots, StoreFs}
 
 /** Model-run registry ≙ reference `topics_model_training_runs`
@@ -28,7 +29,7 @@ import graft.util.{Frames, Snapshots, StoreFs}
 final class RunRegistry(val root: String, spark: SparkSession) {
 
   import spark.implicits._
-  import RunRegistry.{RunParams, TableDDL}
+  import RunRegistry.TableDDL
 
   /** Pointer I/O through the Hadoop FileSystem API ([[graft.util
     * .StoreFs]]) — the registry root may be file://, hdfs://, etc.
@@ -55,24 +56,23 @@ final class RunRegistry(val root: String, spark: SparkSession) {
       true
     }
 
-  /** S5: register a run (inactive), recording the [[RunParams]]
-    * hyperparameters. Re-registering an id_run replaces its row
-    * (idempotent retries). `created_seq` is the registry version the
-    * registration publishes.
+  /** S5: register a run (inactive). The row records the `cfg` the run
+    * trained with, the fitted `model`'s vocabulary size and n-gram range,
+    * and the topic-term count [[TopicTerms.topTerms]] reports; there is
+    * no MLflow run. Re-registering an id_run replaces its row (idempotent
+    * retries). `created_seq` is the registry version the registration
+    * publishes.
     */
   def register(
       idRun: String,
       modelName: String,
-      vocabSize: Int,
-      nComponents: Int,
-      k: Int,
+      cfg: TopicTrainer.Config,
+      model: TopicModelParams,
       silhouette: Double): Unit =
     publish("register", idRun) { (base, t) =>
-      val params = RunParams()
-      val row = Row(idRun, modelName, vocabSize, nComponents, k, silhouette,
-        params.tfidfMaxFeatures, params.tfidfMaxDf, params.tfidfMinDf,
-        params.ngramMin, params.ngramMax, params.topTermsPerTopic,
-        params.randomState, params.idMlflowRun, base + 1L, false)
+      val row = Row(idRun, modelName, model.vocab.length, cfg.nComponents, cfg.k, silhouette,
+        cfg.vocabSize, cfg.maxDfRatio, cfg.minDf, 1, model.ngramMax,
+        TopicTerms.TopTermsPerTopic, cfg.seed, "", base + 1L, false)
       t.filter($"id_run" =!= idRun).unionByName(spark.createDataFrame(
         java.util.List.of(row), StructType.fromDDL(TableDDL)))
     }
@@ -112,20 +112,4 @@ object RunRegistry {
       "silhouette DOUBLE, tfidf_max_features INT, tfidf_max_df DOUBLE, tfidf_min_df INT, " +
       "ngram_min INT, ngram_max INT, top_terms_per_topic INT, random_state BIGINT, " +
       "id_mlflow_run STRING, created_seq BIGINT, is_active BOOLEAN"
-
-  /** Training hyperparameters carried with each run (reference
-    * `db/schema.sql:33-50`: tfidf_max_features/max_df/min_df,
-    * ngram_range, top_terms_per_topic, random_state, id_mlflow_run).
-    * Defaults mirror the reference's shipped config
-    * (`topics_detector/model.py:23-35`).
-    */
-  final case class RunParams(
-      tfidfMaxFeatures: Int = 30000,
-      tfidfMaxDf: Double = 0.7,
-      tfidfMinDf: Int = 5,
-      ngramMin: Int = 1,
-      ngramMax: Int = 2,
-      topTermsPerTopic: Int = 50,
-      randomState: Long = 31415L,
-      idMlflowRun: String = "")
 }

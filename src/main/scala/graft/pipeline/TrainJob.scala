@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
-import graft.topics.{DistributedTrainer, ModelIO, TopicModelParams}
+import graft.topics.{ModelIO, TopicModelParams, TopicTrainer}
 
 /** The composed retrain entry point — the reference's training pipeline
   * plus DAG 02's re-inference step as ONE call
@@ -10,8 +10,8 @@ import graft.topics.{DistributedTrainer, ModelIO, TopicModelParams}
   * `airflow_dags/02_news_topics_retrain_dag.py:30-59`):
   *
   *   1. fit the topic model on the cleaned corpus
-  *      ([[DistributedTrainer.train]] ≙ `train_topic_model`);
-  *   2. register the run — hyperparameters + silhouette — INACTIVE
+  *      (the Spark [[TopicTrainer.fit]] ≙ `train_topic_model`);
+  *   2. register the run — its `Config`, model shape and silhouette — INACTIVE
   *      ([[RunRegistry.register]] ≙ `insert_topics_model_training_run_df`);
   *   3. persist the model artifacts
   *      ([[ModelIO.save]] ≙ `save_topic_model_artifacts`);
@@ -55,15 +55,14 @@ object TrainJob {
       idRun: String,
       batchId: String,
       pagesWithClean: DataFrame,
-      cfg: DistributedTrainer.Config = DistributedTrainer.Config(),
+      cfg: TopicTrainer.Config = TopicTrainer.Config(),
       modelDir: Option[String] = None,
       assignOverride: Option[DataFrame => DataFrame] = None): Result = {
     val spark = pagesWithClean.sparkSession
     // 1) fit (distributed); silhouette is the run's registered metric
-    val (params, silhouette) = DistributedTrainer.train(pagesWithClean, cfg = cfg)
+    val (params, silhouette) = TopicTrainer.fit(pagesWithClean, cfg)
     // 2) register INACTIVE — visible in the registry, not yet serving
-    registry.register(idRun, "topics_detector", params.vocab.length,
-      cfg.nComponents, cfg.k, silhouette)
+    registry.register(idRun, "topics_detector", cfg, params, silhouette)
     // 3) artifacts to disk (the joblib-dump analogue)
     modelDir.foreach(ModelIO.save(spark, params, _))
     // 4) activate — single atomic registry publish

@@ -1,7 +1,5 @@
 package graft.topics
 
-import java.util.Random
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -188,9 +186,9 @@ object TopicScorer {
     * as a hand-written scan: a token is a maximal run of ≥ 2 code points
     * of the class `[\p{L}\p{N}_]` (letters, numbers, '_'; Python-\w and
     * oracle-RE2 exact, see [[graft.functions.Text.sklearnTokens]]). The
-    * trainers build the vocabulary with that regex (`Text.sklearnTokens`,
-    * `DistributedTrainer`'s `RegexTokenizer`), so the scan must split text
-    * exactly as the regex does — pinned by TextKernelOracleSpec.
+    * oracle restates tokens with that regex and [[TopicTrainer]] builds
+    * the vocabulary from this scan, so it must split text exactly as the
+    * regex does — pinned by TextKernelOracleSpec.
     */
   def tokenize(text: String): Array[String] = {
     val out = Array.newBuilder[String]
@@ -326,18 +324,30 @@ object TopicScorer {
     * matching numpy argmin).
     */
   def assign(params: TopicModelParams, x: Array[Double]): (Int, Double) = {
+    val (best, d2) = nearest(params.centroids, x)
+    (best, math.sqrt(d2))
+  }
+
+  /** The first of `centroids` nearest `x` and its squared distance; -1
+    * when there are none. The k-means fit assigns with it too.
+    */
+  private[topics] def nearest(centroids: Array[Array[Double]], x: Array[Double]): (Int, Double) = {
     var best = -1
     var bestDist = Double.MaxValue
     var c = 0
-    while (c < params.centroids.length) {
-      val cen = params.centroids(c)
-      var d = 0.0
-      var j = 0
-      while (j < x.length) { val t = x(j) - cen(j); d += t * t; j += 1 }
+    while (c < centroids.length) {
+      val d = sqDist(x, centroids(c))
       if (d < bestDist) { bestDist = d; best = c }
       c += 1
     }
-    (best, math.sqrt(bestDist))
+    (best, bestDist)
+  }
+
+  private[topics] def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < a.length) { val t = a(j) - b(j); s += t * t; j += 1 }
+    s
   }
 
   def score(params: TopicModelParams, url: String, text: String): TopicAssignment = {
@@ -371,173 +381,9 @@ object TopicScorer {
   }
 }
 
-/** Deterministic driver-side trainer for fixture-scale models
-  * (FIXTURES.md §4). Mirrors sklearn's formulas exactly where they are
-  * deterministic (TF-IDF vocab selection, smooth idf) and substitutes
-  * deterministic algorithms where sklearn is randomized (power-iteration
-  * SVD with fixed start, k-means++ with a fixed LCG) — training parity is
-  * tolerance-only per SURVEY.md §7.4 #6; INFERENCE given frozen params is
-  * exact.
+/** The fixture trainer's old name: `perfbench/Workloads.scala` fits the
+  * fixture model through it.
   */
 object FixtureTrainer {
-
-  /** Fits the fixture model; the defaulted hyperparameters mirror the
-    * reference's shipped config (`topics_detector/model.py:23-35`).
-    */
-  def train(
-      texts: Seq[String],
-      vocabSize: Int = 512,
-      minDf: Int = 2,
-      maxDfRatio: Double = 0.7,
-      nComponents: Int = 8,
-      k: Int = 6,
-      seed: Long = 31415L): TopicModelParams = {
-    val n = texts.length
-    // --- vocabulary (sklearn: df bounds, then top max_features by corpus
-    // term count; ties alphabetical) ---
-    val df = new java.util.HashMap[String, Int]()
-    val cf = new java.util.HashMap[String, Long]()
-    val docTokens = texts.map { t =>
-      val toks = TopicScorer.tokenize(t)
-      val grams = (toks ++ toks.sliding(2).filter(_.length == 2).map(_.mkString(" "))).toArray
-      grams.foreach(g => cf.merge(g, 1L, (a, b) => a + b))
-      grams.distinct.foreach(g => df.merge(g, 1, (a, b) => a + b))
-      grams
-    }
-    val maxDf = (maxDfRatio * n).toInt
-    import scala.jdk.CollectionConverters._
-    val vocab = df.entrySet().asScala.toSeq
-      .filter(e => e.getValue >= minDf && e.getValue <= maxDf)
-      .map(e => (e.getKey, cf.get(e.getKey)))
-      .sortBy { case (term, c) => (-c, term) }
-      .take(vocabSize)
-      .map(_._1).sorted.toArray
-    val vIndex = vocab.zipWithIndex.toMap
-    val idf = vocab.map(t => math.log((1.0 + n) / (1.0 + df.get(t))) + 1.0)
-
-    // --- dense tfidf matrix (fixture scale only) ---
-    val X = Array.ofDim[Double](n, vocab.length)
-    docTokens.zipWithIndex.foreach { case (grams, row) =>
-      grams.foreach { g =>
-        vIndex.get(g).foreach { j => X(row)(j) += 1.0 }
-      }
-      var norm = 0.0
-      var j = 0
-      while (j < vocab.length) {
-        X(row)(j) *= idf(j)
-        norm += X(row)(j) * X(row)(j)
-        j += 1
-      }
-      if (norm > 0) {
-        val inv = 1.0 / math.sqrt(norm)
-        j = 0
-        while (j < vocab.length) { X(row)(j) *= inv; j += 1 }
-      }
-    }
-
-    // --- truncated SVD via breeze (deterministic full SVD of X^T X) ---
-    val bm = breeze.linalg.DenseMatrix(X: _*)
-    val gram = bm.t * bm // vocab × vocab
-    val es = breeze.linalg.eigSym(gram)
-    // top nComponents eigenvectors by eigenvalue desc
-    val order = (0 until es.eigenvalues.length)
-      .sortBy(i => -es.eigenvalues(i)).take(nComponents)
-    val components = Array.tabulate(vocab.length, nComponents) { (i, c) =>
-      es.eigenvectors(i, order(c))
-    }
-
-    // --- reduced, normalized docs ---
-    val reduced = X.map { row =>
-      val out = new Array[Double](nComponents)
-      var i = 0
-      while (i < row.length) {
-        if (row(i) != 0.0) {
-          var j = 0
-          while (j < nComponents) { out(j) += row(i) * components(i)(j); j += 1 }
-        }
-        i += 1
-      }
-      val nrm = math.sqrt(out.map(x => x * x).sum)
-      if (nrm > 0) out.map(_ / nrm) else out
-    }
-
-    // --- deterministic k-means++ + Lloyd ---
-    val centroids = kmeans(reduced, k, seed)
-    TopicModelParams(vocab, idf, components, centroids)
-  }
-
-  /** Deterministic k-means++ seeding plus at most `iters` Lloyd rounds
-    * (a hyperparameter, like sklearn's `max_iter`).
-    */
-  def kmeans(points: Array[Array[Double]], k: Int, seed: Long, iters: Int = 100): Array[Array[Double]] = {
-    val rng = new Random(seed)
-    val n = points.length
-    val d = points(0).length
-    val cents = new Array[Array[Double]](k)
-    cents(0) = points(rng.nextInt(n)).clone()
-    val d2 = Array.fill(n)(Double.MaxValue)
-    var c = 1
-    while (c < k) {
-      var i = 0
-      var sum = 0.0
-      while (i < n) {
-        val dist = sqDist(points(i), cents(c - 1))
-        if (dist < d2(i)) d2(i) = dist
-        sum += d2(i)
-        i += 1
-      }
-      var target = rng.nextDouble() * sum
-      var pick = 0
-      i = 0
-      var acc = 0.0
-      while (i < n && acc + d2(i) < target) { acc += d2(i); i += 1 }
-      pick = math.min(i, n - 1)
-      cents(c) = points(pick).clone()
-      c += 1
-    }
-    var it = 0
-    var moved = true
-    while (it < iters && moved) {
-      val sums = Array.ofDim[Double](k, d)
-      val counts = new Array[Int](k)
-      var i = 0
-      while (i < n) {
-        var best = 0
-        var bd = Double.MaxValue
-        var cc = 0
-        while (cc < k) {
-          val dist = sqDist(points(i), cents(cc))
-          if (dist < bd) { bd = dist; best = cc }
-          cc += 1
-        }
-        counts(best) += 1
-        var j = 0
-        while (j < d) { sums(best)(j) += points(i)(j); j += 1 }
-        i += 1
-      }
-      moved = false
-      var cc = 0
-      while (cc < k) {
-        if (counts(cc) > 0) {
-          var j = 0
-          while (j < d) {
-            val nv = sums(cc)(j) / counts(cc)
-            if (math.abs(nv - cents(cc)(j)) > 1e-12) moved = true
-            cents(cc)(j) = nv
-            j += 1
-          }
-        }
-        cc += 1
-      }
-      it += 1
-    }
-    cents
-  }
-
-  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-    s
-  }
+  def train(texts: Seq[String]): TopicModelParams = TopicTrainer.fit(texts, TopicTrainer.Config())
 }

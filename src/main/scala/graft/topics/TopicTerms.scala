@@ -26,6 +26,11 @@ import org.apache.spark.sql.functions._
   */
 object TopicTerms {
 
+  /** Terms [[topTerms]] reports per topic by default (the reference's
+    * `top_terms_per_topic`), as the run registry records it.
+    */
+  val TopTermsPerTopic = 50
+
   private val SizeMarker = -1
 
   /** (id_topic, term_idx, w) contributions + (id_topic, -1, 1.0) doc
@@ -67,7 +72,7 @@ object TopicTerms {
   def topTerms(
       cleaned: DataFrame,
       params: Broadcast[TopicModelParams],
-      topN: Int = 50): DataFrame = {
+      topN: Int = TopTermsPerTopic): DataFrame = {
     val spark = cleaned.sparkSession
     import spark.implicits._
     // ONE aggregation over (id_topic, term_idx) covers both the term sums

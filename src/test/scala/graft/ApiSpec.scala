@@ -192,8 +192,8 @@ class ApiSpec extends SparkSpec {
       (1, 1L, "delta", 0.9))
       .toDF("id_topic", "rank", "term", "weight")
     intercept[IllegalStateException] { Api.topics(reg, topicsTable, termsTable) }
-    reg.register("run-a", "m", 10, 2, 3, 0.5)
-    reg.register("run-b", "m", 10, 2, 3, 0.6)
+    reg.register("run-a", "m", graft.topics.TopicTrainer.Config(), SparkEntry.fixtureModel, 0.5)
+    reg.register("run-b", "m", graft.topics.TopicTrainer.Config(), SparkEntry.fixtureModel, 0.6)
     reg.activate("run-b")
     val got = Api.topics(reg, topicsTable, termsTable)
       .select($"id_run", $"id_topic", $"topic_name", $"topic_size", $"top_terms")

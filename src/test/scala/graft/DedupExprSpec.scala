@@ -63,7 +63,7 @@ class DedupExprSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val ids = fuzz.indices.map(_.toLong)
     val cands = ids.map(i => (i, i)).toDF("id_a", "id_b") // touch every doc
-    val got = Dedup.candidateShingleSets(df, cands, "doc_id", "text", 3)
+    val got = Dedup.candidateShingleSets(df, cands, 3)
       .as[(Long, Array[Long])].collect().toMap
     fuzz.zipWithIndex.foreach { case (t, i) =>
       val want = Dedup.wordShingles(t.split(" ").filter(_.nonEmpty), 3)
@@ -166,8 +166,7 @@ class DedupExprSpec extends SparkSpec {
     import spark.implicits._
     val docs = (0L until 20L).map(i => (i, s"text body number $i repeated token"))
       .toDF("doc_id", "text")
-    val mh = Dedup.minHashCandidates(docs, Dedup.MinHashParams(), "doc_id", "text",
-      Dedup.DefaultMaxBucket)
+    val mh = Dedup.minHashCandidates(docs, Dedup.MinHashParams(), Dedup.DefaultMaxBucket)
     val sh = Dedup.simHashPairs(docs)
     for ((name, df) <- Seq("minhash" -> mh, "simhash" -> sh)) {
       val plan = df.queryExecution.executedPlan.toString

@@ -69,7 +69,7 @@ class DedupSpec extends SparkSpec {
     // bucket emits 999 star pairs to the min id and they dedup to 999
     val dup = (0L until 1000L).map(i => (i, base)).toDF("doc_id", "text")
     val nCand = Dedup.minHashCandidates(
-      dup, Dedup.MinHashParams(), "doc_id", "text", maxBucket = 50).count()
+      dup, Dedup.MinHashParams(), maxBucket = 50).count()
     assert(nCand === 999L, s"capped minhash candidates: $nCand")
     // the star graph keeps the cluster CONNECTED: one canonical id
     val clusters = Dedup.nearDupClusters(dup, threshold = 0.8, maxBucket = 50)
@@ -82,8 +82,7 @@ class DedupSpec extends SparkSpec {
     val vdup = (0L until 1000L).map(i => (i, Array(1.0f, 2.0f, 3.0f, 4.0f)))
       .toDF("vec_id", "embedding")
     val nEmb = Dedup.embeddingCandidates(
-      vdup, Dedup.EmbedBits, Dedup.EmbedTables, Dedup.EmbedSeed,
-      "vec_id", "embedding", maxBucket = 50).count()
+      vdup, Dedup.EmbedBits, maxBucket = 50).count()
     assert(nEmb === 999L, s"capped embedding candidates: $nEmb")
   }
 
@@ -103,9 +102,9 @@ class DedupSpec extends SparkSpec {
       }
       val df = docsSeq.toDF("doc_id", "text")
       val p = Dedup.MinHashParams()
-      val capped = Dedup.minHashCandidates(df, p, "doc_id", "text", maxBucket = 3)
+      val capped = Dedup.minHashCandidates(df, p, maxBucket = 3)
         .as[(Long, Long)].collect().toSet
-      val uncapped = Dedup.minHashCandidates(df, p, "doc_id", "text", maxBucket = 100000)
+      val uncapped = Dedup.minHashCandidates(df, p, maxBucket = 100000)
         .as[(Long, Long)].collect().toSet
       assert(capped.subsetOf(uncapped), s"seed=$seed: capped ⊄ uncapped")
       val cc = Dedup.nearDupClusters(df, 0.8, p, maxBucket = 3)
@@ -133,7 +132,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val dup = (0L until 30L).map(i => (i, base)).toDF("doc_id", "text")
     val full = Dedup.minHashCandidates(
-      dup, Dedup.MinHashParams(), "doc_id", "text", Dedup.DefaultMaxBucket).count()
+      dup, Dedup.MinHashParams(), Dedup.DefaultMaxBucket).count()
     assert(full === 30L * 29L / 2L)
     // and the verified pairs are all jaccard 1.0 either way
     val pairs = Dedup.minHashLsh(dup, threshold = 0.9, maxBucket = 10)

@@ -124,9 +124,7 @@ class PlanSpec extends SparkSpec {
     val emb = (0 until 50).map(i => (i.toLong, Array.fill(8)((i % 5).toFloat + 1f)))
       .toDF("vec_id", "embedding")
     val cands = graft.ops.Dedup.embeddingCandidates(
-      emb, graft.ops.Dedup.EmbedBits, graft.ops.Dedup.EmbedTables,
-      graft.ops.Dedup.EmbedSeed, "vec_id", "embedding",
-      graft.ops.Dedup.DefaultMaxBucket)
+      emb, graft.ops.Dedup.EmbedBits, graft.ops.Dedup.DefaultMaxBucket)
     assert(cands.columns.toSeq === Seq("id_a", "id_b"))
     // no join input/output anywhere in the candidate plan carries an array
     // column — vectors must not ride the signature explode or the band
@@ -144,7 +142,7 @@ class PlanSpec extends SparkSpec {
     val docs = (0L until 10L).map(i => (i, s"doc $i text about topic number $i"))
       .toDF("doc_id", "text")
     val candidates = Seq((0L, 1L)).toDF("id_a", "id_b")
-    val sets = graft.ops.Dedup.candidateShingleSets(docs, candidates, "doc_id", "text", 3)
+    val sets = graft.ops.Dedup.candidateShingleSets(docs, candidates, 3)
     val opt = sets.queryExecution.optimizedPlan
     val semi = opt.collectFirst {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join
@@ -164,7 +162,7 @@ class PlanSpec extends SparkSpec {
     // melted single-join shape leaves exactly one semi-join (= one
     // shingle subtree) in the whole verified plan
     val verified = graft.ops.Dedup.verifyJaccard(
-      docs, candidates, threshold = 0.0, "doc_id", "text", 3)
+      docs, candidates, threshold = 0.0, 3)
     val semis = verified.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join
           if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j

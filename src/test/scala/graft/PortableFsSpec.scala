@@ -86,8 +86,8 @@ class PortableFsSpec extends SparkSpec {
   test("RunRegistry register/activate through a file:// Hadoop root") {
     val root = schemeRoot("graft_pfs_reg_")
     val reg = new RunRegistry(root, spark)
-    reg.register("r1", "m", 10, 2, 3, 0.1)
-    reg.register("r2", "m", 10, 2, 3, 0.2)
+    reg.register("r1", "m", graft.topics.TopicTrainer.Config(), SparkEntry.fixtureModel, 0.1)
+    reg.register("r2", "m", graft.topics.TopicTrainer.Config(), SparkEntry.fixtureModel, 0.2)
     assert(reg.active().isEmpty)
     reg.activate("r1")
     assert(reg.active() === Some("r1"))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.pipeline.RunRegistry
 import graft.sources.Tsv
-import graft.topics.{DistributedTrainer, ModelIO, TopicScorer}
+import graft.topics.{ModelIO, TopicScorer, TopicTrainer}
 import graft.fixtures.PageGen
 import graft.pipeline.KgPipeline
 
@@ -52,8 +52,8 @@ class SourcesAndRegistrySpec extends SparkSpec {
       Files.createTempDirectory("graft_registry_").toString, spark)
     assert(reg.active() === None)
     assert(reg.latest() === None)
-    reg.register("run_a", "tfidf_svd_kmeans", 512, 8, 6, 0.12)
-    reg.register("run_b", "tfidf_svd_kmeans", 512, 8, 6, 0.15)
+    reg.register("run_a", "tfidf_svd_kmeans", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.12)
+    reg.register("run_b", "tfidf_svd_kmeans", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.15)
     assert(reg.latest() === Some("run_b"))
     assert(reg.active() === None)
     reg.activate("run_a")
@@ -63,19 +63,19 @@ class SourcesAndRegistrySpec extends SparkSpec {
     assert(reg.table().filter(col("is_active")).count() === 1L)
     intercept[IllegalArgumentException](reg.activate("missing"))
     // idempotent re-register replaces the row, does not duplicate
-    reg.register("run_b", "tfidf_svd_kmeans", 512, 8, 6, 0.16)
+    reg.register("run_b", "tfidf_svd_kmeans", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.16)
     assert(reg.table().filter(col("id_run") === "run_b").count() === 1L)
   }
 
   test("run registry: a fresh foreign claim on the next version fails register loudly, files unchanged") {
     val root = Files.createTempDirectory("graft_registry_claim_").toString
     val reg = new RunRegistry(root, spark)
-    reg.register("run_a", "tfidf_svd_kmeans", 512, 8, 6, 0.12)
+    reg.register("run_a", "tfidf_svd_kmeans", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.12)
     // another process's activate is writing version 2 right now
     Files.writeString(java.nio.file.Paths.get(root, "_claim.2"), "activate:run_x")
     val before = SparkSpec.fileTree(root)
     val e = intercept[IllegalStateException](
-      reg.register("run_b", "tfidf_svd_kmeans", 512, 8, 6, 0.15))
+      reg.register("run_b", "tfidf_svd_kmeans", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.15))
     assert(e.getMessage.contains("version 2") && e.getMessage.contains("activate:run_x"),
       e.getMessage)
     assert(SparkSpec.fileTree(root) === before)
@@ -86,7 +86,7 @@ class SourcesAndRegistrySpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_registry_gc_").toString
     val reg = new RunRegistry(root, spark)
     for (i <- 1 to 10) {
-      reg.register(f"run_$i%02d", "tfidf_svd_kmeans", 512, 8, 6, 0.1)
+      reg.register(f"run_$i%02d", "tfidf_svd_kmeans", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.1)
       reg.activate(f"run_$i%02d")
     }
     val vDirs = new java.io.File(root).listFiles()
@@ -100,7 +100,7 @@ class SourcesAndRegistrySpec extends SparkSpec {
   test("distributed Spark-ML trainer: shapes, idf formula, sane silhouette") {
     val cleaned = KgPipeline.withCleanText(PageGen.pages(spark, 240L).toDF())
       .select("url", "clean")
-    val (m, silhouette) = DistributedTrainer.train(cleaned)
+    val (m, silhouette) = TopicTrainer.fit(cleaned, TopicTrainer.Config())
     assert(m.k === 6)
     assert(m.nComponents === 8)
     assert(m.vocab.length > 50 && m.vocab.length <= 512)

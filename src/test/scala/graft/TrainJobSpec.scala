@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{KgPipeline, RunRegistry, TrainJob, TripleStore}
-import graft.topics.DistributedTrainer
+import graft.topics.TopicTrainer
 
 /** The composed retrain entry point (reference
   * `02_topics_detector_train_pipeline.py:68-160` + DAG 02): train →
@@ -26,7 +26,7 @@ class TrainJobSpec extends SparkSpec {
     val pages = cleaned(120L)
 
     // a pre-existing active run with its own committed assignments
-    reg.register("run1", "topics_detector", 1, 1, 1, 0.0)
+    reg.register("run1", "topics_detector", TopicTrainer.Config(), SparkEntry.fixtureModel, 0.0)
     reg.activate("run1")
     def fixedAssign(in: org.apache.spark.sql.DataFrame) =
       in.select(col("url"), col("lang"), lit(0).as("id_topic"))
@@ -35,7 +35,7 @@ class TrainJobSpec extends SparkSpec {
     assert(run1Rows === 120L)
 
     // composed retrain on the REAL model path (default modelAssign)
-    val cfg = DistributedTrainer.Config(vocabSize = 64, nComponents = 4, k = 3)
+    val cfg = TopicTrainer.Config(vocabSize = 64, nComponents = 4, k = 3)
     val res = TrainJob.run(store, reg, "run2", "b2", pages, cfg,
       modelDir = Some(s"$root/model"))
     assert(res.assignedPages === 120L)
@@ -52,6 +52,10 @@ class TrainJobSpec extends SparkSpec {
     assert(row.getInt(0) === 3 && row.getInt(1) === 4)
     assert(row.getDouble(2) === res.silhouette)
     assert(row.getInt(3) === res.params.vocab.length)
+    // the row records the Config run2 trained with
+    val hyper = t.filter($"id_run" === "run2")
+      .select($"tfidf_max_features", $"tfidf_min_df", $"random_state").head()
+    assert(hyper.getInt(0) === 64 && hyper.getInt(1) === 2 && hyper.getLong(2) === 31415L)
 
     // artifacts round-trip to the exact frozen params
     val loaded = graft.topics.ModelIO.load(spark, s"$root/model")
