@@ -114,7 +114,7 @@ object Registry {
   }
 
   /** The nprobe nearest IVF cell ids, ordered by (distance, cell)
-    * (codegen Expression ≡ `IvfIndex.nearestCell` routing). Requires
+    * (codegen Expression ≡ `DedupSigImpl.nearestCells` routing). Requires
     * ensure(spark).
     */
   def ivfCells(c: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {

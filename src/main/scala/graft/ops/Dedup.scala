@@ -30,10 +30,7 @@ object Dedup {
 
   /** Sentinel `bits` value meaning "size the key space from the corpus":
     * [[embeddingNearDup]], [[Similarity.lshTopK]] and [[LshIndex.build]]
-    * replace it with [[recommendedBits]](count). At probe time
-    * ([[LshIndex.topK]]/`topKBatch`) it instead means "use the geometry
-    * the index was BUILT with" (read from the index's `_params`) — the
-    * only geometry a probe can ever be correct under.
+    * replace it with [[recommendedBits]](count).
     */
   val AutoBits = 0
 
@@ -70,7 +67,8 @@ object Dedup {
     * settable because the sizing spec pins the rule at explicit targets.
     */
   def recommendedBits(n: Long, targetOccupancy: Int = 100): Int = {
-    require(n >= 0 && targetOccupancy >= 1)
+    require(n >= 0, s"n must be >= 0, got $n")
+    require(targetOccupancy >= 1, s"targetOccupancy must be >= 1, got $targetOccupancy")
     // integer math: Math.log at exact power-of-two ratios returns
     // 29.000000000000004-style values whose ceil over-provisions a bit
     val ratio = if (n == 0) 1L else (n + targetOccupancy - 1) / targetOccupancy
@@ -143,9 +141,14 @@ object Dedup {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** MinHash hyperparameters, a record like the reference's model config. */
+  /** MinHash hyperparameters, a record like the reference's model config;
+    * a bad field fails here, naming it.
+    */
   final case class MinHashParams(numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3, seed: Long = 7L) {
-    require(numHashes % bands == 0)
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(numHashes >= bands && numHashes % bands == 0,
+      s"numHashes must be a positive multiple of bands=$bands, got $numHashes")
+    require(shingleSize >= 1, s"shingleSize must be >= 1, got $shingleSize")
     def rowsPerBand: Int = numHashes / bands
     // odd multipliers + offsets from splitmix — a universal-ish hash family
     @transient lazy val as: Array[Long] =
@@ -485,7 +488,7 @@ object Dedup {
       maxBucket: Int): DataFrame = {
     val spark = embeddings.sparkSession
     graft.functions.Registry.ensure(spark)
-    Similarity.vecDim(embeddings, "embedding") match {
+    Similarity.vecDim(embeddings) match {
       case None => // empty input → no candidates, not a head() throw
         graft.util.Frames.empty(spark, "id_a BIGINT, id_b BIGINT")
       case Some(dim) =>

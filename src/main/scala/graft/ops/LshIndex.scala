@@ -34,14 +34,19 @@ import org.apache.spark.sql.functions._
   */
 object LshIndex {
 
-  /** Index geometry, a hyperparameter record recorded in `_params`. */
-  final case class Params(bits: Int = 10, tables: Int = 8, seed: Long = 11L)
+  /** Index geometry, a hyperparameter record recorded in `_params`.
+    * `bits` is [[Dedup.AutoBits]] (size the key space from the corpus at
+    * build time) or in [1, 62]; a bad field fails here, naming it.
+    */
+  final case class Params(bits: Int = 10, tables: Int = 8, seed: Long = 11L) {
+    require(bits == Dedup.AutoBits || (bits >= 1 && bits <= 62),
+      s"bits must be AutoBits (${Dedup.AutoBits}) or in [1, 62], got $bits")
+    require(tables >= 1, s"tables must be >= 1, got $tables")
+  }
 
-  /** At BUILD time: derive bits from the corpus count
-    * ([[Dedup.recommendedBits]]); at PROBE time: use the geometry the
-    * index was built with (read from `dir/_params`) — the only geometry
-    * a probe can ever be correct under. VERDICT r04 #2: fixed fixture
-    * defaults (bits=10) silently saturate at 10^9+ vectors.
+  /** Build-time geometry that derives bits from the corpus count
+    * ([[Dedup.recommendedBits]]). VERDICT r04 #2: fixed fixture defaults
+    * (bits=10) silently saturate at 10^9+ vectors.
     */
   val AutoParams: Params = Params(bits = Dedup.AutoBits)
 
@@ -55,30 +60,25 @@ object LshIndex {
       row.getAs[Long]("seed"))
   }
 
-  /** Resolve [[AutoParams]] at probe time against the index's recorded
-    * geometry; explicit params pass through (mismatched explicit params
-    * are the caller's contract to keep — specs pass the build params).
-    * The load is memoized per dir with mtime revalidation
-    * ([[SidecarCache]]) — an ad-hoc prober loop pays one stat RPC, not a
-    * Spark job, per probe, and an out-of-process rebuild is picked up. A
-    * MISSING `_params` is a loud error, not a silent default: [[build]]
-    * deletes the sidecar first and rewrites it last, so absence means a
-    * pre-recording index or a rebuild that crashed mid-way — in both
-    * cases probing with guessed geometry is silent recall loss (the
-    * caller can still pass explicit Params for a sidecar-less index it
-    * knows the geometry of).
+  /** The probe's geometry: always the one the index recorded — the only
+    * geometry a probe can be correct under. The load is memoized per dir
+    * with mtime revalidation ([[SidecarCache]]), and [[build]] seeds the
+    * memo, so a probe pays one stat RPC, not a Spark job, and an
+    * out-of-process rebuild is picked up. A MISSING `_params` is a loud
+    * error, not a silent default: [[build]] deletes the sidecar first and
+    * rewrites it last, so absence means a pre-recording index or a
+    * rebuild that crashed mid-way — in both cases probing with guessed
+    * geometry is silent recall loss.
     */
-  private def resolveProbe(spark: SparkSession, dir: String, p: Params): Params =
-    if (p.bits != Dedup.AutoBits) p
-    else
-      try SidecarCache.cached(spark, s"$dir/_params")(loadParams(spark, dir))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new IllegalStateException(
-            s"no recorded geometry at $dir/_params (pre-recording or " +
-              "half-written index, e.g. a rebuild that crashed before its " +
-              "final _params write): pass explicit Params, or rebuild")
-      }
+  private def probeParams(spark: SparkSession, dir: String): Params =
+    try SidecarCache.cached(spark, s"$dir/_params")(loadParams(spark, dir))
+    catch {
+      case _: java.io.FileNotFoundException =>
+        throw new IllegalStateException(
+          s"no recorded geometry at $dir/_params (pre-recording or " +
+            "half-written index, e.g. a rebuild that crashed before its " +
+            "final _params write): rebuild the index")
+    }
 
   /** Partition fan-out guard: 2^bits keys per table would explode the
     * directory count, so keys are grouped into key-buckets for the
@@ -110,25 +110,23 @@ object LshIndex {
   private def vb(idCol: org.apache.spark.sql.Column) =
     pmod(idCol, lit(vecBuckets.toLong)).cast("int")
 
-  /** Keys-only signature rows: one (tbl, key, id) per table per vector —
-    * keys via the codegen [[graft.functions.LshKeys]] Expression (the
-    * single `Similarity.lshKey` definition), so the signature pass runs
-    * inside WholeStageCodegen with no encoder boundary. The column names
-    * are parameters because [[build]] signs (vec_id, embedding) rows and
-    * [[topKBatch]] signs its projected (qid, qv) query rows.
+  /** Keys-only signature rows of (vec_id, embedding) rows: one (tbl,
+    * key, id) per table per vector — keys via the codegen
+    * [[graft.functions.LshKeys]] Expression (the single
+    * `Similarity.lshKey` definition), so the signature pass runs inside
+    * WholeStageCodegen with no encoder boundary.
     */
-  def signatures(embeddings: DataFrame, p: Params,
-      idCol: String, vecCol: String): DataFrame = {
+  def signatures(embeddings: DataFrame, p: Params): DataFrame = {
     val spark = embeddings.sparkSession
     graft.functions.Registry.ensure(spark)
-    Similarity.vecDim(embeddings, vecCol) match {
+    Similarity.vecDim(embeddings) match {
       case None => // empty input → empty signatures, not a head() throw
         graft.util.Frames.empty(spark, "tbl INT, key BIGINT, id BIGINT")
       case Some(dim) =>
         embeddings
-          .select(col(idCol).cast("long").as("id"),
+          .select(col("vec_id").cast("long").as("id"),
             posexplode(graft.functions.Registry.lshKeys(
-              col(vecCol).cast("array<double>"), p.bits, p.tables, p.seed, dim))
+              col("embedding").cast("array<double>"), p.bits, p.tables, p.seed, dim))
               .as(Seq("tbl", "key")))
           .select(col("tbl"), col("key"), col("id"))
     }
@@ -162,7 +160,7 @@ object LshIndex {
     paramsPath.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(paramsPath, true)
     SidecarCache.invalidate(s"$dir/_params")
-    signatures(embeddings, eff, "vec_id", "embedding")
+    signatures(embeddings, eff)
       .withColumn("kb", pmod(col("key"), lit(keyBuckets)))
       // hash-distribute on the partition columns (Iceberg's
       // write.distribution-mode=hash): ONE file per (tbl, kb) dir instead
@@ -180,10 +178,12 @@ object LshIndex {
       .partitionBy("vb")
       .parquet(s"$dir/vectors")
     // record the geometry IN the index, AFTER the data it describes —
-    // probes resolve AutoParams from here, so an auto-sized index cannot
-    // be probed with drifted params
+    // probes read it from here, so an index cannot be probed with drifted
+    // params — and seed the probe memo with it, so the first probe after
+    // a build loads nothing through Spark
     Seq((eff.bits, eff.tables, eff.seed)).toDF("bits", "tables", "seed")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/_params")
+    SidecarCache.cached(spark, s"$dir/_params")(eff)
   }
 
   def queryKeys(query: Array[Double], p: Params): Seq[(Int, Long)] = {
@@ -195,9 +195,8 @@ object LshIndex {
     * partitions and filters the exact keys. Exposed for plan tests.
     */
   private[graft] def candidateIds(spark: SparkSession, dir: String,
-      query: Array[Double], p: Params, excludeId: Option[Long]): DataFrame = {
-    val pr = resolveProbe(spark, dir, p)
-    val keys = queryKeys(query, pr)
+      query: Array[Double], excludeId: Option[Long]): DataFrame = {
+    val keys = queryKeys(query, probeParams(spark, dir))
     val pruned = keys.map { case (t, key) =>
       col("tbl") === t && col("kb") === (((key % keyBuckets) + keyBuckets) % keyBuckets) &&
         col("key") === key
@@ -212,12 +211,11 @@ object LshIndex {
     * filter the exact keys, then fetch ONLY the candidate ids' vectors
     * (vb-pruned read, or a broadcast semi-join for oversized candidate
     * sets) and exact-rank by cosine. Neither read touches the corpus.
-    * Output: (vec_id, cosine).
+    * The geometry is the one the index recorded. Output: (vec_id, cosine).
     */
   def topK(spark: SparkSession, dir: String, query: Array[Double],
-      k: Int = 10, p: Params = AutoParams,
-      excludeId: Option[Long] = None): DataFrame = {
-    val candIdsDf = candidateIds(spark, dir, query, p, excludeId)
+      k: Int = 10, excludeId: Option[Long] = None): DataFrame = {
+    val candIdsDf = candidateIds(spark, dir, query, excludeId)
     val vectors = spark.read.parquet(s"$dir/vectors")
     // the candidate ids are exactly what gets ranked — tiny for a sane
     // index. Collect them so the vectors read partition-prunes on vb;
@@ -251,44 +249,5 @@ object LshIndex {
       .select(col("id").as("vec_id"), col("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
-  }
-
-  /** Batched probe — the training-pipeline query shape ([[topK]] is one
-    * driver round-trip per query; a corpus-wide kNN pass probes MILLIONS
-    * of queries). The batch path trades per-query partition pruning for
-    * one distributed plan: keys-only query signatures join the keys table
-    * on (tbl, key) — at millions of queries every partition is touched
-    * anyway, so a shuffle join IS the pruned plan — then candidate
-    * (query, id) pairs fetch the two vectors by id/qid joins (vectors
-    * never ride the signature explode, same discipline as the index
-    * layout) and rank per query. Use [[topK]] for ad-hoc single probes:
-    * its driver-routed candidate set prunes to ≤ tables key-buckets.
-    *
-    * `queries` holds (query_id, embedding) rows. Output: (query_id,
-    * vec_id, cosine, rnk) with rnk ≤ k per query,
-    * ordering identical to [[topK]] (rounded cosine DESC, id ASC) — a
-    * spec pins batch ≡ per-query on the fixture index.
-    *
-    * `excludeSelf` drops id == query id rows BEFORE ranking (the corpus
-    * self-kNN case, where each query IS an indexed vector).
-    */
-  def topKBatch(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int = 10, p: Params = AutoParams,
-      excludeSelf: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val pr = resolveProbe(spark, dir, p)
-    // single projected query plan: the dim probe, the signature explode
-    // and the qv fetch all derive from `qvs`, not from three separate
-    // reads of the caller's (possibly expensive) queries plan
-    val qvs = queries.select(col("query_id").cast("long").as("qid"),
-      col("embedding").cast("array<double>").as("qv"))
-    val qsigs = signatures(qvs, pr, "qid", "qv")
-      .withColumnRenamed("id", "qid")
-    val keys = spark.read.parquet(s"$dir/keys")
-    val cands0 = qsigs.join(keys, Seq("tbl", "key"))
-      .select($"qid", $"id").distinct()
-    val cands = if (excludeSelf) cands0.filter($"qid" =!= $"id") else cands0
-    val vectors = spark.read.parquet(s"$dir/vectors").select($"id", $"v")
-    Similarity.rankPerQuery(cands.join(vectors, Seq("id")), qvs, k)
   }
 }

@@ -12,8 +12,10 @@ import org.apache.spark.sql.SparkSession
   * rebuild deletes and recreates the dir's children, which bumps the dir
   * mtime on local FS and HDFS alike). In-process rebuilds additionally
   * [[invalidate]] their entry so correctness never rests on mtime
-  * granularity; two out-of-process rebuilds inside one mtime tick are
-  * theoretical at index-rebuild cadence.
+  * granularity, then seed it through [[cached]] with the geometry they
+  * just wrote, so their first probe loads nothing; two out-of-process
+  * rebuilds inside one mtime tick are theoretical at index-rebuild
+  * cadence.
   */
 private[ops] object SidecarCache {
   private val cache =

@@ -44,18 +44,18 @@ object Similarity {
     key
   }
 
-  /** Vector dimension probed from the FIRST row of `df(vecCol)`: None on
+  /** Vector dimension probed from the FIRST `embedding` row: None on
     * an empty frame (callers return an empty result instead of throwing
     * `next on empty iterator`); a null first vector is an explicit error
     * — the signature expressions reject null embeddings anyway, so
     * surfacing it at the probe beats an NPE three operators later.
     */
-  private[ops] def vecDim(df: DataFrame, vecCol: String): Option[Int] = {
-    val rows = df.select(size(col(vecCol))).limit(1).collect()
+  private[ops] def vecDim(df: DataFrame): Option[Int] = {
+    val rows = df.select(size(col("embedding"))).limit(1).collect()
     if (rows.isEmpty) None
     else if (rows(0).isNullAt(0))
       throw new IllegalArgumentException(
-        s"cannot infer vector dimension: first '$vecCol' value is null")
+        "cannot infer vector dimension: first 'embedding' value is null")
     else Some(rows(0).getInt(0))
   }
 
@@ -78,9 +78,8 @@ object Similarity {
     * DuckDB list-function evaluation order). Zero-norm vectors (either
     * side) yield 0.0 — the SAME guard as [[cosinePair]] and the scalar
     * [[cosine]]: without it a zero indexed vector produced 0/0 = NaN,
-    * which sorts FIRST under `cosine DESC`, so single probes ranked a
-    * zero vector as the top neighbor while batch probes (cosinePair)
-    * ranked it last — breaking the documented batch ≡ per-query contract.
+    * which sorts FIRST under `cosine DESC`, so probes ranked a zero
+    * vector as the top neighbor.
     */
   def cosineToQuery(vec: Column, query: Array[Double]): Column = {
     val q = typedLit(query)
@@ -116,25 +115,6 @@ object Similarity {
           "cosinePair: vector dimensions differ (%s vs %s)",
           size(va).cast("string"), size(vb).cast("string"))))
       .otherwise(when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb)))
-  }
-
-  /** Shared tail of the batched ANN probes ([[LshIndex.topKBatch]] /
-    * [[IvfIndex.topKBatch]]): score candidate (qid, id, v) rows against
-    * the (qid, qv) query vectors and keep the top k per query. ONE place
-    * owns the ordering contract — rounded cosine DESC, id ASC, identical
-    * to the single-probe paths. Output: (query_id, vec_id, cosine, rnk).
-    */
-  private[ops] def rankPerQuery(cands: DataFrame, qvs: DataFrame, k: Int): DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"cosine".desc, $"id".asc)
-    cands
-      .join(qvs, Seq("qid"))
-      .withColumn("cosine", round(cosinePair($"v", $"qv"), 4))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"qid".as("query_id"), $"id".as("vec_id"), $"cosine", $"rnk")
   }
 
   /** Brute-force cosine top-k for one query vector over (vec_id,

@@ -15,9 +15,9 @@ import graft.topics.{TopicModelParams, TopicScorer}
 /** The end-to-end knowledge-graph construction pipeline (north_star):
   *
   *   pages(url, warc_ts, html, text, lang)
-  *     → (1) ONE fused narrow pass ([[analyze]]): html→text (byte-identity
-  *       checked vs `text`), clean_text (P1), trie NER with in-page
-  *       counts, topic scoring → PageAnalysis (~100 B/page)
+  *     → (1) ONE fused narrow pass ([[analyze]]): html→text, clean_text
+  *       (P1), trie NER with in-page counts, topic scoring →
+  *       PageAnalysis (~100 B/page)
   *     → (2) hasTopic + mentions triples straight from the analysis
   *       ([[pageTriples]]): entity ids are `xxhash64(norm, type)`, so no
   *       dictionary join links a mention
@@ -42,17 +42,16 @@ object KgPipeline {
   final case class Config(
       keepTypes: Option[Set[String]] = Some(FixtureGazetteer.keepLabels))
 
-  /** Extract text from html and verify byte-identity against the `text`
-    * column (the input_hint invariant). Returns pages with `clean` column
-    * added; rows violating identity are counted via an accumulator-free
-    * metric column (callers assert in tests).
+  /** Extract text from html and clean it: returns pages with the
+    * `extracted_text` and `clean` columns added. The extraction is
+    * byte-identical to the input's `text` column (the input_hint
+    * invariant), which PipelineSpec checks per page.
     */
   def withCleanText(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
     Registry.ensure(spark)
     pages
       .withColumn("extracted_text", Registry.htmlToText(col("html")))
-      .withColumn("text_identical", col("extracted_text") === col("text"))
       .withColumn("clean", Registry.cleanTextFast(col("extracted_text")))
   }
 
@@ -133,12 +132,11 @@ object KgPipeline {
   }
 
   /** THE fused narrow pass — the 100 TB-shaped core of the engine: ONE
-    * scan of the pages table does html→text (with the byte-identity
-    * check), clean_text, trie NER with in-page per-surface counting
-    * (A3 is a within-page aggregation, so it is FREE here — no shuffle),
-    * and topic scoring. Output is ~100 B/page, which is what downstream
-    * consumers re-read; the 1-2 KB/page of html/text is touched exactly
-    * once. Mention and hasTopic triples derive from this with ZERO
+    * scan of the pages table does html→text, clean_text, trie NER with
+    * in-page per-surface counting (A3 is a within-page aggregation, so
+    * it is FREE here — no shuffle), and topic scoring. Output is ~100
+    * B/page, which is what downstream consumers re-read; the 1-2 KB/page
+    * of html is touched exactly once and the `text` column not at all. Mention and hasTopic triples derive from this with ZERO
     * shuffles; only the entity dictionary (for canonicalization)
     * aggregates across pages — over these pre-reduced rows.
     */
@@ -155,13 +153,13 @@ object KgPipeline {
     // text fixtures) — cast("binary") accepts both, like HtmlToText's
     // binary-or-string contract
     pages.select(col("url"), langExpr.as("lang"),
-        col("html").cast("binary").as("html"), col("text"))
-      .as[(String, String, Array[Byte], String)]
+        col("html").cast("binary").as("html"))
+      .as[(String, String, Array[Byte])]
       .mapPartitions { it =>
         val t = trie.value
         val p = params.value
         val keep = cfg.keepTypes
-        it.map { case (url, lang, html, text) =>
+        it.map { case (url, lang, html) =>
           // a null html must not NPE the task (one bad row would fail the
           // whole batch): it analyzes as an empty page — a topic, no mentions
           val extracted = graft.functions.HtmlStripper.strip(
@@ -182,9 +180,7 @@ object KgPipeline {
             .map { case ((norm, tpe, surf), n) => SurfaceCount(norm, tpe, surf, n) }
             .toSeq
             .sortBy(s => (s.entity_text_norm, s.entity_type, s.entity_text))
-          val a = TopicScorer.score(p, url, clean)
-          PageAnalysis(url, lang, a.article_id, a.id_topic,
-            extracted == text, surfaces)
+          PageAnalysis(url, lang, TopicScorer.score(p, url, clean).id_topic, surfaces)
         }
       }
   }

@@ -49,17 +49,15 @@ final case class SurfaceCount(
     entity_text: String,
     n: Long)
 
-/** One page, fully analyzed in a single narrow pass: extracted text
-  * verified byte-identical, cleaned, NER'd (with in-page counts), and
-  * topic-scored. ~100 bytes/page vs ~1.4 KB of cleaned text — THIS is
-  * what gets persisted/reused, not the text.
+/** One page, fully analyzed in a single narrow pass: text extracted,
+  * cleaned, NER'd (with in-page counts), and topic-scored. ~100
+  * bytes/page vs ~1.4 KB of cleaned text — THIS is what gets
+  * persisted/reused, not the text.
   */
 final case class PageAnalysis(
     url: String,
     lang: String,
-    article_id: Long,
     id_topic: Int,
-    text_identical: Boolean,
     surfaces: Seq[SurfaceCount])
 
 object Pred {

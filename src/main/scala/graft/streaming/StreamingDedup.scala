@@ -5,51 +5,29 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** Streaming first-seen-only pass-through: emit each key's FIRST row ever
-  * (across all micro-batches), drop every later occurrence — the
-  * Structured-Streaming analogue of the incremental anti-join (J2,
+/** Streaming first-seen-only pass-through: emit each key ONCE, from the
+  * first micro-batch that carries it, and drop every later occurrence —
+  * the Structured-Streaming analogue of the incremental anti-join (J2,
   * reference `ner_extractor/db_io.py:37-55`): "process a url once".
   *
-  * State is one small value per key (a seen flag; [[firstSeenMin]]'s
-  * emitted min) in the state store (RocksDB/HDFS-backed on a cluster),
-  * checkpointed with the query — a killed stream resumes
-  * with its dedup memory intact, which is exactly the kill/resume
-  * contract of the batch TripleStore path.
+  * State is one small value per key (the emitted min) in the state store
+  * (RocksDB/HDFS-backed on a cluster), checkpointed with the query — a
+  * killed stream resumes with its dedup memory intact, which is exactly
+  * the kill/resume contract of the batch TripleStore path.
   *
   * Scale: state is partitioned by key hash across executors.
   */
 object StreamingDedup {
 
-  def firstSeen[V](
-      ds: Dataset[(String, V)])(implicit
-      ev: Encoder[V],
-      etup: Encoder[(String, V)]): Dataset[(String, V)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stateEnc: Encoder[Boolean] = Encoders.scalaBoolean
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (String, V)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, V)], state: GroupState[Boolean]) =>
-          if (state.exists) {
-            Iterator.empty // key seen in an earlier batch
-          } else {
-            state.update(true)
-            rows.take(1).map { case (_, v) => (key, v) }
-          }
-      }
-  }
-
   /** First-seen pass-through that emits each key's MIN value within the
-    * first micro-batch that contains the key — the [[firstSeen]] contract
-    * specialized to ordered values so that a trigger may carry SEVERAL
-    * chronological input files and stay value-deterministic:
-    * `rows.take(1)` picks an arbitrary row when a batch mixes buckets,
-    * `rows.min` does not. With chronologically-staged input (earlier
-    * buckets never arrive in later triggers), the first batch containing
-    * a key contains its earliest bucket, so the emitted value is exactly
-    * the key's global min — independent of how many files each trigger
-    * absorbs. That turns `maxFilesPerTrigger` into a pure
+    * first micro-batch that contains the key, so that a trigger may carry
+    * SEVERAL chronological input files and stay value-deterministic (a
+    * `rows.take(1)` would pick an arbitrary row when a batch mixes
+    * buckets; `rows.min` does not). With chronologically-staged input
+    * (earlier buckets never arrive in later triggers), the first batch
+    * containing a key contains its earliest bucket, so the emitted value
+    * is exactly the key's global min — independent of how many files
+    * each trigger absorbs. That turns `maxFilesPerTrigger` into a pure
     * throughput/latency knob (optimization guide §1: per-trigger fixed
     * costs — offset log, state-store commit, checkpoint — amortize over
     * the batch) instead of a correctness requirement.

@@ -3,7 +3,6 @@ package graft.topics
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Hashing
 
 /** Frozen topic-model parameters — the Spark-side equivalent of the
   * reference's fitted sklearn pipeline artifact
@@ -176,7 +175,6 @@ private[topics] final class TermCounts(vocabSize: Int) {
 
 final case class TopicAssignment(
     url: String,
-    article_id: Long,
     id_topic: Int,
     dist_centroid: Double)
 
@@ -354,10 +352,9 @@ object TopicScorer {
     val (idx, vals) = tfidfVector(params, text)
     val x = project(params, idx, vals)
     val (topic, dist) = assign(params, x)
-    // null url must not NPE the executor (text is defaulted the same way
-    // by every caller); a null-url row scores with an empty article id key
-    val u = if (url == null) "" else url
-    TopicAssignment(u, Hashing.xxhash64(u), topic, dist)
+    // a null url scores as "" (text is defaulted the same way by every
+    // caller)
+    TopicAssignment(if (url == null) "" else url, topic, dist)
   }
 
   /** Distributed scoring: broadcast params + narrow mapPartitions — the

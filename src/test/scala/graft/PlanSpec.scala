@@ -93,13 +93,13 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_lshplan_").toString
     graft.ops.LshIndex.build(emb, dir, p)
     val q = Array.fill(dim)(rng.nextGaussian())
-    val probe = graft.ops.LshIndex.topK(spark, dir, q, k = 5, p = p)
+    val probe = graft.ops.LshIndex.topK(spark, dir, q, k = 5)
     probe.collect() // materialize so AQE finalizes the scan
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters:") && plan.contains("vb"),
       s"vector fetch must prune on the id-bucket partitions:\n$plan")
     // the keys-side candidate read prunes on (tbl, kb)
-    val keysPlan = graft.ops.LshIndex.candidateIds(spark, dir, q, p, None)
+    val keysPlan = graft.ops.LshIndex.candidateIds(spark, dir, q, None)
       .queryExecution.executedPlan.toString
     assert(keysPlan.contains("PartitionFilters:") && keysPlan.contains("tbl"),
       s"keys read must prune on (tbl, kb):\n$keysPlan")
