@@ -48,7 +48,7 @@ object DedupSigImpl {
     * null guards exist to prevent. The former typed path's encoder threw
     * here; keep that contract.
     */
-  private def toDoublesStrict(v: ArrayData, fn: String): Array[Double] = {
+  def toDoublesStrict(v: ArrayData, fn: String): Array[Double] = {
     var i = 0
     val n = v.numElements()
     while (i < n) {
@@ -75,8 +75,8 @@ object DedupSigImpl {
 
   /** The `nprobe` nearest IVF cells of one vector, ordered by (squared
     * distance, cell id) — THE single cell-routing definition: the
-    * [[IvfCells]] expression, `IvfIndex.build` (nprobe=1) and the
-    * driver-side probe all call it.
+    * [[IvfCell]] expression behind `IvfIndex.build` (nprobe=1) and the
+    * driver-side probe `IvfIndex.topK` both call it.
     */
   def nearestCells(v: Array[Double], centroids: Array[Array[Double]],
       nprobe: Int): Array[Int] =
@@ -104,11 +104,6 @@ object DedupSigImpl {
         (d, i)
       }.sortBy { case (d, i) => (d, i) }
         .take(nprobe).map(_._2)
-
-  /** [[nearestCells]] over ArrayData, for generated code. */
-  def nearestCellsData(v: ArrayData, centroids: Array[Array[Double]],
-      nprobe: Int): ArrayData =
-    new GenericArrayData(nearestCells(toDoublesStrict(v, "ivf_cells"), centroids, nprobe))
 }
 
 /** `simhash64(text)` — codegen scalar for [[Dedup.simHashPairs]]'s
@@ -244,25 +239,23 @@ case class LshKeys(
   override def prettyName: String = "lsh_keys"
 }
 
-/** `ivf_cells(vec, centroids, nprobe)` — the query/build cell routing of
-  * [[graft.ops.IvfIndex]] as a codegen array of the nprobe nearest cell
-  * ids (ordered by distance then cell id; the centroid matrix rides the
-  * generated class as a reference object). null vector → ERROR, same
-  * index-integrity contract as [[LshKeys]].
+/** `ivf_cell(vec, centroids)` — the build-side cell routing of
+  * [[graft.ops.IvfIndex]]: the nearest cell id (ties to the lower id; the
+  * centroid matrix rides the generated class as a reference object).
+  * null vector → ERROR, same index-integrity contract as [[LshKeys]].
   */
-case class IvfCells(
+case class IvfCell(
     child: Expression,
-    centroids: Array[Array[Double]],
-    nprobe: Int) extends UnaryExpression {
+    centroids: Array[Array[Double]]) extends UnaryExpression {
 
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
+  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def nullable: Boolean = false
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
-    require(v != null, "ivf_cells: null embedding — filter null vectors before indexing")
-    DedupSigImpl.nearestCellsData(v.asInstanceOf[ArrayData], centroids, nprobe)
+    require(v != null, "ivf_cell: null embedding — filter null vectors before indexing")
+    DedupSigImpl.nearestCells(
+      DedupSigImpl.toDoublesStrict(v.asInstanceOf[ArrayData], "ivf_cell"), centroids, 1)(0)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -275,10 +268,11 @@ case class IvfCells(
         ${childGen.code}
         if (${childGen.isNull}) {
           throw new IllegalArgumentException(
-            "ivf_cells: null embedding - filter null vectors before indexing");
+            "ivf_cell: null embedding - filter null vectors before indexing");
         }
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.functions.DedupSigImpl.nearestCellsData(${childGen.value}, $cRef, $nprobe);
+        int ${ev.value} = graft.functions.DedupSigImpl.nearestCells(
+          graft.functions.DedupSigImpl.toDoublesStrict(${childGen.value}, "ivf_cell"),
+          $cRef, 1)[0];
       """
     ev.copy(code = resultCode, isNull = FalseLiteral)
   }
@@ -291,8 +285,8 @@ case class IvfCells(
   // carrying the matrix on the node at all — documented tradeoff; the
   // shipped quantizers are tens of cells.)
   override def equals(o: Any): Boolean = o match {
-    case other: IvfCells =>
-      child == other.child && nprobe == other.nprobe &&
+    case other: IvfCell =>
+      child == other.child &&
         centroids.length == other.centroids.length &&
         centroids.indices.forall(i =>
           java.util.Arrays.equals(centroids(i), other.centroids(i)))
@@ -301,10 +295,10 @@ case class IvfCells(
   @transient private lazy val centroidHash =
     java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])
   override def hashCode(): Int =
-    java.util.Objects.hash(child, Int.box(nprobe), Int.box(centroidHash))
+    java.util.Objects.hash(child, Int.box(centroidHash))
 
-  override protected def withNewChildInternal(newChild: Expression): IvfCells =
+  override protected def withNewChildInternal(newChild: Expression): IvfCell =
     copy(child = newChild)
 
-  override def prettyName: String = "ivf_cells"
+  override def prettyName: String = "ivf_cell"
 }

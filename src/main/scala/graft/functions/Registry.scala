@@ -35,10 +35,10 @@ object Registry {
           litInt(exprs(1)), litInt(exprs(2)), litLong(exprs(3)), litInt(exprs(4))),
         "scala_udf")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "ivf_cells", exprs => IvfCells(castTo(exprs.head,
+        "ivf_cell", exprs => IvfCell(castTo(exprs.head,
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType)),
-          litMatrix(exprs(1)), litInt(exprs(2))),
+          litMatrix(exprs(1))),
         "scala_udf")
       registered.put(spark, java.lang.Boolean.TRUE)
     }
@@ -58,16 +58,16 @@ object Registry {
 
   private def litMatrix(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : Array[Array[Double]] = {
-    require(e.foldable, s"ivf_cells centroids must be a literal matrix, got $e")
+    require(e.foldable, s"ivf_cell centroids must be a literal matrix, got $e")
     // cast first so a SQL call with an int-literal matrix resolves instead
     // of dying in an opaque ClassCastException at eval
     val casted = castTo(e, org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))
     val v = casted.eval()
-    require(v != null, "ivf_cells: centroids literal must not be NULL")
+    require(v != null, "ivf_cell: centroids literal must not be NULL")
     val ad = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     Array.tabulate(ad.numElements()) { i =>
-      require(!ad.isNullAt(i), s"ivf_cells: centroid row $i is NULL")
+      require(!ad.isNullAt(i), s"ivf_cell: centroid row $i is NULL")
       ad.getArray(i).toDoubleArray()
     }
   }
@@ -113,13 +113,12 @@ object Registry {
     call_function("lsh_keys", c, lit(bits), lit(tables), lit(seed), lit(dim))
   }
 
-  /** The nprobe nearest IVF cell ids, ordered by (distance, cell)
-    * (codegen Expression ≡ `DedupSigImpl.nearestCells` routing). Requires
+  /** The nearest IVF cell id, ties to the lower id (codegen Expression ≡
+    * `DedupSigImpl.nearestCells(v, centroids, 1)(0)`). Requires
     * ensure(spark).
     */
-  def ivfCells(c: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {
-    import org.apache.spark.sql.functions.{lit, typedlit}
-    call_function("ivf_cells", c,
-      typedlit(centroids.map(_.toSeq).toSeq), lit(nprobe))
+  def ivfCell(c: Column, centroids: Array[Array[Double]]): Column = {
+    import org.apache.spark.sql.functions.typedlit
+    call_function("ivf_cell", c, typedlit(centroids.map(_.toSeq).toSeq))
   }
 }

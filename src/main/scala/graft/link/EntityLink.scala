@@ -26,7 +26,7 @@ object EntityLink {
     val spark = mentions.sparkSession
     import spark.implicits._
     dictFromSurfaceRows(mentions
-      .select($"article_id".cast("string").as("url"), $"entity_text_norm",
+      .select($"url", $"entity_text_norm",
         $"entity_type", $"entity_text", lit(1L).as("n")))
   }
 
@@ -91,7 +91,7 @@ object EntityLink {
     // lang is functionally dependent on url — adding it to the key costs
     // nothing and keeps the partition column available downstream
     mentions
-      .groupBy($"url", $"article_id", $"lang",
+      .groupBy($"url", $"lang",
         Text.entityId($"entity_text_norm", $"entity_type").as("id_entity"),
         $"entity_text_norm", $"entity_type")
       .agg(count(lit(1)).as("entity_mentions_count"))

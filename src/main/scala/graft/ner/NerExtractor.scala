@@ -63,13 +63,11 @@ object NerExtractor {
       lang: String = "und"): Iterator[Mention] = {
     if (text == null || text.isEmpty) return Iterator.empty
     val (tokens, offsets) = tokenizeWithOffsets(text)
-    val id = graft.util.Hashing.xxhash64(url)
     trie.findMentions(tokens).iterator
       .filter { case (_, tpe, _, _) => keepTypes.forall(_.contains(tpe)) }
       .map { case (surface, tpe, b, e) =>
         Mention(
           url = url,
-          article_id = id,
           entity_text = surface,
           entity_text_norm = surface.trim.toLowerCase, // P6 on the surface
           entity_type = tpe,

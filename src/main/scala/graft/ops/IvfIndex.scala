@@ -89,7 +89,7 @@ object IvfIndex {
 
   /** Assign every (vec_id, embedding) row to its nearest centroid and
     * write the index partitioned by cell (one file per cell dir). Cell
-    * routing is the codegen [[graft.functions.IvfCells]] Expression — the
+    * routing is the codegen [[graft.functions.IvfCell]] Expression — the
     * build pass stays inside WholeStageCodegen like the LSH index build.
     * The centroids are recorded IN the index (see [[loadCentroids]]) and
     * seed the probe memo, so the first probe loads nothing through Spark.
@@ -101,8 +101,8 @@ object IvfIndex {
     graft.functions.Registry.ensure(spark)
     embeddings
       .select(
-        element_at(graft.functions.Registry.ivfCells(
-          col("embedding").cast("array<double>"), centroids, 1), 1).as("cell"),
+        graft.functions.Registry.ivfCell(
+          col("embedding").cast("array<double>"), centroids).as("cell"),
         col("vec_id").cast("long").as("id"),
         col("embedding").cast("array<double>").as("v"))
       .repartition(col("cell"))

@@ -608,7 +608,8 @@ final class TripleStore(val root: String, spark: SparkSession,
     * times over the store's lifetime (LSM size-tiering). Returns the
     * number of compactions performed.
     */
-  def autoCompact(maxLive: Int = 16, fanIn: Int = 8): Int = {
+  def autoCompact(maxLive: Int = TripleStore.AutoCompactMaxLive,
+      fanIn: Int = TripleStore.AutoCompactFanIn): Int = {
     require(maxLive >= 2 && fanIn >= 2, "autoCompact needs maxLive, fanIn >= 2")
     if (manifests().live.size <= maxLive) return 0
     // opportunistic maintenance SKIPS when another maintainer holds the
@@ -777,6 +778,13 @@ object TripleStore {
     * operation (a fold/rewrite of fanIn batches) or version write.
     */
   val LockStaleMs: Long = 30L * 60 * 1000
+
+  /** Auto-compaction defaults ([[TripleStore.autoCompact]] and the
+    * `KgStream` starts): fold the smallest 8 live batches while more
+    * than 16 are live.
+    */
+  val AutoCompactMaxLive: Int = 16
+  val AutoCompactFanIn: Int = 8
 
   /** How long explicit compact()/delete calls wait for the lock before
     * failing loudly.

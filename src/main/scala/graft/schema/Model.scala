@@ -13,14 +13,14 @@ final case class Page(
     text: String,
     lang: String)
 
-/** One detected entity mention. `article_id = xxhash64(url)` replaces the
-  * reference's BIGSERIAL id_news (SURVEY.md §1.4). Char offsets are kept
+/** One detected entity mention. The article key is the `url` (the triple
+  * subject), which replaces the reference's BIGSERIAL id_news
+  * (SURVEY.md §1.4). Char offsets are kept
   * for debugging parity with the reference API path (SURVEY.md §2.9 #5)
   * but never participate in triple comparison.
   */
 final case class Mention(
     url: String,
-    article_id: Long,
     entity_text: String,
     entity_text_norm: String,
     entity_type: String,

@@ -96,8 +96,8 @@ object KgStream {
       aliases: Option[DataFrame] = None,
       trigger: Trigger = Trigger.AvailableNow(),
       queryName: String = "kg-stream",
-      compactMaxLive: Int = 16,
-      compactFanIn: Int = 8): StreamingQuery =
+      compactMaxLive: Int = TripleStore.AutoCompactMaxLive,
+      compactFanIn: Int = TripleStore.AutoCompactFanIn): StreamingQuery =
     startForeach(pages, store, checkpointDir, trigger, queryName,
       compactMaxLive, compactFanIn) { (batch, batchId) =>
       KgPipeline.runIncremental(store, batchId, batch, trie, params,
@@ -123,8 +123,8 @@ object KgStream {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       queryName: String = "kg-stream-assign",
-      compactMaxLive: Int = 16,
-      compactFanIn: Int = 8): StreamingQuery =
+      compactMaxLive: Int = TripleStore.AutoCompactMaxLive,
+      compactFanIn: Int = TripleStore.AutoCompactFanIn): StreamingQuery =
     startForeach(pages, store, checkpointDir, trigger, queryName,
       compactMaxLive, compactFanIn) { (batch, batchId) =>
       KgPipeline.assignTopicsIncremental(store, batchId, idRun, batch, assign)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Deterministic micro-batch feed semantics (the reference's simulated
   * ingestion, `src/news_nlp/ingestion/simulated_ingestion.py:49-82`),
@@ -118,20 +117,7 @@ object MicroBatch {
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // resolve the result BEFORE dropping the memory-sink view (analysis
-    // is eager, so the plan keeps the sink data alive) — without the
-    // drop every invocation retains its full result set in the session
-    // catalog for the JVM's lifetime (same pattern as
-    // StreamingDedup.streamFirstSeenStaged)
-    val out = spark.table(queryName)
-    spark.catalog.dropTempView(queryName)
+    val out = StreamStage.runToMemory(agg, "complete", queryName)
     // the staged single-file copy is only a stream source; the memory
     // sink holds the result, so the temp dir (a full input copy under
     // java.io.tmpdir otherwise leaked per invocation) can go now

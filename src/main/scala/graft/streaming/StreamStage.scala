@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
 
-/** Stages chronological DataFrame slices as one parquet file each with
+/** The stream fixtures' two halves: [[runToMemory]] runs a stream to a
+  * memory sink and returns its table, and [[stageChronological]]
+  * stages chronological DataFrame slices as one parquet file each with
   * strictly increasing mtimes. The FileStreamSource processes files
   * oldest-mtime-first, so with `maxFilesPerTrigger=1` the staged slices
   * arrive as ordered micro-batches — the trick both chronological stream
@@ -14,6 +17,24 @@ import org.apache.spark.sql.DataFrame
   * staging and stream start.
   */
 object StreamStage {
+
+  /** Runs the streaming `out` with `Trigger.AvailableNow` into a memory
+    * sink named `queryName`, waits for it and returns the sink's table.
+    * The table is resolved BEFORE its temp view is dropped (analysis is
+    * eager, so the plan keeps the sink data alive); without the drop
+    * every invocation would keep its full result in the session catalog
+    * for the session's lifetime.
+    */
+  def runToMemory(out: DataFrame, outputMode: String, queryName: String): DataFrame = {
+    out.writeStream.outputMode(outputMode).format("memory").queryName(queryName)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val spark = out.sparkSession
+    val result = spark.table(queryName)
+    spark.catalog.dropTempView(queryName)
+    result
+  }
 
   private val MtimeBaseMs = 1000000000000L
   private val MtimeStepMs = 60000L

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming first-seen-only pass-through: emit each key ONCE, from the
@@ -136,18 +136,7 @@ object StreamingDedup {
       .parquet(streamDir)
     val deduped = firstSeenMin(
       stream.select(col("user_id").cast("string"), col("bucket")).as[(String, Long)])
-    val q = deduped.toDF("user_key", "first_bucket")
-      .writeStream.outputMode("append").format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // resolve the result BEFORE dropping the memory-sink view (Dataset
-    // analysis is eager, so the plan keeps the sink data alive) — without
-    // the drop every invocation retains its full result set in the
-    // catalog for the session's lifetime
-    val out = spark.table(queryName)
+    StreamStage.runToMemory(deduped.toDF("user_key", "first_bucket"), "append", queryName)
       .select(col("user_key").cast("long").as("user_id"), col("first_bucket"))
-    spark.catalog.dropTempView(queryName)
-    out
   }
 }

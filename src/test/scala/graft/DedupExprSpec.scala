@@ -110,22 +110,22 @@ class DedupExprSpec extends SparkSpec {
     val cents = Array.fill(5)(Array.fill(dim)(rng.nextGaussian()))
     val rows = (0 until 30).map(i => (i.toLong, Array.fill(dim)(rng.nextGaussian())))
     val got = rows.toDF("id", "v")
-      .select($"id", Registry.ivfCells($"v", cents, 3))
-      .as[(Long, Array[Int])].collect().toMap
+      .select($"id", Registry.ivfCell($"v", cents))
+      .as[(Long, Int)].collect().toMap
     rows.foreach { case (id, v) =>
-      val want = graft.functions.DedupSigImpl.nearestCells(v, cents, 3).toSeq
-      assert(got(id).toSeq === want, s"id=$id")
+      val want = graft.functions.DedupSigImpl.nearestCells(v, cents, 1)(0)
+      assert(got(id) === want, s"id=$id")
     }
     val e = intercept[Exception] {
       Seq((1L, null.asInstanceOf[Array[Double]])).toDF("id", "v")
-        .select(Registry.ivfCells($"v", cents, 2)).collect()
+        .select(Registry.ivfCell($"v", cents)).collect()
     }
     assert(e.getMessage.contains("null embedding"), e.getMessage)
     // a null ELEMENT would be read as 0.0 by toDoubleArray and silently
     // misroute the vector — must throw instead
     val e2 = intercept[Exception] {
       Seq((1L, Seq[java.lang.Double](1.0, null, 3.0))).toDF("id", "v")
-        .select(Registry.ivfCells($"v".cast("array<double>"), cents, 2)).collect()
+        .select(Registry.ivfCell($"v".cast("array<double>"), cents)).collect()
     }
     assert(e2.getMessage.contains("null element"), e2.getMessage)
     // nprobe=1 fast path ≡ general path head

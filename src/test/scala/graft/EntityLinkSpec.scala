@@ -12,7 +12,7 @@ import graft.util.Hashing
 class EntityLinkSpec extends SparkSpec {
 
   private def m(url: String, surface: String, tpe: String = "PERSON"): Mention =
-    Mention(url, Hashing.xxhash64(url), surface,
+    Mention(url, surface,
       surface.trim.toLowerCase, tpe, 0, surface.length)
 
   test("A1/A2: modal surface form with deterministic tie-break (count DESC, text ASC)") {

@@ -96,6 +96,5 @@ class NerSpec extends SparkSpec {
     // cleaned text is lowercase already; norm == surface for cleaned input
     val m = NerExtractor.detect(trie, "u", "acme corp filing", None).toList.head
     assert(m.entity_text_norm === "acme corp")
-    assert(m.article_id === graft.util.Hashing.xxhash64("u"))
   }
 }

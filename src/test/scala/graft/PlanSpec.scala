@@ -61,6 +61,18 @@ class PlanSpec extends SparkSpec {
       "topic scoring must not shuffle")
   }
 
+  test("q13 and q14 return the same rows on the sf0.001 catalog") {
+    // the two queries share one oracle string, so the broadcast and the
+    // salted link must agree on the catalog's documents, not only on
+    // EntityLinkSpec's synthetic rows; q14's low hotThreshold puts its
+    // head entities on the salted path
+    def rows(q: String) =
+      SparkEntry.queries(q)(spark, sf).collect().map(_.toSeq).toSeq
+    val broad = rows("q13_entity_link")
+    assert(broad.nonEmpty)
+    assert(rows("q14_entity_link_salted") === broad)
+  }
+
   test("entity-link broadcast join plan contains a broadcast exchange") {
     import spark.implicits._
     val mentionsDf = Seq(("u1", "biden", "PERSON", 1L))
