@@ -6,13 +6,18 @@ import org.apache.spark.sql.SparkSession
 
 import graft.fixtures.PageGen
 import graft.ner.FixtureGazetteer
-import graft.pipeline.KgPipeline
+import graft.pipeline.{EntityStore, KgPipeline, TripleStore}
+import graft.schema.Pred
 
 /** The north rule's two-cluster-size evidence, sandbox protocol
   * (BASELINE.md): run the IDENTICAL full KG pipeline job on the IDENTICAL
   * staged input at two local parallelism levels (local[8] vs local[32] =
   * N vs 4N cores) and report throughput at both plus scaling efficiency =
   * (thr_4N / thr_N) / 4.
+  *
+  * The run mode times one production batch ([[runPipeline]]: the fused
+  * pass, the entity merge, sameAs and the commit into fresh stores;
+  * protocol v2 in BASELINE.md).
   *
   * Each level MUST run in a fresh JVM (separate `runMain` invocation): a
   * shared JVM leaks JIT/GC/heap state from one level into the next and
@@ -43,13 +48,16 @@ import graft.pipeline.KgPipeline
   */
 object ScalingBench {
 
+  /** Shuffle/spill dir, and the root of [[runPipeline]]'s stores, on
+    * tmpfs: a production executor writes shuffle and store files to
+    * node-local NVMe that scales WITH the executor count; this VM's one
+    * shared block device does not, so it would impose a false serial
+    * floor on the N-vs-4N comparison. RAM-backed local dirs model the
+    * per-node-storage property the protocol needs.
+    */
+  private val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft_local")
+
   private def session(cores: Int): SparkSession = {
-    // Shuffle/spill dir on tmpfs: a production executor writes shuffle to
-    // node-local NVMe that scales WITH the executor count; this VM's one
-    // shared block device does not, so it would impose a false serial
-    // floor on the N-vs-4N comparison. RAM-backed local dirs model the
-    // per-node-storage property the protocol needs.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft_local")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(localDir))
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -69,24 +77,28 @@ object ScalingBench {
     s
   }
 
-  private def runPipeline(spark: SparkSession, inputDir: String): Long = {
+  /** One production batch over the staged pages: [[KgPipeline
+    * .runIncremental]] with the fixture aliases into a FRESH TripleStore
+    * and EntityStore under [[localDir]], deleted when the call returns.
+    * Fresh per call because the warm-up's PageGen pages share their urls
+    * with the staged input: a reused store would skip them as processed.
+    * Returns the committed triples without the `processedIn` markers,
+    * whose count comes from the manifests (no data read).
+    */
+  private[graft] def runPipeline(spark: SparkSession, inputDir: String): Long = {
     val trie = spark.sparkContext.broadcast(FixtureGazetteer.trie)
     val params = spark.sparkContext.broadcast(SparkEntry.fixtureModel)
     import spark.implicits._
     val aliases = FixtureGazetteer.aliasPairs.toDF("norm_a", "norm_b", "entity_type")
-    val pages = spark.read.parquet(inputDir)
-    // runManaged: persist the compact analysis for its two consumers,
-    // release it after the materialization (no leak across repetitions)
-    KgPipeline.runManaged(pages, trie, params, Some(aliases)) { out =>
-      // ONE materialization: the noop write evaluates every output row
-      // and the Observation counts them in the same job — no second
-      // pass, no cache of the result
-      val obs = new org.apache.spark.sql.Observation()
-      out.observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      obs.get("n").asInstanceOf[Long]
-    }
+    val dir = Files.createDirectories(java.nio.file.Paths.get(localDir))
+    val root = Files.createTempDirectory(dir, "graft_scaling_store_")
+    try {
+      val store = new TripleStore(root.resolve("triples").toString, spark)
+      val n = KgPipeline.runIncremental(store, "run", spark.read.parquet(inputDir),
+        trie, params, KgPipeline.Config(),
+        Some(new EntityStore(root.resolve("entities").toString, spark)), Some(aliases))
+      n - store.predRowCount(Pred.Processed)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile)
   }
 
   /** Deterministic dedup-corpus text for doc `id` — pure function of the

@@ -11,6 +11,7 @@ import graft.link.EntityLink
 import graft.ner.{FixtureGazetteer, GazEntry, NerExtractor, TokenTrie}
 import graft.ops.{Dedup, LshIndex, Multimodal, Similarity, TextAnalysis, TopK}
 import graft.pipeline.{EntityStore, KgPipeline, TripleStore}
+import graft.schema.Pred
 import graft.streaming.MicroBatch
 import graft.topics.{TopicModelParams, TopicScorer, TopicTrainer}
 
@@ -182,15 +183,24 @@ object SparkEntry {
     TopicTrainer.fit(texts, TopicTrainer.Config())
   }
 
-  private def kgTriples(s: SparkSession, nPages: Long): DataFrame = {
-    val trie = s.sparkContext.broadcast(FixtureGazetteer.trie)
-    val params = s.sparkContext.broadcast(fixtureModel)
+  /** The flagship's triples over `pages` through the production batch
+    * path: [[KgPipeline.runIncremental]] with the fixture gazetteer, model
+    * and aliases into a fresh TripleStore and EntityStore under one
+    * scratch dir, read back from the committed store without the
+    * `processedIn` markers, as (subj, pred, obj, weight, lang).
+    */
+  private[graft] def kgTriples(pages: DataFrame): DataFrame = {
+    val s = pages.sparkSession
     import s.implicits._
-    val aliases = FixtureGazetteer.aliasPairs
-      .toDF("norm_a", "norm_b", "entity_type")
-    // run, not runManaged: the lazy result is returned to Verify/Bench, and
-    // at fixture sizes recomputing the narrow pass is cheaper than a cache
-    KgPipeline.run(PageGen.pages(s, nPages).toDF(), trie, params, Some(aliases))
+    val root = scratchDir("graft_kg_")
+    val store = new TripleStore(s"$root/triples", s)
+    KgPipeline.runIncremental(store, "b0", pages,
+      s.sparkContext.broadcast(FixtureGazetteer.trie),
+      s.sparkContext.broadcast(fixtureModel), KgPipeline.Config(),
+      Some(new EntityStore(s"$root/entities", s)),
+      Some(FixtureGazetteer.aliasPairs.toDF("norm_a", "norm_b", "entity_type")))
+    store.committed().filter(col("pred") =!= Pred.Processed)
+      .select("subj", "pred", "obj", "weight", "lang")
   }
 
   /** Oracle staging: DuckDB restates model/LSH-parameterized queries by
@@ -307,7 +317,8 @@ object SparkEntry {
     * triples) over deterministic synthetic pages; driver smoke-checks
     * rows>0 on sf0.001 scale.
     */
-  def entry(spark: SparkSession): DataFrame = kgTriples(spark, 300L)
+  def entry(spark: SparkSession): DataFrame =
+    kgTriples(PageGen.pages(spark, 300L).toDF())
 
   // -------------------------------------------------------------- queries
 
@@ -586,7 +597,7 @@ object SparkEntry {
         .map(g => (g.phrase, g.entityType,
           graft.util.Hashing.xxhash64(g.phrase, g.entityType)))
         .toDF("norm", "etype", "id_entity"))
-      kgTriples(s, 1000L)
+      kgTriples(PageGen.pages(s, 1000L).toDF())
         .orderBy(col("subj"), col("pred"), col("obj"))
     }),
     "q32_topic_assign" -> ((s, _) => {
@@ -640,7 +651,7 @@ object SparkEntry {
       Stage.pages500Cleaned(s)
       Stage.modelVocab(s)
       Stage.pages500Assign(s)
-      graft.topics.TopicTerms.topTerms(cleaned, params, topN = 10)
+      graft.topics.TopicTerms.topTermsAndSizes(cleaned, params, topN = 10)._1
         .withColumn("weight", round(col("weight"), 6))
         .orderBy(col("id_topic"), col("rank"))
     }),
@@ -651,8 +662,7 @@ object SparkEntry {
       Stage.pages500Cleaned(s)
       Stage.modelVocab(s)
       Stage.pages500Assign(s)
-      val terms = graft.topics.TopicTerms.topTerms(cleaned, params, topN = 5)
-      val sizes = graft.topics.TopicTerms.topicSizes(cleaned, params)
+      val (terms, sizes) = graft.topics.TopicTerms.topTermsAndSizes(cleaned, params, topN = 5)
       // repTexts wires the LLM-prompt seam (top-3 nearest docs, truncated);
       // TermTopicNamer.needsTexts=false so nothing is collected here —
       // a real LLM namer flips the flag and receives the texts
@@ -962,7 +972,7 @@ object SparkEntry {
                                row_number() OVER (PARTITION BY url ORDER BY d2, id_topic) AS rn
                         FROM dists) WHERE rn = 1)"""
 
-  /** `TopicTerms.topTerms`' weights over fixture pages 0–499: mean
+  /** `TopicTerms.topTermsAndSizes`' weights over fixture pages 0–499: mean
     * normalized tf·idf per (topic, term) under the staged assignment →
     * `sizes(id_topic, sz)`, `wts(id_topic, term, weight)`.
     */

@@ -111,7 +111,7 @@ object Api {
     * Inputs are the engine's own table shapes: `topicsTable` =
     * [[graft.topics.TopicNaming.nameTopics]] output
     * (id_topic, topic_name, topic_size) and `termsTable` =
-    * [[graft.topics.TopicTerms.topTerms]] output
+    * the terms of [[graft.topics.TopicTerms.topTermsAndSizes]]
     * (id_topic, rank, term, weight). Output: one row per topic —
     * (id_run, id_topic, topic_name, topic_size, top_terms) with
     * top_terms rank-ordered, rows ordered by id_topic.

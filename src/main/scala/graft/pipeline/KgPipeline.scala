@@ -27,16 +27,22 @@ import graft.topics.{TopicModelParams, TopicScorer}
   * Stages (1)-(2) are NARROW (no shuffle). Stage (3) runs on the driver:
   * the alias graph has at most |aliases| edges, capped at
   * [[ConnectedComponents.DriverMaxEdges]], and one semi-join reads
-  * the entity keys that are alias endpoints. Its only shuffle is the
-  * distinct of a batch's surface keys in [[run]]; [[runIncremental]] reads
-  * them from the [[EntityStore]] instead, whose merge is the batch's
-  * dictionary aggregation.
+  * the entity keys that are alias endpoints.
+  *
+  * [[runIncremental]] is the one batch entry point (KgStream, the
+  * scaling bench, and the q31 / `entry()` catalog queries run it): it
+  * reads the pages without a committed `processedIn` marker, merges the
+  * batch into the [[EntityStore]] (the batch's dictionary aggregation),
+  * derives sameAs from [[EntityStore.keys]] and commits triples plus
+  * markers. [[dictFromAnalysis]], [[triplesFromAnalysis]], the
+  * whole-frame [[sameAsTriples]] and [[Config]] stay only because the
+  * benchmark harness under `perfbench/` calls them.
   */
 object KgPipeline {
 
   /** Pipeline options. Nothing sets `keepTypes` away from the reference's
     * label filter; the record and the `cfg` parameters of [[analyze]],
-    * [[triplesFromAnalysis]] and [[runIncremental]] stay because the
+    * [[triplesFromAnalysis]] and [[runIncremental]] stay only because the
     * benchmark harness under `perfbench/` passes them positionally.
     */
   final case class Config(
@@ -73,6 +79,9 @@ object KgPipeline {
     * reading it runs no Spark job. An alias table of more than
     * [[ConnectedComponents.DriverMaxEdges]] rows fails with an
     * `IllegalArgumentException` naming the bound and the row count.
+    * [[runIncremental]] runs the same steps against the committed set;
+    * this whole-frame form stays because perfbench's traced sameAs step
+    * calls it.
     */
   def sameAsTriples(dict: DataFrame, aliases: DataFrame): DataFrame =
     sameAsFrame(dict.sparkSession, sameAsPairs(dict, aliasRows(aliases)))
@@ -220,8 +229,8 @@ object KgPipeline {
     * measured 150+ executor-seconds at 8M pages): one flatMap emits the
     * surface rows plus one null-surface marker per (page, entity), and a
     * single dict-key shuffle with map-side combine aggregates both.
-    * No pipeline path builds it (sameAs reads only keys); perfbench's
-    * `link.dict` probe times it.
+    * No pipeline path builds it (sameAs reads only keys); it stays only
+    * because perfbench's `link.dict` probe times it.
     */
   def dictFromAnalysis(analyzed: Dataset[PageAnalysis]): DataFrame = {
     val spark = analyzed.sparkSession
@@ -243,60 +252,21 @@ object KgPipeline {
       .agg(sum($"n").as("cnt"))).toDF()
   }
 
-  /** Triples from an already-analyzed Dataset: [[pageTriples]] plus, with
-    * `aliases`, [[sameAsTriples]] over the distinct (entity_text_norm,
-    * entity_type) keys of [[surfaceRows]]. sameAs runs when this is called
-    * (one pass over `analyzed`); the page triples stay lazy. Callers that
-    * consume `analyzed` more than once own its caching lifecycle — see
-    * [[runManaged]]. `preparedDict` and `cfg` are unused; they stay
-    * because the benchmark harness passes them positionally.
+  /** [[pageTriples]] of an already-analyzed Dataset. It stays only
+    * because the benchmark harness under `perfbench/` calls it
+    * positionally with `None, None, Config()`; `preparedDict` and `cfg`
+    * are unused, and `aliases` must be empty: sameAs comes from
+    * [[runIncremental]], which derives it from the cumulative
+    * [[EntityStore]].
     */
   def triplesFromAnalysis(
       analyzed: Dataset[PageAnalysis],
-      aliases: Option[DataFrame] = None,
-      preparedDict: Option[DataFrame] = None,
-      cfg: Config = Config()): DataFrame = {
-    aliases.map { al =>
-      sameAsTriples(surfaceRows(analyzed).select("entity_text_norm", "entity_type").distinct(), al)
-    }.foldLeft(pageTriples(analyzed))(_ unionByName _)
-  }
-
-  /** Full run over a pages DataFrame; returns the complete triple set
-    * (subj, pred, obj, weight, lang). `aliases` may be empty
-    * (schema: norm_a, norm_b, entity_type).
-    *
-    * Persists nothing. With `aliases`, the sameAs step runs the fused pass
-    * once when this is called; the returned page triples are lazy, so
-    * each action re-runs it. Callers that read the result more than once
-    * use [[runManaged]], which persists the analysis, materializes it
-    * first and releases it in a finally.
-    */
-  def run(
-      pages: DataFrame,
-      trie: Broadcast[TokenTrie],
-      params: Broadcast[TopicModelParams],
-      aliases: Option[DataFrame] = None): DataFrame =
-    triplesFromAnalysis(analyze(pages, trie, params), aliases)
-
-  /** [[run]] with owned cache lifecycle: persist the compact analysis,
-    * hand the lazy triples to `use` (which must materialize them), then
-    * unpersist — no JVM-lifetime cache leak.
-    */
-  def runManaged[T](
-      pages: DataFrame,
-      trie: Broadcast[TokenTrie],
-      params: Broadcast[TopicModelParams],
-      aliases: Option[DataFrame] = None)(use: DataFrame => T): T = {
-    val analyzed = analyze(pages, trie, params)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER materialization, in dependency order. Handing `use` a lazy
-    // plan over unfilled caches lets its broadcast-exchange jobs run
-    // CONCURRENTLY with the main job and recompute the analysis for
-    // every not-yet-cached partition (measured: +297 executor-seconds of
-    // duplicated work at 8M pages — the whole narrow pass again).
-    analyzed.count()
-    try use(triplesFromAnalysis(analyzed, aliases))
-    finally analyzed.unpersist(blocking = false)
+      aliases: Option[DataFrame],
+      preparedDict: Option[DataFrame],
+      cfg: Config): DataFrame = {
+    require(aliases.isEmpty, "triplesFromAnalysis makes no sameAs triples: " +
+      "runIncremental derives them from the EntityStore")
+    pageTriples(analyzed)
   }
 
   /** Incremental run against a TripleStore: process only urls without a

@@ -58,8 +58,8 @@ final class RunRegistry(val root: String, spark: SparkSession) {
 
   /** S5: register a run (inactive). The row records the `cfg` the run
     * trained with, the fitted `model`'s vocabulary size and n-gram range,
-    * and the topic-term count [[TopicTerms.topTerms]] reports; there is
-    * no MLflow run. Re-registering an id_run replaces its row (idempotent
+    * and the topic-term count [[TopicTerms.topTermsAndSizes]] reports;
+    * there is no MLflow run. Re-registering an id_run replaces its row (idempotent
     * retries). `created_seq` is the registry version the registration
     * publishes.
     */

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   */
 object TopicTerms {
 
-  /** Terms [[topTerms]] reports per topic by default (the reference's
-    * `top_terms_per_topic`), as the run registry records it.
+  /** Terms [[topTermsAndSizes]] reports per topic by default (the
+    * reference's `top_terms_per_topic`), as the run registry records it.
     */
   val TopTermsPerTopic = 50
 
@@ -56,48 +56,47 @@ object TopicTerms {
       }.toDF("id_topic", "term_idx", "w")
   }
 
-  /** A4: docs per topic. */
-  def topicSizes(
-      cleaned: DataFrame,
-      params: Broadcast[TopicModelParams]): DataFrame =
-    contributions(cleaned, params)
-      .filter(col("term_idx") === SizeMarker)
-      .groupBy(col("id_topic"))
-      .agg(count(lit(1)).as("topic_size"))
-
-  /** A5 + W1/W2: top-N terms per topic by mean TF-IDF (mean over ALL docs
-    * of the topic, zeros included — `X_tfidf[mask].mean(axis=0)`).
-    * Output: (id_topic, rank, term, weight), rank 1..N.
+  /** A5 + W1/W2 and A4 from ONE scoring pass: the top-N terms per topic
+    * by mean TF-IDF (mean over ALL docs of the topic, zeros included —
+    * `X_tfidf[mask].mean(axis=0)`) as (id_topic, rank, term, weight),
+    * rank 1..N, and the docs per topic as (id_topic, topic_size).
+    *
+    * Both come from one (id_topic, term_idx) aggregation, collected once:
+    * at most k × (topN + 1) rows reach the driver, and both frames are local,
+    * so reading them runs no Spark job. A topic whose docs all project
+    * to the zero vector has a size row and no term rows.
     */
-  def topTerms(
+  def topTermsAndSizes(
       cleaned: DataFrame,
       params: Broadcast[TopicModelParams],
-      topN: Int = TopTermsPerTopic): DataFrame = {
+      topN: Int = TopTermsPerTopic): (DataFrame, DataFrame) = {
     val spark = cleaned.sparkSession
     import spark.implicits._
-    // ONE aggregation over (id_topic, term_idx) covers both the term sums
-    // and the size markers; the two branches below are canonically
-    // identical subtrees, so ReuseExchange computes the shuffle once —
-    // no persist, no JVM-lifetime cache leak (round-1 ADVICE).
-    val agg = contributions(cleaned, params)
-      .groupBy($"id_topic", $"term_idx").agg(sum($"w").as("w_sum"))
-    val sizes = agg.filter($"term_idx" === SizeMarker)
-      .select($"id_topic", $"w_sum".cast("long").as("topic_size"))
-    val sums = agg.filter($"term_idx" =!= SizeMarker)
     val vocab = params.value.vocab.zipWithIndex
       .map { case (t, i) => (i, t) }.toSeq.toDF("term_idx", "term")
-    // rank on the ROUNDED weight (ties → term asc): makes the ordering
-    // restatable by a SQL oracle without double-summation-order hazards
-    val w = Window.partitionBy($"id_topic")
-      .orderBy(round($"weight", 6).desc, $"term".asc)
-    sums
-      .join(broadcast(sizes), Seq("id_topic"))
+    val byTopic = Window.partitionBy($"id_topic")
+    val marker = $"term_idx" === SizeMarker
+    // ONE aggregation over (id_topic, term_idx) holds the term sums and
+    // the size markers, read by ONE linear chain: filtering it into a
+    // sizes and a sums branch pushes each filter below the aggregate and
+    // scores the pages once per branch. The size comes from a window over
+    // the marker row, which ranks 0 so that every topic keeps a row.
+    // Terms rank on the ROUNDED weight (ties → term asc): the ordering is
+    // restatable by a SQL oracle without double-summation-order hazards.
+    val rows = contributions(cleaned, params)
+      .groupBy($"id_topic", $"term_idx").agg(sum($"w").as("w_sum"))
+      .withColumn("topic_size", max(when(marker, $"w_sum")).over(byTopic).cast("long"))
       .withColumn("weight", $"w_sum" / $"topic_size")
-      .join(broadcast(vocab), Seq("term_idx"))
-      .withColumn("rank", row_number().over(w))
+      .join(broadcast(vocab), Seq("term_idx"), "left")
+      .withColumn("rank", row_number().over(byTopic
+        .orderBy(marker.desc, round($"weight", 6).desc, $"term".asc)) - 1)
       .filter($"rank" <= topN)
-      .select($"id_topic", $"rank".cast("long").as("rank"), $"term",
-        $"weight")
+      .select($"id_topic", $"rank".cast("long"), $"term", $"weight", $"topic_size")
+      .as[(Int, Long, String, Double, Long)].collect()
+    val (sizes, terms) = rows.partition(_._2 == 0L)
+    (terms.toSeq.map { case (t, r, term, wt, _) => (t, r, term, wt) }
+        .toDF("id_topic", "rank", "term", "weight"),
+      sizes.toSeq.map { case (t, _, _, _, n) => (t, n) }.toDF("id_topic", "topic_size"))
   }
 
   /** W3: top-k representative docs per topic (nearest to centroid,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.api.Api
 import graft.fixtures.PageGen
 import graft.ner.FixtureGazetteer
-import graft.pipeline.KgPipeline
 import graft.schema.Pred
 
 /** Single-text analyze surface (reference `api/app.py:100-124`): one call
@@ -19,10 +18,8 @@ class ApiSpec extends SparkSpec {
 
   test("analyzeText equals the batch pipeline's triples for that page") {
     import spark.implicits._
-    val bTrie = spark.sparkContext.broadcast(trie)
-    val bParams = spark.sparkContext.broadcast(params)
     val pages = PageGen.pages(spark, 25L).toDF()
-    val triples = KgPipeline.run(pages, bTrie, bParams, None)
+    val triples = SparkEntry.kgTriples(pages)
       .filter(col("pred").isin(Pred.HasTopic, Pred.Mentions))
       .select("subj", "pred", "obj", "weight")
       .as[(String, String, String, Long)].collect()

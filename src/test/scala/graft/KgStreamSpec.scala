@@ -2,14 +2,17 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.PageGen
-import graft.ner.FixtureGazetteer
+import graft.ner.{FixtureGazetteer, TokenTrie}
 import graft.pipeline.{EntityStore, KgPipeline, TripleStore}
 import graft.schema.{Page, Pred}
 import graft.streaming.KgStream
+import graft.topics.TopicModelParams
 
 /** Streaming front-end ≡ batch semantics: micro-batches through
   * foreachBatch land with the same triples, markers and entity
@@ -17,6 +20,18 @@ import graft.streaming.KgStream
   * micro-batches are processed exactly once.
   */
 class KgStreamSpec extends SparkSpec {
+
+  /** The non-marker triples of one `runIncremental` batch over `pages`
+    * into a fresh store, as sorted (subj, pred, obj, weight) strings.
+    */
+  private def singleShot(pages: DataFrame, trie: Broadcast[TokenTrie],
+      params: Broadcast[TopicModelParams]): Seq[String] = {
+    val store = new TripleStore(Files.createTempDirectory("graft_kss_").toString, spark)
+    KgPipeline.runIncremental(store, "all", pages, trie, params)
+    store.committed().filter(col("pred") =!= Pred.Processed)
+      .select("subj", "pred", "obj", "weight")
+      .collect().map(_.toString).sorted.toSeq
+  }
 
   test("streamed micro-batches equal a single-shot batch run; cross-batch duplicates processed once") {
     implicit val sqlCtx = spark.sqlContext
@@ -47,11 +62,7 @@ class KgStreamSpec extends SparkSpec {
       .filter(col("pred") =!= Pred.Processed)
       .select("subj", "pred", "obj", "weight")
       .collect().map(_.toString).sorted.toSeq
-    val single = KgPipeline.runManaged(
-      all.toDF(), trie, params, None) { t =>
-      t.select("subj", "pred", "obj", "weight")
-        .collect().map(_.toString).sorted.toSeq
-    }
+    val single = singleShot(all.toDF(), trie, params)
     assert(got === single)
     // exactly one marker per page despite the overlapping micro-batch
     val markers = store.committed().filter(col("pred") === Pred.Processed)
@@ -99,11 +110,7 @@ class KgStreamSpec extends SparkSpec {
       .filter(col("pred") =!= Pred.Processed)
       .select("subj", "pred", "obj", "weight")
       .collect().map(_.toString).sorted.toSeq
-    val single = KgPipeline.runManaged(
-      all.toDF(), trie, params, None) { t =>
-      t.select("subj", "pred", "obj", "weight")
-        .collect().map(_.toString).sorted.toSeq
-    }
+    val single = singleShot(all.toDF(), trie, params)
     assert(got === single)
     // markers survive the folds: nothing is re-processable
     assert(store.unprocessed(all.toDF(), Pred.Processed).count() === 0L)

@@ -27,9 +27,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   private lazy val fullRun: DataFrame = {
-    val out = KgPipeline.run(
-      PageGen.pages(spark, N).toDF(), trieBc, paramsBc, Some(aliases))
-      .persist()
+    val out = SparkEntry.kgTriples(PageGen.pages(spark, N).toDF()).persist()
     out.count()
     out
   }
@@ -106,7 +104,7 @@ class PipelineSpec extends SparkSpec {
       ("u1", "20240101000000", null.asInstanceOf[String], "plain text", "en"),
       ("u2", "20240101000000", "<p>erik larsen spoke</p>", "erik larsen spoke", "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val got = KgPipeline.run(rows, trieBc, paramsBc, None)
+    val got = SparkEntry.kgTriples(rows)
       .select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
     def topic(url: String, text: String) = "topic_" +
       graft.topics.TopicScorer.score(SparkEntry.fixtureModel, url,
@@ -117,17 +115,20 @@ class PipelineSpec extends SparkSpec {
       ("u2", Pred.Mentions, "erik larsen|PERSON")))
   }
 
-  test("run caches nothing: collecting its triples persists no RDD") {
+  test("runIncremental with and without aliases leaves no persisted RDD behind") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     for (al <- Seq(None, Some(aliases))) {
-      val rows = KgPipeline.run(PageGen.pages(spark, 40L).toDF(), trieBc, paramsBc, al)
-        .collect()
+      val store = new TripleStore(Files.createTempDirectory("graft_nocache_").toString, spark)
+      val es = new graft.pipeline.EntityStore(
+        Files.createTempDirectory("graft_nocachee_").toString, spark)
+      KgPipeline.runIncremental(store, "b1", PageGen.pages(spark, 40L).toDF(),
+        trieBc, paramsBc, KgPipeline.Config(), Some(es), al)
+      val rows = store.committed().collect()
       assert(rows.nonEmpty)
       assert(al.isEmpty || rows.exists(_.getString(1) == Pred.SameAs))
       assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-        s"run(aliases = $al) must leave no persisted Dataset behind; " +
-          "callers that re-read use runManaged")
+        s"runIncremental(aliases = $al) must release every Dataset it persists")
     }
   }
 
@@ -162,10 +163,8 @@ class PipelineSpec extends SparkSpec {
     assert(sa.distinct.size === sa.size, s"duplicate sameAs edges: $sa")
     // with the CUMULATIVE dict, the committed edges equal a single-shot
     // run over the union (edges whose forms straddle batches included)
-    val single = KgPipeline.runManaged(all, trieBc, paramsBc, Some(aliases)) { t =>
-      t.filter(col("pred") === Pred.SameAs)
-        .select("subj", "obj").as[(String, String)].collect().toSet
-    }
+    val single = SparkEntry.kgTriples(all).filter(col("pred") === Pred.SameAs)
+      .select("subj", "obj").as[(String, String)].collect().toSet
     all.unpersist()
     assert(sa.toSet === single)
   }
@@ -230,8 +229,7 @@ class PipelineSpec extends SparkSpec {
 
   test("pipeline output is invariant to input partitioning") {
     import spark.implicits._
-    val repart = KgPipeline.run(
-      PageGen.pages(spark, N).toDF().repartition(13), trieBc, paramsBc, Some(aliases))
+    val repart = SparkEntry.kgTriples(PageGen.pages(spark, N).toDF().repartition(13))
     val a = fullRun.select("subj", "pred", "obj", "weight")
       .as[(String, String, String, Long)].collect().toSet
     val b = repart.select("subj", "pred", "obj", "weight")
@@ -283,6 +281,37 @@ class PipelineSpec extends SparkSpec {
     assert(counts.getOrElse(Pred.Mentions, 0L) > 0L)
     assert(counts.getOrElse(Pred.HasTopic, 0L) > 0L)
     assert(counts.getOrElse(Pred.SameAs, 0L) > 0L)
+  }
+
+  test("q31 and entry() read a committed store and return no processedIn row") {
+    import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    for ((name, df) <- Seq(
+        "q31" -> SparkEntry.queries("q31_kg_triples")(spark, ""),
+        "entry" -> SparkEntry.entry(spark))) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collectLeaves().exists {
+        case l: LogicalRelation => l.relation match {
+          case r: HadoopFsRelation => r.fileFormat.isInstanceOf[ParquetFileFormat]
+          case _ => false
+        }
+        case _ => false
+      }, s"$name: no parquet scan leaf in\n$plan")
+      assert(plan.collectFirst { case m: MapPartitions => m }.isEmpty,
+        s"$name: the plan still runs the fused pass over generated pages\n$plan")
+      assert(df.columns.toSeq === Seq("subj", "pred", "obj", "weight", "lang"))
+      assert(df.filter(col("pred") === Pred.Processed).count() === 0L, name)
+    }
+  }
+
+  test("ScalingBench.runPipeline: every call on one staged dir commits the whole input") {
+    val dir = Files.createTempDirectory("graft_scal_").resolve("pages").toString
+    PageGen.pages(spark, 200L).toDF().write.parquet(dir)
+    val expected = SparkEntry.kgTriples(spark.read.parquet(dir)).count()
+    assert(expected > 200L)
+    // the second call must not find the first one's markers
+    assert(Seq.fill(2)(ScalingBench.runPipeline(spark, dir)) === Seq(expected, expected))
   }
 
   test("dictFromAnalysis equals the generic dictFromSurfaceRows (fast path parity)") {

@@ -89,7 +89,12 @@ class SameAsSpec extends SparkSpec {
           trie, paramsBc, KgPipeline.Config(), Some(es), Some(aliases))
         val got = sameAsOf(store.committed())
         val union = pages.filter(_._1 <= b)
-        val batchRun = sameAsOf(KgPipeline.run(frame(union), trie, paramsBc, Some(aliases)))
+        val batchRun = {
+          val one = new TripleStore(tmp("graft_sau_"), spark)
+          KgPipeline.runIncremental(one, "all", frame(union), trie, paramsBc,
+            KgPipeline.Config(), Some(new EntityStore(tmp("graft_saue_"), spark)), Some(aliases))
+          sameAsOf(one.committed())
+        }
         assert(got === batchRun, s"seed $seed batch $b")
         val seen = mentioned.filter { case (n, _) =>
           union.exists(_._3.contains(s" $n "))

@@ -28,15 +28,18 @@ class TopicTermsSpec extends SparkSpec {
   test("topicSizes (A4)") {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(params)
-    val sizes = TopicTerms.topicSizes(cleaned, bc)
-      .as[(Int, Long)].collect().toMap
+    val (terms, sizes0) = TopicTerms.topTermsAndSizes(cleaned, bc, topN = 10)
+    val sizes = sizes0.as[(Int, Long)].collect().toMap
     assert(sizes === Map(0 -> 2L, 1 -> 1L))
+    // terms and sizes came from one scoring pass: reading them runs no job
+    val (jobs, _) = sparkActivity { terms.collect(); sizes0.collect() }
+    assert(jobs === 0L)
   }
 
   test("topTerms (A5/W1/W2): mean over ALL topic docs, rank by weight desc / term asc") {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(params)
-    val got = TopicTerms.topTerms(cleaned, bc, topN = 10)
+    val got = TopicTerms.topTermsAndSizes(cleaned, bc, topN = 10)._1
       .select($"id_topic", $"rank", $"term", round($"weight", 6))
       .as[(Int, Long, String, Double)].collect().toSet
     val s5 = math.sqrt(5.0)
@@ -52,7 +55,7 @@ class TopicTermsSpec extends SparkSpec {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(params)
     val docs = Seq(("u0", "aa bb")).toDF("url", "clean") // symmetric weights
-    val got = TopicTerms.topTerms(docs, bc, topN = 10)
+    val got = TopicTerms.topTermsAndSizes(docs, bc, topN = 10)._1
       .select($"rank", $"term").as[(Long, String)].collect().sorted.toSeq
     assert(got === Seq((1L, "aa"), (2L, "bb")))
   }
@@ -68,8 +71,7 @@ class TopicTermsSpec extends SparkSpec {
   test("nameTopics (M5): default and term namers, driver-side") {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(params)
-    val terms = TopicTerms.topTerms(cleaned, bc, topN = 5)
-    val sizes = TopicTerms.topicSizes(cleaned, bc)
+    val (terms, sizes) = TopicTerms.topTermsAndSizes(cleaned, bc, topN = 5)
     val byDefault = TopicNaming.nameTopics(terms, sizes, DefaultTopicNamer)
       .as[(Int, String, Long)].collect().toSet
     assert(byDefault === Set((0, "Topic 0", 2L), (1, "Topic 1", 1L)))
@@ -85,8 +87,7 @@ class TopicTermsSpec extends SparkSpec {
     // out-of-vocab docs → zero tfidf → topic 0 with NO term contributions:
     // sizes has the topic, topTerms does not — the table must not drop it
     val oov = Seq(("u0", "zz qq"), ("u1", "ww")).toDF("url", "clean")
-    val terms = TopicTerms.topTerms(oov, bc, topN = 5)
-    val sizes = TopicTerms.topicSizes(oov, bc)
+    val (terms, sizes) = TopicTerms.topTermsAndSizes(oov, bc, topN = 5)
     assert(terms.count() === 0L)
     val table = TopicNaming.nameTopics(terms, sizes, DefaultTopicNamer)
       .as[(Int, String, Long)].collect().toSet
@@ -96,8 +97,7 @@ class TopicTermsSpec extends SparkSpec {
   test("nameTopics (M5): a texts-needing namer receives the W3 representative texts") {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(params)
-    val terms = TopicTerms.topTerms(cleaned, bc, topN = 5)
-    val sizes = TopicTerms.topicSizes(cleaned, bc)
+    val (terms, sizes) = TopicTerms.topTermsAndSizes(cleaned, bc, topN = 5)
     // the reference prompts its LLM with top terms AND the top-3
     // nearest-to-centroid texts, truncated (topics_naming.py:62-79) —
     // the seam must deliver exactly those, in W3 rank order
