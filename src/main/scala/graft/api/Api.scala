@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 import graft.functions.{CleanTextImpl, Text}
 import graft.ner.{NerExtractor, TokenTrie}
-import graft.schema.Mention
 import graft.topics.{TopicModelParams, TopicScorer}
 
 /** One-call analysis surface — parity with the reference's
@@ -90,15 +89,14 @@ object Api {
     // the caller's text (reference parity)
     val (clean, rawBegin, rawEnd) = Text.cleanTextWithOffsets(assembled)
     val t = TopicScorer.score(params, url, clean)
-    val ents = NerExtractor.detect(trie, url, clean, keepTypes)
-      .map { m =>
-        val b = rawBegin(m.begin_char)
-        val e = rawEnd(m.end_char - 1)
-        EntityHit(assembled.substring(b, e), m.entity_text_norm,
-          m.entity_type, b, e)
-      }
-      .toSeq
-    Analysis(url, t.id_topic, t.dist_centroid, ents)
+    val ents = Vector.newBuilder[EntityHit]
+    val hits = trie.scan(clean)
+    NerExtractor.foreachKept(trie, hits, keepTypes) { (k, entry) =>
+      val b = rawBegin(hits.begin(k))
+      val e = rawEnd(hits.end(k) - 1)
+      ents += EntityHit(assembled.substring(b, e), trie.norm(entry), trie.entityType(entry), b, e)
+    }
+    Analysis(url, t.id_topic, t.dist_centroid, ents.result())
   }
 
   /** Read-side topic metadata for the ACTIVE run — the one-call

@@ -3,7 +3,7 @@ package graft.ner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.schema.Mention
+import graft.schema.{Mention, SurfaceCount}
 import graft.functions.Text
 
 /** Batched mention detection (M4): the Spark-native replacement for the
@@ -53,7 +53,8 @@ object NerExtractor {
   }
 
   /** Single-document detection — also the "API path" analogue
-    * (`model.py:150-187`), usable on a driver-local string.
+    * (`model.py:150-187`), usable on a driver-local string. Offsets are
+    * the scan's own token bounds.
     */
   def detect(
       trie: TokenTrie,
@@ -62,38 +63,55 @@ object NerExtractor {
       keepTypes: Option[Set[String]],
       lang: String = "und"): Iterator[Mention] = {
     if (text == null || text.isEmpty) return Iterator.empty
-    val (tokens, offsets) = tokenizeWithOffsets(text)
-    trie.findMentions(tokens).iterator
-      .filter { case (_, tpe, _, _) => keepTypes.forall(_.contains(tpe)) }
-      .map { case (surface, tpe, b, e) =>
-        Mention(
-          url = url,
-          entity_text = surface,
-          entity_text_norm = surface.trim.toLowerCase, // P6 on the surface
-          entity_type = tpe,
-          begin_char = offsets(b),
-          end_char = offsets(e - 1) + tokens(e - 1).length,
-          lang = lang)
-      }
+    val hits = trie.scan(text)
+    val out = new scala.collection.mutable.ArrayBuffer[Mention](hits.size)
+    foreachKept(trie, hits, keepTypes) { (k, e) =>
+      out += Mention(url, trie.surface(e), trie.norm(e), trie.entityType(e),
+        hits.begin(k), hits.end(k), lang)
+    }
+    out.iterator
   }
 
-  /** Whitespace tokenization with char offsets; empty tokens (e.g. the
-    * double space clean_text leaves after URL removal) are skipped.
+  /** The fused pass's NER step: per (norm, type, surface) mention counts of
+    * `text`, in that order — the order of the trie's entry ids.
     */
-  def tokenizeWithOffsets(text: String): (Array[String], Array[Int]) = {
-    val tokens = Array.newBuilder[String]
-    val offsets = Array.newBuilder[Int]
+  def surfaceCounts(
+      trie: TokenTrie,
+      text: String,
+      keepTypes: Option[Set[String]]): Seq[SurfaceCount] = {
+    if (text == null || text.isEmpty) return Nil
+    val kept = new scala.collection.mutable.ArrayBuilder.ofInt
+    foreachKept(trie, trie.scan(text), keepTypes)((_, e) => kept += e)
+    val ids = kept.result()
+    java.util.Arrays.sort(ids)
+    val out = Vector.newBuilder[SurfaceCount]
     var i = 0
-    val n = text.length
-    while (i < n) {
-      while (i < n && text.charAt(i) == ' ') i += 1
-      if (i < n) {
-        val start = i
-        while (i < n && text.charAt(i) != ' ') i += 1
-        tokens += text.substring(start, i)
-        offsets += start
-      }
+    while (i < ids.length) {
+      var j = i + 1
+      while (j < ids.length && ids(j) == ids(i)) j += 1
+      val e = ids(i)
+      out += SurfaceCount(trie.norm(e), trie.entityType(e), trie.surface(e), j - i)
+      i = j
     }
-    (tokens.result(), offsets.result())
+    out.result()
+  }
+
+  /** Calls `f(k, entry)` for each entry of hit `k` whose type the P7 label
+    * filter keeps (`None` keeps every type), in text order, then type order.
+    * `hits` is a scan's per-thread buffer, so `f` must not scan.
+    */
+  private[graft] def foreachKept(trie: TokenTrie, hits: TrieHits,
+      keepTypes: Option[Set[String]])(f: (Int, Int) => Unit): Unit = {
+    var k = 0
+    while (k < hits.size) {
+      val entries = trie.entries(hits.node(k))
+      var i = 0
+      while (i < entries.length) {
+        if (keepTypes.isEmpty || keepTypes.get.contains(trie.entityType(entries(i))))
+          f(k, entries(i))
+        i += 1
+      }
+      k += 1
+    }
   }
 }

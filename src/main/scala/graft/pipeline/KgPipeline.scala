@@ -9,7 +9,7 @@ import graft.canon.ConnectedComponents
 import graft.functions.{Registry, Text}
 import graft.link.EntityLink
 import graft.ner.{FixtureGazetteer, NerExtractor, TokenTrie}
-import graft.schema.{PageAnalysis, Pred, SurfaceCount}
+import graft.schema.{PageAnalysis, Pred}
 import graft.topics.{TopicModelParams, TopicScorer}
 
 /** The end-to-end knowledge-graph construction pipeline (north_star):
@@ -179,16 +179,7 @@ object KgPipeline {
           // char-identical to the CleanText expression (clean() delegates
           // to cleanString(); Column ≡ scalar stays fuzz-pinned)
           val clean = graft.functions.CleanTextImpl.cleanString(extracted)
-          val counts =
-            scala.collection.mutable.HashMap.empty[(String, String, String), Long]
-          NerExtractor.detect(t, url, clean, keep, lang).foreach { m =>
-            val k = (m.entity_text_norm, m.entity_type, m.entity_text)
-            counts.update(k, counts.getOrElse(k, 0L) + 1L)
-          }
-          val surfaces = counts.iterator
-            .map { case ((norm, tpe, surf), n) => SurfaceCount(norm, tpe, surf, n) }
-            .toSeq
-            .sortBy(s => (s.entity_text_norm, s.entity_type, s.entity_text))
+          val surfaces = NerExtractor.surfaceCounts(t, clean, keep)
           PageAnalysis(url, lang, TopicScorer.score(p, url, clean).id_topic, surfaces)
         }
       }

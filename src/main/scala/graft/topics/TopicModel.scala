@@ -3,6 +3,7 @@ package graft.topics
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.{PairTable, WordIds}
 
 /** Frozen topic-model parameters — the Spark-side equivalent of the
   * reference's fitted sklearn pipeline artifact
@@ -31,48 +32,19 @@ final case class TopicModelParams(
 /** The vocabulary as word ids, so the TF-IDF scan looks a token up by its
   * char range in the text (no substring) and a bigram up by a pair of ids
   * (no joined string):
-  *   - every word of a vocab unigram or bigram has an id ([[wordId]]);
+  *   - every word of a vocab unigram or bigram has an id in [[words]];
   *   - `unigram(id)` is the vocab index of that word as a unigram, or -1;
-  *   - [[bigram]] maps (first id, second id) to the vocab index of
+  *   - [[pairs]] maps (first id, second id) to the vocab index of
   *     "first second", or -1.
   * A duplicate vocabulary entry keeps its last index (`HashMap.put`
   * semantics). An entry no pair of tokens can spell — a leading, trailing
   * or second space — gets nothing: tokens never contain a space.
   */
 private[topics] final class VocabTerms private (
-    words: Array[String],
-    wordSlots: Array[Int],
+    val words: WordIds,
     val unigram: Array[Int],
-    pairKeys: Array[Long],
-    pairIdx: Array[Int],
+    val pairs: PairTable,
     vocabSize: Int) {
-
-  /** Id of the word `text[from, until)`, or -1. */
-  def wordId(text: String, from: Int, until: Int): Int = {
-    val len = until - from
-    val mask = wordSlots.length - 1
-    var slot = VocabTerms.spread(VocabTerms.hashRange(text, from, until)) & mask
-    var id = -2
-    while (id == -2) {
-      val s = wordSlots(slot)
-      if (s == 0) id = -1
-      else {
-        val w = words(s - 1)
-        if (w.length == len && text.regionMatches(from, w, 0, len)) id = s - 1
-        else slot = (slot + 1) & mask
-      }
-    }
-    id
-  }
-
-  /** Vocab index of the bigram (`first`, `second`) of word ids, or -1. */
-  def bigram(first: Int, second: Int): Int = {
-    val key = VocabTerms.pairKey(first, second)
-    val mask = pairKeys.length - 1
-    var slot = VocabTerms.mixLong(key) & mask
-    while (pairKeys(slot) != key && pairKeys(slot) != -1L) slot = (slot + 1) & mask
-    if (pairKeys(slot) == key) pairIdx(slot) else -1
-  }
 
   /** Per-thread term counts, so a scan allocates no vocab-sized array. */
   private[topics] val counts: ThreadLocal[TermCounts] =
@@ -97,51 +69,10 @@ private[topics] object VocabTerms {
       val sp = t.indexOf(' ')
       if (sp < 0) unigram(id(t)) = v
       else if (sp > 0 && sp < t.length - 1 && t.indexOf(' ', sp + 1) < 0)
-        pairs.put(pairKey(id(t.substring(0, sp)), id(t.substring(sp + 1))), v)
+        pairs.put(PairTable.key(id(t.substring(0, sp)), id(t.substring(sp + 1))), v)
       v += 1
     }
-    val wordSlots = new Array[Int](capacity(words.length))
-    var w = 0
-    while (w < words.length) {
-      var slot = spread(words(w).hashCode) & (wordSlots.length - 1)
-      while (wordSlots(slot) != 0) slot = (slot + 1) & (wordSlots.length - 1)
-      wordSlots(slot) = w + 1
-      w += 1
-    }
-    val pairKeys = Array.fill(capacity(pairs.size))(-1L)
-    val pairIdx = new Array[Int](pairKeys.length)
-    pairs.forEach { (key, i) =>
-      var slot = mixLong(key) & (pairKeys.length - 1)
-      while (pairKeys(slot) != -1L) slot = (slot + 1) & (pairKeys.length - 1)
-      pairKeys(slot) = key
-      pairIdx(slot) = i
-    }
-    new VocabTerms(words.toArray, wordSlots, unigram.toArray, pairKeys, pairIdx, vocab.length)
-  }
-
-  /** Open-addressing table size: a power of two, at most half full. */
-  private def capacity(n: Int): Int = {
-    var c = 2
-    while (c < 2 * n) c <<= 1
-    c
-  }
-
-  /** `String.hashCode` of `text[from, until)`. */
-  private def hashRange(text: String, from: Int, until: Int): Int = {
-    var h = 0
-    var i = from
-    while (i < until) { h = 31 * h + text.charAt(i); i += 1 }
-    h
-  }
-
-  private def spread(h: Int): Int = h ^ (h >>> 16)
-
-  /** Word ids are ≥ 0, so a key is never the empty slot's -1. */
-  private def pairKey(first: Int, second: Int): Long = (first.toLong << 32) | second
-
-  private def mixLong(key: Long): Int = {
-    val h = key * 0x9e3779b97f4a7c15L
-    (h ^ (h >>> 32)).toInt
+    new VocabTerms(new WordIds(words.toArray, slotsPerWord = 2), unigram.toArray, PairTable(pairs), vocab.length)
   }
 }
 
@@ -261,12 +192,12 @@ object TopicScorer {
     var tok = nextToken(text, 0)
     while (tok >= 0) {
       val end = tok.toInt
-      val id = terms.wordId(text, (tok >>> 32).toInt, end)
+      val id = terms.words.id(text, (tok >>> 32).toInt, end)
       if (id >= 0) {
         val u = terms.unigram(id)
         if (u >= 0) counts.add(u)
         if (useBigrams && prev >= 0) {
-          val b = terms.bigram(prev, id)
+          val b = terms.pairs(prev, id)
           if (b >= 0) counts.add(b)
         }
       }

@@ -19,11 +19,11 @@ class NerSpec extends SparkSpec {
     GazEntry("york", "LOC"))
 
   test("tokenizeWithOffsets: offsets point at token starts; empty runs skipped") {
-    val (toks, offs) = NerExtractor.tokenizeWithOffsets("ab  cd e ")
+    val (toks, offs) = NerReference.tokenizeWithOffsets("ab  cd e ")
     assert(toks.toSeq === Seq("ab", "cd", "e"))
     assert(offs.toSeq === Seq(0, 4, 7))
-    assert(NerExtractor.tokenizeWithOffsets("")._1.isEmpty)
-    assert(NerExtractor.tokenizeWithOffsets("   ")._1.isEmpty)
+    assert(NerReference.tokenizeWithOffsets("")._1.isEmpty)
+    assert(NerReference.tokenizeWithOffsets("   ")._1.isEmpty)
   }
 
   test("Turkish default locale: mixed-case gazetteer phrases match the cleaned text") {
@@ -43,7 +43,7 @@ class NerSpec extends SparkSpec {
   test("trie: longest non-overlapping match wins; scan continues after match") {
     val trie = TokenTrie(gaz)
     val toks = "joe biden met biden in new york".split(" ")
-    val got = trie.findMentions(toks)
+    val got = NerReference.findMentions(trie, toks)
     assert(got === List(
       ("joe biden", "PERSON", 0, 2),
       ("biden", "PERSON", 3, 4),
@@ -52,7 +52,7 @@ class NerSpec extends SparkSpec {
 
   test("trie: one phrase with two types emits both, type-sorted") {
     val trie = TokenTrie(Seq(GazEntry("paris", "GPE"), GazEntry("paris", "PERSON")))
-    val got = trie.findMentions(Array("paris"))
+    val got = NerReference.findMentions(trie, Array("paris"))
     assert(got.map(_._2) === List("GPE", "PERSON"))
   }
 
