@@ -1,7 +1,6 @@
 package graft.api
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 
 import graft.functions.{CleanTextImpl, Text}
 import graft.ner.{NerExtractor, TokenTrie}
@@ -65,18 +64,6 @@ object Api {
       "Field 'text' must not be empty.")
     analyzeAssembled(trie, params, assembled, url, keepTypes)
   }
-
-  /** The batch-surface twin WITHOUT the per-request empty guard: the
-    * batch pipeline analyzes empty pages (zero-vector topic assignment,
-    * no entities), and [[analyzePages]] must match it row for row.
-    */
-  private[graft] def analyzeUnguarded(
-      trie: TokenTrie,
-      params: TopicModelParams,
-      title: String,
-      text: String,
-      url: String = "api"): Analysis =
-    analyzeAssembled(trie, params, assemble(title, text), url, None)
 
   private def analyzeAssembled(
       trie: TokenTrie,
@@ -150,29 +137,5 @@ object Api {
     store.dict().toDF()
       .orderBy(col("entity_mentions_count").desc, col("entity_text_norm").asc,
         col("entity_type").asc)
-  }
-
-  /** Dataset variant of the same surface — works on a 1-row Dataset or a
-    * billion-row one (narrow mapPartitions, broadcast model+trie).
-    * Input: (url, title, text[, lang]). Keeps every entity label.
-    */
-  def analyzePages(
-      pages: DataFrame,
-      trie: Broadcast[TokenTrie],
-      params: Broadcast[TopicModelParams]): Dataset[Analysis] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    pages.select(col("url").cast("string"), col("title").cast("string"),
-        col("text").cast("string"))
-      .as[(String, String, String)]
-      .mapPartitions { it =>
-        val tr = trie.value
-        val p = params.value
-        it.map { case (url, title, text) =>
-          // unguarded: empty pages flow through like the batch pipeline
-          analyzeUnguarded(tr, p, title, text, url)
-        }
-      }
   }
 }

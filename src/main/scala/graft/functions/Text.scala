@@ -44,13 +44,6 @@ object Text {
     coalesce(trim(noUrls), lit(""))
   }
 
-  /** `_normalize_entity_text` (`tables.py:8-18`): strip().lower().
-    * The notebook variant also collapses internal whitespace; the shipped
-    * pipeline does NOT (SURVEY.md P6) — we follow the shipped pipeline.
-    */
-  def normalizeEntity(c: Column): Column =
-    lower(regexp_replace(c.cast("string"), s"(?U)^$PyWs+|$PyWs+$$", ""))
-
   /** Batch text assembly (P3): ALWAYS inserts ". ", even for empty title
     * (`db_io.py:88`), after null-filling both sides (`db_io.py:86-87`).
     */
@@ -73,9 +66,6 @@ object Text {
     */
   def entityId(norm: Column, entityType: Column): Column =
     xxhash64(norm, entityType)
-
-  /** P8: prompt-length truncation to 7500 chars (`topics_naming.py:53,73`). */
-  def truncateForPrompt(c: Column): Column = substring(c, 1, 7500)
 
   /** Driver/executor-scalar twin of [[cleanText]]: the one scanner
     * [[CleanTextImpl.cleanString]], with null → "". Golden-byte tests and

@@ -1,8 +1,8 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.schema.{EntityRecord, Mention}
+import graft.schema.EntityRecord
 import graft.functions.Text
 
 /** Entity dictionary construction and mention→entity linking.
@@ -13,22 +13,15 @@ import graft.functions.Text
   *   - A2 most-frequent surface form with the DETERMINISTIC tie-break
   *     `(count DESC, entity_text ASC)` replacing pandas' first-seen order
   *     (SURVEY.md §2.9 #2)
-  *   - A3 per-(article, entity) mention counts: `build_entities_per_news_df`
-  *     (`tables.py:135-139`)
   *   - J4 dictionary lookup join: the reference's driver-side Python dict
   *     probe (`tables.py:115-133`) becomes a broadcast hash join; at scale
   *     the salted variant handles head-entity skew (north rule).
+  *
+  * A3, the per-(article, entity) mention counts
+  * (`build_entities_per_news_df`, `tables.py:135-139`), is counted where
+  * the mentions are found: `NerExtractor.surfaceCounts` in the fused pass.
   */
 object EntityLink {
-
-  /** A1 + A2 over raw mentions: [[dictFromSurfaceRows]] with n = 1. */
-  def buildEntityDict(mentions: Dataset[Mention]): Dataset[EntityRecord] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    dictFromSurfaceRows(mentions
-      .select($"url", $"entity_text_norm",
-        $"entity_type", $"entity_text", lit(1L).as("n")))
-  }
 
   /** Dictionary from (url, norm, type, surface, n) rows — `n` may be a
     * per-page pre-aggregated count (the fused analyzer's output) or 1 per
@@ -82,26 +75,10 @@ object EntityLink {
       .as[EntityRecord]
   }
 
-  /** A3: per-(article, entity) mention counts — the `mentions` triple's
-    * weight property.
-    */
-  def mentionsPerArticle(mentions: Dataset[Mention]): DataFrame = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    // lang is functionally dependent on url — adding it to the key costs
-    // nothing and keeps the partition column available downstream
-    mentions
-      .groupBy($"url", $"lang",
-        Text.entityId($"entity_text_norm", $"entity_type").as("id_entity"),
-        $"entity_text_norm", $"entity_type")
-      .agg(count(lit(1)).as("entity_mentions_count"))
-  }
-
   /** J4 broadcast variant: dictionary fits in memory (it does up to ~tens
     * of millions of entities with AQE; beyond that use [[linkSalted]]).
     * LEFT join — an unmatched mention keeps its row with null dictionary
-    * columns, and [[assertAllLinked]] turns that into the reference's
-    * raise-on-missing (`tables.py:125-133`).
+    * columns.
     */
   def linkBroadcast(mentions: DataFrame, dict: DataFrame): DataFrame = {
     mentions.join(broadcast(dict),
@@ -163,14 +140,5 @@ object EntityLink {
     saltedMentions
       .join(saltedDict, Seq("entity_text_norm", "entity_type", "_salt"), "left")
       .drop("_salt")
-  }
-
-  /** The reference raises when a mention has no dictionary entry
-    * (`tables.py:125-133`). Distributed equivalent: count, don't collect.
-    */
-  def assertAllLinked(linked: DataFrame): Unit = {
-    val missing = linked.filter(col("id_entity").isNull).limit(1).count()
-    require(missing == 0L,
-      "Some mentions have no id_entity in the dictionary (reference tables.py:125-133 contract)")
   }
 }

@@ -60,33 +60,22 @@ object StreamingDedup {
       }
   }
 
-  /** Deterministic end-to-end first-seen run over a parquet events
-    * table, oracle-expressible as `GROUP BY user_id → min(bucket)`.
+  /** Staging half of the deterministic end-to-end first-seen run over a
+    * parquet events table, oracle-expressible as
+    * `GROUP BY user_id → min(bucket)` (q47): one parquet file per
+    * one-week time bucket (`floor(epoch(ts) / 604800)`) via
+    * [[StreamStage.stageChronological]], file mtimes strictly increasing
+    * in bucket order. The file source processes oldest-mtime first, so
+    * [[streamFirstSeenStaged]]'s micro-batches arrive in chronological
+    * bucket order and the emitted value per key is exactly `min(bucket)`
+    * ([[firstSeenMin]]). This is the J2 "process a url once" contract
+    * made observable: which batch first saw the key.
     *
-    * Events are staged one file per one-week time bucket
-    * (`floor(epoch(ts) / 604800)`), file mtimes strictly increase
-    * in bucket order, and the file source processes oldest-mtime first —
-    * micro-batches arrive in chronological bucket order and the emitted
-    * value per key is exactly `min(bucket)` ([[firstSeenMin]]). This is
-    * the J2 "process a url once" contract made observable: which batch
-    * first saw the key.
-    *
-    * Scale: the per-bucket staging loop is bounded by the time span in
-    * weeks (independent of row count); a production deployment
-    * reads an already-time-partitioned stream and skips staging entirely.
-    */
-  def streamFirstSeenBucket(
-      spark: SparkSession,
-      parquetPath: String,
-      queryName: String,
-      scratchDir: String): DataFrame =
-    streamFirstSeenStaged(spark,
-      stageFirstSeenInput(spark, parquetPath, scratchDir), queryName)
-
-  /** Staging half of [[streamFirstSeenBucket]]: one parquet file per
-    * coarse time bucket via [[StreamStage.stageChronological]]. Fixture
-    * prep, not the measured operator — callers that time the streaming
-    * half (Bench) stage this untimed, same as the ANN index builds.
+    * Fixture prep, not the measured operator — callers that time the
+    * streaming half (Bench) stage this untimed, same as the ANN index
+    * builds. The per-bucket staging loop is bounded by the time span in
+    * weeks (independent of row count); a production deployment reads an
+    * already-time-partitioned stream and skips staging entirely.
     * Returns the stream input dir.
     */
   def stageFirstSeenInput(
@@ -116,8 +105,8 @@ object StreamingDedup {
     streamDir.toString
   }
 
-  /** Streaming half of [[streamFirstSeenBucket]] over an already-staged
-    * input dir ([[stageFirstSeenInput]]).
+  /** Streaming half of the first-seen run over an input dir staged by
+    * [[stageFirstSeenInput]].
     */
   def streamFirstSeenStaged(
       spark: SparkSession,

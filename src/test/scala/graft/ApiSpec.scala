@@ -157,26 +157,6 @@ class ApiSpec extends SparkSpec {
     } finally java.util.Locale.setDefault(saved)
   }
 
-  test("analyzePages (Dataset variant) equals driver-side analyzeText") {
-    import spark.implicits._
-    val bTrie = spark.sparkContext.broadcast(trie)
-    val bParams = spark.sparkContext.broadcast(params)
-    val data = Seq(
-      ("u1", "Transfer window", "erik larsen joined hooli"),
-      ("u2", null, "the senate raised rates in france"),
-      ("u3", "", ""))
-    val rows = data.toDF("url", "title", "text")
-    val got = Api.analyzePages(rows, bTrie, bParams).collect()
-      .map(a => a.url -> a).toMap
-    data.foreach { case (u, t, x) =>
-      // the batch surface is UNGUARDED: empty pages flow through like the
-      // batch pipeline (u3 would 400 on the single-text endpoint)
-      val exp = Api.analyzeUnguarded(trie, params, t, x, u)
-      assert(got(u) === exp, u)
-    }
-    assert(got("u3").entities.isEmpty)
-  }
-
   test("Api.topics: active run's topic metadata with rank-ordered terms (GET /v1/topics analogue)") {
     import spark.implicits._
     val reg = new graft.pipeline.RunRegistry(

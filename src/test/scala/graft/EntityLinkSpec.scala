@@ -5,7 +5,7 @@ import graft.link.EntityLink
 import graft.schema.Mention
 import graft.util.Hashing
 
-/** Dictionary aggregation (A1-A3) and the link join (J4) — including the
+/** Dictionary aggregation (A1/A2) and the link join (J4) — including the
   * contract that the salted skew variant is ROW-IDENTICAL to the broadcast
   * join.
   */
@@ -21,7 +21,7 @@ class EntityLinkSpec extends SparkSpec {
       m("u1", "Biden"), m("u1", "Biden"), m("u1", "biden"),
       m("u2", "biden"), m("u2", "BIDEN"), m("u2", "Biden"),
       m("u3", "acme corp", "ORG")).toDS()
-    val dict = EntityLink.buildEntityDict(mentions).collect()
+    val dict = EntityLink.dictFromSurfaceRows(mentions.withColumn("n", lit(1L))).collect()
       .sortBy(_.entity_text_norm)
     val biden = dict.find(_.entity_text_norm == "biden").get
     // counts: Biden=3, biden=2, BIDEN=1 → modal "Biden"
@@ -36,17 +36,8 @@ class EntityLinkSpec extends SparkSpec {
     // same norm "biden", surfaces "BIDEN" and "Biden" once each:
     // ASCII order "BIDEN" < "Biden" → modal is "BIDEN"
     val mentions = Seq(m("u1", "BIDEN"), m("u2", "Biden")).toDS()
-    val dict = EntityLink.buildEntityDict(mentions).collect()
+    val dict = EntityLink.dictFromSurfaceRows(mentions.withColumn("n", lit(1L))).collect()
     assert(dict.head.entity_text === "BIDEN")
-  }
-
-  test("A3: per-article mention counts") {
-    import spark.implicits._
-    val mentions = Seq(m("u1", "x"), m("u1", "x"), m("u2", "x")).toDS()
-    val per = EntityLink.mentionsPerArticle(mentions)
-      .select("url", "entity_mentions_count").as[(String, Long)]
-      .collect().toMap
-    assert(per === Map("u1" -> 2L, "u2" -> 1L))
   }
 
   test("salted link join is row-identical to the broadcast join") {
@@ -54,10 +45,10 @@ class EntityLinkSpec extends SparkSpec {
     // skewed: "hot" appears in 40 articles, tail entities once each
     val mentions = ((1 to 40).map(i => m(s"u$i", "hot")) ++
       (1 to 10).map(i => m(s"u$i", s"tail$i"))).toDS()
-    val dict = EntityLink.buildEntityDict(mentions).toDF()
+    val dict = EntityLink.dictFromSurfaceRows(mentions.withColumn("n", lit(1L))).toDF()
       .select($"entity_text_norm", $"entity_type", $"id_entity", $"news_count")
-    val perDoc = EntityLink.mentionsPerArticle(mentions)
-      .drop("id_entity")
+    val perDoc = mentions.groupBy($"url", $"entity_text_norm", $"entity_type")
+      .agg(count(lit(1)).as("n_mentions"))
     val cols = Seq("url", "entity_text_norm", "entity_type", "id_entity", "news_count")
     val broad = EntityLink.linkBroadcast(perDoc, dict)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.toString)
@@ -89,17 +80,5 @@ class EntityLinkSpec extends SparkSpec {
         hotThreshold = 5, hotKeys = Some(dupHot))
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.toString)
     assert(saltedDup.toSeq === broad.toSeq)
-  }
-
-  test("assertAllLinked throws on a missing dictionary key (tables.py:125-133)") {
-    import spark.implicits._
-    val mentions = Seq(m("u1", "known"), m("u2", "unknown")).toDS()
-    val dict = Seq(("known", "PERSON", 1L))
-      .toDF("entity_text_norm", "entity_type", "id_entity")
-    val linked = EntityLink.linkBroadcast(
-      EntityLink.mentionsPerArticle(mentions).drop("id_entity"), dict)
-    intercept[IllegalArgumentException] {
-      EntityLink.assertAllLinked(linked)
-    }
   }
 }

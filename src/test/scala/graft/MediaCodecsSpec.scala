@@ -6,8 +6,8 @@ import graft.ops.{MediaCodecs, Multimodal}
 import graft.ops.Multimodal.{MediaMeta, MediaRow}
 
 /** Real (library-free) media decoding: synthetic PPM/BMP/PNG/WAV bytes
-  * through the batched Spark path; pixel-exact resize; PCM frame
-  * sampling; unknown formats fall back to the deterministic stub.
+  * and JDK-encoded JPEG/GIF through the Spark path; unknown or malformed
+  * blobs fall back to the deterministic stub.
   */
 class MediaCodecsSpec extends SparkSpec {
 
@@ -18,7 +18,7 @@ class MediaCodecsSpec extends SparkSpec {
       val o = 3 * (y * w + x)
       pixels(o) = r.toByte; pixels(o + 1) = g.toByte; pixels(o + 2) = b.toByte
     }
-    MediaCodecs.renderPpm(MediaCodecs.Ppm(w, h, pixels))
+    s"P6\n$w $h\n255\n".getBytes("US-ASCII") ++ pixels
   }
 
   private def bmp(w: Int, h: Int, bpp: Int): Array[Byte] = {
@@ -65,16 +65,17 @@ class MediaCodecsSpec extends SparkSpec {
       MediaRow(3L, png(800, 600, 6), MediaMeta("image", 0, 0)),
       MediaRow(4L, wav(2, 16000, 16, 1000), MediaMeta("audio", 0, 0)),
       MediaRow(5L, "not a media file".getBytes, MediaMeta("image", 0, 0)))
-    val got = Multimodal.extractFeatures(rows.toDS(), MediaCodecs.FormatDecoder)
+    val got = Multimodal.extractFeatures(rows.toDS())
       .collect().map(f => f.id -> f).toMap
     assert((got(1L).width, got(1L).height, got(1L).channels) === ((4, 3, 3)))
     assert((got(2L).width, got(2L).height, got(2L).channels) === ((640, 480, 3)))
     assert((got(3L).width, got(3L).height, got(3L).channels) === ((800, 600, 4)))
     assert((got(4L).channels, got(4L).frames) === ((2, 1000)))
+    val w = MediaCodecs.parseWav(rows(3).media)
+    assert(w.sampleRate === 16000 && w.bitsPerSample === 16)
     // unknown bytes: deterministic stub fallback, real length/checksum
     assert(got(5L).n_bytes === 16L)
-    assert(got(5L) === Multimodal.DecodeStub.decodeBatch(
-      Seq(rows.find(_.id == 5L).get)).head)
+    assert(got(5L) === MediaCodecs.stub(rows(4)))
   }
 
   test("null media blob decodes as the empty blob through both decoders (no task kill)") {
@@ -85,45 +86,12 @@ class MediaCodecsSpec extends SparkSpec {
     val rows = Seq(
       MediaRow(1L, null, MediaMeta("image", 0, 0)),
       MediaRow(2L, "not a media file".getBytes, MediaMeta("image", 0, 0)))
-    for (dec <- Seq(MediaCodecs.FormatDecoder, Multimodal.DecodeStub)) {
-      val got = Multimodal.extractFeatures(rows.toDS(), dec)
-        .collect().map(f => f.id -> f).toMap
-      assert(got(1L).n_bytes === 0L, s"$dec: null blob must read as 0 bytes")
-      assert(got(1L) === dec.decodeBatch(Seq(rows.head)).head)
-    }
-  }
-
-  test("PPM nearest-neighbor resize is pixel-exact") {
-    val src = MediaCodecs.parsePpm(ppm(4, 4)((x, y) => (x, y, x + y)))
-    val half = MediaCodecs.resizePpm(src, 2, 2)
-    // nearest-neighbor at scale 1/2 picks source pixels (0,0),(2,0),(0,2),(2,2)
-    assert(half.pixel(0, 0) === ((0, 0, 0)))
-    assert(half.pixel(1, 0) === ((2, 0, 2)))
-    assert(half.pixel(0, 1) === ((0, 2, 2)))
-    assert(half.pixel(1, 1) === ((2, 2, 4)))
-    // upscale then check replication
-    val up = MediaCodecs.resizePpm(src, 8, 8)
-    assert(up.pixel(0, 0) === src.pixel(0, 0))
-    assert(up.pixel(7, 7) === src.pixel(3, 3))
-    // roundtrip through bytes
-    assert(MediaCodecs.parsePpm(MediaCodecs.renderPpm(half)).pixels.toSeq === half.pixels.toSeq)
-  }
-
-  test("PPM mean channels (real feature math)") {
-    val p = MediaCodecs.parsePpm(ppm(2, 1)((x, _) => (if (x == 0) 10 else 30, 0, 255)))
-    val m = MediaCodecs.meanChannels(p)
-    assert(m(0) === 20.0 && m(1) === 0.0 && m(2) === 255.0)
-  }
-
-  test("WAV frame sampling takes every k-th PCM frame") {
-    val b = wav(2, 8000, 16, 10) // 10 frames × 4 bytes
-    val every3 = MediaCodecs.sampleWavFrames(b, 3)
-    assert(every3.length === 4) // frames 0, 3, 6, 9
-    val w = MediaCodecs.parseWav(b)
-    assert(w.sampleRate === 8000 && w.bitsPerSample === 16)
-    // frame 3 starts at dataOffset + 12
-    assert(every3(1).toSeq ===
-      (0 until 4).map(i => ((w.dataOffset - 44 + 12 + i) % 251).toByte).toSeq)
+    val got = Multimodal.extractFeatures(rows.toDS())
+      .collect().map(f => f.id -> f).toMap
+    val stub = MediaCodecs.stub(rows.head)
+    assert(stub.n_bytes === 0L, "null blob must read as 0 bytes")
+    assert(got(1L) === stub)
+    assert(got(1L) === MediaCodecs.stub(rows.head.copy(media = Array.emptyByteArray)))
   }
 
   test("malformed WAV chunk sizes terminate the walk and fall back to the stub") {
@@ -145,9 +113,7 @@ class MediaCodecsSpec extends SparkSpec {
       // the Spark-path decoder routes the failure to the deterministic stub
       val row = graft.ops.Multimodal.MediaRow(7L, evil(size),
         graft.ops.Multimodal.MediaMeta("audio", 0, 0))
-      val got = MediaCodecs.FormatDecoder.decodeBatch(Seq(row))
-      val stub = graft.ops.Multimodal.DecodeStub.decodeBatch(Seq(row))
-      assert(got === stub)
+      assert(MediaCodecs.decode(row) === MediaCodecs.stub(row))
     }
     // an fmt chunk whose declared body runs past the buffer is skipped,
     // not read out of bounds
@@ -162,7 +128,7 @@ class MediaCodecsSpec extends SparkSpec {
     intercept[IllegalArgumentException](MediaCodecs.parseWav(truncated))
   }
 
-  test("JPEG and GIF decode through javax.imageio: metadata + mean channels") {
+  test("JPEG and GIF decode through javax.imageio: metadata") {
     def encoded(fmt: String, w: Int, h: Int, rgb: Int): Array[Byte] = {
       val img = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -175,15 +141,12 @@ class MediaCodecsSpec extends SparkSpec {
     val jpeg = encoded("jpeg", 8, 6, 0x808080)
     assert(MediaCodecs.isJpeg(jpeg) && !MediaCodecs.isGif(jpeg))
     assert(MediaCodecs.decodeImageIo(jpeg) === ((8, 6, 3, 1)))
-    val jm = MediaCodecs.imageIoMeanChannels(jpeg)
-    assert(jm.forall(c => math.abs(c - 0x80) <= 2.0), jm.toSeq)
     val gif = encoded("gif", 5, 4, 0xFF0000) // palette format: exact red
     assert(MediaCodecs.isGif(gif) && !MediaCodecs.isJpeg(gif))
     val (gw, gh, gc, gframes) = MediaCodecs.decodeImageIo(gif)
     assert((gw, gh, gframes) === ((5, 4, 1)))
     assert(gc >= 3) // palette color model reports its RGB(A) components
-    assert(MediaCodecs.imageIoMeanChannels(gif).toSeq === Seq(255.0, 0.0, 0.0))
-    // batched Spark path routes both through FormatDecoder, and a
+    // the Spark path decodes both through imageio, and a
     // truncated JPEG falls back to the stub instead of killing the task
     import spark.implicits._
     import graft.ops.Multimodal
@@ -219,13 +182,24 @@ class MediaCodecsSpec extends SparkSpec {
       bomb(off) = v.toByte
     val e = intercept[IllegalArgumentException](MediaCodecs.decodeImageIo(bomb))
     assert(e.getMessage.contains("geometry"))
-    intercept[IllegalArgumentException](MediaCodecs.imageIoMeanChannels(bomb))
-    // and the batched decoder falls back to the stub instead of dying
+    // and the Spark path falls back to the stub instead of dying
     import spark.implicits._
     import graft.ops.Multimodal
     val got = Multimodal.extractFeatures(
       Seq(Multimodal.MediaRow(7L, bomb, Multimodal.MediaMeta("image", 0, 0))).toDS())
       .collect().head
     assert(got.n_bytes === bomb.length.toLong)
+  }
+
+  test("text that starts with BM is not a BMP: q20's stub features") {
+    import spark.implicits._
+    // isBmp accepts any text of 31+ bytes starting with "BM"; read as a
+    // BITMAPINFOHEADER this sentence declares bpp 8306 (channels 1038),
+    // so the header check must send it to the stub like q20's other rows
+    val text = "BMW shares rose sharply after the quarterly report was published."
+    val got = Multimodal.extractFeatures(
+      Multimodal.asMedia(Seq((1L, text)).toDF("doc_id", "text"))).collect()
+    assert(got.map(f => (f.channels, f.frames)).toSeq === Seq((3, 1)))
+    assert(got.head.n_bytes === text.getBytes("UTF-8").length.toLong)
   }
 }

@@ -48,9 +48,10 @@ class StreamingDedupSpec extends SparkSpec {
     }
     val dir = java.nio.file.Files.createTempDirectory("graft_sfs_spec_").toString
     rows.toDF("user_id", "ts").write.parquet(s"$dir/events.parquet")
-    def run(tag: String) = StreamingDedup.streamFirstSeenBucket(
-      spark, s"$dir/events.parquet", s"sfs_spec_$tag",
-      java.nio.file.Files.createTempDirectory("graft_sfs_scratch_").toString)
+    def run(tag: String) = StreamingDedup.streamFirstSeenStaged(spark,
+      StreamingDedup.stageFirstSeenInput(spark, s"$dir/events.parquet",
+        java.nio.file.Files.createTempDirectory("graft_sfs_scratch_").toString),
+      s"sfs_spec_$tag")
       .orderBy(col("user_id")).as[(Long, Long)].collect().toSeq
     val got = run("a")
     assert(got === Seq((1L, 0L), (2L, 1L), (3L, 3L), (4L, 0L)))

@@ -47,18 +47,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(got.toSeq === expected)
   }
 
-  test("normalizeEntity = strip().lower(), internal whitespace preserved (P6)") {
-    import spark.implicits._
-    val cases = Seq(
-      " Joe Biden " -> "joe biden",
-      "ACME  Corp" -> "acme  corp", // internal run NOT collapsed (tables.py:18)
-      " Nbsp Edges " -> "nbsp edges",
-      "lower" -> "lower")
-    val got = cases.map(_._1).toDF("t")
-      .select(Text.normalizeEntity(col("t"))).as[String].collect()
-    assert(got.toSeq === cases.map(_._2))
-  }
-
   test("batch assembly (P3) always inserts '. '; API assembly (P9) is conditional") {
     import spark.implicits._
     val rows = Seq(
@@ -110,13 +98,6 @@ class TextFunctionsSpec extends SparkSpec {
     val n = Seq(Option.empty[String]).toDF("raw")
       .select(graft.functions.Registry.cleanTextFast(col("raw"))).as[String].head()
     assert(n === "")
-  }
-
-  test("truncateForPrompt slices to n chars (P8)") {
-    import spark.implicits._
-    val got = Seq("x" * 9000).toDF("t")
-      .select(length(Text.truncateForPrompt(col("t")))).as[Int].head()
-    assert(got === 7500)
   }
 
   test("normalizeUrl: canonical form (case, ports, fragment, query order, slashes)") {
